@@ -488,7 +488,7 @@ private[graft] object DedupQueries {
 
   // --------------------------------------- d19 store append + replay no-op
 
-  /** Fresh store root per INVOCATION: Bench's outlier guard re-runs a query
+  /** Fresh store root per INVOCATION: ConfAbProbe's reps re-run a query
     * inside one process, and a second run against a root that already holds
     * batch 1's appended segment would probe a different store. The parent
     * staging dir is deleted at JVM exit. */

@@ -100,7 +100,7 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
+  private[graft] def q(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -110,22 +110,37 @@ object Verify {
     case c => c.toString
   } + "\""
 
+  /** Optional comma-separated query-name filter (SPARK_GRAFT_ONLY) for
+    * local iteration on a subset of the suite. */
+  private[graft] lazy val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+    .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
+
+  /** The one suite loop Verify and Bench share: queries in name order,
+    * narrowed by SPARK_GRAFT_ONLY, the session cache cleared after each
+    * (dedup/similarity builders persist intermediates their returned plans
+    * reference — the cache contract in [[graft.llm.Dedup]]). The two mains
+    * differ only in `sink`: Verify dumps parquet, Bench times a full
+    * evaluation. */
+  def suite[A](spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries)(
+      sink: (String, (SparkSession, String) => DataFrame) => A): Seq[(String, A)] =
+    queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .map { case (name, fn) =>
+        val r = sink(name, fn)
+        spark.catalog.clearCache()
+        name -> r
+      }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = session(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // optional comma-separated name filter for local iteration on one query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet).filter(_.nonEmpty)
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        runOne(spark, name, fn, sfDir, outDir).foreach(errors(name) = _)
-        spark.catalog.clearCache() // see Bench: bound per-query cache growth
-      }
+    val errors = suite(spark) { (name, fn) =>
+      runOne(spark, name, fn, sfDir, outDir)
+    }.collect { case (name, Some(msg)) => name -> msg }
     // the oracle map must match the queries this RUN dumped: under a
     // SPARK_GRAFT_ONLY filter an unfiltered map would make the checker's
     // EXPECTED−ACTUAL drift report flag every skipped query
@@ -138,7 +153,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     if (errors.nonEmpty)
-      System.err.println(s"[verify] ${errors.size} FAILED: ${errors.keys.mkString(", ")}")
+      System.err.println(s"[verify] ${errors.size} FAILED: ${errors.map(_._1).mkString(", ")}")
     spark.stop()
   }
 }

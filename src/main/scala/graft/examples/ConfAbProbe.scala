@@ -1,12 +1,14 @@
 package graft.examples
 
-import graft.{SparkEntry, Verify}
+import graft.{Bench, SparkEntry, Verify}
 
 /** Config A/B harness (r19, guide §1.2 "configuration last, measured"):
   * run named SparkEntry queries under session-level conf overrides and
   * print per-query seconds, so a join-preference or shuffle-codec flip is
   * adopted from numbers, not folklore. Overrides apply at session BUILD
-  * time (the shuffle codec cannot be set on a live context).
+  * time (the shuffle codec cannot be set on a live context). Each rep is
+  * one `Bench.run` over the named queries, so a rep times the same full
+  * evaluation the bench does.
   *
   * Usage: runMain graft.examples.ConfAbProbe <sfDir> <reps> <k=v,k=v|none> name…
   */
@@ -20,28 +22,18 @@ object ConfAbProbe {
         val Array(k, v) = kv.split("=", 2); (k, v)
       }.toMap
     val names = args.drop(3).toSeq
+    val queries = names.map(n => n -> SparkEntry.queries(n)).toMap
     val spark = Verify.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), confs)
     spark.sparkContext.setLogLevel("ERROR")
     println(s"[confab] overrides: ${if (confs.isEmpty) "none" else confs}")
-    // warmup: JIT + first-touch IO outside every measured window
-    spark.range(10000000L).selectExpr("sum(id)").collect()
+    Bench.warmUp(spark, sfDir)
+    val runs = (1 to reps).map(_ => Bench.run(spark, sfDir, queries).seconds.toMap)
     names.foreach { n =>
-      try { SparkEntry.queries(n)(spark, sfDir).count() }
-      catch { case e: Throwable =>
-        println(s"[confab] $n warmup failed: ${e.getMessage}") }
-      spark.catalog.clearCache()
-    }
-    names.foreach { n =>
-      val ts = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }
-      println(f"[confab] $n%-34s min ${ts.min}%7.2f s  " +
-        f"median ${ts.sorted.apply(reps / 2)}%7.2f s  " +
+      val ts = runs.flatMap(_.get(n))
+      if (ts.isEmpty) println(s"[confab] $n failed in every rep")
+      else println(f"[confab] $n%-34s min ${ts.min}%7.2f s  " +
+        f"median ${ts.sorted.apply(ts.size / 2)}%7.2f s  " +
         ts.map(t => f"$t%.2f").mkString("(", ", ", ")"))
     }
     spark.stop()

@@ -1,7 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.SimpleMode
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SimpleMode}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** 100 TB-discipline regression tests: the physical plans the engine
   * produces must keep their scale-critical properties — filters pushed to
@@ -435,5 +439,41 @@ class PlanSpec extends SparkSpec {
     // binary column dies inside the decode mapPartitions
     assert(!p.linesIterator.exists(l => l.contains("Exchange")
       && l.contains("payload")), s"payload bytes crossed a shuffle:\n$p")
+  }
+
+  test("driver smoke: SparkEntry.entry returns rows") {
+    assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  /** Executed physical plans of the queries `action` runs on t22's frame. */
+  private def t22ExecutedPlans(action: DataFrame => Unit): String = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      action(SparkEntry.queries("t22_substring_dedup")(spark, dir))
+      // the listener bus is async
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      plans.asScala.mkString("\n")
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("Bench.evaluate executes t22's gram explode and dup counts; count() prunes them") {
+    // the per-doc dup-count aggregate: grouped by doc_id, counting rows
+    val dupCount = """HashAggregate\(keys=\[doc_id#\d+L?\], functions=\[(partial_)?count\(1\)\]""".r
+    val full = t22ExecutedPlans(Bench.evaluate)
+    assert(full.contains("Generate explode"), s"gram explode not executed:\n$full")
+    assert(dupCount.findFirstIn(full).nonEmpty, s"dup-count aggregate not executed:\n$full")
+    // the same frame under count(): Catalyst drops the left-joined branch,
+    // which is why the bench must not time count()
+    val counted = t22ExecutedPlans(df => { df.count(); () })
+    assert(counted.nonEmpty, "no plan captured for count()")
+    assert(!counted.contains("Generate"), s"count() kept the explode:\n$counted")
+    assert(dupCount.findFirstIn(counted).isEmpty, s"count() kept the dup counts:\n$counted")
   }
 }
