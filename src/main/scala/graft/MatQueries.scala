@@ -997,9 +997,9 @@ object MatQueries {
     val part = PartitionSpec.Static(Seq("o_orderpriority" -> "string"))
     val tgt = TableRef("g_m23.orders_part")
     // the writer repartitions by the partition columns (one file per
-    // partition per write, Committer.scala:379) — the 4-files state is
-    // built the way it arises in production: a CTAS plus three appends of
-    // disjoint key quarters
+    // partition per write, AtomicWriter.createOrReplace) — the 4-files
+    // state is built the way it arises in production: a CTAS plus three
+    // appends of disjoint key quarters
     def quarter(q: Int): DataFrame = t(s, dir, "orders")
       .filter(col("o_orderkey") % 4 === q)
       .select(col("o_orderkey"), col("o_custkey"),

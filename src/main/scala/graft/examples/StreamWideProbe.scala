@@ -8,14 +8,14 @@ import graft.streaming.Streaming
 
 /** Wide-micro-batch rehearsal for the streaming overwrite path: batches
   * touching 5× / 10× / 20× the touched-partition cap (the hourly×tenant
-  * backfill shape) under the VERSIONED committer. What it proves:
+  * backfill shape). What it proves:
   *
   *  - the >cap branch engages (the done marker is a text-file DIRECTORY
   *    written by executors, not a driver-collected key file) — no driver
   *    key-set, no isin tree, at any width;
-  *  - per-partition commit cost stays flat as the batch widens (the
-  *    versioned committer's flip is two batched catalog calls whose cost
-  *    is metadata-linear, never data);
+  *  - per-partition commit cost stays flat as the batch widens (the swap
+  *    is directory renames plus one batched ADD PARTITION — metadata-
+  *    linear, never data);
   *  - replay + restart state stays correct at width (the second run's
   *    batches are skipped via markers, content unchanged).
   */
@@ -26,7 +26,6 @@ object StreamWideProbe {
     spark.range(10000000L).selectExpr("sum(id)").collect()
     val cap = 40
     spark.conf.set("spark.graft.touchedPartitions.cap", cap.toString)
-    spark.conf.set("spark.graft.committer", "versioned")
     val fs = new HPath("/tmp").getFileSystem(spark.sessionState.newHadoopConf())
 
     for (mult <- Seq(5, 10, 20)) {

@@ -10,8 +10,9 @@ import graft.functions.Fns
 /** All table mutation goes through this writer. OSS parquet has no row-level
   * ACID, so mutation = rewrite-then-swap:
   *
-  *  - whole-table ops write a staging table, then swap it in (drop + rename —
-  *    a metadata + file-move operation, no data rewrite);
+  *  - whole-table ops write a staging table, then swap it in (rename the
+  *    old table aside, rename the staging table in, drop the old — a
+  *    metadata + file-move operation, no data rewrite);
   *  - partition-scoped ops stage ONLY the touched partitions, then move the
   *    staged partition directories into the target and re-register them in
   *    the catalog — one data pass over the delta, zero passes over the rest
@@ -104,60 +105,63 @@ object AtomicWriter {
   }
 
   /** Atomically replace `target`'s contents with `df`, where `df` may scan
-    * `target` itself (merge/delete rewrites).
+    * `target` itself (merge/delete rewrites): stages a table, renames the
+    * old table ASIDE, swaps the staging in, then drops the old — the
+    * target name never dangles unbound for more than the one rename, and
+    * a crash mid-swap leaves the data recoverable under `__graft_old`.
     *
-    * Rename committer (default): stages a table, renames the old table
-    * ASIDE, swaps the staging in, then drops the old — the target name
-    * never dangles unbound for more than the one rename, and a crash
-    * mid-swap leaves the data recoverable under `__graft_old`.
-    *
-    * Versioned committer: ONE direct write to a fresh versioned directory
-    * under the table root; the commit is `ALTER TABLE SET LOCATION`
-    * (a catalog pointer flip — no rename of data ever happens), guarded by
-    * a pending manifest; the previous contents become garbage collected
-    * post-commit. Bucketed replacements stay on the rename path (bucket
-    * metadata requires the table-write API), which is documented as the
-    * one rename-dependent exception in versioned mode. */
+    * A failed rename is rolled back before the error is rethrown: the
+    * staged copy is dropped, and the old table is renamed back if the
+    * target name is still free — or dropped when a concurrent writer's
+    * table now holds the name. A rollback step that itself fails raises
+    * an error naming the table and `Maintenance.recover`. */
   def overwriteTable(spark: SparkSession, df: DataFrame, target: TableRef,
       partition: PartitionSpec = PartitionSpec.None,
       bucketBy: Option[(Int, Seq[String])] = None): Unit = {
-    val existed = spark.catalog.tableExists(target.render.replace("`", ""))
-    // The location flip is valid ONLY for a same-shape rebuild: identical
-    // column set/types, identical partition columns, no bucketing on
-    // either side. Schema- or layout-changing rebuilds (sync_all_columns,
-    // re-partitioning, [un]bucketing) must RECREATE the table — they take
-    // the rename path, which does exactly that.
-    def sameShape: Boolean = {
-      val meta = spark.sessionState.catalog
-        .getTableMetadata(Committer.ident(spark, target))
-      val out = withPartitionCols(df, partition)
-      meta.partitionColumnNames == partition.partitionColumns &&
-        meta.bucketSpec.isEmpty &&
-        out.schema.map(f => f.name -> f.dataType).toMap ==
-          meta.schema.map(f => f.name -> f.dataType).toMap
-    }
+    def exists(r: TableRef) = spark.catalog.tableExists(r.render.replace("`", ""))
+    val existed = exists(target)
     val stamp = Committer.newStamp()
     // heartbeated writer-presence marker for the WHOLE swap (stage through
-    // rename/flip): Maintenance.recover won't sweep this table's stamped
+    // rename): Maintenance.recover won't sweep this table's stamped
     // rollback artifacts while the marker is fresh, however long the
     // staging write runs (WriterLease — the DedupStore heartbeat shape)
     WriterLease.holding(spark, target, stamp) {
-      if (existed && bucketBy.isEmpty &&
-          Committer.forSession(spark) == VersionedCommitter && sameShape) {
-        VersionedCommitter.overwriteTable(spark, df, target, partition)
-        return
-      }
       val stg = target.copy(name = target.name + "__graft_stg_" + stamp)
       val old = target.copy(name = target.name + "__graft_old_" + stamp)
       // bucket spec travels WITH the staged table through the rename (the
       // catalog moves the whole CatalogTable), so bucketed replacements get
       // the same crash-recoverable swap as everything else
       createOrReplace(spark, df, stg, partition, bucketBy)
-      if (existed) {
-        spark.sql(s"ALTER TABLE ${target.render} RENAME TO ${old.render}")
-        repairPartitionLocations(spark, old)
+      var movedAside = false
+      try {
+        if (existed) {
+          spark.sql(s"ALTER TABLE ${target.render} RENAME TO ${old.render}")
+          movedAside = true
+          repairPartitionLocations(spark, old)
+        }
+        spark.sql(s"ALTER TABLE ${stg.render} RENAME TO ${target.render}")
+      } catch {
+        case e: Throwable =>
+          try {
+            if (movedAside) {
+              if (exists(target)) spark.sql(s"DROP TABLE IF EXISTS ${old.render}")
+              else {
+                spark.sql(s"ALTER TABLE ${old.render} RENAME TO ${target.render}")
+                repairPartitionLocations(spark, target)
+              }
+            }
+            spark.sql(s"DROP TABLE IF EXISTS ${stg.render}")
+          } catch {
+            case r: Throwable =>
+              val ex = new java.io.IOException(
+                s"table swap rollback INCOMPLETE for ${target.render} " +
+                  s"(${old.render} / ${stg.render} may remain): ${r.getMessage}" +
+                  "; run Maintenance.recover", r)
+              ex.addSuppressed(e)
+              throw ex
+          }
+          throw e
       }
-      spark.sql(s"ALTER TABLE ${stg.render} RENAME TO ${target.render}")
       repairPartitionLocations(spark, target)
       if (existed) spark.sql(s"DROP TABLE IF EXISTS ${old.render}")
     }
@@ -168,10 +172,7 @@ object AtomicWriter {
     * InMemoryCatalog re-points it with an extra percent-encoding level —
     * 'pt=50%25' becomes 'pt=50%2525'). The trustworthy source is the
     * partition SPEC: rebuild each location under the table's current root
-    * with Spark's own escaping. A versioned-committer partition living
-    * under `.graft_versions/<stamp>/…` keeps its stamp segment (stamps are
-    * `[0-9_]`-only, immune to the encoding mangle) rather than being
-    * re-pointed at the default layout its data does not occupy. */
+    * with Spark's own escaping: every partition lives at `<root>/<specRel>`. */
   private[exec] def repairPartitionLocations(spark: SparkSession,
       ref: TableRef): Unit = {
     val cat = spark.sessionState.catalog
@@ -190,25 +191,16 @@ object AtomicWriter {
       val specRel = meta.partitionColumnNames
         .map(c => ExternalCatalogUtils.getPartitionPathString(c, p.spec(c)))
         .mkString("/")
-      val cur = p.storage.locationUri.map(new HPath(_).toUri.getPath).getOrElse("")
-      val verMarker = "/" + VersionedCommitter.VersionsDir + "/"
-      val rel =
-        if (cur.contains(verMarker)) {
-          val stamp = cur.substring(cur.indexOf(verMarker) + verMarker.length)
-            .takeWhile(_ != '/')
-          s"${VersionedCommitter.VersionsDir}/$stamp/$specRel"
-        } else specRel
       p.copy(storage = p.storage.copy(
-        locationUri = Some(new HPath(root, rel).toUri)))
+        locationUri = Some(new HPath(root, specRel).toUri)))
     }
     if (fixed.nonEmpty) cat.alterPartitions(ident, fixed)
   }
 
   /** Replace ONLY the partitions present in `df`; other partitions of
     * `target` are untouched. One data pass over the delta: `df` is staged
-    * and committed through the session's [[Committer]] (directory rename
-    * swap by default; rename-free versioned-location flip for object
-    * stores), then the touched-but-unstaged partitions are emptied.
+    * and committed by [[Committer.stageAndCommit]] (directory rename
+    * swap), then the touched-but-unstaged partitions are emptied.
     *
     * `touched` (SEP-joined partition values, as produced by the callers'
     * touched-partition scan) declares the partitions the operation OWNS:
@@ -226,9 +218,9 @@ object AtomicWriter {
         "must be columns of the input frame")
     val pcols = partition.partitionColumns
     // Align to the target layout; the plan may scan the target itself, so
-    // every committer stages to a location outside the target's live dirs
-    // before any content becomes visible (breaking lineage before the swap).
-    // Distribution-only helpers ride along and are dropped by the committer
+    // the commit stages to a table outside the target's live dirs before
+    // any content becomes visible (breaking lineage before the swap).
+    // Distribution-only helpers ride along and are dropped by the commit
     // after its repartition.
     val tgtCols = spark.table(target.render).columns
     require(!distributeOn.exists(tgtCols.contains),
@@ -241,9 +233,8 @@ object AtomicWriter {
     // writer-presence marker (see overwriteTable): fresh marker = recover
     // keeps its hands off this table's stamped staging/trash artifacts
     val commit = WriterLease.holding(spark, target, Committer.newStamp()) {
-      Committer.forSession(spark)
-        .stageAndCommit(spark, aligned, target, partition, tgtDir, fs,
-          clusterBy = clusterBy, distributeOn = distributeOn)
+      Committer.stageAndCommit(spark, aligned, target, partition, tgtDir, fs,
+        clusterBy = clusterBy, distributeOn = distributeOn)
     }
     // REFRESH TABLE is needed only when a path Spark may have LISTED
     // before changed underneath it (replaced or deleted partition dirs —
@@ -273,9 +264,8 @@ object AtomicWriter {
         val specs = emptied.toSeq.sorted.map { joined =>
           pcols.zip(joined.split(SEP, -1)).toMap
         }
-        // resolve live locations from the CATALOG before dropping the
-        // registration — under the versioned committer a partition's data
-        // does NOT live at <root>/k=v, and after DROP the location is gone
+        // resolve the registered locations from the CATALOG before
+        // dropping the registration — after DROP the location is gone
         val locations = specs.flatMap(spec =>
           cat.listPartitions(ident, Some(spec))
             .flatMap(_.storage.locationUri).map(new HPath(_)))
@@ -317,9 +307,9 @@ object AtomicWriter {
   // All file manipulation goes through the Hadoop FileSystem API, not
   // java.io.File: on HDFS-like stores a directory rename is a pure metadata
   // operation, which is what makes the rename-committed partition swap
-  // O(partitions) instead of O(data) at 100 TB. Object stores without
-  // atomic rename use the VersionedCommitter (see Committer.scala), whose
-  // commit step is a catalog pointer flip instead of a rename.
+  // O(partitions) instead of O(data) at 100 TB. The swap assumes that
+  // atomic rename (see Committer.scala); object stores that emulate
+  // rename by copy+delete are not a supported target.
 
   private[exec] def tableDir(spark: SparkSession, ref: TableRef): HPath = {
     val ident = spark.sessionState.sqlParser

@@ -3,94 +3,25 @@ package graft.exec
 import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.catalog.CatalogTablePartition
 import graft.catalog.{PartitionSpec, TableRef}
 
-/** The one storage-dependent step of the partition swap: how staged data
-  * becomes the LIVE content of the target's partitions. Everything around
-  * it (stage alignment, touched-partition diff, emptied-partition cleanup,
-  * cache refresh) is storage-agnostic and stays in [[AtomicWriter]].
+/** The partition swap's commit step: how staged data becomes the LIVE
+  * content of the target's partitions. Everything around it (stage
+  * alignment, touched-partition diff, emptied-partition cleanup, cache
+  * refresh) stays in [[AtomicWriter]].
   *
-  * What differs between stores is whether a directory rename is an atomic
-  * metadata operation (HDFS-like stores) or a non-atomic copy+delete
-  * (S3/OSS-style object stores — the reference's native home gets
-  * atomicity from MaxCompute's managed storage, so parity at production
-  * scale needs this seam; it was previously only a comment at the bottom
-  * of AtomicWriter).
-  *
-  * Selected per session via `spark.graft.committer` = `rename` (default)
-  * | `versioned`. [[graft.exec.Maintenance.recover]] sweeps the crash
-  * leftovers of both.
-  */
-sealed trait Committer {
-
-  /** Write `aligned` (already projected to the target's column order) and
-    * make it the live content of the partitions it populates. Returns the
-    * staged relative partition paths (`k=v[/k=v…]`) and whether any
-    * EXISTING partition's content was replaced (⇒ cached file listings are
-    * stale). Must be all-or-nothing: on failure the target's previous
-    * content is still what readers see.
-    *
-    * `clusterBy`: optional in-file ordering expressions (over the target's
-    * columns) applied WITHIN each staged partition after the committer's
-    * own partition-column repartition — the seam through which a z-order
-    * (or any clustered) rewrite reaches catalog tables
-    * ([[Maintenance.zorderCompact]]); rows land in every staged file
-    * sorted by them, so row-group/file footer min-max stay tight. Empty =
-    * today's behavior, byte-for-byte.
-    *
-    * `distributeOn`: optional names of distribution-only HELPER columns
-    * present in `aligned` but NOT in the target schema: the committer's
-    * repartition keys become (partition cols ++ distributeOn) — so one
-    * partition value can be written by MANY tasks (the tile-parallel
-    * z-rewrite of a hot partition, [[Maintenance.zorderCompact]]) — and
-    * the helpers are dropped again before the write. Empty = one task per
-    * partition value, byte-for-byte today's behavior. */
-  def stageAndCommit(spark: SparkSession, aligned: DataFrame, target: TableRef,
-      partition: PartitionSpec, tgtDir: HPath, fs: HFileSystem,
-      clusterBy: Seq[org.apache.spark.sql.Column] = Nil,
-      distributeOn: Seq[String] = Nil): Committer.Result
-}
-
-object Committer {
-
-  final case class Result(rels: Seq[String], replacedExisting: Boolean)
-
-  def forSession(spark: SparkSession): Committer =
-    spark.conf.getOption("spark.graft.committer").getOrElse("rename") match {
-      case "rename"    => RenameCommitter
-      case "versioned" => VersionedCommitter
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.committer: '$other' (expected rename | versioned)")
-    }
-
-  private[exec] def ident(spark: SparkSession, ref: TableRef): TableIdentifier =
-    spark.sessionState.sqlParser.parseTableIdentifier(ref.render.replace("`", ""))
-
-  /** Per-operation stamp shared by every swap artifact (staging tables,
-    * trash dirs, version dirs, pending manifests): millis-prefixed so
-    * stamps sort chronologically, `[0-9_]`-only so hive-path escaping and
-    * `repairPartitionLocations` never mangle it (nextInt(bound) is never
-    * negative — `math.abs(Int.MinValue)` is). Maintenance.recover parses
-    * the millis prefix to age-gate sweeps. */
-  private[exec] def newStamp(): String =
-    f"${System.currentTimeMillis()}%013d_${
-      new java.security.SecureRandom().nextInt(1000000)}%06d"
-
-  /** `k1=v1/k2=v2` → catalog partition spec (hive-unescaped values; NULL
-    * partitions carry the default-partition sentinel, as the catalog
-    * stores them). */
-  private[exec] def specFromRel(pcols: Seq[String], rel: String): Map[String, String] =
-    rel.split("/").map { seg =>
-      val Array(k, v) = seg.split("=", 2)
-      k -> AtomicWriter.unescapePathName(v)
-    }.toMap
-}
-
-/** Trash-aside + directory rename, with rollback: O(1) metadata ops per
+  * Trash-aside + directory rename, with rollback: O(1) metadata ops per
   * partition wherever rename is atomic (HDFS, local fs, rename-capable
   * HCFS). The staged data takes one extra hop (staging table → target
   * dirs), but both hops are metadata-only.
+  *
+  * Atomicity: on an EXCEPTION the swap is all-or-nothing — every completed
+  * move is rolled back before rethrowing. On a process KILL it is
+  * per-partition only: each partition dir is either old (possibly parked
+  * in the trash dir) or new, but a multi-partition swap can be cut
+  * between partitions; [[Maintenance.recover]] restores stranded trash
+  * copies and drops unregistered partition dirs, it does not roll the
+  * cut swap back as a whole.
   *
   * Concurrency: the staging TABLE and the trash DIR carry a per-swap
   * stamp, so two materializations of the same target never collide on
@@ -98,22 +29,60 @@ object Committer {
   * tests/functional/adapter/test_concurrency.py; its retry wrapper
   * handles only the catalog races, wrapper.py:46-76). A crash leaves
   * `<t>__graft_stg_<stamp>` / `.graft_trash_<stamp>` leftovers, which
-  * Maintenance.recover sweeps by prefix. */
-object RenameCommitter extends Committer {
+  * Maintenance.recover sweeps by prefix.
+  */
+object Committer {
 
+  final case class Result(rels: Seq[String], replacedExisting: Boolean)
+
+  private[exec] def ident(spark: SparkSession, ref: TableRef): TableIdentifier =
+    spark.sessionState.sqlParser.parseTableIdentifier(ref.render.replace("`", ""))
+
+  /** Per-operation stamp shared by every swap artifact (staging tables,
+    * trash dirs, ownership markers, writer leases): millis-prefixed so
+    * stamps sort chronologically, `[0-9_]`-only so it is a plain suffix
+    * for both table names and hive paths (nextInt(bound) is never
+    * negative — `math.abs(Int.MinValue)` is). Maintenance.recover parses
+    * the millis prefix to age-gate sweeps. */
+  private[exec] def newStamp(): String =
+    f"${System.currentTimeMillis()}%013d_${
+      new java.security.SecureRandom().nextInt(1000000)}%06d"
+
+  /** Write `aligned` (already projected to the target's column order) and
+    * make it the live content of the partitions it populates. Returns the
+    * staged relative partition paths (`k=v[/k=v…]`) and whether any
+    * EXISTING partition's content was replaced (⇒ cached file listings are
+    * stale). On failure the target's previous content is still what
+    * readers see.
+    *
+    * `clusterBy`: optional in-file ordering expressions (over the target's
+    * columns) applied WITHIN each staged partition after the partition-
+    * column repartition — the seam through which a z-order (or any
+    * clustered) rewrite reaches catalog tables
+    * ([[Maintenance.zorderCompact]]); rows land in every staged file
+    * sorted by them, so row-group/file footer min-max stay tight. Empty =
+    * no in-file ordering.
+    *
+    * `distributeOn`: optional names of distribution-only HELPER columns
+    * present in `aligned` but NOT in the target schema: the repartition
+    * keys become (partition cols ++ distributeOn) — so one partition value
+    * can be written by MANY tasks (the tile-parallel z-rewrite of a hot
+    * partition, [[Maintenance.zorderCompact]]) — and the helpers are
+    * dropped again before the write. Empty = one task per partition
+    * value. */
   def stageAndCommit(spark: SparkSession, aligned: DataFrame, target: TableRef,
       partition: PartitionSpec, tgtDir: HPath, fs: HFileSystem,
       clusterBy: Seq[org.apache.spark.sql.Column] = Nil,
-      distributeOn: Seq[String] = Nil): Committer.Result = {
+      distributeOn: Seq[String] = Nil): Result = {
     val pcols = partition.partitionColumns
-    val stamp = Committer.newStamp()
+    val stamp = newStamp()
     val stg = target.copy(name = target.name + "__graft_stg_" + stamp)
     AtomicWriter.createOrReplace(spark, aligned, stg, partition,
       clusterBy = clusterBy, distributeOn = distributeOn)
     try {
       val stgDir = AtomicWriter.tableDir(spark, stg)
       val staged = AtomicWriter.partitionDirs(fs, stgDir, pcols.size)
-      if (staged.isEmpty) return Committer.Result(Nil, replacedExisting = false)
+      if (staged.isEmpty) return Result(Nil, replacedExisting = false)
       // ALL-OR-NOTHING file swap. Old partition dirs are moved ASIDE
       // (rename into a trash dir — metadata op), staged dirs moved in;
       // if ANY move fails, every completed move is rolled back before
@@ -237,282 +206,7 @@ object RenameCommitter extends Committer {
           staged.map(AtomicWriter.specOf).map(s => s"PARTITION ($s)").mkString(" "))
       }
       fs.delete(trash, true)
-      Committer.Result(staged, replacedExisting = movedAside.nonEmpty)
+      Result(staged, replacedExisting = movedAside.nonEmpty)
     } finally spark.sql(s"DROP TABLE IF EXISTS ${stg.render}")
-  }
-}
-
-/** Rename-FREE commit for object stores: data files are written DIRECTLY
-  * to a fresh versioned directory under the table root
-  * (`.graft_versions/<stamp>/k=v/` — dot-prefixed, invisible to file
-  * listing), so they never move again. The COMMIT is the catalog
-  * partition-location flip (one batched createPartitions +
-  * alterPartitions), guarded by a pending-manifest file (a single PUT —
-  * atomic on object stores) for crash recovery; the replaced version
-  * directories are garbage after the flip and are deleted post-commit.
-  * A crash leaves either (a) an uncommitted version dir + manifest
-  * (abandoned — swept) or (b) a committed flip whose garbage wasn't
-  * collected (swept) — never a half-visible table. */
-object VersionedCommitter extends Committer {
-
-  private[exec] val VersionsDir = ".graft_versions"
-  private[exec] val PendingPrefix = ".graft_pending_"
-
-  /** The table's STABLE anchor directory: its default catalog path. After
-    * a whole-table flip the table's LOCATION points inside the versions
-    * dir, so the current location cannot anchor versions/pending markers —
-    * everything version-related lives under the shell forever. */
-  private[exec] def shellDir(spark: SparkSession, target: TableRef): HPath =
-    new HPath(spark.sessionState.catalog.defaultTablePath(
-      Committer.ident(spark, target)))
-
-  def stageAndCommit(spark: SparkSession, aligned: DataFrame, target: TableRef,
-      partition: PartitionSpec, tgtDir: HPath, fs: HFileSystem,
-      clusterBy: Seq[org.apache.spark.sql.Column] = Nil,
-      distributeOn: Seq[String] = Nil): Committer.Result = {
-    val pcols = partition.partitionColumns
-    val shell = shellDir(spark, target)
-    val stamp = Committer.newStamp()
-    val vroot = new HPath(new HPath(shell, VersionsDir), stamp)
-    var out = aligned
-    if (pcols.nonEmpty)
-      out = out.repartition(
-        (pcols ++ distributeOn).map(org.apache.spark.sql.functions.col): _*)
-    if (clusterBy.nonEmpty)
-      out = out.sortWithinPartitions(
-        (pcols.map(org.apache.spark.sql.functions.col) ++ clusterBy): _*)
-    // distribution-only helpers never reach the files (drop is a
-    // projection: intra-task order and the partitioning both survive)
-    if (distributeOn.nonEmpty) out = out.drop(distributeOn: _*)
-    val pending = new HPath(shell, PendingPrefix + stamp)
-    var committed = false
-    try {
-      // CLAIM the manifest BEFORE writing any data: a concurrent writer's
-      // post-commit GC spares in-flight (pending-manifest) versions, so
-      // without the early claim it could delete this version dir mid-write
-      writePending(fs, pending, Nil)
-      out.write.partitionBy(pcols: _*).parquet(vroot.toString)
-      val staged = AtomicWriter.partitionDirs(fs, vroot, pcols.size)
-      if (staged.isEmpty) {
-        fs.delete(vroot, true); fs.delete(pending, false)
-        return Committer.Result(Nil, false)
-      }
-      writePending(fs, pending, staged)
-      val cat = spark.sessionState.catalog
-      val ident = Committer.ident(spark, target)
-      val table = cat.getTableMetadata(ident)
-      val specs = staged.map(rel => rel -> Committer.specFromRel(pcols, rel))
-      // O(|delta|) metadata: look up ONLY the staged specs — a full
-      // listPartitions would fetch every partition of the table on every
-      // commit (10⁵–10⁶ RPC payloads at the target scale)
-      val existing = specs.flatMap { case (_, spec) =>
-        cat.listPartitions(ident, Some(spec)).map(p => p.spec -> p)
-      }.toMap
-      val (toAlter, toCreate) = specs.partition(s => existing.contains(s._2))
-      val oldLocations = toAlter.flatMap { case (_, spec) =>
-        existing(spec).storage.locationUri.map(new HPath(_))
-      }
-      // the flip: two batched catalog calls. On failure between them the
-      // created partitions are dropped again (retainData — their files are
-      // cleaned up with vroot below), so readers never see a half-flip.
-      var created = false
-      try {
-        if (toCreate.nonEmpty) {
-          cat.createPartitions(ident, toCreate.map { case (rel, spec) =>
-            CatalogTablePartition(spec, table.storage.copy(
-              locationUri = Some(new HPath(vroot, rel).toUri)))
-          }, ignoreIfExists = true)
-          created = true
-        }
-        if (toAlter.nonEmpty)
-          cat.alterPartitions(ident, toAlter.map { case (rel, spec) =>
-            existing(spec).copy(storage = existing(spec).storage.copy(
-              locationUri = Some(new HPath(vroot, rel).toUri)))
-          })
-      } catch {
-        case e: Throwable =>
-          if (created)
-            cat.dropPartitions(ident, toCreate.map(_._2),
-              ignoreIfNotExists = true, purge = false, retainData = true)
-          throw e
-      }
-      committed = true
-      // committed: the manifest is no longer pending, old dirs are garbage.
-      // GC failures must NOT fail the (already committed) operation —
-      // Maintenance.recover sweeps what's left.
-      try {
-        fs.delete(pending, false)
-        oldLocations.foreach(p => fs.delete(p, true))
-        // a replaced VERSION dir whose partitions are all gone is an empty
-        // shell (just _SUCCESS etc.) — remove it so .graft_versions holds
-        // only live versions
-        def stampRoot(p: HPath): Option[HPath] = {
-          var cur = p
-          while (cur.getParent != null && cur.getParent.getName != VersionsDir)
-            cur = cur.getParent
-          Option(cur.getParent).map(_ => cur)
-        }
-        // never remove the version dir that IS the table's current root
-        // (a prior whole-table flip) — even when its last partition dir
-        // was just replaced, the catalog LOCATION still points at it
-        val curRoot = new HPath(cat.getTableMetadata(ident).location)
-          .toUri.getPath
-        oldLocations.flatMap(stampRoot).distinct
-          .filter(_.toUri.getPath != curRoot)
-          .foreach { stampDir =>
-            val hasData = fs.exists(stampDir) &&
-              fs.listStatus(stampDir).exists(s =>
-                s.isDirectory && s.getPath.getName.contains("="))
-            if (fs.exists(stampDir) && !hasData) fs.delete(stampDir, true)
-          }
-      } catch { case scala.util.control.NonFatal(_) => }
-      Committer.Result(staged, replacedExisting = toAlter.nonEmpty)
-    } catch {
-      case e: Throwable if !committed =>
-        // uncommitted version: readers never saw it; drop the evidence
-        fs.delete(vroot, true)
-        fs.delete(pending, false)
-        throw e
-    }
-  }
-
-  /** Whole-table replacement, rename-free: write the new contents straight
-    * to a fresh versioned dir under the table's SHELL, COMMIT by flipping
-    * the table's location (`ALTER TABLE SET LOCATION` — one catalog
-    * metadata CAS, the single point of no return), then fix partition
-    * metadata and GC the previous contents. The write doubles as the
-    * lineage break (the plan may scan the target, but it writes to a path
-    * that is not yet the table).
-    *
-    * Crash/failure windows, all recoverable:
-    *  - before the flip: the table is untouched; the version dir + pending
-    *    manifest are invisible garbage (cleaned here on failure, or swept
-    *    by Maintenance.recover after a crash);
-    *  - after the flip: the data is committed; stale partition metadata /
-    *    uncollected old files are finished by Maintenance.recover, which
-    *    recognizes a pending manifest whose version dir IS the current
-    *    table root and completes the registration + GC.
-    * Callers guarantee a SAME-SHAPE rebuild (AtomicWriter routes anything
-    * else to the table-recreating rename path). */
-  private[exec] def overwriteTable(spark: SparkSession, df: DataFrame,
-      target: TableRef, partition: PartitionSpec): Unit = {
-    val pcols = partition.partitionColumns
-    val curDir = AtomicWriter.tableDir(spark, target) // may BE a version dir
-    val shell = shellDir(spark, target)
-    val fs = shell.getFileSystem(spark.sessionState.newHadoopConf())
-    val stamp = Committer.newStamp()
-    val vroot = new HPath(new HPath(shell, VersionsDir), stamp)
-    val tgtCols = spark.table(target.render).columns
-    var out = AtomicWriter.withPartitionCols(df, partition)
-      .select(tgtCols.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    if (pcols.nonEmpty)
-      out = out.repartition(pcols.map(org.apache.spark.sql.functions.col): _*)
-    val pending = new HPath(shell, PendingPrefix + stamp)
-    var committed = false
-    try {
-      // claim before writing data — see stageAndCommit: the manifest is
-      // what shields an in-flight version from a concurrent writer's GC
-      writePending(fs, pending, Nil)
-      var w = out.write
-      if (pcols.nonEmpty) w = w.partitionBy(pcols: _*)
-      w.parquet(vroot.toString)
-      val staged =
-        if (pcols.isEmpty) Nil
-        else AtomicWriter.partitionDirs(fs, vroot, pcols.size)
-      writePending(fs, pending, staged)
-      val cat = spark.sessionState.catalog
-      val ident = Committer.ident(spark, target)
-      // snapshot GC candidates BEFORE the flip invalidates "current"
-      val oldEntries =
-        if (curDir.toUri.getPath == shell.toUri.getPath)
-          fs.listStatus(shell).map(_.getPath).filterNot(p =>
-            p.getName == VersionsDir || p.getName.startsWith(PendingPrefix))
-        else Array.empty[HPath]
-      val oldVersions =
-        if (fs.exists(new HPath(shell, VersionsDir)))
-          fs.listStatus(new HPath(shell, VersionsDir)).map(_.getPath)
-            .filterNot(_.getName == stamp)
-        else Array.empty[HPath]
-      val staleSpecs = if (pcols.nonEmpty) cat.listPartitions(ident).map(_.spec)
-        else Nil
-      // THE COMMIT. Nothing destructive has happened before this line.
-      spark.sql(s"ALTER TABLE ${target.render} SET LOCATION " +
-        s"'${graft.functions.Fns.sqlStringEscape(vroot.toString)}'")
-      committed = true
-      // post-flip fix-up. A failure past this point leaves the PENDING
-      // manifest in place — Maintenance.recover recognizes a manifest
-      // whose version dir is the current root and finishes this block.
-      if (pcols.nonEmpty) {
-        if (staleSpecs.nonEmpty)
-          cat.dropPartitions(ident, staleSpecs, ignoreIfNotExists = true,
-            purge = false, retainData = true)
-        staged.grouped(500).foreach { chunk =>
-          Retry.withRetries() {
-            spark.sql(s"ALTER TABLE ${target.render} ADD IF NOT EXISTS " +
-              chunk.map(AtomicWriter.specOf).map(s => s"PARTITION ($s)")
-                .mkString(" "))
-          }
-        }
-      }
-      // rename-path parity: a rebuild starts with a CLEAN property slate
-      // (the staged CTAS there carries none); Spark-reserved keys excepted
-      clearTableProperties(spark, target)
-      spark.sql(s"REFRESH TABLE ${target.render}")
-      // fix-up done — only now does the manifest stop being pending
-      fs.delete(pending, false)
-      try { // post-commit GC; failures are swept by Maintenance.recover
-        // the candidates were snapshotted BEFORE our flip — a CONCURRENT
-        // whole-table writer may have (a) flipped the table to one of them
-        // after us (its version is now the live root), (b) staged one with
-        // a still-pending manifest (its flip is in flight), or (c) carry a
-        // LATER stamp than ours (it started after this writer — its
-        // version is never ours to collect). Deleting any of these would
-        // destroy the winner's data, so all are skipped; a crashed
-        // writer's leftovers keep their pending manifest and are swept by
-        // Maintenance.recover instead. (A writer with an EARLIER stamp
-        // completing its whole flip inside the microseconds between this
-        // filter and the delete remains a theoretical TOCTOU — closing it
-        // needs a catalog-side lease, which no portable catalog offers.)
-        val curRootNow = new HPath(cat.getTableMetadata(ident).location)
-          .toUri.getPath
-        def inFlight(p: HPath): Boolean =
-          fs.exists(new HPath(shell, PendingPrefix + p.getName))
-        oldEntries.foreach(p => fs.delete(p, true))
-        oldVersions
-          .filterNot(p => p.toUri.getPath == curRootNow || inFlight(p) ||
-            p.getName >= stamp)
-          .foreach(p => fs.delete(p, true))
-      } catch { case scala.util.control.NonFatal(_) => }
-    } catch {
-      case e: Throwable if !committed =>
-        // uncommitted: readers never saw the new version; drop the evidence
-        fs.delete(vroot, true)
-        fs.delete(pending, false)
-        throw e
-    }
-  }
-
-  private[exec] def clearTableProperties(spark: SparkSession,
-      target: TableRef): Unit = {
-    val reserved = Set("owner", "provider", "location", "external")
-    val keys = spark.sql(s"SHOW TBLPROPERTIES ${target.render}").collect()
-      .map(_.getString(0)).filterNot(reserved)
-    if (keys.nonEmpty)
-      spark.sql(s"ALTER TABLE ${target.render} UNSET TBLPROPERTIES IF EXISTS (" +
-        keys.map(k => s"'${graft.functions.Fns.sqlStringEscape(k)}'")
-          .mkString(", ") + ")")
-  }
-
-  private[exec] def writePending(fs: HFileSystem, p: HPath,
-      rels: Seq[String]): Unit = {
-    val out = fs.create(p, true)
-    try out.write(rels.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private[exec] def readPending(fs: HFileSystem, p: HPath): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSeq
-    finally in.close()
   }
 }

@@ -223,7 +223,7 @@ object Layout {
     * with each append (the m06-style ingest pattern). The fix is a
     * re-cluster: read everything, [[zorderWrite]] into PRIVATE staging,
     * and swap directories with trash-aside renames — the same
-    * all-or-nothing discipline as [[Committer]]'s rename path (old data
+    * all-or-nothing discipline as [[Committer]]'s partition swap (old data
     * moves ASIDE before the staged dir moves in; any failure restores it;
     * the trash is deleted only after the swap completes). Rows are
     * preserved exactly (one shuffle — the clustered write's own range

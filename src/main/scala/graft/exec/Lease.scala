@@ -10,10 +10,10 @@ import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
   *    the atomic arbiter between two acquirers; presence + freshness means
   *    "someone is running, keep out".
   *  - PRESENCE marker ([[AtomicWriter.overwriteTable]] /
-  *    [[graft.exec.Committer]] writers): each writer heartbeats its OWN
-  *    stamped file; [[Maintenance.recover]] treats any fresh marker as "a
-  *    writer is in flight — don't sweep its rollback state", closing the
-  *    window where a write longer than `spark.graft.recover.minAgeMs`
+  *    [[AtomicWriter.overwritePartitions]] swaps): each writer heartbeats
+  *    its OWN stamped file; [[Maintenance.recover]] treats any fresh marker
+  *    as "a writer is in flight — don't sweep its rollback state", closing
+  *    the window where a write longer than `spark.graft.recover.minAgeMs`
   *    had its staging/trash artifacts swept from under it.
   *
   * The heartbeat advances the lease file's mtime every `intervalMs` so a
@@ -108,14 +108,14 @@ object Lease {
   * holds a heartbeated, stamp-named lease file for its whole run, and
   * [[Maintenance.recover]] refuses to sweep a table whose lease dir holds
   * a FRESH marker — a writer that outlives `spark.graft.recover.minAgeMs`
-  * no longer has its staging/trash/manifest rollback state swept from
+  * no longer has its staging-table/trash-dir rollback state swept from
   * under it (the DedupStore-compact heartbeat shape, applied to the
-  * committer seam — VERDICT r12 #7).
+  * table swap — VERDICT r12 #7).
   *
   * Markers live under the DATABASE directory
   * (`<dbDir>/.graft_writer_leases/<table>__<stamp>`), not the table dir:
-  * the rename committer MOVES table directories during the swap, and a
-  * marker inside one would travel with it. Concurrent same-table writers
+  * the swap MOVES table directories (table rename, partition-dir
+  * renames), and a marker inside one would travel with it. Concurrent same-table writers
   * each hold their own stamped marker (presence, not mutual exclusion —
   * same-table concurrency stays supported); a crashed writer's marker
   * stops beating and ages out at `spark.graft.writerLease.maxAgeMs`

@@ -21,16 +21,9 @@ import graft.catalog.{PartitionSpec, TableRef}
   */
 object Maintenance {
 
-  /** File count per partition (relative partition path → #data files).
-    *
-    * Counts where the LIVE partition actually is: the root-directory walk
-    * (rename-committer layout, where partitions live under the table
-    * location) is overlaid with every catalog-REGISTERED partition's own
-    * location — under the versioned committer an overwritten partition's
-    * files live in a version directory and its old root dir is garbage-
-    * collected, so a root-only walk would count the live partition as
-    * empty (or a stale leftover). Rename-committer partitions register
-    * the standard root locations, so the overlay is a no-op there. */
+  /** File count per partition (relative partition path → #data files),
+    * from one walk of the table root: every registered partition lives at
+    * `<root>/<k=v…>`. */
   def partitionFileCounts(spark: SparkSession, target: TableRef,
       partition: PartitionSpec): Map[String, Int] =
     partitionFileStats(spark, target, partition)
@@ -42,13 +35,8 @@ object Maintenance {
     * [[zorderCompact]]) cost no extra I/O. */
   def partitionFileStats(spark: SparkSession, target: TableRef,
       partition: PartitionSpec): Map[String, (Int, Long)] = {
-    val ident = spark.sessionState.sqlParser
-      .parseTableIdentifier(target.render.replace("`", ""))
-    val cat = spark.sessionState.catalog
-    val meta = cat.getTableMetadata(ident)
-    val root = new org.apache.hadoop.fs.Path(meta.location)
+    val root = AtomicWriter.tableDir(spark, target)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = root.getFileSystem(conf)
     val pcols = partition.partitionColumns
     // exclude "_" AND "." prefixed files (Spark's hidden-file filter):
     // _SUCCESS and the committer's ._graft_swap_* ownership markers are
@@ -70,34 +58,7 @@ object Maintenance {
         .flatMap(s => walk(s.getPath, d - 1,
           if (rel.isEmpty) s.getPath.getName else rel + "/" + s.getPath.getName))
     }
-    val walked = walk(root, pcols.size, "").toMap
-    // registered partitions (maintenance is O(|partitions|) by nature —
-    // this listing is the same order as the directory walk above). A
-    // partition registered at its STANDARD root-layout location was just
-    // counted by the walk — re-listing it would double the metadata I/O
-    // on rename-committer tables for a guaranteed-identical answer, so
-    // only locations that actually diverge (version dirs) are listed.
-    // The catch is NARROW (ADVICE r17): only the "not partitioned in the
-    // catalog" analysis failure degrades to the root walk; a transient
-    // metastore failure must propagate, not silently read versioned
-    // partitions as 0 files and skip them from maintenance.
-    val registered =
-      (try cat.listPartitions(ident)
-       catch { case _: org.apache.spark.sql.AnalysisException => Nil })
-        .flatMap { p =>
-          val rel = pcols.map(c =>
-            org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-              .getPartitionPathString(c,
-                p.spec.getOrElse(c, HiveDefaultPartition)))
-            .mkString("/")
-          p.storage.locationUri.flatMap { u =>
-            val loc = new org.apache.hadoop.fs.Path(u)
-            val std = new org.apache.hadoop.fs.Path(root, rel)
-            if (loc.toUri.getPath == std.toUri.getPath) None
-            else Some(rel -> dataFiles(ls(loc)))
-          }
-        }.toMap
-    walked ++ registered
+    walk(root, pcols.size, "").toMap
   }
 
   private val HiveDefaultPartition = AtomicWriter.HiveDefaultPartition
@@ -147,10 +108,10 @@ object Maintenance {
     * carried through the committer seam: partitions whose file count
     * exceeds `maxFiles` (incremental appends land one unclustered file per
     * partition per run) are rewritten CLUSTERED on the Morton z-value of
-    * (`xCol`, `yCol`) and swapped in atomically by whichever committer the
-    * session selected (rename or versioned — the `clusterBy` ordering
-    * travels through [[Committer.stageAndCommit]]). Untouched partitions
-    * are never staged, so their files stay byte-identical.
+    * (`xCol`, `yCol`) and swapped in atomically by the partition swap (the
+    * `clusterBy` ordering travels through [[Committer.stageAndCommit]]).
+    * Untouched partitions are never staged, so their files stay
+    * byte-identical.
     *
     * The quantization stats persist as TABLE PROPERTIES
     * (`graft.zorder.{cols,xlo,xhi,ylo,yhi,bits}`) on first use — the
@@ -466,23 +427,20 @@ object Maintenance {
     *  2. Abandoned helper tables (`__graft_stg[_<stamp>]`, `__graft_old…`
     *     with the target present, `__dbt_tmp`): staged data that never
     *     swapped in — drop.
-    *  3. `.graft_trash` / `.graft_trash_<stamp>` dirs (rename committer):
+    *  3. `.graft_trash` / `.graft_trash_<stamp>` dirs:
     *     partitions whose live dir is MISSING are restored from the trash
     *     copy (+ re-registered); copies whose live dir exists are deleted.
     *     3b. a crashed race-loser's marker-stamped staged dir nested INSIDE
     *     a live partition dir (`<dir>/<sameLeafName>` with `._graft_swap_*`)
     *     is moved aside into the loser's trash stamp — readers stop seeing
     *     the torn partition; the next recover purges the aside copy.
-    *  4. Pending version manifests (versioned committer): per staged
-    *     partition, keep the versioned files iff the catalog flip reached
-    *     them, else delete; then drop the manifest.
-    *  5. Orphan version dirs and orphan default-layout partition dirs —
-    *     directories no catalog partition references (post-commit GC that
-    *     never ran) — deleted.
+    *  4. Orphan partition dirs — partition dirs under the root that no
+    *     catalog partition references (a swap killed after moving a NEW
+    *     partition's dir in, before its ADD PARTITION) — deleted.
     *
     * Concurrency: recover assumes NO writer is in flight on this table
-    * (exclusive-admin semantics) — a live swap's staging table, trash dir,
-    * version dir or pending manifest looks exactly like a crash leftover.
+    * (exclusive-admin semantics) — a live swap's staging table or trash
+    * dir looks exactly like a crash leftover.
     * In shared environments set `spark.graft.recover.minAgeMs`: stamped
     * artifacts younger than it (stamps embed epoch millis) are SKIPPED, so
     * any writer that started within the window keeps its rollback state. */
@@ -522,7 +480,7 @@ object Maintenance {
     // a YOUNG old-table with the target missing is exactly a live
     // overwriteTable sitting between its two renames — restoring it would
     // make the live writer's `stg RENAME TO target` fail and leak its
-    // staging table. Honor the same grace window as steps 2–5: skip (and
+    // staging table. Honor the same grace window as steps 2–4: skip (and
     // say so) until the newest old-table ages out.
     if (!exists(target)) tablesWithPrefix(oldPrefix).lastOption.foreach { o =>
       if (isYoung(o))
@@ -549,30 +507,16 @@ object Maintenance {
     val ident = Committer.ident(spark, target)
     val meta = cat.getTableMetadata(ident)
     val root = new org.apache.hadoop.fs.Path(meta.location)
-    // version machinery anchors at the table's STABLE shell (default
-    // path) — after a whole-table flip meta.location sits INSIDE the
-    // versions dir, so the shell and the current root may differ
-    val shell = VersionedCommitter.shellDir(spark, target)
-    val fs = shell.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val depth = meta.partitionColumnNames.size
-    val rootPath = root.toUri.getPath
-    def livePathsNow(): Set[String] = cat.listPartitions(ident)
-      .flatMap(_.storage.locationUri).map(u =>
-        new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet + rootPath
-    val livePaths = livePathsNow()
 
     def ls(dir: org.apache.hadoop.fs.Path) =
       try fs.listStatus(dir).toSeq
       catch { case _: java.io.FileNotFoundException => Nil }
-    // trash/pending can sit under the shell or the current root (the
-    // rename committer operates at the current location)
-    val scanDirs =
-      if (rootPath == shell.toUri.getPath) Seq(shell) else Seq(shell, root)
-    val entries = scanDirs.flatMap(ls).distinct
 
     // 3. trash dirs: restore what the live table lost, drop the rest
     // (young = possibly a live swap's rollback state — leave untouched)
-    if (depth > 0) entries.filter(e => e.isDirectory &&
+    if (depth > 0) ls(root).filter(e => e.isDirectory &&
         e.getPath.getName.startsWith(".graft_trash") &&
         !isYoung(e.getPath.getName)).foreach { t =>
       // the trash may hold the ONLY copy of a partition — purge it only if
@@ -600,9 +544,9 @@ object Maintenance {
       }
     }
 
-    // 3b. nested swap leftovers (rename committer): a loser of the
-    // same-partition rename-nesting race that CRASHED between its nesting
-    // rename and its own nest check leaves its marker-stamped staged dir
+    // 3b. nested swap leftovers: a loser of the same-partition
+    // rename-nesting race that CRASHED between its nesting rename and its
+    // own nest check leaves its marker-stamped staged dir
     // nested inside the winner's live partition dir (<dir>/<sameLeafName>
     // carrying ._graft_swap_<stamp>) — Spark's recursive leaf-file listing
     // would read BOTH writers' files (torn partition) until the next swap
@@ -636,87 +580,18 @@ object Maintenance {
         }
     }
 
-    // 4. pending version manifests. A manifest whose version dir IS the
-    // table's current root is a COMMITTED whole-table flip whose post-flip
-    // fix-up never finished: complete it (stale partition metadata dropped,
-    // staged partitions registered). Anything else is an uncommitted crash:
-    // staged files the flip never reached are dropped.
-    val vbase = new org.apache.hadoop.fs.Path(shell, VersionedCommitter.VersionsDir)
-    entries.filter(e => !e.isDirectory &&
-        e.getPath.getName.startsWith(VersionedCommitter.PendingPrefix) &&
-        !isYoung(e.getPath.getName))
-      .foreach { m =>
-        val stamp = m.getPath.getName.stripPrefix(VersionedCommitter.PendingPrefix)
-        val vroot = new org.apache.hadoop.fs.Path(vbase, stamp)
-        if (vroot.toUri.getPath == rootPath) {
-          if (depth > 0) {
-            val stale = cat.listPartitions(ident).filter(p =>
-              !p.storage.locationUri.map(u =>
-                new org.apache.hadoop.fs.Path(u).toUri.getPath)
-                .exists(_.startsWith(rootPath + "/")))
-            if (stale.nonEmpty)
-              cat.dropPartitions(ident, stale.map(_.spec),
-                ignoreIfNotExists = true, purge = false, retainData = true)
-            VersionedCommitter.readPending(fs, m.getPath).grouped(500)
-              .foreach { chunk =>
-                spark.sql(s"ALTER TABLE ${target.render} ADD IF NOT EXISTS " +
-                  chunk.map(AtomicWriter.specOf).map(sp => s"PARTITION ($sp)")
-                    .mkString(" "))
-              }
-          }
-          spark.sql(s"REFRESH TABLE ${target.render}")
-          fs.delete(m.getPath, false)
-          actions += s"completed committed whole-table flip $stamp"
-        } else {
-          VersionedCommitter.readPending(fs, m.getPath).foreach { rel =>
-            val vdir = new org.apache.hadoop.fs.Path(vroot, rel)
-            if (!livePaths.contains(vdir.toUri.getPath) && fs.exists(vdir)) {
-              fs.delete(vdir, true)
-              actions += s"dropped uncommitted versioned partition $stamp/$rel"
-            }
-          }
-          fs.delete(m.getPath, false)
-          actions += s"cleared pending manifest $stamp"
+    // 4. orphan partition dirs: moved in by a swap that was killed before
+    // its ADD PARTITION (liveness read AFTER step 3 re-registered any
+    // partition it restored from the trash)
+    if (depth > 0) {
+      val livePaths = cat.listPartitions(ident).flatMap(_.storage.locationUri)
+        .map(u => new org.apache.hadoop.fs.Path(u).toUri.getPath).toSet
+      AtomicWriter.partitionDirs(fs, root, depth).foreach { rel =>
+        val p = new org.apache.hadoop.fs.Path(root, rel)
+        if (!livePaths.contains(p.toUri.getPath)) {
+          fs.delete(p, true)
+          actions += s"dropped orphan partition dir $rel"
         }
-      }
-
-    // 4b. once the table root is a version dir, anything still sitting at
-    // shell level outside the version machinery is the PRE-flip contents
-    // whose GC never ran — a full stale copy of the table; sweep it
-    if (rootPath != shell.toUri.getPath &&
-        rootPath.startsWith(shell.toUri.getPath + "/")) {
-      ls(shell).map(_.getPath).filterNot(p =>
-        p.getName == VersionedCommitter.VersionsDir ||
-          p.getName.startsWith(VersionedCommitter.PendingPrefix) ||
-          p.getName.startsWith(".graft_trash")).foreach { p =>
-        fs.delete(p, true)
-        actions += s"dropped pre-flip shell leftover ${p.getName}"
-      }
-    }
-
-    // 5a/5b liveness is RE-read: step 4 may have just completed a flip's
-    // partition registration, which the earlier snapshot predates
-    val livePaths2 = livePathsNow()
-    // 5a. orphan version dirs: live iff the table's current root IS the
-    // version dir (whole-table flip) or a registered partition lives inside
-    if (fs.exists(vbase)) fs.listStatus(vbase)
-        .filter(v => v.isDirectory && !isYoung(v.getPath.getName)).foreach { v =>
-      val vPath = v.getPath.toUri.getPath
-      val referenced = vPath == rootPath ||
-        (depth > 0 && AtomicWriter.partitionDirs(fs, v.getPath, depth).exists(rel =>
-          livePaths2.contains(new org.apache.hadoop.fs.Path(v.getPath, rel).toUri.getPath)))
-      if (!referenced) {
-        fs.delete(v.getPath, true)
-        actions += s"dropped orphan version dir ${v.getPath.getName}"
-      }
-    }
-    // 5b. orphan default-layout partition dirs under the CURRENT root
-    // (replaced by a versioned flip whose GC never ran)
-    if (depth > 0) AtomicWriter.partitionDirs(fs, root, depth).foreach { rel =>
-      val p = new org.apache.hadoop.fs.Path(root, rel)
-      if (!livePaths2.contains(p.toUri.getPath)) {
-        fs.delete(p, true)
-        actions += s"dropped orphan partition dir $rel"
       }
     }
     actions.toSeq

@@ -91,95 +91,66 @@ class AtomicSwapSpec extends SparkSpec {
     assert(!tables().exists(_.startsWith("swap_recover_part__graft_stg")))
   }
 
-  // ------------------------------------------------- committer seam (both)
+  // ------------------------------------------------------ partition swap
 
-  private def withCommitter[T](name: String)(f: => T): T = {
-    spark.conf.set("spark.graft.committer", name)
-    try f finally spark.conf.unset("spark.graft.committer")
+  test("[rename] partition overwrite replaces only source partitions") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = TableRef("default.swap_c")
+    Materializer.table(spark, ref,
+      Seq((1L, "p1"), (2L, "p2"), (3L, "p3")).toDF("id", "pt"), part)
+    AtomicWriter.overwritePartitions(spark,
+      Seq((10L, "p1"), (30L, "p3")).toDF("id", "pt"), ref, part)
+    val got = spark.table(ref.render).select("id").as[Long].collect().sorted
+    assert(got.toSeq == Seq(2L, 10L, 30L))
+    // second overwrite of the same partition (exercises replace path)
+    AtomicWriter.overwritePartitions(spark,
+      Seq((11L, "p1")).toDF("id", "pt"), ref, part)
+    assert(spark.table(ref.render).select("id").as[Long].collect().sorted
+      .toSeq == Seq(2L, 11L, 30L))
+    assert(!tables().exists(_.contains("graft_stg")))
   }
 
-  for (committer <- Seq("rename", "versioned")) {
-    test(s"[$committer] partition overwrite replaces only source partitions") {
-      withCommitter(committer) {
-        val part = PartitionSpec.Static(Seq("pt" -> "string"))
-        val ref = TableRef(s"default.swap_c_$committer")
-        Materializer.table(spark, ref,
-          Seq((1L, "p1"), (2L, "p2"), (3L, "p3")).toDF("id", "pt"), part)
-        AtomicWriter.overwritePartitions(spark,
-          Seq((10L, "p1"), (30L, "p3")).toDF("id", "pt"), ref, part)
-        val got = spark.table(ref.render).select("id").as[Long].collect().sorted
-        assert(got.toSeq == Seq(2L, 10L, 30L))
-        // second overwrite of the same partition (exercises replace path)
-        AtomicWriter.overwritePartitions(spark,
-          Seq((11L, "p1")).toDF("id", "pt"), ref, part)
-        assert(spark.table(ref.render).select("id").as[Long].collect().sorted
-          .toSeq == Seq(2L, 11L, 30L))
-        assert(!tables().exists(_.contains("graft_stg")))
-      }
-    }
-
-    test(s"[$committer] touched-but-empty partitions are dropped") {
-      withCommitter(committer) {
-        val part = PartitionSpec.Static(Seq("pt" -> "string"))
-        val ref = TableRef(s"default.swap_e_$committer")
-        Materializer.table(spark, ref,
-          Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
-        graft.exec.Mutations.delete(spark, ref, $"pt" === "p1", part)
-        assert(spark.table(ref.render).select("id").as[Long].collect().toSeq
-          == Seq(2L))
-        val parts = spark.sql(s"SHOW PARTITIONS ${ref.render}")
-          .collect().map(_.getString(0))
-        assert(!parts.exists(_.contains("p1")), parts.mkString(","))
-      }
-    }
+  test("[rename] touched-but-empty partitions are dropped") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = TableRef("default.swap_e")
+    Materializer.table(spark, ref,
+      Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
+    graft.exec.Mutations.delete(spark, ref, $"pt" === "p1", part)
+    assert(spark.table(ref.render).select("id").as[Long].collect().toSeq
+      == Seq(2L))
+    val parts = spark.sql(s"SHOW PARTITIONS ${ref.render}")
+      .collect().map(_.getString(0))
+    assert(!parts.exists(_.contains("p1")), parts.mkString(","))
   }
 
-  test("versioned commits leave no uncollected garbage after repeated overwrites") {
-    withCommitter("versioned") {
-      val part = PartitionSpec.Static(Seq("pt" -> "string"))
-      val ref = TableRef("default.swap_vgc")
-      Materializer.table(spark, ref, Seq((1L, "p1")).toDF("id", "pt"), part)
-      (2 to 4).foreach(i => AtomicWriter.overwritePartitions(spark,
-        Seq((i.toLong, "p1")).toDF("id", "pt"), ref, part))
-      assert(spark.table(ref.render).select("id").as[Long].collect().toSeq
-        == Seq(4L))
-      // only the LIVE version dir remains; replaced ones were GC'd
-      val root = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vgc")).location.toString))
-      val vdirs = new java.io.File(root, ".graft_versions").listFiles()
-      assert(vdirs != null && vdirs.length == 1, vdirs.mkString(","))
-      assert(new java.io.File(root, "pt=p1").exists() == false ||
-        new java.io.File(root, "pt=p1").listFiles().isEmpty,
-        "default-layout dir should have been replaced by versioned flips")
-    }
-  }
-
-  test("recover sweeps an uncommitted versioned write (crash before flip)") {
-    withCommitter("versioned") {
-      val part = PartitionSpec.Static(Seq("pt" -> "string"))
-      val ref = TableRef("default.swap_vcrash")
-      Materializer.table(spark, ref, Seq((1L, "p1")).toDF("id", "pt"), part)
-      val root = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vcrash")).location.toString))
-      // simulate: version dir + pending manifest written, crash before the
-      // catalog flip
-      val vdir = new java.io.File(root, ".graft_versions/999_crash/pt=p1")
-      assert(vdir.mkdirs())
-      java.nio.file.Files.writeString(vdir.toPath.resolve("part-0.parquet"), "x")
-      java.nio.file.Files.writeString(
-        root.toPath.resolve(".graft_pending_999_crash"), "pt=p1")
-      val actions = graft.exec.Maintenance.recover(spark, ref)
-      assert(actions.exists(_.contains("uncommitted versioned partition")), actions)
-      assert(!vdir.exists())
-      assert(!root.toPath.resolve(".graft_pending_999_crash").toFile.exists())
-      // live table untouched
-      assert(spark.table(ref.render).select("id").as[Long].collect().toSeq
-        == Seq(1L))
-    }
+  test("recover drops an orphan partition dir a killed swap left unregistered") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = TableRef("default.swap_orphan")
+    Materializer.table(spark, ref,
+      Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
+    val root = new java.io.File(new java.net.URI(
+      spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(
+          "default.swap_orphan")).location.toString))
+    // simulate a swap killed after a NEW partition's dir moved in, before
+    // its ALTER TABLE … ADD PARTITION: data files, no registration
+    val orphan = new java.io.File(root, "pt=px")
+    Seq(99L).toDF("id").coalesce(1).write.parquet(orphan.toString)
+    assert(orphan.listFiles().exists(_.getName.endsWith(".parquet")))
+    def rows() = spark.table(ref.render).as[(Long, String)].collect().sorted.toSeq
+    val before = rows()
+    assert(before == Seq((1L, "p1"), (2L, "p2")))
+    val actions = Maintenance.recover(spark, ref)
+    assert(actions.contains("dropped orphan partition dir pt=px"), actions)
+    assert(!orphan.exists())
+    spark.sql(s"REFRESH TABLE ${ref.render}")
+    assert(rows() == before)
+    // a following compaction rewrites the live partitions only
+    Maintenance.compact(spark, ref, part, maxFiles = 0)
+    val parts = spark.sql(s"SHOW PARTITIONS ${ref.render}")
+      .collect().map(_.getString(0)).sorted
+    assert(parts.toSeq == Seq("pt=p1", "pt=p2"), parts.mkString(","))
+    assert(rows() == before)
   }
 
   test("recover restores a partition stranded in .graft_trash") {
@@ -235,178 +206,62 @@ class AtomicSwapSpec extends SparkSpec {
       == Seq((7L, "keep")))
   }
 
-  test("versioned whole-table replace: location flip, no renames, GC, nesting") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vtable")
-      Seq((1L, "a")).toDF("id", "v").write.mode("overwrite")
-        .saveAsTable(ref.render)
-      // 1st replace: shell layout -> version dir
-      AtomicWriter.overwriteTable(spark,
-        spark.table(ref.render).withColumn("v", upper($"v")), ref)
-      assert(spark.table(ref.render).as[(Long, String)].collect().toSeq
-        == Seq((1L, "A")))
-      val meta1 = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier("default.swap_vtable"))
-      assert(new org.apache.hadoop.fs.Path(meta1.location).toUri.getPath
-        .contains(".graft_versions/"), s"location not flipped: ${meta1.location}")
-      // 2nd replace: version dir -> version dir; old version GC'd
-      AtomicWriter.overwriteTable(spark,
-        spark.table(ref.render).withColumn("id", $"id" + 1), ref)
-      assert(spark.table(ref.render).as[(Long, String)].collect().toSeq
-        == Seq((2L, "A")))
-      val shell = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.defaultTablePath(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vtable")).toString))
-      val vdirs = new java.io.File(shell, ".graft_versions").listFiles()
-      assert(vdirs != null && vdirs.length == 1,
-        s"replaced versions not GC'd: ${vdirs.mkString(",")}")
-      assert(!shell.listFiles().exists(_.getName.startsWith(".graft_pending")),
-        "pending manifest not cleared")
-    }
+  test("whole-table replace of a PARTITIONED table re-registers partitions") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = TableRef("default.swap_tablep")
+    Materializer.table(spark, ref,
+      Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
+    AtomicWriter.overwriteTable(spark,
+      Seq((10L, "p1"), (30L, "p3")).toDF("id", "pt"), ref, part)
+    val got = spark.table(ref.render).select("id", "pt").as[(Long, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(got == Seq((10L, "p1"), (30L, "p3")))
+    val parts = spark.sql(s"SHOW PARTITIONS ${ref.render}")
+      .collect().map(_.getString(0)).sorted
+    assert(parts.toSeq == Seq("pt=p1", "pt=p3"), parts.mkString(","))
+    // a partition-level commit after the whole-table swap
+    AtomicWriter.overwritePartitions(spark,
+      Seq((11L, "p1")).toDF("id", "pt"), ref, part)
+    assert(spark.table(ref.render).select("id").as[Long].collect().sorted
+      .toSeq == Seq(11L, 30L))
   }
 
-  test("versioned whole-table replace of a PARTITIONED table re-registers partitions") {
-    withCommitter("versioned") {
-      val part = PartitionSpec.Static(Seq("pt" -> "string"))
-      val ref = TableRef("default.swap_vtablep")
-      Materializer.table(spark, ref,
-        Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
-      // unpartitioned-style whole-table rewrite path (e.g. touched-cap
-      // fallback) under the versioned committer
-      AtomicWriter.overwriteTable(spark,
-        Seq((10L, "p1"), (30L, "p3")).toDF("id", "pt"), ref, part)
-      val got = spark.table(ref.render).select("id", "pt").as[(Long, String)]
-        .collect().sortBy(_._1).toSeq
-      assert(got == Seq((10L, "p1"), (30L, "p3")))
-      val parts = spark.sql(s"SHOW PARTITIONS ${ref.render}")
-        .collect().map(_.getString(0)).sorted
-      assert(parts.toSeq == Seq("pt=p1", "pt=p3"), parts.mkString(","))
-      // partition-level commit AFTER the flip nests under the stable shell
-      AtomicWriter.overwritePartitions(spark,
-        Seq((11L, "p1")).toDF("id", "pt"), ref, part)
-      assert(spark.table(ref.render).select("id").as[Long].collect().sorted
-        .toSeq == Seq(11L, 30L))
+  test("overwriteTable onto a view rolls back its staged copy") {
+    val ref = TableRef("default.swap_view")
+    Seq((1L, "a")).toDF("id", "v").write.mode("overwrite")
+      .saveAsTable("default.swap_view_src")
+    spark.sql(s"CREATE OR REPLACE VIEW ${ref.render} AS " +
+      "SELECT * FROM default.swap_view_src")
+    // the staged write succeeds; `ALTER TABLE <view> RENAME` then fails
+    intercept[org.apache.spark.sql.AnalysisException] {
+      AtomicWriter.overwriteTable(spark, Seq((2L, "b")).toDF("id", "v"), ref)
     }
+    val leaked = tables().filter(t => t.startsWith("swap_view__graft_stg_") ||
+      t.startsWith("swap_view__graft_old_"))
+    assert(leaked.isEmpty, s"leaked swap helpers: $leaked")
+    assert(spark.table(ref.render).as[(Long, String)].collect().toSeq
+      == Seq((1L, "a")))
   }
 
-  test("unpartitioned merge under the versioned committer is rename-free end-to-end") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vmerge")
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.mode("overwrite")
-        .saveAsTable(ref.render)
-      graft.exec.Incremental.merge(spark, ref,
-        Seq((2L, "B"), (3L, "c")).toDF("id", "v"), uniqueKey = Seq("id"))
-      assert(spark.table(ref.render).as[(Long, String)].collect().sortBy(_._1)
-        .toSeq == Seq((1L, "a"), (2L, "B"), (3L, "c")))
-      assert(!tables().exists(t => t.contains("graft_stg") || t.contains("graft_old")))
-    }
+  test("schema-changing rebuild falls back to table recreation") {
+    val ref = TableRef("default.swap_schema")
+    Seq((1L, "a")).toDF("id", "v").write.mode("overwrite")
+      .saveAsTable(ref.render)
+    AtomicWriter.overwriteTable(spark,
+      Seq((1L, "a", 9L)).toDF("id", "v", "extra"), ref)
+    val got = spark.table(ref.render)
+    assert(got.columns.toSeq == Seq("id", "v", "extra"))
+    assert(got.as[(Long, String, Long)].collect().toSeq == Seq((1L, "a", 9L)))
   }
 
-  test("recover sweeps a crashed (pre-flip) whole-table versioned write") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vtcrash")
-      Seq((5L, "keep")).toDF("id", "v").write.mode("overwrite")
-        .saveAsTable(ref.render)
-      val shell = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.defaultTablePath(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vtcrash")).toString))
-      val vdir = new java.io.File(shell, ".graft_versions/111_crash")
-      assert(vdir.mkdirs())
-      java.nio.file.Files.writeString(vdir.toPath.resolve("part-0.parquet"), "x")
-      java.nio.file.Files.writeString(
-        shell.toPath.resolve(".graft_pending_111_crash"), "")
-      val actions = graft.exec.Maintenance.recover(spark, ref)
-      assert(actions.exists(_.contains("orphan version dir")), actions)
-      assert(!vdir.exists())
-      assert(spark.table(ref.render).as[(Long, String)].collect().toSeq
-        == Seq((5L, "keep")))
-    }
-  }
-
-  test("versioned: schema-changing rebuild falls back to table recreation") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vschema")
-      Seq((1L, "a")).toDF("id", "v").write.mode("overwrite")
-        .saveAsTable(ref.render)
-      // added column => NOT same-shape => rename path recreates the table
-      AtomicWriter.overwriteTable(spark,
-        Seq((1L, "a", 9L)).toDF("id", "v", "extra"), ref)
-      val got = spark.table(ref.render)
-      assert(got.columns.toSeq == Seq("id", "v", "extra"))
-      assert(got.as[(Long, String, Long)].collect().toSeq == Seq((1L, "a", 9L)))
-    }
-  }
-
-  test("versioned: table() rebuild starts from a clean property slate") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vprops")
-      Materializer.table(spark, ref, Seq((1L, "a")).toDF("id", "v"),
-        lifecycleDays = Some(30))
-      // rebuild WITHOUT lifecycleDays: the stale property must not survive
-      Materializer.table(spark, ref, Seq((1L, "a")).toDF("id", "v"))
-      val props = spark.sql(s"SHOW TBLPROPERTIES ${ref.render}").collect()
-        .map(_.getString(0))
-      assert(!props.contains("graft.lifecycle.days"), props.mkString(","))
-    }
-  }
-
-  test("recover completes a committed whole-table flip whose fix-up crashed") {
-    withCommitter("versioned") {
-      val part = PartitionSpec.Static(Seq("pt" -> "string"))
-      val ref = TableRef("default.swap_vfinish")
-      Materializer.table(spark, ref,
-        Seq((1L, "p1"), (2L, "p2")).toDF("id", "pt"), part)
-      // do a real flip so the root is a version dir
-      AtomicWriter.overwriteTable(spark,
-        Seq((10L, "p1"), (20L, "p2")).toDF("id", "pt"), ref, part)
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier("default.swap_vfinish"))
-      val rootPath = new org.apache.hadoop.fs.Path(meta.location).toUri.getPath
-      assert(rootPath.contains(".graft_versions/"))
-      // simulate the crash window: re-create the pending manifest for the
-      // CURRENT root and drop one staged partition's registration
-      val shell = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.defaultTablePath(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vfinish")).toString))
-      val stamp = rootPath.substring(rootPath.lastIndexOf('/') + 1)
-      java.nio.file.Files.writeString(
-        shell.toPath.resolve(s".graft_pending_$stamp"), "pt=p1\npt=p2")
-      // metadata-only loss (retainData) — the crash window never purges
-      // files, only leaves registrations unfinished
-      spark.sessionState.catalog.dropPartitions(
-        spark.sessionState.sqlParser.parseTableIdentifier("default.swap_vfinish"),
-        Seq(Map("pt" -> "p1")), ignoreIfNotExists = true, purge = false,
-        retainData = true)
-      val actions = graft.exec.Maintenance.recover(spark, ref)
-      assert(actions.exists(_.contains("completed committed whole-table flip")),
-        actions)
-      val got = spark.table(ref.render).select("id").as[Long].collect().sorted
-      assert(got.toSeq == Seq(10L, 20L), "p1 registration not restored")
-    }
-  }
-
-  test("recover sweeps pre-flip shell leftovers once the root is a version dir") {
-    withCommitter("versioned") {
-      val ref = TableRef("default.swap_vshellgc")
-      Seq((1L, "a")).toDF("id", "v").write.mode("overwrite")
-        .saveAsTable(ref.render)
-      AtomicWriter.overwriteTable(spark,
-        spark.table(ref.render).withColumn("v", upper($"v")), ref)
-      val shell = new java.io.File(new java.net.URI(
-        spark.sessionState.catalog.defaultTablePath(
-          spark.sessionState.sqlParser.parseTableIdentifier(
-            "default.swap_vshellgc")).toString))
-      // simulate an interrupted post-commit GC: stale pre-flip file at shell
-      java.nio.file.Files.writeString(
-        shell.toPath.resolve("part-stale.parquet"), "x")
-      val actions = graft.exec.Maintenance.recover(spark, ref)
-      assert(actions.exists(_.contains("pre-flip shell leftover")), actions)
-      assert(!shell.toPath.resolve("part-stale.parquet").toFile.exists())
-      assert(spark.table(ref.render).as[(Long, String)].collect().toSeq
-        == Seq((1L, "A")))
-    }
+  test("table() rebuild starts from a clean property slate") {
+    val ref = TableRef("default.swap_props")
+    Materializer.table(spark, ref, Seq((1L, "a")).toDF("id", "v"),
+      lifecycleDays = Some(30))
+    // rebuild WITHOUT lifecycleDays: the stale property must not survive
+    Materializer.table(spark, ref, Seq((1L, "a")).toDF("id", "v"))
+    val props = spark.sql(s"SHOW TBLPROPERTIES ${ref.render}").collect()
+      .map(_.getString(0))
+    assert(!props.contains("graft.lifecycle.days"), props.mkString(","))
   }
 }

@@ -10,8 +10,8 @@ import graft.exec.{Maintenance, Retry}
   *    an unrelated table (a missing source, a genuine conflict) is NOT a
   *    retryable swap race; the swap's own helper names or the caller's
   *    target are.
-  *  - The Hadoop rename-nesting semantics the RenameCommitter's nest guard
-  *    relies on hold on the test filesystem: renaming a dir onto an
+  *  - The Hadoop rename-nesting semantics Committer.stageAndCommit's nest
+  *    guard relies on hold on the test filesystem: renaming a dir onto an
   *    existing dir nests src INSIDE dst (this is the behavior that could
   *    tear a partition, and what `fs.exists(new Path(dst, dst.getName))`
   *    detects).

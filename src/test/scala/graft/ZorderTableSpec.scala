@@ -7,8 +7,8 @@ import graft.mat.Materializer
 import graft.mat.Materializer.IncrementalStrategy
 
 /** Z-order compaction for CATALOG tables ([[Maintenance.zorderCompact]]):
-  * the Layout degradation→maintenance story carried through the committer
-  * seam, exercised under BOTH committers — only offending partitions are
+  * the Layout degradation→maintenance story carried through the partition
+  * swap ([[graft.exec.Committer]]) — only offending partitions are
   * rewritten (clustered, multi-file, tight per-file spans), the untouched
   * partition's files stay byte-stable, the quantization stats persist as
   * table properties, and a second pass is quiet. Plus the ParquetStitch
@@ -18,11 +18,6 @@ import graft.mat.Materializer.IncrementalStrategy
 class ZorderTableSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def withCommitter[T](name: String)(f: => T): T = {
-    spark.conf.set("spark.graft.committer", name)
-    try f finally spark.conf.unset("spark.graft.committer")
-  }
 
   // pt(i): "c" rows live entirely in quarter 0 (i%16==0 ⇒ i%4==0), so the
   // quarter-1..3 appends (which exclude "c") leave pt=c at its single CTAS
@@ -53,81 +48,77 @@ class ZorderTableSpec extends SparkSpec {
     }.sortBy(_._1)
   }
 
-  for (committer <- Seq("rename", "versioned")) {
-    test(s"[$committer] zorderCompact: only offending partitions rewritten " +
-        "clustered; untouched byte-stable; stats persisted; quiet second pass") {
-      withCommitter(committer) {
-        val db = s"zt_$committer"
-        spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-        spark.sql(s"CREATE DATABASE $db")
-        val ref = TableRef(s"$db.events_z")
-        val part = PartitionSpec.Static(Seq("pt" -> "string"))
-        val all = fixture(4096)
-        def quarter(q: Int) = all.filter(col("id") % 4 === q)
-        Materializer.table(spark, ref, quarter(0), part)
-        (1 to 3).foreach(q => Materializer.incremental(spark, ref,
-          quarter(q).filter(col("pt") =!= "c"),
-          IncrementalStrategy.Append, partition = part))
-        val before = Maintenance.partitionFileCounts(spark, ref, part)
-        assert(before == Map("pt=a" -> 4, "pt=b" -> 4, "pt=c" -> 1), before)
-        // degraded: the quadrant-0 rows are smeared over every slab
-        assert(quadrantFiles(ref, "a") == 4)
-        val cBefore = untouchedFiles(ref)
-        assert(cBefore.size == 1)
-        // fixture sanity: quadrant 0 must FIT the first rolled file, so the
-        // post-compact probe count of 1 is a guarantee, not luck
-        val nmax = spark.table(ref.render).filter(col("pt") =!= "c")
-          .groupBy("pt").count().as[(String, Long)].collect().map(_._2).max
-        val m = (nmax + 2) / 3
-        val nQuad = spark.table(ref.render)
-          .filter(col("pt") === "a" && col("x") < 32 && col("y") < 32).count()
-        assert(nQuad > 0 && nQuad <= m, s"fixture: quadrant $nQuad vs file $m")
-        val compacted = Maintenance.zorderCompact(spark, ref, part,
-          "x", "y", maxFiles = 3, bits = 6, maxRecordsPerFile = m,
-          tiebreak = Seq("id"))
-        assert(compacted == Seq("pt=a", "pt=b"), compacted)
-        val after = Maintenance.partitionFileCounts(spark, ref, part)
-        assert(after == Map("pt=a" -> 3, "pt=b" -> 3, "pt=c" -> 1),
-          s"compacted partitions must roll into exactly ⌈n/m⌉ files: $after")
-        // untouched partition: same file names, lengths, mtimes
-        assert(untouchedFiles(ref) == cBefore,
-          "untouched partition must stay byte-stable across the swap")
-        // rows ride through exactly
-        assert(spark.table(ref.render).select("id").as[Long].collect().sorted
-          .toSeq == (0 until 4096).map(_.toLong))
-        // clustering is MEASURED: quadrant 0 is a z-prefix, so the z-sorted
-        // rewrite packs it into one file (it fit m, asserted above)
-        assert(quadrantFiles(ref, "a") == 1,
-          "quadrant-0 probe must touch exactly one clustered file")
-        // stats persisted for ∝-offending later passes
-        val props = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(ref.render))
-          .properties
-        assert(props.get("graft.zorder.cols").contains("x,y"), props)
-        // quiet second pass: nothing offending, nothing touched
-        assert(Maintenance.zorderCompact(spark, ref, part, "x", "y",
-          maxFiles = 3, bits = 6, maxRecordsPerFile = m,
-          tiebreak = Seq("id")).isEmpty)
-        // one table, one layout: a different column pair is refused loudly
-        // (fresh degraded table carrying the persisted layout properties —
-        // append-after-compact file placement is committer-specific and not
-        // what this assertion is about)
-        val ref2 = TableRef(s"$db.events_z2")
-        Materializer.table(spark, ref2, quarter(0), part)
-        (1 to 3).foreach(q => Materializer.incremental(spark, ref2,
-          quarter(q).filter(col("pt") =!= "c"),
-          IncrementalStrategy.Append, partition = part))
-        spark.sql(s"ALTER TABLE ${ref2.render} SET TBLPROPERTIES (" +
-          "'graft.zorder.cols'='x,y', 'graft.zorder.xlo'='0', " +
-          "'graft.zorder.xhi'='63', 'graft.zorder.ylo'='0', " +
-          "'graft.zorder.yhi'='63', 'graft.zorder.bits'='6')")
-        val boom = intercept[IllegalArgumentException] {
-          Maintenance.zorderCompact(spark, ref2, part, "y", "x", maxFiles = 3)
-        }
-        assert(boom.getMessage.contains("one z layout"), boom.getMessage)
-        spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-      }
+  test("[rename] zorderCompact: only offending partitions rewritten " +
+      "clustered; untouched byte-stable; stats persisted; quiet second pass") {
+    val db = "zt"
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    spark.sql(s"CREATE DATABASE $db")
+    val ref = TableRef(s"$db.events_z")
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val all = fixture(4096)
+    def quarter(q: Int) = all.filter(col("id") % 4 === q)
+    Materializer.table(spark, ref, quarter(0), part)
+    (1 to 3).foreach(q => Materializer.incremental(spark, ref,
+      quarter(q).filter(col("pt") =!= "c"),
+      IncrementalStrategy.Append, partition = part))
+    val before = Maintenance.partitionFileCounts(spark, ref, part)
+    assert(before == Map("pt=a" -> 4, "pt=b" -> 4, "pt=c" -> 1), before)
+    // degraded: the quadrant-0 rows are smeared over every slab
+    assert(quadrantFiles(ref, "a") == 4)
+    val cBefore = untouchedFiles(ref)
+    assert(cBefore.size == 1)
+    // fixture sanity: quadrant 0 must FIT the first rolled file, so the
+    // post-compact probe count of 1 is a guarantee, not luck
+    val nmax = spark.table(ref.render).filter(col("pt") =!= "c")
+      .groupBy("pt").count().as[(String, Long)].collect().map(_._2).max
+    val m = (nmax + 2) / 3
+    val nQuad = spark.table(ref.render)
+      .filter(col("pt") === "a" && col("x") < 32 && col("y") < 32).count()
+    assert(nQuad > 0 && nQuad <= m, s"fixture: quadrant $nQuad vs file $m")
+    val compacted = Maintenance.zorderCompact(spark, ref, part,
+      "x", "y", maxFiles = 3, bits = 6, maxRecordsPerFile = m,
+      tiebreak = Seq("id"))
+    assert(compacted == Seq("pt=a", "pt=b"), compacted)
+    val after = Maintenance.partitionFileCounts(spark, ref, part)
+    assert(after == Map("pt=a" -> 3, "pt=b" -> 3, "pt=c" -> 1),
+      s"compacted partitions must roll into exactly ⌈n/m⌉ files: $after")
+    // untouched partition: same file names, lengths, mtimes
+    assert(untouchedFiles(ref) == cBefore,
+      "untouched partition must stay byte-stable across the swap")
+    // rows ride through exactly
+    assert(spark.table(ref.render).select("id").as[Long].collect().sorted
+      .toSeq == (0 until 4096).map(_.toLong))
+    // clustering is MEASURED: quadrant 0 is a z-prefix, so the z-sorted
+    // rewrite packs it into one file (it fit m, asserted above)
+    assert(quadrantFiles(ref, "a") == 1,
+      "quadrant-0 probe must touch exactly one clustered file")
+    // stats persisted for ∝-offending later passes
+    val props = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(ref.render))
+      .properties
+    assert(props.get("graft.zorder.cols").contains("x,y"), props)
+    // quiet second pass: nothing offending, nothing touched
+    assert(Maintenance.zorderCompact(spark, ref, part, "x", "y",
+      maxFiles = 3, bits = 6, maxRecordsPerFile = m,
+      tiebreak = Seq("id")).isEmpty)
+    // one table, one layout: a different column pair is refused loudly
+    // (fresh degraded table carrying the persisted layout properties — the
+    // layout check, not append-after-compact file placement, is what this
+    // assertion is about)
+    val ref2 = TableRef(s"$db.events_z2")
+    Materializer.table(spark, ref2, quarter(0), part)
+    (1 to 3).foreach(q => Materializer.incremental(spark, ref2,
+      quarter(q).filter(col("pt") =!= "c"),
+      IncrementalStrategy.Append, partition = part))
+    spark.sql(s"ALTER TABLE ${ref2.render} SET TBLPROPERTIES (" +
+      "'graft.zorder.cols'='x,y', 'graft.zorder.xlo'='0', " +
+      "'graft.zorder.xhi'='63', 'graft.zorder.ylo'='0', " +
+      "'graft.zorder.yhi'='63', 'graft.zorder.bits'='6')")
+    val boom = intercept[IllegalArgumentException] {
+      Maintenance.zorderCompact(spark, ref2, part, "y", "x", maxFiles = 3)
     }
+    assert(boom.getMessage.contains("one z layout"), boom.getMessage)
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
   }
 
   test("maintainTable: recover, then z-aware compact (layout read from " +
