@@ -1814,9 +1814,8 @@ object MatQueries {
     // encode-once slab for the plain appends (r19, guide §1): ONE encode
     // of batches 4–9's union against root1's quantizer, each segment a
     // filtered slice — encode is row-wise, so slice-then-encode ≡
-    // encode-then-slice and the written segments are identical to the
-    // r18 per-batch encodes (which each re-planned the literal-heavy
-    // encode expression tree)
+    // encode-then-slice and the written segments are identical to
+    // per-batch encodes, with one encode job instead of six
     val codes1 = graft.llm.Similarity.encodeResidual(
       emb.filter(col("vec_id") % 20 >= 8),
       IndexStore.loadQuantizer(s, root1)).localCheckpoint()

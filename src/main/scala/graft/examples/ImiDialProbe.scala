@@ -7,10 +7,11 @@ import graft.llm.Similarity
 /** Production-dial sweep for the IMI two-level quantizer (s12's scale
   * claim, VERDICT r9 #5): at nlist = kA·kB ∈ {4096, 16384, 65536} —
   * the dial range a 10⁶–10⁸-vector corpus wants — measure the per-row
-  * ASSIGNMENT cost of the flat bulk path (nlist·dim multiplies/row)
+  * ASSIGNMENT cost of flat centroid assignment (the compiled
+  * [[graft.functions.CentroidTopN]] kernel, nlist·dim multiplies/row)
   * against the IMI decomposition ((kA+kB)·dim/2 multiplies + kA·kB scalar
   * combines/row) on the sf1 embeddings corpus. Codebooks are synthetic
-  * (seeded from real vectors, BulkAssignProbe's recipe): assignment cost
+  * (real vectors plus a small per-index offset): assignment cost
   * is independent of centroid quality, and a driver-local k-means fit at
   * nlist 65536 is exactly the thing the IMI path exists to avoid (the
   * IMI fit is two k=√nlist half-fits — tractable at every swept dial).
@@ -56,8 +57,7 @@ object ImiDialProbe {
       }
       val tImi = timed("imi", Similarity.imiAssignTop(
         emb, cbA, cbB, 1, "vec_id", "embedding").count())
-      // flat bulk assignment at 65536 literals-as-matrix: only run where
-      // it finishes in reasonable time; report the ratio where both ran
+      // flat assignment scores all nlist centroids per row
       val tFlat = timed("flat", Similarity.assignTopCentroids(
         emb, flatCentroids, 1, "vec_id", "embedding").count())
       println(f"[imidial] nlist=$nlist%6d speedup flat/imi = ${tFlat / tImi}%5.1f x")

@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.types._
 
-/** Dot product over two `array<double>` columns — the inner loop of PQ
-  * codebook assignment and ADC table construction (see
-  * [[graft.llm.Similarity.pqEncode]]).
+/** Dot product over two `array<double>` columns — the inner loop of JL
+  * random projection ([[graft.llm.Similarity.randomProject]]) and of the
+  * residual search's exact `q·c` centroid term; [[PqEncode]] and
+  * [[PqAdcTable]] reproduce its loop bit for bit.
   *
   * Same rationale as [[CosineSimilarity]]/[[DotInt8]]: the composable form
   * (`aggregate(zip_with(a, b, _*_), 0d, _+_)`) allocates an intermediate

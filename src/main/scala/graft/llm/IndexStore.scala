@@ -276,8 +276,8 @@ object IndexStore {
     * legs"): a lifecycle that lands the same encoded batch in several
     * sibling stores (a live store and its as-of twin, a shard and its
     * merge source) or splits one encoded corpus into per-batch segments
-    * pays the quantizer's literal-heavy encode plan ONCE and reuses the
-    * slab. The caller owns the contract that `codes` really is
+    * pays the encode (assignment + PQ scan over the batch) ONCE and
+    * reuses the slab. The caller owns the contract that `codes` really is
     * [[Similarity.encodeResidual]] output under THIS root's artifact —
     * same schema, same codebooks (sibling stores created via
     * [[saveQuantizer]] of one fit qualify by construction). Replay
@@ -294,11 +294,9 @@ object IndexStore {
     * rotation/compaction lifecycles use (a batch whose content lives in a
     * fold must still no-op on replay). Cheap by construction (r19): the
     * empty frame is a LOCAL relation with the store's committed segment
-    * schema — no quantizer load, no literal-heavy encode plan, no store
-    * scan; planning is microseconds and the write one empty task. The
-    * r18 form (`appendCodes(root, id, batch.limit(0))`) re-planned the
-    * full encode expression tree per marker — ~0.3 s each, ×10 markers
-    * per rotation/fold at the bench grade. Returns false on replay. */
+    * schema — no quantizer load, no encode plan, no store scan; planning
+    * is microseconds and the write one empty task. Returns false on
+    * replay. */
   def markBatchCommitted(spark: SparkSession, root: String,
       batchId: Long): Boolean = {
     val cr = codesRoot(root)

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Similarity search over an embedding column (`array<float>`).
@@ -26,9 +27,10 @@ object Similarity {
     * means of the NORMALIZED sample members (residual reference points),
     * and the residual PQ codebooks `codebooks(subspace)(code) = centroid`.
     * Small by construction — nlist·dim + nlist·dim + m·codebookSize·(dim/m)
-    * doubles — so it broadcasts as plan literals AND persists as a tiny
-    * durable artifact ([[IndexStore]]) that every later query and every
-    * ingest batch reuses instead of re-fitting. */
+    * doubles — so it rides the plan as one object per kernel
+    * ([[graft.functions.CentroidTopN]], [[graft.functions.PqEncode]]) AND
+    * persists as a tiny durable artifact ([[IndexStore]]) that every later
+    * query and every ingest batch reuses instead of re-fitting. */
   final case class ResidualQuantizer(
       dim: Int, nlist: Int, m: Int, codebookSize: Int,
       centroids: Seq[(Int, Seq[Double])],
@@ -332,64 +334,42 @@ object Similarity {
     kmeansCentroidsFromSample(sample, nlist, seed)
   }
 
-  /** Per-centroid (sim, -centroid_id) structs for `vec` — struct ordering
-    * gives (sim desc, centroid_id asc), so array_max is the
-    * nearest-centroid argmax. */
-  private def centroidSimStructs(centroids: Seq[(Int, Seq[Double])])(
-      vec: Column): Seq[Column] = centroids.map { case (i, cv) =>
-    struct(cosine(vec, typedlit(cv)).as("sim"), lit(-i).as("negid"))
-  }
-
   /** Shuffle-free nearest-centroid assignment: a SINGLE PROJECTION over
-    * the bounded centroid set (nlist ≪ corpus, each centroid one compact
-    * typedlit literal) — per row an array of (sim, -centroid_id) structs
-    * and an array_max argmax, with ZERO shuffle between the corpus scan
-    * and whatever consumes the assignment. The former crossJoin+window
+    * the bounded centroid set — per row one compiled
+    * [[graft.functions.CentroidTopN]] call that holds the centroid matrix
+    * as one plan object, with ZERO shuffle between the corpus scan and
+    * whatever consumes the assignment. The former crossJoin+window
     * shape shuffled corpus×nlist rows just to pick each row's max — at
-    * 100 TB and nlist=1024 a ~PB exchange for a per-row argmax. Returns
+    * 100 TB and nlist=1024 a ~PB exchange for a per-row argmax. Ties
+    * break (sim desc, centroid_id asc). A NULL vector gets no centroid
+    * (no row); a vector of the wrong dimension fails the job. Returns
     * (centroid_id, corpus_id, c_vec). */
   private[graft] def assignToCentroids(corpus: DataFrame,
       centroids: Seq[(Int, Seq[Double])], idCol: String,
-      vecCol: String): DataFrame = {
-    val integralId = corpus.schema(idCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (centroids.size >= BulkNlistThreshold && integralId)
-      return assignTopCentroidsBulk(corpus, centroids, 1, idCol, vecCol)
-    val best = array_max(array(centroidSimStructs(centroids)(col(vecCol)): _*))
-    corpus.select(
-      (-best.getField("negid")).as("centroid_id"),
+      vecCol: String): DataFrame =
+    // array_max of the one-id array keeps centroid_id nullable, the
+    // schema every stored segment was written with
+    corpus.filter(col(vecCol).isNotNull).select(
+      array_max(graft.functions.CentroidTopN(col(vecCol), centroids, 1))
+        .as("centroid_id"),
       col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
-  }
-
-  /** Above this many centroids the plan-literal argmax projection stops
-    * being the right shape: every centroid is an expression-tree literal,
-    * so plan size and codegen width grow with nlist. The binding limit is
-    * NOT the assignment expression alone (it compiles standalone to 256+)
-    * but the FUSED whole-stage it lands in — assignment + broadcast probe
-    * join + pair cosine in one `processNext()` blows janino's 64 KB
-    * method limit at nlist = 128 (measured, examples/LiteralAssignCeiling;
-    * 96 still compiles), and Spark then SILENTLY falls back to interpreted
-    * eval for the hottest kernel in the plan — a 2–5× at cluster scale
-    * (VERDICT r12 #5). 64 leaves ~1.5× headroom for heavier consumers;
-    * past it, assignment switches to [[assignTopCentroidsBulk]] (broadcast
-    * matrix + primitive heap — always compiled, throughput flat in nlist,
-    * measured in examples/BulkAssignProbe). */
-  private val BulkNlistThreshold = 64
 
   /** Primitive bounded top-n accumulator over (score, id) with the ANN
-    * family's (score desc, id asc) ordering: a min-heap keyed
-    * worst-at-root, zero boxing — O(log n) per offer instead of a full
-    * sort of every candidate. Shared by the bulk centroid assignment and
-    * the IMI cell scan. NOT thread-safe; one instance per row. */
+    * family's (score desc, id asc) ordering under Spark's double ordering
+    * (NaN greatest, −0.0 == 0.0): a min-heap keyed worst-at-root, zero
+    * boxing — O(log n) per offer instead of a full sort of every
+    * candidate. Shared by centroid assignment
+    * ([[graft.functions.CentroidTopN]]) and the IMI cell scan. NOT
+    * thread-safe; one instance per row. */
   private[graft] final class BoundedTopN(k: Int) {
     private val hs = new Array[Double](k)
     private val hi = new Array[Int](k)
     private var n = 0
     // (s1,i1) ranks strictly worse than (s2,i2)
-    private def worse(s1: Double, i1: Int, s2: Double, i2: Int): Boolean =
-      s1 < s2 || (s1 == s2 && i1 > i2)
+    private def worse(s1: Double, i1: Int, s2: Double, i2: Int): Boolean = {
+      val c = SQLOrderingUtil.compareDoubles(s1, s2)
+      c < 0 || (c == 0 && i1 > i2)
+    }
     def offer(s: Double, id: Int): Unit = {
       if (n < k) {
         var pos = n; hs(pos) = s; hi(pos) = id; n += 1
@@ -421,13 +401,15 @@ object Similarity {
     }
     /** Kept ids, best-first ((score desc, id asc)). */
     def drainIds(): Array[Int] =
-      Array.range(0, n).sortBy(p => (-hs(p), hi(p))).map(hi)
+      Array.range(0, n).sortWith((p, q) => worse(hs(q), hi(q), hs(p), hi(p)))
+        .map(hi)
   }
 
   /** Exact mirror of [[graft.functions.CosineSimilarity]]'s arithmetic
-    * (same accumulation order, zero-norm → 0) so the bulk path is
-    * bit-identical to the projection path. */
-  private def cosineLocal(a: Array[Double], b: Array[Double]): Double = {
+    * (same accumulation order, zero-norm → 0): the plain-Scala reference
+    * for driver-side fits and broadcast scans. Iterates over `a`'s length,
+    * so callers pass equal-length vectors. */
+  private[graft] def cosineLocal(a: Array[Double], b: Array[Double]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < a.length) {
       dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
@@ -435,83 +417,18 @@ object Similarity {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Literal-free top-`n` nearest-centroid assignment for LARGE nlist:
-    * the centroid matrix rides a BROADCAST VARIABLE and the per-row
-    * argmax/top-n runs in one `mapPartitions` pass (the justified
-    * mapPartitions case — no Catalyst expression can scan a 10⁵-row
-    * matrix without materializing it in the plan). Still ZERO shuffle —
-    * a narrow pass over the corpus scan, like the projection form — and
-    * row-identical to it: same cosine arithmetic ([[cosineLocal]]), same
-    * (sim desc, centroid_id asc) tie-break (spec-pinned equivalence).
-    * Ids must be integral (cast to long); vectors surface as
-    * `array<double>` — float inputs widen exactly, so downstream scores
-    * are unchanged. */
-  private[graft] def assignTopCentroidsBulk(df: DataFrame,
-      centroids: Seq[(Int, Seq[Double])], n: Int, idCol: String,
-      vecCol: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    val spark = df.sparkSession
-    val bc = spark.sparkContext.broadcast(
-      centroids.map { case (i, v) => (i, v.toArray) }.toArray)
-    val in = df.select(col(idCol).cast("long").as("corpus_id"),
-      col(vecCol).cast("array<double>").as("c_vec"))
-    val outSchema = StructType(Seq(
-      StructField("centroid_id", IntegerType, nullable = false),
-      StructField("corpus_id", LongType),
-      StructField("c_vec", ArrayType(DoubleType))))
-    val rdd = in.rdd.mapPartitions { it =>
-      val cs = bc.value
-      it.flatMap { row =>
-        if (row.isNullAt(1)) Iterator.empty
-        else {
-          val vec = row.getSeq[Double](1).toArray
-          // bounded top-n over nlist scores: a full per-row sort allocates
-          // and orders all nlist tuples — the hot loop at nlist = 10⁴–10⁵.
-          // Primitive-array min-heap keyed worst-at-root instead: O(nlist
-          // log n), zero tuple boxing. Same (sim desc, centroid_id asc)
-          // order as the literal path (RecallSpec pins bit-identity).
-          val heap = new BoundedTopN(math.min(n, cs.length))
-          var j = 0
-          while (j < cs.length) {
-            val c = cs(j)
-            heap.offer(cosineLocal(vec, c._2), c._1)
-            j += 1
-          }
-          heap.drainIds().iterator.map(ci =>
-            Row(ci, row.get(0), row.getSeq[Double](1)))
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
   /** Top-`n` nearest centroids per row — the multi-assignment sibling of
-    * [[assignToCentroids]], same shuffle-free shape: per-row descending
-    * sort of the bounded struct array, slice, explode (n rows per input
-    * row). Returns (centroid_id, corpus_id, c_vec). Routes to the
-    * broadcast-variable [[assignTopCentroidsBulk]] past
-    * [[BulkNlistThreshold]] centroids (integral ids only — the id cast
-    * is lossless there; non-integral ids stay on the literal path). */
+    * [[assignToCentroids]], same shuffle-free shape and input rules: one
+    * [[graft.functions.CentroidTopN]] call per row, exploded (n rows per
+    * input row, none for a NULL vector). Returns (centroid_id, corpus_id,
+    * c_vec). */
   private[graft] def assignTopCentroids(df: DataFrame,
       centroids: Seq[(Int, Seq[Double])], n: Int, idCol: String,
-      vecCol: String): DataFrame = {
-    val integralId = df.schema(idCol).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (centroids.size >= BulkNlistThreshold && integralId)
-      return assignTopCentroidsBulk(df, centroids, n, idCol, vecCol)
-    val sortedCents = array_sort(
-      array(centroidSimStructs(centroids)(col(vecCol)): _*),
-      (l, r) => when(l.getField("sim") > r.getField("sim"), -1)
-        .when(l.getField("sim") < r.getField("sim"), 1)
-        .otherwise(r.getField("negid") - l.getField("negid")))
-    df.select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"),
-        explode(slice(sortedCents, 1, n)).as("c"))
-      .select((-col("c").getField("negid")).as("centroid_id"),
-        col("corpus_id"), col("c_vec"))
-  }
+      vecCol: String): DataFrame =
+    df.select(
+      explode(graft.functions.CentroidTopN(col(vecCol), centroids, n))
+        .as("centroid_id"),
+      col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
 
   /** Shared IVF plumbing: bounded-sample centroids + shuffle-free corpus
     * assignment + per-query nprobe probe list. */
@@ -617,7 +534,7 @@ object Similarity {
     * nlist = 10⁵ (kA = kB ≈ 316) and dim = 64, ~2 × 10⁴ multiplies vs
     * 6.4 × 10⁶ per row — the assignment-term fix the sf1 rehearsal notes
     * called for past ~10⁶ vectors. Same broadcast + mapPartitions shape
-    * as [[assignTopCentroidsBulk]] (zero shuffle, narrow over the scan);
+    * as [[maxCosToRef]] (zero shuffle, narrow over the scan);
     * cell_id = i·kB + j; ids must be integral (cast to long). Ties break
     * (score desc, cell_id asc) via [[BoundedTopN]]. */
   private[graft] def imiAssignTop(df: DataFrame, cbA: Array[Array[Double]],
@@ -719,7 +636,7 @@ object Similarity {
     * (same rationale as [[kmeansCentroids]]: codebook quality saturates
     * far below corpus size — never a multi-pass O(corpus) fit). Returns
     * `cb(subspace)(code) = centroid`, `m × codebookSize × dim/m` doubles —
-    * small enough to ride every executor as plan literals. */
+    * small enough to ride every executor inside the plan. */
   def pqCodebooks(corpus: DataFrame, dim: Int, m: Int, codebookSize: Int,
       seed: Long = 42L, vecCol: String = "embedding",
       fitSampleLimit: Int = 100000): Array[Array[Array[Double]]] = {
@@ -835,40 +752,22 @@ object Similarity {
 
   /** PQ-encode an L2-normalized vector: per subspace the code of the
     * nearest codebook centroid — `argmin‖x−c‖² = argmax(x·c − ‖c‖²/2)`,
-    * with `‖c‖²/2` folded in at plan-build time, so each subspace is an
-    * `array_max` over `codebookSize` (dot − const) structs
-    * ([[graft.functions.DotDouble]]: one fused codegen loop each) — a
-    * SINGLE PROJECTION, zero shuffle, exactly the
+    * with `‖c‖²/2` folded in at plan-build time — as ONE compiled
+    * [[graft.functions.PqEncode]] call per row that holds the codebooks
+    * as one plan object: a SINGLE PROJECTION, zero shuffle, exactly the
     * [[assignToCentroids]] shape. Output `array<int>` of length `m`:
     * `m·log₂(codebookSize)` bits of storage per vector — at m=8,
     * codebookSize=256 that is 8 bytes against 256 for float64, the dial
     * that lets a 100 TB corpus' index live in executor memory. */
-  def pqEncode(vec: Column, cb: Array[Array[Array[Double]]]): Column = {
-    val subdim = cb(0)(0).length
-    array(cb.indices.map { mi =>
-      val sub = slice(vec, mi * subdim + 1, subdim)
-      val best = array_max(array(cb(mi).zipWithIndex.map { case (c, j) =>
-        val halfNormSq = c.map(x => x * x).sum / 2.0
-        struct(
-          (graft.functions.DotDouble(sub, typedlit(c.toSeq)) -
-            lit(halfNormSq)).as("s"),
-          lit(-j).as("negj"))
-      }.toIndexedSeq: _*))
-      (-best.getField("negj")).cast("int")
-    }.toIndexedSeq: _*)
-  }
+  def pqEncode(vec: Column, cb: Array[Array[Array[Double]]]): Column =
+    graft.functions.PqEncode(vec, cb)
 
   /** Per-query ADC lookup table: `table(subspace)(code) = q_sub · c` —
     * `m × codebookSize` dots computed ONCE per query row (the tiny
-    * broadcast side), so candidate scoring needs no dot products at all. */
-  private def pqAdcTable(qvec: Column, cb: Array[Array[Array[Double]]]): Column = {
-    val subdim = cb(0)(0).length
-    array(cb.indices.map { mi =>
-      val sub = slice(qvec, mi * subdim + 1, subdim)
-      array(cb(mi).map(c =>
-        graft.functions.DotDouble(sub, typedlit(c.toSeq))).toIndexedSeq: _*)
-    }.toIndexedSeq: _*)
-  }
+    * broadcast side) by one [[graft.functions.PqAdcTable]] call, so
+    * candidate scoring needs no dot products at all. */
+  private def pqAdcTable(qvec: Column, cb: Array[Array[Array[Double]]]): Column =
+    graft.functions.PqAdcTable(qvec, cb)
 
   /** IVF-PQ top-k with asymmetric-distance (ADC) scan and exact re-rank —
     * the index shape that fits a 100 TB corpus in memory: inverted lists
@@ -1325,8 +1224,8 @@ object Similarity {
   }
 
   /** Public nearest-centroid assignment over an explicit centroid set —
-    * the [[assignToCentroids]] kernel (plan-literal argmax projection to
-    * 512 centroids, broadcast-variable `mapPartitions` above): ZERO
+    * the [[assignToCentroids]] kernel (one compiled
+    * [[graft.functions.CentroidTopN]] projection at every nlist): ZERO
     * shuffle between the corpus scan and the consumer, tie-break
     * (sim desc, centroid_id asc). Returns (centroid_id, corpus_id,
     * c_vec) — the front half of cluster-balanced sampling
@@ -1352,9 +1251,10 @@ object Similarity {
     * under-drop) and rides a broadcast variable; the per-row max runs in
     * one `mapPartitions` pass over the corpus scan — ZERO shuffle, exact
     * (no recall gate needed), cost |ref|·dim multiplies per row. Same
-    * justified-mapPartitions shape as [[assignTopCentroidsBulk]]: no
-    * Catalyst expression can scan a 10⁵-row matrix without materializing
-    * it in the plan. Tie-break (cos desc, ref_id asc). Returns one row
+    * justified-mapPartitions shape as [[imiAssignTop]]: a reference set
+    * of up to [[RefSetCap]] vectors (≈ 100 MB) rides a broadcast
+    * variable, not the task-serialized plan. Tie-break (cos desc, ref_id
+    * asc). Returns one row
     * per corpus row: (idCol, max_cos, nearest_ref_id) — null-vector rows
     * surface with NULL max_cos so callers can't silently lose them. */
   def maxCosToRef(corpus: DataFrame, ref: DataFrame,

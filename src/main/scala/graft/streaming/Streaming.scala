@@ -403,8 +403,10 @@ object Streaming {
     * [[graft.llm.DedupStore.append]] replay contract: a restarted query
     * re-offers committed batch ids and the append no-ops before any
     * write, so the index is byte-stable under full-backlog replay. Batch
-    * cost ∝ batch — encode is a single projection over plan-literal
-    * codebooks; the only history touched is the kilobyte quantizer load. */
+    * cost ∝ batch — encode is a single projection of two compiled
+    * kernels (centroid assignment, PQ encode) that hold the quantizer as
+    * plan objects; the only history touched is the kilobyte quantizer
+    * load. */
   def indexIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding"): StreamingQuery =

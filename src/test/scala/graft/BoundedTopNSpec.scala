@@ -37,4 +37,23 @@ class BoundedTopNSpec extends AnyFunSuite {
       assert(got == want, s"case $i: k=$k items=${items.take(12)}...")
     }
   }
+
+  test("BoundedTopN ranks by Spark's double ordering: NaN greatest, -0.0 ties 0.0") {
+    def drain(k: Int, items: Seq[(Double, Int)]): Seq[Int] = {
+      val heap = new Similarity.BoundedTopN(k)
+      items.foreach { case (s, id) => heap.offer(s, id) }
+      heap.drainIds().toSeq
+    }
+    val items = Seq((0.5, 1), (Double.NaN, 7), (-0.0, 2), (0.0, 0),
+      (Double.NaN, 3), (1.0, 9))
+    // reference: sort under catalyst's own double comparator
+    val want = items.sortWith { case ((s1, i1), (s2, i2)) =>
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+        .compareDoubles(s1, s2)
+      c > 0 || (c == 0 && i1 < i2)
+    }.map(_._2)
+    assert(want == Seq(3, 7, 9, 1, 0, 2))
+    for (k <- 1 to items.size; order <- Seq(items, items.reverse))
+      assert(drain(k, order) == want.take(k), s"k=$k")
+  }
 }

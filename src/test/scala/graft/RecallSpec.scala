@@ -131,19 +131,21 @@ class RecallSpec extends SparkSpec {
     // fallback DISABLED a whole-stage compile failure throws instead of
     // silently falling back (the r12 suite logged two janino 64 KB
     // failures here and still passed — a 2–5× tax at cluster scale hiding
-    // behind green). nlist=63 pins the largest plan-literal dial in the
+    // behind green). Every nlist rides the one CentroidTopN path in the
     // heaviest fused shape (assignment + probe join + pair cosine in one
-    // processNext); nlist=128 rides the bulk broadcast-matrix route
-    // (BulkNlistThreshold=64) and must also compile clean. Recall vs
-    // brute force must stay sane when each list holds few vectors.
+    // processNext); the plan holds the centroid matrix as one object, so
+    // 63, 128 and 512 centroids all compile clean. Recall vs brute force
+    // must stay sane when each list holds few vectors.
     val emb = Tables.t(spark, dir, "embeddings")
     val q = emb.filter($"vec_id" < 10)
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
-      val lit = Similarity.ivfTopK(spark, emb, q, k = 5, nlist = 63, nprobe = 16)
-      assert(lit.count() == 50, "k results per query at nlist=63 (literal path)")
+      val n63 = Similarity.ivfTopK(spark, emb, q, k = 5, nlist = 63, nprobe = 16)
+      assert(n63.count() == 50, "k results per query at nlist=63")
       val got = Similarity.ivfTopK(spark, emb, q, k = 5, nlist = 128, nprobe = 32)
-      assert(got.count() == 50, "k results per query at nlist=128 (bulk path)")
+      assert(got.count() == 50, "k results per query at nlist=128")
+      val n512 = Similarity.ivfTopK(spark, emb, q, k = 5, nlist = 512, nprobe = 64)
+      assert(n512.count() == 50, "k results per query at nlist=512")
       val exact = rows(Similarity.bruteForceTopK(emb, q, k = 5)
         .select("query_id", "corpus_id"))
       val approx = rows(got.select("query_id", "corpus_id"))
@@ -332,6 +334,37 @@ class RecallSpec extends SparkSpec {
       .as[Option[Double]].head().isEmpty)
   }
 
+  test("PqEncode and PqAdcTable == their per-code DotDouble forms, bit for bit") {
+    val emb = Tables.t(spark, dir, "embeddings")
+    val cb = Similarity.pqCodebooks(emb, dim = 64, m = 8, codebookSize = 16)
+    val v = Similarity.l2Normalize($"embedding")
+    // reference: one DotDouble per (subspace, code) over a slice, as plan
+    // literals; encode = argmax of (dot - |c|^2/2, -code) structs
+    def sub(mi: Int) = slice(v, mi * 8 + 1, 8)
+    val refTable = array((0 until 8).map { mi =>
+      array(cb(mi).map(c => graft.functions.DotDouble(sub(mi),
+        typedlit(c.toSeq))).toIndexedSeq: _*)
+    }: _*)
+    val refCodes = array((0 until 8).map { mi =>
+      val best = array_max(array(cb(mi).zipWithIndex.map { case (c, j) =>
+        struct((graft.functions.DotDouble(sub(mi), typedlit(c.toSeq)) -
+          lit(c.map(x => x * x).sum / 2.0)).as("s"), lit(-j).as("negj"))
+      }.toIndexedSeq: _*))
+      (-best.getField("negj")).cast("int")
+    }: _*)
+    val got = emb.select($"vec_id",
+      graft.functions.PqAdcTable(v, cb).as("t"), refTable.as("rt"),
+      graft.functions.PqEncode(v, cb).as("c"), refCodes.as("rc"))
+    // bit equality of every table entry (raw long bits: NaN-safe)
+    val bits = udf((t: Seq[Seq[Double]]) =>
+      t.map(_.map(java.lang.Double.doubleToRawLongBits)))
+    val diff = got.filter(bits($"t") =!= bits($"rt") || $"c" =!= $"rc")
+    assert(diff.isEmpty, s"kernel != DotDouble form on ${diff.count()} rows")
+    // same schema as the literal forms, down to the nullability flags
+    assert(got.schema("t") == got.schema("rt").copy(name = "t"))
+    assert(got.schema("c") == got.schema("rc").copy(name = "c"))
+  }
+
   test("semanticDupPairs: within-cell recall vs exact twin; precision exact") {
     val e = {
       val base = Tables.t(spark, dir, "embeddings").filter($"vec_id" < 500)
@@ -437,52 +470,91 @@ class RecallSpec extends SparkSpec {
     assert(r4 >= 0.6 && r4 > r1)
   }
 
-  // ---- large-nlist bulk centroid assignment (broadcast-variable path) ----
+  // ---- centroid assignment kernel vs a plain-Scala reference ----
 
   private def centroidsFrom(df: DataFrame, n: Int): Seq[(Int, Seq[Double])] =
     df.filter($"vec_id" < n)
       .select($"vec_id".cast("int"), $"embedding".cast("array<double>"))
       .as[(Int, Seq[Double])].collect().toSeq.sortBy(_._1)
 
-  test("bulk centroid assignment is row-identical to the literal path") {
-    val emb = Tables.t(spark, dir, "embeddings")
-    val cents = centroidsFrom(emb, 16)
-    def key(df: DataFrame) = df
-      .select($"centroid_id".cast("int"), $"corpus_id".cast("long"))
-      .as[(Int, Long)].collect().sorted.toSeq
-    // n=1: assignToCentroids (literal argmax) vs bulk
-    assert(key(Similarity.assignToCentroids(emb, cents, "vec_id", "embedding"))
-      == key(Similarity.assignTopCentroidsBulk(emb, cents, 1, "vec_id", "embedding")))
-    // n=3: assignTopCentroids (literal sort/slice/explode) vs bulk
-    assert(key(Similarity.assignTopCentroids(emb, cents, 3, "vec_id", "embedding"))
-      == key(Similarity.assignTopCentroidsBulk(emb, cents, 3, "vec_id", "embedding")))
+  /** The corpus plus planted rows: an exact copy of centroid `tieWith`
+    * (which `cents` duplicates under its last id, so the two tie
+    * bit-for-bit), an all-zero vector (every score 0.0) and a vector with
+    * one NaN component (every score NaN — the greatest double in Spark's
+    * ordering). Ids 900001–900003. */
+  private def withPlanted(emb: DataFrame, cents: Seq[(Int, Seq[Double])],
+      tieWith: Int): DataFrame = {
+    val tieVec = cents.find(_._1 == tieWith).get._2
+    val nanVec = tieVec.updated(5, Double.NaN)
+    emb.select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+      .unionByName(Seq((900001L, tieVec), (900002L, Seq.fill(64)(0.0)),
+        (900003L, nanVec)).toDF("vec_id", "embedding"))
   }
 
-  test("nlist >= 512 auto-routes assignment off the plan-literal path") {
+  /** (centroid_id, corpus_id) rows from the plain-Scala reference:
+    * [[Similarity.cosineLocal]] scores into a [[Similarity.BoundedTopN]]. */
+  private def reference(corpus: DataFrame, cents: Seq[(Int, Seq[Double])],
+      n: Int): Seq[(Int, Long)] = {
+    val cs = cents.map { case (i, v) => (i, v.toArray) }
+    corpus.select($"vec_id", $"embedding".cast("array<double>"))
+      .as[(Long, Seq[Double])].collect().toSeq.flatMap { case (id, v) =>
+        val heap = new Similarity.BoundedTopN(math.min(n, cs.size))
+        cs.foreach { case (ci, c) => heap.offer(Similarity.cosineLocal(v.toArray, c), ci) }
+        heap.drainIds().toSeq.map(ci => (ci, id))
+      }.sorted
+  }
+
+  private def assignmentKey(df: DataFrame): Seq[(Int, Long)] = df
+    .select($"centroid_id".cast("int"), $"corpus_id".cast("long"))
+    .as[(Int, Long)].collect().sorted.toSeq
+
+  test("centroid assignment kernel == plain-Scala reference at nlist 16 (ties, NaN)") {
     val emb = Tables.t(spark, dir, "embeddings")
-    // 500 corpus vectors + 12 perturbed copies = 512 centroids
+    // 16 centroids: ids 0..14 from the corpus, id 15 a copy of centroid 3
+    val base = centroidsFrom(emb, 15)
+    val cents = base :+ ((15, base(3)._2))
+    val corpus = withPlanted(emb, cents, tieWith = 3)
+    // n=1: assignToCentroids; n=3: assignTopCentroids — each row-identical
+    // to the reference
+    val one = assignmentKey(Similarity.assignToCentroids(corpus, cents,
+      "vec_id", "embedding"))
+    assert(one == reference(corpus, cents, 1))
+    // the float32 corpus as stored (widened per element, like cosine)
+    assert(assignmentKey(Similarity.assignToCentroids(emb, cents, "vec_id",
+      "embedding")) == reference(emb, cents, 1))
+    val three = assignmentKey(Similarity.assignTopCentroids(corpus, cents, 3,
+      "vec_id", "embedding"))
+    assert(three == reference(corpus, cents, 3))
+    // the planted rows pin the ordering itself: an exact tie goes to the
+    // lower id, all-equal scores (0.0 or NaN) to the lowest ids (rows are
+    // sorted by centroid id, not by rank)
+    def of(rows: Seq[(Int, Long)], id: Long) = rows.filter(_._2 == id).map(_._1)
+    assert(of(one, 900001L) == Seq(3))
+    assert(Set(3, 15).subsetOf(of(three, 900001L).toSet))
+    assert(of(one, 900002L) == Seq(0) && of(three, 900002L) == Seq(0, 1, 2))
+    assert(of(one, 900003L) == Seq(0) && of(three, 900003L) == Seq(0, 1, 2))
+  }
+
+  test("512-centroid assignment == plain-Scala reference; plan stays small") {
+    val emb = Tables.t(spark, dir, "embeddings")
+    // 500 corpus vectors + 12 perturbed copies = 512 centroids; id 511 is
+    // an exact copy of centroid 7 (a planted tie)
     val cents512 = {
       val base = centroidsFrom(emb, 500)
-      base ++ base.take(12).map { case (i, v) =>
-        (i + 500, v.map(_ + 0.01)) }
+      base ++ base.take(11).map { case (i, v) =>
+        (i + 500, v.map(_ + 0.01)) } :+ ((511, base(7)._2))
     }
-    val routed = Similarity.assignTopCentroids(emb, cents512, 2,
+    val corpus = withPlanted(emb, cents512, tieWith = 7)
+    val assigned = Similarity.assignTopCentroids(corpus, cents512, 2,
       "vec_id", "embedding")
-    val plan = routed.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"),
-      "512-centroid assignment should ride the broadcast-variable path")
     // the plan must not embed the centroid matrix as literals
+    val plan = assigned.queryExecution.executedPlan.toString
     assert(plan.length < 20000, s"plan blew up to ${plan.length} chars")
-    // and it agrees with the literal expression path built directly
-    def key(df: DataFrame) = df
-      .select($"centroid_id".cast("int"), $"corpus_id".cast("long"))
-      .as[(Int, Long)].collect().sorted.toSeq
-    val literal = Similarity.assignTopCentroids(emb, cents512.take(511), 2,
-      "vec_id", "embedding")
-    val bulk511 = Similarity.assignTopCentroidsBulk(emb, cents512.take(511), 2,
-      "vec_id", "embedding")
-    assert(key(literal) == key(bulk511),
-      "literal and bulk paths disagree at nlist=511")
+    val two = assignmentKey(assigned)
+    assert(two == reference(corpus, cents512, 2),
+      "kernel and reference disagree at nlist=512")
+    assert(two.filter(_._2 == 900001L).map(_._1) == Seq(7, 511))
+    assert(two.filter(_._2 == 900003L).map(_._1) == Seq(0, 1))
   }
 
   test("maxCosToRef agrees with bruteForceTopK k=1 over the ref set") {
