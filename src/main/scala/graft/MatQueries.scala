@@ -1806,7 +1806,7 @@ object MatQueries {
       m = 8, codebookSize = 16, seed = 43L, foldBatchId = -1L)
     // carry epoch-0's replay marker across the manual rotation (the
     // guarded ingest's own rotations do this internally — batch 0's
-    // content is the fold, so its id re-commits as an empty segment)
+    // content is the fold, so its id is committed as a ledger entry)
     IndexStore.markBatchCommitted(s, root1, 0L)
     // three guarded batches (each records a yardstick stat), then six
     // plain appends — nine ingest segments + the fold on the live root

@@ -376,8 +376,8 @@ object Maintenance {
     compacted: Seq[String], zordered: Boolean, analyzed: Boolean)
 
   /** ONE scheduled call that keeps a partitioned TABLE healthy on disk —
-    * the table-side sibling of [[maintainIndexStore]], composed in the
-    * safe order:
+    * the table-side sibling of [[graft.llm.IndexStore.maintain]],
+    * composed in the safe order:
     *
     *  1. [[recover]] — sweep crash leftovers FIRST (a crashed swap's
     *     trash dir may hold the only copy of a partition; compacting a
@@ -677,18 +677,6 @@ object Maintenance {
     } else classic()
     spark.read.parquet(outDir)
   }
-
-  /** ONE scheduled call that keeps an ANN index alias bounded on disk:
-    * superseded-store GC + crashed-trainer staging sweep + drift-guard
-    * yardstick pruning + horizon-bounded code compaction, composed in
-    * the safe order. Delegates to [[graft.llm.IndexStore.maintain]] —
-    * see there for the step contract and the as-of-horizon dial. */
-  def maintainIndexStore(spark: SparkSession, alias: String,
-      keepPointers: Int = 2, minAgeMs: Long = 30L * 60 * 1000,
-      keepGuardStats: Int = 8, compactMinSegments: Int = 16,
-      asOfHorizonSegments: Int = 8): graft.llm.IndexStore.MaintainReport =
-    graft.llm.IndexStore.maintain(spark, alias, keepPointers, minAgeMs,
-      keepGuardStats, compactMinSegments, asOfHorizonSegments)
 
   /** Count data files under a directory tree (hidden `_`/`.` entries
     * excluded) — the before/after measurement for [[compactExport]].

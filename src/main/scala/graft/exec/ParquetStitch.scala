@@ -22,8 +22,8 @@ final class StitchSchemaMismatch(msg: String)
   * consolidating N files costs a sequential byte stream + one footer
   * write — never a decode, a re-encode, or a shuffle of stored rows.
   * Per-file footer min/max (the pruning contract) is the union over
-  * copied row groups and is preserved exactly; an empty source (a
-  * zero-row replay marker) contributes zero blocks.
+  * copied row groups and is preserved exactly; an empty source (a store
+  * segment whose batch kept no rows) contributes zero blocks.
   *
   * What stitching does NOT do is merge row groups — repeated stitches
   * fragment a file's blocks without bound, so callers gate on

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 
 /** Durable, append-only stores for INCREMENTAL dedup — the production
   * ingest loop that [[Dedup.incrementalExact]] / [[Dedup.incrementalNearDup]]
@@ -18,24 +18,23 @@ import org.apache.hadoop.fs.{Path => HPath}
   *   <root>/done-<batchId>        commit marker (created via temp+rename)
   * }}}
   *
-  * Replay idempotency — the contract a replayed ingest (Spark task retry,
-  * orchestrator re-run, at-least-once upstream) needs: `append` with an
-  * already-committed batchId is a NO-OP (returns false), so appending the
-  * same batch twice leaves the store byte-identical. The same done-marker
-  * idiom as [[graft.streaming.Streaming.microbatchStream]]
-  * (Streaming.scala:105): data first, marker last via atomic rename, reads
-  * see only marked segments. A crash mid-append leaves an unmarked segment
-  * that reads ignore and a retry overwrites.
+  * The `done-<id>` markers are the ONE replay ledger (a task retry, an
+  * orchestrator re-run, a stream restarted from a fresh checkpoint), and
+  * every rule about them lives here. An ingest id's marker is permanent:
+  * [[compact]] folds its rows and deletes its dir but keeps the marker,
+  * so [[append]] of a committed batchId is a NO-OP (returns false) before
+  * and after any compaction; [[markCommitted]] writes entries with no
+  * rows. Reads see data-bearing segments only: a marked id whose dir
+  * exists and that no committed fold holds. A marker without a dir is a
+  * ledger entry; a dir without a marker is a crashed append's debris
+  * (data first, marker last via atomic rename) that reads ignore.
   *
   * Scale shape: append cost ∝ batch (one parquet write, no read-modify-write
   * of history); read is a multi-path parquet scan whose per-segment
   * footers prune columns like any other scan. Segment count grows one per
-  * ingest — [[compact]] folds committed segments into one when it ever
-  * matters (markers make the rewrite safely distinguishable from
-  * half-appends, and probes are duplicate-tolerant so a crash mid-compact
-  * can only over-report, never drop). Nothing here is cached: the store
-  * lives on disk, not in the session (see the cache contract note on
-  * [[Dedup]]).
+  * ingest — [[compact]] folds them into one when it ever matters, at a
+  * cost ∝ the rows it folds. Nothing here is cached: the store lives on
+  * disk, not in the session (see the cache contract note on [[Dedup]]).
   */
 object DedupStore {
 
@@ -47,6 +46,8 @@ object DedupStore {
   private def doneMarker(root: String, batchId: Long) =
     new HPath(root, s"done-$batchId")
   private def leasePath(root: String) = new HPath(root, "compacting")
+  private def holdsFile(root: String, foldId: Long) =
+    new HPath(segDir(root, foldId), "_holds")
 
   /** Segment ids at or above this are RESERVED for [[compact]]'s merged
     * segments: appends may never use them, so a compact's output directory
@@ -55,6 +56,52 @@ object DedupStore {
     * lease-acquired-mid-append race harmless (see [[append]]). Append ids
     * below the base are unrestricted (the -1L seed convention included). */
   val CompactBase: Long = 1L << 61
+
+  private def requireIngestId(batchId: Long): Unit =
+    require(batchId < CompactBase,
+      s"DedupStore: batchIds >= 2^61 ($CompactBase) are reserved for " +
+        "compaction segments")
+
+  /** Publish `batchId`'s marker atomically: temp-create + rename. */
+  private def commitMarker(f: FileSystem, root: String, batchId: Long): Unit = {
+    val tmp = new HPath(root, s".done-$batchId.tmp")
+    f.create(tmp, true).close()
+    if (!f.rename(tmp, doneMarker(root, batchId)))
+      throw new java.io.IOException(
+        s"DedupStore: cannot commit marker for batch $batchId under $root")
+  }
+
+  /** Every marked id, ascending: ledger entries and data-bearing ids. */
+  private def markedIds(f: FileSystem, root: String): Seq[Long] = {
+    val p = new HPath(root)
+    if (!f.exists(p)) Seq.empty
+    else f.listStatus(p).map(_.getPath.getName).filter(_.startsWith("done-"))
+      .map(_.stripPrefix("done-").toLong).sorted.toSeq
+  }
+
+  /** The ids a fold holds, one per line (none for a legacy fold). */
+  private def foldHolds(f: FileSystem, root: String, id: Long): Seq[Long] =
+    if (!f.exists(holdsFile(root, id))) Nil
+    else {
+      val in = f.open(holdsFile(root, id))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.toLong).toList
+      finally in.close()
+    }
+
+  /** Marked ids whose segment dir exists, split into the ones reads see
+    * and the ones a committed fold already holds — the sources of a fold
+    * whose retire pass a crash cut short (see [[compact]]). */
+  private def dataSegments(f: FileSystem,
+      root: String): (Seq[Long], Seq[Long]) = {
+    val segRoot = new HPath(root, "segments")
+    val dirs = if (!f.exists(segRoot)) Set.empty[String]
+      else f.listStatus(segRoot).map(_.getPath.getName).toSet
+    val withData = markedIds(f, root).filter(id => dirs(id.toString))
+    val held = withData.filter(_ >= CompactBase)
+      .flatMap(foldHolds(f, root, _)).toSet
+    withData.partition(id => !held(id))
+  }
 
   /** Age (ms) of the compaction lease if one is held. The release between
     * exists() and getFileStatus() is a benign race: a vanished lease means
@@ -74,14 +121,14 @@ object DedupStore {
 
   /** Append one batch's rows as segment `batchId`. Returns true if the
     * segment was committed by THIS call, false when the batchId was already
-    * committed (replay — store unchanged). Not safe for two concurrent
-    * appends of the SAME batchId (last marker rename wins — fine, both
-    * wrote identical data by contract); distinct batchIds never contend. */
+    * committed (replay — store unchanged; its rows may since have been
+    * folded, or it may be a [[markCommitted]] entry). Crash ordering: data
+    * dir, then marker. Not safe for two concurrent appends of the SAME
+    * batchId (last marker rename wins — fine, both wrote identical data by
+    * contract); distinct batchIds never contend. */
   def append(spark: SparkSession, root: String, batchId: Long,
       rows: DataFrame): Boolean = {
-    require(batchId < CompactBase,
-      s"DedupStore: batchIds >= 2^61 ($CompactBase) are reserved for " +
-        "compaction segments")
+    requireIngestId(batchId)
     val f = fs(spark, root)
     if (f.exists(doneMarker(root, batchId))) return false
     // compaction exclusion (VERDICT r10 #4): an append while the lease is
@@ -108,31 +155,37 @@ object DedupStore {
     rows.write.mode("overwrite").parquet(segDir(root, batchId).toString)
     // … lease re-checked NOW (the write may have taken minutes) …
     failIfCompacting()
-    // … marker last, appearing atomically via temp-create + rename. A
-    // marker that appeared during the write means a concurrent replay of
-    // the SAME batch committed first (identical data by contract): yield.
+    // … marker last. A marker that appeared during the write means a
+    // concurrent replay of the SAME batch committed first (identical data
+    // by contract): yield.
     if (f.exists(doneMarker(root, batchId))) return false
-    val tmp = new HPath(root, s".done-$batchId.tmp")
-    f.create(tmp, true).close()
-    if (!f.rename(tmp, doneMarker(root, batchId)))
-      throw new java.io.IOException(
-        s"DedupStore: cannot commit marker for batch $batchId under $root")
+    commitMarker(f, root, batchId)
     true
   }
 
-  /** All committed segments as one DataFrame (empty schema-less reads are
-    * the caller's concern: a store must have ≥ 1 committed segment).
-    * Unmarked / half-written segments are invisible. */
-  def read(spark: SparkSession, root: String): DataFrame = {
+  /** Commit `ids` as ledger entries with no rows — batches whose content
+    * lives in another segment (a rotation's fold), so their replays no-op.
+    * No Spark job: per id, unmarked debris at that id is deleted (no later
+    * read may pick up a crashed append's rows), then the marker commits as
+    * [[append]]'s does. Committed ids are skipped; returns the ids this
+    * call committed. */
+  def markCommitted(spark: SparkSession, root: String,
+      ids: Seq[Long]): Seq[Long] = {
+    ids.foreach(requireIngestId)
     val f = fs(spark, root)
-    val committed = f.listStatus(new HPath(root))
-      .map(_.getPath.getName)
-      .filter(_.startsWith("done-"))
-      .map(_.stripPrefix("done-").toLong)
-      .sorted
-    require(committed.nonEmpty, s"DedupStore at $root has no committed segments")
-    spark.read.parquet(
-      committed.map(id => segDir(root, id).toString): _*)
+    ids.distinct.filterNot(id => f.exists(doneMarker(root, id))).map { id =>
+      f.delete(segDir(root, id), true)
+      commitMarker(f, root, id)
+      id
+    }
+  }
+
+  /** All data-bearing segments as one DataFrame (empty schema-less reads
+    * are the caller's concern: a store must have ≥ 1 such segment). */
+  def read(spark: SparkSession, root: String): DataFrame = {
+    val (live, _) = dataSegments(fs(spark, root), root)
+    require(live.nonEmpty, s"DedupStore at $root has no committed segments")
+    spark.read.parquet(live.map(id => segDir(root, id).toString): _*)
   }
 
   /** The `_upto-<n>` provenance sidecar of a compacted fold, if present
@@ -149,7 +202,7 @@ object DedupStore {
   /** Time-travel read: the store exactly as it stood after ingest batch
     * `asOfBatch` committed — reproduce yesterday's keep/drop decisions
     * after more ingests landed, audit a disputed drop, bisect a dedup
-    * regression. Selects every committed segment with id ≤ asOfBatch,
+    * regression. Selects every data-bearing segment with id ≤ asOfBatch,
     * plus any compacted fold whose `_upto` provenance proves it holds
     * only history ≤ asOfBatch (compaction is membership-preserving, so
     * such a fold IS those batches).
@@ -162,10 +215,10 @@ object DedupStore {
   def readAsOf(spark: SparkSession, root: String,
       asOfBatch: Long): DataFrame = {
     val f = fs(spark, root)
-    val committed = committedBatches(spark, root)
-    require(committed.nonEmpty,
+    val (live, _) = dataSegments(f, root)
+    require(live.nonEmpty,
       s"DedupStore at $root has no committed segments")
-    val keep = committed.filter { id =>
+    val keep = live.filter { id =>
       if (id <= asOfBatch) true // covers normal ids and at-or-after-the-fold
       else if (id < CompactBase) false // a later ingest: simply not yet there
       else foldUpto(f, root, id) match {
@@ -188,16 +241,19 @@ object DedupStore {
     spark.read.parquet(keep.map(id => segDir(root, id).toString): _*)
   }
 
-  /** The parquet path of one committed segment — for callers that must
-    * audit a specific segment's content (e.g. [[IndexStore.mergeStores]]'s
-    * replay verification) without widening to the whole-store read. */
-  def segmentPath(root: String, batchId: Long): String =
-    segDir(root, batchId).toString
+  /** The parquet path of segment `batchId` while it holds its own rows
+    * (None once folded, or for a ledger entry) — for callers that audit
+    * one segment (e.g. [[IndexStore.mergeStores]]'s replay check). */
+  def segmentPath(spark: SparkSession, root: String,
+      batchId: Long): Option[String] = {
+    val (live, _) = dataSegments(fs(spark, root), root)
+    if (live.contains(batchId)) Some(segDir(root, batchId).toString) else None
+  }
 
   /** The largest ingest id PROVABLY folded into this store's compaction
     * segments — max `_upto` over committed folds, None when no fold
     * carries provenance. The compaction-cadence observable: ingest
-    * segments at or below it are already collapsed (only their replay
+    * segments at or below it are already collapsed (only their ledger
     * markers remain), ones above still hold their own rows. */
   def foldedThrough(spark: SparkSession, root: String): Option[Long] = {
     val f = fs(spark, root)
@@ -206,63 +262,56 @@ object DedupStore {
     if (us.isEmpty) None else Some(us.max)
   }
 
-  /** Committed batch ids, ascending — the audit view ("which ingests are
-    * in this store?") and the input to an offline compaction. */
-  def committedBatches(spark: SparkSession, root: String): Seq[Long] = {
-    val f = fs(spark, root)
-    val p = new HPath(root)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).map(_.getPath.getName).filter(_.startsWith("done-"))
-      .map(_.stripPrefix("done-").toLong).sorted.toSeq
+  /** Committed batch ids, ascending — the replay ledger and audit view:
+    * every ingest id ever committed, folded or not, plus the live folds. */
+  def committedBatches(spark: SparkSession, root: String): Seq[Long] =
+    markedIds(fs(spark, root), root)
+
+  /** Retire folded segments: every data dir goes, and so does a fold id's
+    * marker (never a replay token) — first, so a crash leaves an unmarked
+    * dir rather than a fold marker with no rows. Ingest markers stay. */
+  private def retire(f: FileSystem, root: String, ids: Seq[Long]): Unit = {
+    ids.filter(_ >= CompactBase).foreach(id =>
+      f.delete(doneMarker(root, id), false))
+    ids.foreach(id => f.delete(segDir(root, id), true))
   }
 
-  /** Fold all committed segments into ONE new segment and retire the
+  /** Fold the data-bearing segments into ONE new segment and retire the
     * olds — the offline maintenance pass that keeps the multi-path read
     * from accumulating one footer per ingest forever. The merged segment's
     * id lives in the RESERVED [[CompactBase]] space appends can never use,
     * so its data directory is collision-free against any in-flight append
     * by construction. Returns the new segment's batchId (or the sole
-    * existing id if the store is already compact).
+    * data-bearing id if the store is already compact).
     *
-    * Crash ordering, weakest-to-strongest: (1) merged data written, (2)
-    * merged marker committed, (3) OLD MARKERS removed, (4) old data
-    * dirs removed. A crash before (2) leaves an unmarked dir reads
-    * ignore; between (2) and (3) reads see every row TWICE — safe for
-    * both probe shapes (the fp anti-join is duplicate-tolerant, the
-    * near-dup candidate set is `.distinct()`-ed before scoring) and
-    * healed by re-running compact; after (3) only unreferenced dirs
-    * remain.
-    *
-    * Concurrency is mutual-exclusion-by-lease with a fail-safe fallback
-    * (VERDICT r10 #4, hardened r12): compact holds a `compacting` lease
-    * (created via temp+rename — the rename is the atomic arbiter between
-    * two racing compacts) for its whole run and HEARTBEATS its mtime every
-    * `min(60 s, maxAge/3)`, so a long compact never ages out of its own
-    * exclusion; the stale ceiling (`spark.graft.dedupstore.leaseMaxAgeMs`,
-    * default 30 min) only reclaims a compactor that died mid-run, the same
-    * stale-marker recovery as [[graft.exec.Maintenance]]. [[append]] checks
-    * the lease both before its write and before its marker rename, so a
-    * mis-scheduled append fails loud rather than landing mid-maintenance.
-    * The one interleaving the lease cannot serialize — an append whose
-    * final check beat the lease acquisition by microseconds — is rendered
-    * harmless by the disjoint id spaces: the append's segment is simply not
-    * in this compact's snapshot, survives the retire pass (which deletes
-    * only snapshotted ids), and folds next time. Still run compact in the
-    * ingest pipeline's maintenance window; the lease turns a scheduling
-    * bug into an error, and the id-space split turns the residual race
-    * into at-worst deferred folding, never data loss. */
-  def compact(spark: SparkSession, root: String): Long =
-    compact(spark, root, None)
-
-  /** [[compact]] bounded to an as-of horizon: folds only the ingest
-    * segments with id ≤ `upToIngest` (plus every existing fold — compacted
-    * history is already collapsed), leaving newer segments intact, so
+    * `upToIngest` bounds the fold to an as-of horizon: only ingest
+    * segments with id ≤ it fold (plus every existing fold), so
     * [[readAsOf]] keeps working for every point ≥ the fold's `_upto` —
-    * the cadence dial that preserves a configured audit window while
-    * still bounding segment count ([[graft.exec.Maintenance]]'s
-    * maintainIndexStore uses it). `None` folds everything. */
+    * the cadence dial [[IndexStore.maintain]] uses. `None` folds all.
+    * Folded ingest ids keep their markers ([[committedBatches]] still
+    * lists them, their replays no-op); re-folded older folds lose theirs.
+    *
+    * Crash ordering: (1) merged data written with its `_upto` and
+    * `_holds` sidecars, (2) merged marker committed, (3) [[retire]]. A
+    * crash before (2) leaves an unmarked dir reads ignore. From (2) on,
+    * `_holds` names the fold's sources, so reads skip them even while
+    * their dirs remain — readers see exactly the old store or exactly
+    * the new one — and the next compact finishes the retire pass
+    * instead of folding the sources in a second time.
+    *
+    * Concurrency is mutual-exclusion-by-lease (VERDICT r10 #4, hardened
+    * r12): compact holds a `compacting` lease (temp+rename — the atomic
+    * arbiter between racing compacts) for its whole run and HEARTBEATS its
+    * mtime every `min(60 s, maxAge/3)`; the stale ceiling
+    * (`spark.graft.dedupstore.leaseMaxAgeMs`, default 30 min) only
+    * reclaims a compactor that died mid-run. [[append]] checks the lease
+    * before its write and before its marker rename, so a mis-scheduled
+    * append fails loud. An append whose final check beat the lease by
+    * microseconds is harmless by the disjoint id spaces: its segment is
+    * not in this compact's snapshot, survives the retire pass (which
+    * deletes only snapshotted ids), and folds next time. */
   def compact(spark: SparkSession, root: String,
-      upToIngest: Option[Long]): Long = {
+      upToIngest: Option[Long] = None): Long = {
     val f = fs(spark, root)
     leaseAge(f, root) match {
       case Some(age) if age <= leaseMaxAgeMs(spark) =>
@@ -282,9 +331,12 @@ object DedupStore {
     try {
       // ids snapshot AFTER the lease: an append that saw the lease cannot
       // commit a marker between this listing and the retire pass below.
-      // Under a horizon bound, the snapshot keeps only in-horizon ingest
-      // segments and every existing fold; newer segments survive untouched
-      val ids = committedBatches(spark, root).filter(id =>
+      // Sources a committed fold already holds finish an interrupted
+      // retire pass (re-folding them would bake in duplicates). Under a
+      // horizon bound, newer ingest segments survive untouched
+      val (live, held) = dataSegments(f, root)
+      retire(f, root, held)
+      val ids = live.filter(id =>
         id >= CompactBase || upToIngest.forall(id <= _))
       require(ids.nonEmpty, s"DedupStore at $root has no committed segments" +
         upToIngest.fold("")(u => s" at or below ingest id $u"))
@@ -298,8 +350,8 @@ object DedupStore {
       //
       // The fold is ROW-GROUP-STITCHED when it can be (r16): the
       // snapshotted segments' row groups copy byte-for-byte into one file
-      // (`ParquetFileWriter.appendFile` — no decode, no re-encode; empty
-      // replay-marker segments contribute zero blocks), verified against
+      // (`ParquetFileWriter.appendFile` — no decode, no re-encode; a
+      // segment that kept no rows contributes zero blocks), verified against
       // the source footers' row counts. Bounds keep the shape honest:
       // schema drift across segments, a cumulative row-group count past
       // 64 (stitching never merges row groups, so re-folds would fragment
@@ -310,9 +362,7 @@ object DedupStore {
       val newId = math.max(ids.max + 1, CompactBase)
       val dstDir = segDir(root, newId)
       val segFiles = ids.flatMap { id =>
-        val d = segDir(root, id)
-        if (!f.exists(d)) Nil
-        else f.listStatus(d).toSeq.filter(s => s.isFile &&
+        f.listStatus(segDir(root, id)).toSeq.filter(s => s.isFile &&
             !s.getPath.getName.startsWith("_") &&
             !s.getPath.getName.startsWith("."))
           .map(_.getPath)
@@ -345,15 +395,13 @@ object DedupStore {
         .map(id => foldUpto(f, root, id))
       val upto = ids.filter(_ < CompactBase) ++ foldProvenance.flatten
       if (upto.nonEmpty && foldProvenance.forall(_.isDefined))
-        f.create(new HPath(segDir(root, newId), s"_upto-${upto.max}"),
-          true).close()
-      val tmp = new HPath(root, s".done-$newId.tmp")
-      f.create(tmp, true).close()
-      if (!f.rename(tmp, doneMarker(root, newId)))
-        throw new java.io.IOException(
-          s"DedupStore: cannot commit compaction marker $newId under $root")
-      ids.foreach { id => f.delete(doneMarker(root, id), false) }
-      ids.foreach { id => f.delete(segDir(root, id), true) }
+        f.create(new HPath(dstDir, s"_upto-${upto.max}"), true).close()
+      // committed with the fold: from its marker on, reads skip these ids
+      val out = f.create(holdsFile(root, newId), true)
+      try out.write(ids.mkString("", "\n", "\n").getBytes("UTF-8"))
+      finally out.close()
+      commitMarker(f, root, newId)
+      retire(f, root, ids)
       newId
     } finally handle.release()
   }

@@ -290,20 +290,13 @@ object IndexStore {
     DedupStore.append(spark, codesRoot(root), batchId, codes)
   }
 
-  /** Commit `batchId` as an EMPTY segment — the replay-marker move the
-    * rotation/compaction lifecycles use (a batch whose content lives in a
-    * fold must still no-op on replay). Cheap by construction (r19): the
-    * empty frame is a LOCAL relation with the store's committed segment
-    * schema — no quantizer load, no encode plan, no store scan; planning
-    * is microseconds and the write one empty task. Returns false on
-    * replay. */
+  /** Commit `batchId` as a ledger entry with no rows
+    * ([[DedupStore.markCommitted]]) — the replay-marker move a rotation
+    * uses for a batch whose content lives in the fold, so its replay
+    * no-ops. No Spark job. Returns false on replay. */
   def markBatchCommitted(spark: SparkSession, root: String,
-      batchId: Long): Boolean = {
-    val cr = codesRoot(root)
-    val schema = DedupStore.read(spark, cr).schema
-    DedupStore.append(spark, cr, batchId, spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
-  }
+      batchId: Long): Boolean =
+    DedupStore.markCommitted(spark, codesRoot(root), Seq(batchId)).nonEmpty
 
   /** All committed inverted-list segments as one (centroid_id, corpus_id,
     * codes) frame. */
@@ -338,46 +331,16 @@ object IndexStore {
       .map { st => f.delete(st.getPath, true); st.getPath.toString }
   }
 
-  /** Fold all committed code segments into one ([[DedupStore.compact]] —
-    * same lease, same crash contract): a long-running ingest accumulates
-    * one segment per batch, and scan cost grows with file count even when
-    * total rows don't. Search results are unchanged by construction (the
-    * scan is a union of segments either way — IndexStoreSpec pins it).
-    * Returns the merged segment's id.
-    *
-    * SAFE UNDER STREAMING INGEST (r16 — machinery, not convention):
-    * [[DedupStore.compact]] retires the folded segments' commit markers,
-    * which would make a replayed stream batch re-append its content on
-    * top of the fold (double-indexing) and strand a guard-fire rotation
-    * without the history ids its cutover markers must carry. So after
-    * the fold commits, every folded ingest-space id is re-committed as
-    * an EMPTY segment — the same marker trick [[ingestWithDriftGuard]]
-    * uses across a rotation. Replays no-op, [[readAsOf]] semantics are
-    * unchanged (the empty segments carry no rows; the fold still refuses
-    * below its `_upto`), and the concurrent-ingest exclusion is the
-    * DedupStore lease (an append during the fold fails loud; one that
-    * raced past it lands in the disjoint id space and folds next time).
-    * A crash between the fold and the re-marks is healed by re-running
-    * compact — until then replayed batches may re-append (duplicate
-    * candidates, the duplicate-tolerant probe shape), never lose rows. */
+  /** Fold the code segments into one ([[DedupStore.compact]]: same
+    * lease, same crash contract, same replay ledger — folded batch ids
+    * stay committed, so a replayed stream batch no-ops): a long-running
+    * ingest accumulates one segment per batch, and scan cost grows with
+    * file count even when total rows don't. Search results are unchanged
+    * by construction (the scan is a union of segments either way —
+    * IndexStoreSpec pins it). Returns the merged segment's id. */
   def compactCodes(spark: SparkSession, root: String,
-      upToIngest: Option[Long] = None): Long = {
-    val cr = codesRoot(root)
-    val before = DedupStore.committedBatches(spark, cr)
-    val fold = DedupStore.compact(spark, cr, upToIngest)
-    val ingestIds = before.filter(id =>
-      id < DedupStore.CompactBase && upToIngest.forall(id <= _))
-    if (ingestIds.nonEmpty) {
-      // LOCAL empty frame (r19): `read(cr).limit(0)` re-planned the whole
-      // multi-segment scan per re-mark — a local relation with the same
-      // schema writes identical empty segments at no planning cost
-      val empty = spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        DedupStore.read(spark, cr).schema)
-      ingestIds.foreach(id => DedupStore.append(spark, cr, id, empty))
-    }
-    fold
-  }
+      upToIngest: Option[Long] = None): Long =
+    DedupStore.compact(spark, codesRoot(root), upToIngest)
 
   /** Per-cell occupancy of the stored index — the denominator of the
     * staleness question this store's train-once contract raises: coarse
@@ -943,15 +906,15 @@ object IndexStore {
     * in the live root's code segments. On rotate (and on bootstrap) the
     * re-encoded corpus lands as the `-1L` fold segment — the seed
     * convention, so it can never shadow a real stream batch id — and
-    * every previously-committed id (plus the firing one) is re-committed
-    * as an EMPTY segment on the new root BEFORE the alias pointer
-    * publishes (build → mark → publish): a replayed batch no-ops
-    * whichever side of the rotation it lands on, a restarted stream
-    * cannot double-index through a cutover, and a crash mid-rotation
-    * leaves the old pointer live — never a published root missing its
-    * replay markers. (A replayed id at or below the rotation point
-    * maps to "content already inside the fold", the same skip semantics
-    * as [[DedupStore.append]]'s.)
+    * every previously-committed id (plus the firing one) is committed as
+    * a ledger entry ([[DedupStore.markCommitted]]) on the new root BEFORE
+    * the alias pointer publishes (build → mark → publish): a replayed
+    * batch no-ops whichever side of the rotation it lands on, a restarted
+    * stream cannot double-index through a cutover, and a crash
+    * mid-rotation leaves the old pointer live — never a published root
+    * missing its replay markers. (A replayed id at or below the rotation
+    * point maps to "content already inside the fold", the same skip
+    * semantics as [[DedupStore.append]]'s.)
     *
     * `corpus` is the source-of-truth vector table (the store holds codes,
     * never vectors): the rotate re-encodes `corpus ∩ indexed-ids ∪ batch`
@@ -970,12 +933,11 @@ object IndexStore {
       "ingestWithDriftGuard: stream batch ids are non-negative (the -1L " +
         "fold convention and the reserved compaction space are the store's)")
     val slim = batch.select(col(idCol), col(vecCol))
-    // empty replay markers ride the store-schema local relation (r19) —
-    // both call sites run AFTER buildRoot committed the -1L fold, so the
-    // segment schema is always derivable
+    // the new root's own -1L fold is already committed, and a fold id
+    // (content, not a replay token) is never carried across
     def markCommitted(root: String, ids: Seq[Long]): Unit =
-      ids.filter(id => id >= 0L && id < DedupStore.CompactBase).distinct
-        .foreach(id => markBatchCommitted(spark, root, id))
+      DedupStore.markCommitted(spark, codesRoot(root),
+        ids.filter(_ < DedupStore.CompactBase))
     currentRoot(spark, alias) match {
       case None =>
         // markers land on the new root BEFORE the pointer flips: a crash
@@ -990,17 +952,6 @@ object IndexStore {
         true
       case Some(root) =>
         val committed = DedupStore.committedBatches(spark, codesRoot(root))
-        // a store whose EVERY ingest marker was collapsed into compaction
-        // folds lost its replay record — a raw DedupStore.compact on the
-        // codes dir, not [[compactCodes]], which re-commits the folded
-        // ingest ids as empty segments. Refuse loudly: this step cannot
-        // prove the batch isn't a replay of folded history
-        require(committed.isEmpty ||
-            committed.exists(_ < DedupStore.CompactBase),
-          s"IndexStore under $alias: store $root holds only compaction " +
-            "folds with no ingest markers — replay idempotency is " +
-            "unprovable; compact streamed stores via compactCodes (which " +
-            "preserves markers), never DedupStore.compact directly")
         if (committed.contains(batchId)) return false // replay: skip
         val rq = loadQuantizer(spark, root)
         val codes = Similarity.encodeResidual(slim, rq, idCol, vecCol)
@@ -1059,15 +1010,12 @@ object IndexStore {
             nlist, m, codebookSize, seed, idCol, vecCol, Nil,
             fitSampleLimit, foldBatchId = -1L)
           // exactly-once across the cutover: every batch the OLD store had
-          // committed (its content now lives in the fold), plus the firing
-          // batch, re-commits as an empty segment on the new root BEFORE
+          // committed (folded or not — its content now lives in the new
+          // fold), plus the firing batch, is marked on the new root BEFORE
           // the pointer publish — replays no-op on either side of the
           // rotation, and a crash mid-cutover leaves the old pointer live
           // with the new root as sweepable debris, never a published root
-          // missing its markers. A [[compactCodes]]-folded store carries
-          // its ingest ids as empty segments, so they ride along here too;
-          // the fold id itself (content, not a replay token) is filtered
-          // by markCommitted.
+          // missing its markers.
           markCommitted(r2, committed :+ batchId)
           publishRoot(spark, alias, r2)
           true
@@ -1161,8 +1109,8 @@ object IndexStore {
     *  4. Horizon-bounded code compaction on the LIVE root: when more
     *     than `max(compactMinSegments, asOfHorizonSegments)` ingest
     *     segments hold unfolded rows, fold all but the newest
-    *     `asOfHorizonSegments` ([[compactCodes]] with its replay-marker
-    *     preservation) — segment count stays bounded while
+    *     `asOfHorizonSegments` ([[compactCodes]]; folded ids keep their
+    *     replay markers) — segment count stays bounded while
     *     [[DedupStore.readAsOf]]/[[searchTopK]]'s asOfBatch keep working
     *     across the configured audit horizon. The cadence counts only
     *     segments NOT yet folded (via [[DedupStore.foldedThrough]]), so
@@ -1172,8 +1120,8 @@ object IndexStore {
     * one read+write of the code rows (m bytes + id per vector) at most
     * once per cadence trigger. Safe to schedule against live searches
     * (immutable roots, atomic pointers) and against the guarded ingest
-    * (the compaction lease + marker preservation — the machinery pinned
-    * by IndexStoreSpec's mid-stream compaction race). */
+    * (the compaction lease + the permanent replay ledger — the machinery
+    * pinned by IndexStoreSpec's mid-stream compaction race). */
   def maintain(spark: SparkSession, alias: String, keepPointers: Int = 2,
       minAgeMs: Long = 30L * 60 * 1000, keepGuardStats: Int = 8,
       compactMinSegments: Int = 16,
@@ -1275,8 +1223,9 @@ object IndexStore {
     * corpus-id fingerprint as the source — a later merge of DIFFERENT
     * or reordered sources at a reused idBase fails loud instead of
     * silently leaving the new sources unmerged behind a false "already
-    * copied". Returns one Boolean per source — true when THIS call
-    * committed it. */
+    * copied"; a dst segment a compaction has since folded can no longer
+    * be verified, so its replay refuses loudly too. Returns one Boolean
+    * per source — true when THIS call committed it. */
   def mergeStores(spark: SparkSession, dstRoot: String,
       srcRoots: Seq[String], idBase: Long = 0L): Seq[Boolean] = {
     require(srcRoots.nonEmpty, "mergeStores: no sources")
@@ -1324,9 +1273,12 @@ object IndexStore {
             expr("bit_xor(xxhash64(corpus_id))")).collect()(0)
           (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
         }
-        val seg = spark.read.parquet(
-          DedupStore.segmentPath(codesRoot(dstRoot), idBase + i))
-        require(sig(seg) == sig(srcCodes),
+        val seg = DedupStore.segmentPath(spark, codesRoot(dstRoot),
+            idBase + i).getOrElse(throw new IllegalStateException(
+          s"mergeStores: dst segment ${idBase + i} is committed but a " +
+            s"compaction has folded it — the replay of source $src cannot " +
+            "be verified; merge new sources at a fresh idBase"))
+        require(sig(spark.read.parquet(seg)) == sig(srcCodes),
           s"mergeStores: dst segment ${idBase + i} is committed but does " +
             s"NOT match source $src — a previous merge used this idBase " +
             "for a different source set; pick an idBase unique per source " +

@@ -219,9 +219,10 @@ object Streaming {
     * append as store segment `<id>` — whose done marker doubles as the
     * batch's commit token. A replayed batch (restart, task retry,
     * at-least-once upstream) is recognized by the marker and skipped
-    * end-to-end; a crash BETWEEN the doc write and the marker re-processes
-    * the batch against the unchanged store and overwrites the same batch
-    * dir with the same rows. Exactly-once on a plain parquet sink without
+    * end-to-end, also after a [[graft.llm.DedupStore.compact]] (the
+    * marker is a permanent ledger entry); a crash BETWEEN the doc write
+    * and the marker re-processes the batch against the unchanged store
+    * and overwrites the same batch dir with the same rows. Exactly-once on a plain parquet sink without
     * a transactional table format — the same marker discipline as
     * [[microbatchStream]], with the dedup store itself as the ledger.
     *
@@ -261,10 +262,10 @@ object Streaming {
     * rescanned) → token count + content-hash shard assignment →
     * SHARD-PARTITIONED parquet export under `outDir/batch=<id>/shard=<s>`,
     * and the surviving fingerprints append as store segment `<id>` — the
-    * done marker is the batch's commit token, so a replayed batch skips
-    * end-to-end, a crash between the export write and the marker
-    * re-probes the unchanged store and overwrites the same batch dir
-    * with the same rows, and the curated corpus is NEVER re-curated: at
+    * done marker is the batch's commit token and outlives compaction, so
+    * a replayed batch skips end-to-end, a crash between the export write
+    * and the marker re-probes the unchanged store and overwrites the same
+    * batch dir with the same rows, and the curated corpus is NEVER re-curated: at
     * 100 TB the export runs once per ingested slab, not once per corpus.
     * The shard assignment is pure content hash (first 4 md5 nibbles of
     * `saltPrefix ++ text` mod `shards`), so shard membership is stable
@@ -314,9 +315,10 @@ object Streaming {
     * rescanned), survivors' DOCS land in `outDir/batch=<id>` and their
     * SIGNATURES append as store segment `<id>`, whose done marker is the
     * batch's commit token. Same exactly-once discipline as the exact
-    * form: a replayed batch is marker-skipped end-to-end; a crash between
-    * the doc write and the marker re-probes the unchanged store and
-    * overwrites the same batch dir with the same rows. Within-batch
+    * form: a replayed batch is marker-skipped end-to-end, before or after
+    * a store compaction; a crash between the doc write and the marker
+    * re-probes the unchanged store and overwrites the same batch dir with
+    * the same rows. Within-batch
     * near-dups are intentionally NOT collapsed here (both survive and
     * both sign the store — a periodic [[graft.llm.Dedup
     * .minhashNearDupPairs]] sweep is the intra-batch pass); dedup state
@@ -361,10 +363,10 @@ object Streaming {
     * [[graft.llm.DedupStore.readVectors]] — LSH bucket probe + exact
     * cosine verify, shuffle ∝ batch), survivors land under
     * `outDir/batch=<id>` and their VECTORS append as segment `id` — the
-    * store's done marker is the batch's commit token, so a replayed batch
-    * (marker present) skips end-to-end and dedup state survives restarts,
-    * spans arbitrary gaps, and is shared with the batch ingest path
-    * (d25). `bits` is the d24 cost dial — size it with the store. */
+    * store's done marker is the batch's commit token and outlives
+    * compaction, so a replayed batch (marker present) skips end-to-end
+    * and dedup state survives restarts, spans arbitrary gaps, and is
+    * shared with the batch ingest path (d25). `bits` is the d24 cost dial — size it with the store. */
   def semanticIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, outDir: String, checkpointDir: String,
       threshold: Double = 0.95, dim: Int = 64, bits: Int = 12,
@@ -402,11 +404,12 @@ object Streaming {
     * inverted-list segment `batchId`. Exactly-once by the
     * [[graft.llm.DedupStore.append]] replay contract: a restarted query
     * re-offers committed batch ids and the append no-ops before any
-    * write, so the index is byte-stable under full-backlog replay. Batch
-    * cost ∝ batch — encode is a single projection of two compiled
-    * kernels (centroid assignment, PQ encode) that hold the quantizer as
-    * plan objects; the only history touched is the kilobyte quantizer
-    * load. */
+    * write, so the index is byte-stable under full-backlog replay, also
+    * after [[graft.llm.IndexStore.compactCodes]] (folded ids stay
+    * committed). Batch cost ∝ batch — encode is a single projection of
+    * two compiled kernels (centroid assignment, PQ encode) that hold the
+    * quantizer as plan objects; the only history touched is the kilobyte
+    * quantizer load. */
   def indexIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding"): StreamingQuery =
@@ -430,9 +433,10 @@ object Streaming {
     * (fresh fit on history + batch, atomic alias cutover) instead of
     * appending garbage codes — the index notices its own staleness and
     * heals inside the ingest pipeline, with searches live through the
-    * cutover. Exactly-once across rotation: batch ids are re-committed
-    * as empty segments in the new root, so a restarted stream cannot
-    * double-index through a cutover (the replay no-ops on either side).
+    * cutover. Exactly-once across rotation and compaction: batch ids are
+    * committed as ledger markers in the new root, and compaction keeps
+    * them, so a restarted stream cannot double-index through a cutover
+    * (the replay no-ops on either side).
     * `corpus` is the source-of-truth vector table the rotate re-encodes
     * from (the store itself holds codes, never vectors). The first batch
     * bootstraps the initial store. */
@@ -468,9 +472,9 @@ object Streaming {
     * batch + probed buckets), survivors' CLIPS land under
     * `outDir/batch=<id>` and their SIGNATURES (8 bytes per frame, never
     * pixels) append as store segment `<id>` — the done marker is the
-    * batch's commit token, so a replayed batch skips end-to-end and
-    * dedup state survives restarts, spans arbitrary gaps, and is shared
-    * with the batch probe path (mm10). Seed history with a NEGATIVE
+    * batch's commit token and outlives compaction, so a replayed batch
+    * skips end-to-end and dedup state survives restarts, spans arbitrary
+    * gaps, and is shared with the batch probe path (mm10). Seed history with a NEGATIVE
     * batchId (`DedupStore.appendVideoSigs(spark, root, -1L, sigs)`). */
   def videoIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, outDir: String, checkpointDir: String,
@@ -515,9 +519,9 @@ object Streaming {
     * exactly 1.0; shuffle ∝ batch + probed buckets), survivors' CLIPS
     * land under `outDir/batch=<id>` and their SIGNATURES (8 bytes per
     * frame, never samples) append as store segment `<id>` — the done
-    * marker is the batch's commit token, so a replayed batch skips
-    * end-to-end and dedup state survives restarts, spans arbitrary gaps,
-    * and is shared with the batch probe path (mm11). Seed history with a
+    * marker is the batch's commit token and outlives compaction, so a
+    * replayed batch skips end-to-end and dedup state survives restarts,
+    * spans arbitrary gaps, and is shared with the batch probe path (mm11). Seed history with a
     * NEGATIVE batchId (`DedupStore.appendAudioSigs(spark, root, -1L,
     * sigs)`). */
   def audioIngestStream(spark: SparkSession, src: DataFrame,

@@ -175,11 +175,11 @@ class IndexStoreSpec extends SparkSpec {
     assert(merged >= graft.llm.DedupStore.CompactBase,
       s"merged id $merged must live in the reserved compact id space")
     // all rows fold into the merged segment; the folded ingest ids stay
-    // committed as EMPTY segments — the replay record a streamed store
-    // needs (r16) — so a re-append of any folded id is a no-op
+    // committed — the replay ledger a streamed store needs — so a
+    // re-append of any folded id is a no-op
     assert(graft.llm.DedupStore.committedBatches(spark, s"$root/codes")
       == Seq(0L, 1L, 2L, merged),
-      "folded ingest ids must stay committed as empty segments")
+      "folded ingest ids must stay committed")
     assert(IndexStore.readCodes(spark, root).count() == preRows)
     assert(!IndexStore.appendCodes(spark, root, 1L,
       emb.filter($"vec_id" % 3 === 1)),
@@ -584,12 +584,12 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("compactCodes mid-stream preserves replay markers: replays no-op, " +
-    "a later guard-fire rotation carries folded history, raw compact refuses") {
+    "a later guard-fire rotation carries folded history, raw compact " +
+    "keeps replays no-op") {
     // the r15 'don't compact a store under active streaming ingest'
-    // convention, replaced with machinery: DedupStore.compact retires the
-    // folded segments' markers, so a replayed stream batch would
-    // re-append its content on top of the fold; compactCodes re-commits
-    // the folded ingest ids as empty segments, keeping the replay record
+    // convention, replaced with machinery: compaction keeps the folded
+    // ingest ids' markers, so a replayed stream batch cannot re-append
+    // its content on top of the fold
     val alias = freshRoot()
     val e = emb.select($"vec_id", $"embedding")
     val b0 = e.filter($"vec_id" % 4 === 0)
@@ -622,11 +622,52 @@ class IndexStoreSpec extends SparkSpec {
     Seq(0L, 1L, 2L, 3L).foreach(id => assert(!ingest(id, corpus.limit(5)),
       s"batch $id must no-op across the post-compaction rotation"))
     assert(IndexStore.readCodes(spark, root1).count() == corpus.count())
-    // a RAW DedupStore.compact (markers collapsed, no empty re-commits):
-    // the guarded ingest refuses loudly instead of risking a double-index
+    // a RAW DedupStore.compact keeps the ledger too: every replay still
+    // no-ops and nothing is indexed twice
     graft.llm.DedupStore.compact(spark, s"$root1/codes")
-    val err = intercept[IllegalArgumentException] { ingest(9L, b1) }
-    assert(err.getMessage.contains("replay idempotency"), err.getMessage)
+    Seq(0L, 1L, 2L, 3L).foreach(id => assert(!ingest(id, corpus.limit(5)),
+      s"batch $id must no-op after a raw compaction"))
+    assert(IndexStore.currentRoot(spark, alias).contains(root1))
+    assert(IndexStore.readCodes(spark, root1).count() == corpus.count())
+  }
+
+  test("a compaction killed between its fold commit and its retire pass " +
+    "never returns a neighbour twice; a re-run finishes the retire") {
+    val q = emb.filter($"vec_id" < 10)
+    val root = freshRoot()
+    IndexStore.train(spark, root, emb, dim = 64, nlist = 8, m = 8,
+      codebookSize = 16, seed = 42L)
+    (0 until 3).foreach(b => IndexStore.appendCodes(spark, root, b.toLong,
+      emb.filter($"vec_id" % 3 === b)))
+    val n = IndexStore.readCodes(spark, root).count()
+    // copy the sources aside, compact, restore them: sources and fold are
+    // both committed, the state a kill inside the retire pass leaves
+    val conf = spark.sessionState.newHadoopConf()
+    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val aside = freshRoot()
+    val sources = (0 to 2).flatMap(b => Seq(s"segments/$b", s"done-$b"))
+    def copy(from: String, to: String): Unit = sources.foreach { rel =>
+      val dst = new org.apache.hadoop.fs.Path(s"$to/codes", rel)
+      f.delete(dst, true)
+      org.apache.hadoop.fs.FileUtil.copy(f,
+        new org.apache.hadoop.fs.Path(s"$from/codes", rel), f, dst, false, conf)
+    }
+    copy(root, aside)
+    IndexStore.compactCodes(spark, root)
+    copy(aside, root)
+    def pairs(): Seq[(Long, Long)] =
+      IndexStore.searchTopK(spark, root, emb, q, k = 5, nprobe = 3,
+          rerank = 32)
+        .select(col("query_id").cast("long"), col("corpus_id").cast("long"))
+        .as[(Long, Long)].collect().toSeq
+    Seq("crashed", "re-run").foreach { state =>
+      val p = pairs()
+      assert(p.nonEmpty && p.distinct.size == p.size, s"$state: ${p.size} " +
+        s"rows but ${p.distinct.size} distinct (query_id, corpus_id) pairs")
+      assert(IndexStore.readCodes(spark, root).count() == n,
+        s"$state: code rows read twice")
+      IndexStore.compactCodes(spark, root)
+    }
   }
 
   test("warm-up discrimination: a duplication-inflated same-distribution " +
@@ -931,5 +972,26 @@ class IndexStoreSpec extends SparkSpec {
     // a genuinely new source at a FRESH idBase still merges
     assert(IndexStore.mergeStores(spark, dst, Seq(b), idBase = 2L)
       == Seq(true))
+  }
+
+  test("mergeStores re-run after a dst compaction refuses loudly, naming " +
+    "the folded segment") {
+    val base = freshRoot()
+    val rq = IndexStore.train(spark, s"$base/fit", emb, dim = 64, nlist = 8,
+      m = 8, codebookSize = 16, seed = 42L)
+    val (a, b, dst) = (s"$base/a", s"$base/b", s"$base/dst")
+    Seq(a, b).foreach(r => assert(IndexStore.saveQuantizer(spark, r, rq)))
+    IndexStore.appendCodes(spark, a, 0L, emb.filter($"vec_id" % 2 === 0))
+    IndexStore.appendCodes(spark, b, 0L, emb.filter($"vec_id" % 2 === 1))
+    assert(IndexStore.mergeStores(spark, dst, Seq(a, b)) == Seq(true, true))
+    graft.llm.DedupStore.compact(spark, s"$dst/codes")
+    // the folded segments can no longer be checked against their sources:
+    // refuse, never re-append the sources on top of the fold
+    val e = intercept[IllegalStateException] {
+      IndexStore.mergeStores(spark, dst, Seq(a, b))
+    }
+    assert(e.getMessage.contains("dst segment 0") &&
+      e.getMessage.contains("folded"), e.getMessage)
+    assert(IndexStore.readCodes(spark, dst).count() == emb.count())
   }
 }

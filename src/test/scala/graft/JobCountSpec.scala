@@ -401,7 +401,7 @@ class JobCountSpec extends SparkSpec {
   }
 
   test("index-store lifecycle job diet (r19): one-write artifact commit, " +
-      "one-collect cold load, local-relation replay markers") {
+      "one-collect cold load, job-free replay markers") {
     import graft.llm.IndexStore
     val emb = Tables.t(spark, "/root/testdata/sf0.001", "embeddings")
     val base = java.nio.file.Files.createTempDirectory("jcdiet")
@@ -427,16 +427,41 @@ class JobCountSpec extends SparkSpec {
     }
     info(s"cold load jobs = $loadJobs")
     assert(loadJobs <= 2, s"cold artifact load job count regressed: $loadJobs")
-    // replay marker: a LOCAL empty relation with the segment schema — the
-    // r18 form re-planned the literal-heavy encode per marker
+    // replay marker: a ledger entry only — a file rename, no Spark job
     val markJobs = countJobs {
       assert(IndexStore.markBatchCommitted(spark, s"$base/a", 7L))
     }
     info(s"replay marker jobs = $markJobs")
-    assert(markJobs <= 2, s"replay marker job count regressed: $markJobs")
-    // and the marker really is an empty committed segment: replay no-ops,
-    // content unchanged
+    assert(markJobs == 0, s"a replay marker ran Spark jobs: $markJobs")
+    // and the marker really commits the id: replay no-ops, content unchanged
     assert(!IndexStore.markBatchCommitted(spark, s"$base/a", 7L))
+    assert(!IndexStore.appendCodes(spark, s"$base/a", 7L, emb))
     assert(IndexStore.readCodes(spark, s"$base/a").count() == emb.count())
+  }
+
+  test("compactCodes runs the same job count folding 2 or 8 ingest segments") {
+    import graft.llm.{IndexStore, Similarity}
+    // 400 deterministic 16-dim vectors: the fold's job count, not the
+    // data, is under test
+    val emb = spark.range(400).select(col("id").as("vec_id"),
+      array((1 to 16).map(j => sin(col("id") * j)): _*).as("embedding"))
+    val base = java.nio.file.Files.createTempDirectory("jccompact")
+    val rq = IndexStore.train(spark, s"$base/fit", emb, dim = 16, nlist = 8,
+      m = 4, codebookSize = 16, seed = 42L)
+    // encode once; each segment is a slice of the slab
+    val codes = Similarity.encodeResidual(emb, rq).localCheckpoint()
+    def jobsFolding(segments: Int): Int = {
+      val root = s"$base/s$segments"
+      assert(IndexStore.saveQuantizer(spark, root, rq))
+      (0 until segments).foreach(i => IndexStore.appendEncoded(spark, root,
+        i.toLong, codes.filter(col("corpus_id") % segments === i)))
+      val n = countJobs { IndexStore.compactCodes(spark, root); () }
+      assert(IndexStore.readCodes(spark, root).count() == emb.count())
+      n
+    }
+    val (two, eight) = (jobsFolding(2), jobsFolding(8))
+    info(s"compactCodes jobs: 2 segments = $two, 8 segments = $eight")
+    // the fold's cost must not grow with the number of ids it retires
+    assert(two == eight, s"compactCodes jobs grew with segments: $two vs $eight")
   }
 }

@@ -863,29 +863,40 @@ class LlmSpec extends SparkSpec {
     val before = DedupStore.readFingerprints(spark, root)
       .as[String].collect().sorted.toSeq
     assert(before.size == 6)
+    def rows(): Seq[String] =
+      DedupStore.readFingerprints(spark, root).as[String].collect().sorted.toSeq
+    // the crash window between the fold's marker commit and its retire
+    // pass, built for real: the sources (dirs + markers) are copied aside,
+    // compacted, then restored — sources and fold are both committed
+    val conf = spark.sessionState.newHadoopConf()
+    val f = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
+    val aside = java.nio.file.Files.createTempDirectory("fpcompact_aside")
+    val sources = (0 to 2).flatMap(b => Seq(s"segments/$b", s"done-$b"))
+    def copy(from: String, to: String): Unit = sources.foreach { rel =>
+      val dst = new org.apache.hadoop.fs.Path(to, rel)
+      f.delete(dst, true)
+      org.apache.hadoop.fs.FileUtil.copy(f,
+        new org.apache.hadoop.fs.Path(from, rel), f, dst, false, conf)
+    }
+    copy(root, aside.toString)
     val newId = DedupStore.compact(spark, root)
     // merged segments land in the RESERVED id space appends can't use, so
     // a compact's data dir can never collide with an in-flight append's
     assert(newId == DedupStore.CompactBase)
-    assert(DedupStore.committedBatches(spark, root) == Seq(newId))
-    assert(DedupStore.readFingerprints(spark, root)
-      .as[String].collect().sorted.toSeq == before)
-    // already-compact store: no-op, returns the sole id
+    assert(rows() == before)
+    copy(aside.toString, root)
+    // the fold holds the restored sources: reads see each row once …
+    assert(rows() == before, "a source the fold holds was read twice")
+    // … and a re-run finishes the retire pass instead of re-folding them
     assert(DedupStore.compact(spark, root) == newId)
-    assert(DedupStore.committedBatches(spark, root) == Seq(newId))
-    // crash window between merged-marker commit and old-marker removal:
-    // an extra committed segment duplicating existing rows. Reads
-    // over-report (duplicate-tolerant probes survive) and a re-run heals.
-    assert(DedupStore.appendFingerprints(spark, root, 4L,
-      Seq("fp_a0").toDF("fp"))) // stand-in for a half-retired duplicate
-    val probe = graft.llm.Dedup.incrementalExact(
-      Seq((1L, "x"), (2L, "y")).toDF("doc_id", "text"),
-      DedupStore.readFingerprints(spark, root))
-    assert(probe.count() == 2) // duplicates in the store change nothing
-    val healed = DedupStore.compact(spark, root)
-    assert(DedupStore.committedBatches(spark, root) == Seq(healed))
-    assert(DedupStore.readFingerprints(spark, root)
-      .as[String].collect().sorted.toSeq == (before :+ "fp_a0").sorted)
+    assert(rows() == before)
+    assert((0 to 2).forall(b => !f.exists(
+      new org.apache.hadoop.fs.Path(root, s"segments/$b"))))
+    // the folded ingest ids keep their markers: the replay ledger
+    assert(DedupStore.committedBatches(spark, root) == Seq(0L, 1L, 2L, newId))
+    assert(!DedupStore.appendFingerprints(spark, root, 1L,
+      Seq("fp_a1").toDF("fp")), "a folded batch's replay must no-op")
+    assert(rows() == before)
   }
 
   test("DedupStore.compact row-group stitch: one fold file with the " +
@@ -1056,7 +1067,7 @@ class LlmSpec extends SparkSpec {
     // a normal compact releases its lease and the loop continues
     val newId = DedupStore.compact(spark, root)
     assert(!lease.exists())
-    assert(DedupStore.committedBatches(spark, root) == Seq(newId))
+    assert(DedupStore.committedBatches(spark, root) == Seq(0L, 1L, 2L, newId))
     // next append id comes from the ORCHESTRATOR's space, not max+1 of the
     // store: compact ids are reserved and append rejects them
     val reserved = intercept[IllegalArgumentException] {
@@ -1122,7 +1133,7 @@ class LlmSpec extends SparkSpec {
         // but the fold/release assertions below still hold
       val newId = Await.result(compacting, 120.seconds)
       assert(!lease.exists())
-      assert(DedupStore.committedBatches(spark, root) == Seq(newId))
+      assert(DedupStore.committedBatches(spark, root) == (0L to 15L) :+ newId)
       assert(DedupStore.readFingerprints(spark, root).count() == 16)
     } finally spark.conf.unset("spark.graft.dedupstore.leaseMaxAgeMs")
   }

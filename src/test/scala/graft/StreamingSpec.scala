@@ -348,10 +348,13 @@ class StreamingSpec extends SparkSpec {
     drain(s"$base/ckpt")
     assert(outRows() == Set((11L, 0), (21L, 1), (31L, 2)))
     assert(DedupStore.committedBatches(spark, store) == Seq(-1L, 0L, 1L, 2L))
-    // full REPLAY with a fresh checkpoint: markers skip every batch
+    // full REPLAY with a fresh checkpoint after a compaction: the markers
+    // outlive the fold and skip every batch
+    val fold = DedupStore.compact(spark, store)
     drain(s"$base/ckpt_replay")
     assert(outRows() == Set((11L, 0), (21L, 1), (31L, 2)))
     assert(DedupStore.readFingerprints(spark, store).count() == storeRows + 1)
+    assert(DedupStore.committedBatches(spark, store) == Seq(-1L, 0L, 1L, 2L, fold))
   }
 
   test("nearDupIngestStream: store-probed near-dups drop, survivors sign the store, replays are no-ops") {
@@ -393,10 +396,13 @@ class StreamingSpec extends SparkSpec {
     assert(DedupStore.committedBatches(spark, store) == Seq(-1L, 0L, 1L))
     // store holds exactly history + the two survivors' signatures
     assert(DedupStore.readNearDup(spark, store)._2.count() == 4)
-    // full REPLAY with a fresh checkpoint: markers skip every batch
+    // full REPLAY with a fresh checkpoint after a compaction: the markers
+    // outlive the fold and skip every batch
+    val fold = DedupStore.compact(spark, store)
     drain(s"$base/ckpt_replay")
     assert(outRows() == Set((11L, 0), (21L, 1)))
     assert(DedupStore.readNearDup(spark, store)._2.count() == 4)
+    assert(DedupStore.committedBatches(spark, store) == Seq(-1L, 0L, 1L, fold))
   }
 
   test("semanticIngestStream: store-probed embedding near-dups drop, survivors' vectors sign the store, replays are no-ops") {
