@@ -3,6 +3,7 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.TableRef
+import graft.functions.HllAgg
 
 /** dbt generic data tests — the `dbt test` surface the reference inherits
   * from dbt-core (Tutorial.md:152-198 runs all four against MaxCompute;
@@ -13,8 +14,10 @@ import graft.catalog.TableRef
   *  - unique:          groupBy(keys).count > 1  (map-side combined)
   *  - not_null:        filter(isNull) — pure scan, no shuffle
   *  - accepted_values: filter(!isin) — pure scan
-  *  - relationships:   left_anti join child→parent (AQE broadcasts the
-  *                     parent's distinct keys when small)
+  *  - relationships:   left_anti join child→parent on the raw parent keys
+  *                     (an anti join's output ignores duplicate keys on its
+  *                     build side, so no distinct — and no shuffle — before
+  *                     AQE broadcasts a small parent)
   *
   * `store_failures` persists each test's failing rows as a table
   * (dbt's audit schema); severity `Warn` reports without failing the run.
@@ -62,8 +65,8 @@ object DataTests {
   def relationships(child: DataFrame, childCol: String,
       parent: DataFrame, parentCol: String): DataFrame =
     child.filter(col(childCol).isNotNull)
-      .join(parent.select(col(parentCol).as(childCol)).distinct(),
-        Seq(childCol), "left_anti")
+      .join(parent.select(col(parentCol).as(childCol)), Seq(childCol),
+        "left_anti")
 
   /** Custom singular test: any user query; rows returned = failures. */
   def singular(failing: DataFrame): DataFrame = failing
@@ -117,22 +120,22 @@ object DataTests {
       case None => runFused(spark, tests)
     }
 
-  /** All failure counts in one action: each test's failing-row plan
-    * collapses to a single-row global COUNT; the single-row aggregates are
-    * unioned and collected once. The union's branches still scan their
-    * sources independently (Spark runs them as parallel stages of one
-    * job), but the per-test job-submission latency that made a 5-test run
-    * cost 5 sequential round-trips is gone. */
+  /** All failure counts in one action and one shuffle: each test's
+    * failing rows are tagged with the test's index, the tagged branches
+    * are unioned, and ONE `groupBy(test_idx).count()` is collected. The
+    * branches still scan their sources independently (parallel stages of
+    * one job); a test with no failing rows has no group and reads 0.
+    * One global COUNT per test, unioned, would cost one single-partition
+    * exchange per test. */
   def runFused(spark: SparkSession, tests: Seq[Test]): Seq[Result] = {
     if (tests.isEmpty) return Seq.empty
-    val counted = tests.zipWithIndex.map { case (t, i) =>
-      t.failingRows.agg(count(lit(1)).as("failures"))
-        .select(lit(i).as("test_idx"), col("failures"))
+    val tagged = tests.zipWithIndex.map { case (t, i) =>
+      t.failingRows.select(lit(i).as("test_idx"))
     }.reduce(_.unionAll(_))
-    val byIdx = counted.collect()
+    val byIdx = tagged.groupBy(col("test_idx")).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     tests.zipWithIndex.map { case (t, i) =>
-      val f = byIdx(i)
+      val f = byIdx.getOrElse(i, 0L)
       Result(t.name, f, statusOf(t, f))
     }
   }
@@ -140,23 +143,27 @@ object DataTests {
   /** dbt-profiler-style column profile: one row per profiled column —
     * (column_name, n_rows, n_nulls, n_distinct, min_value, max_value),
     * min/max computed on the TYPED column and rendered as strings so
-    * heterogeneous columns union cleanly. Same fused shape as
-    * [[runFused]]: each column is one single-row aggregate branch of one
-    * union, consumed in ONE action — and since each branch prunes to its
-    * own column, the union's total scan bytes equal ONE pass over the
-    * profiled columns (columnar source), not n_cols table scans. At
-    * Exact `countDistinct` here so the DuckDB oracle matches;
-    * [[profileApprox]] is the 100 TB swap-in (HLL), gated against this
-    * twin by dt03. */
+    * heterogeneous columns union cleanly. Each column is one single-row
+    * aggregate branch of one union, consumed in ONE action — and since
+    * each branch prunes to its own column, the union's total scan bytes
+    * equal ONE pass over the profiled columns (columnar source), not
+    * n_cols table scans. Exact `countDistinct` here so the DuckDB oracle
+    * matches; [[profileApprox]] is the 100 TB swap-in (HLL), gated
+    * against this twin by dt03. */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame =
     profileImpl(df, cols, rsd = None)
 
-  /** The 100 TB form of [[profile]]: `n_distinct` comes from
-    * `approx_count_distinct` (HyperLogLog++ — one mergeable fixed-size
-    * sketch per branch instead of `countDistinct`'s expand+regroup of
-    * every distinct value through the shuffle). Same output contract;
-    * standard error ≈ `rsd` — dt03 gates the estimate against the exact
-    * twin in-query (the q17/q30 pattern). */
+  /** The 100 TB form of [[profile]]: `n_distinct` is a HyperLogLog++
+    * estimate — one mergeable fixed-size sketch per branch instead of
+    * `countDistinct`'s expand+regroup of every distinct value through the
+    * shuffle. Same output contract; standard error ≈ `rsd` — dt03 gates
+    * the estimate against the exact twin in-query (the q17/q30 pattern).
+    *
+    * The sketch is [[graft.functions.HllAgg]]: `approx_count_distinct`'s
+    * estimate bit for bit, but with its registers in one buffer object.
+    * The built-in spreads them over one buffer column per register word
+    * (410 at rsd 0.02, 1,639 at rsd 0.01), and generating code for rows
+    * that wide, per query, cost more than the profile's data work. */
   def profileApprox(df: DataFrame, cols: Seq[String],
       rsd: Double = 0.02): DataFrame = {
     require(rsd > 0 && rsd < 0.4, s"rsd out of range: $rsd")
@@ -170,7 +177,7 @@ object DataTests {
     require(missing.isEmpty, s"profile: no such column(s): ${missing.mkString(", ")}")
     def distinctOf(c: String): Column = rsd match {
       case None => countDistinct(col(c))
-      case Some(r) => approx_count_distinct(col(c), r)
+      case Some(r) => HllAgg(col(c), r)
     }
     cols.map { c =>
       df.agg(

@@ -1256,7 +1256,11 @@ object Similarity {
     * variable, not the task-serialized plan. Tie-break (cos desc, ref_id
     * asc). Returns one row
     * per corpus row: (idCol, max_cos, nearest_ref_id) — null-vector rows
-    * surface with NULL max_cos so callers can't silently lose them. */
+    * surface with NULL max_cos so callers can't silently lose them.
+    * Dimensions are loud: a mixed-dimension reference set fails on the
+    * driver, and a corpus vector whose dimension differs from the
+    * reference set's fails its task — both dimensions in the message,
+    * never a shorter-prefix score. */
   def maxCosToRef(corpus: DataFrame, ref: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.Row
@@ -1270,6 +1274,11 @@ object Similarity {
       s"maxCosToRef: reference set exceeds RefSetCap=$RefSetCap — " +
         "use an ANN path (imiTopK/ivfTopK) for large reference corpora")
     require(refRows.nonEmpty, "maxCosToRef: empty reference set")
+    val dim = refRows.head._2.length
+    refRows.find(_._2.length != dim).foreach { case (id, v) =>
+      throw new IllegalArgumentException(s"maxCosToRef: reference vector " +
+        s"$id has dimension ${v.length} but the reference set has dimension $dim")
+    }
     val bc = spark.sparkContext.broadcast(refRows)
     val in = corpus.select(col(idCol).cast("long").as("__id"),
       col(vecCol).cast("array<double>").as("__vec"))
@@ -1283,6 +1292,9 @@ object Similarity {
         if (row.isNullAt(1)) Row(row.get(0), null, null)
         else {
           val vec = row.getSeq[Double](1).toArray
+          if (vec.length != dim) throw new IllegalArgumentException(
+            s"maxCosToRef: corpus vector ${row.get(0)} has dimension " +
+              s"${vec.length} but the reference set has dimension $dim")
           var best = Double.NegativeInfinity
           var bestId = Long.MaxValue
           var j = 0

@@ -35,6 +35,54 @@ class DataTestsSpec extends SparkSpec {
     assert(f.as[Option[Long]].collect().toSeq == Seq(Some(9L)))
   }
 
+  test("relationships: duplicate parent keys and NULL child keys give exactly the distinct-parent rows") {
+    val children = Seq((1L, "a"), (9L, "b"), (9L, "b"), (7L, "c"), (2L, "d"))
+      .map { case (k, v) => (Option(k), v) }
+      .++(Seq((None, "e"), (None, "f")))
+      .toDF("pid", "v")
+    val dupParents = Seq(1L, 1L, 2L, 2L, 2L, 3L).toDF("pid")
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Option[Long], String)].collect().toSeq.sortBy(_.toString)
+    // the former shape: anti join against the DISTINCT parent keys
+    val before = children.filter($"pid".isNotNull)
+      .join(dupParents.select($"pid").distinct(), Seq("pid"), "left_anti")
+    val got = rowsOf(relationships(children, "pid", dupParents, "pid"))
+    assert(got == rowsOf(before))
+    assert(got == Seq((Some(7L), "c"), (Some(9L), "b"), (Some(9L), "b")))
+  }
+
+  test("runFused: a test with no failing rows reads 0; results keep input order") {
+    val rs = DataTests.runFused(spark, Seq(
+      Test("nn_status", notNull(users, "status")),
+      Test("clean", notNull(users, "id")),
+      Test("uniq", unique(users, Seq("id"))),
+      Test("none_at_all", users.filter($"id" < 0), Warn),
+      Test("acc", acceptedValues(users, "status", Seq("active")), errorIf = 5)))
+    assert(rs == Seq(
+      Result("nn_status", 1, Failed(1)),
+      Result("clean", 0, Pass),
+      Result("uniq", 1, Failed(1)),
+      Result("none_at_all", 0, Pass),
+      Result("acc", 2, Pass)))
+  }
+
+  test("profileApprox: each partial aggregate carries ONE sketch attribute per profiled column") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{HyperLogLogPlusPlus, Partial}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val cols = Seq("id", "name", "status")
+    val plan = DataTests.profileApprox(users, cols).queryExecution.sparkPlan
+    val partials = plan.collect {
+      case a: BaseAggregateExec if a.aggregateExpressions.forall(_.mode == Partial) => a }
+    assert(partials.size == cols.size, plan.toString)
+    partials.foreach { a =>
+      val sketch = a.aggregateExpressions.map(_.aggregateFunction).collect {
+        case f: graft.functions.HllAgg => f
+        case f: HyperLogLogPlusPlus => f
+      }.flatMap(_.aggBufferAttributes)
+      assert(sketch.size == 1, s"sketch buffer is ${sketch.size} attributes wide")
+    }
+  }
+
   test("relationsEqual: equal bags pass; row-count and value diffs surface") {
     val a = Seq((1L, "x"), (2L, "y"), (2L, "y")).toDF("id", "v")
     val same = Seq((2L, "y"), (1L, "x"), (2L, "y")).toDF("id", "v")

@@ -286,11 +286,11 @@ class JobCountSpec extends SparkSpec {
       assert(rs.find(_.name == "nn").get.failures == 0)
     }
     info(s"fused 4-test run jobs = $jobs")
-    // one collect over the unioned single-row aggregates; AQE adds a
-    // stage-materialization job per shuffling branch (measured 6) — but
-    // they run CONCURRENTLY inside one action, vs the pre-fuse shape of
-    // >= 1 job per test, sequentially
-    assert(jobs <= 7, s"fused data-test job count regressed: $jobs")
+    // one collect over ONE grouped count of the tagged union: AQE adds a
+    // stage-materialization job per shuffle or broadcast (unique's
+    // groupBy, the relationships broadcast, the grouped count) — measured
+    // 4, run CONCURRENTLY inside one action, not one job per test
+    assert(jobs <= 4, s"fused data-test job count regressed: $jobs")
   }
 
   test("j03 ingest chain stays within its fixed job budget") {

@@ -599,4 +599,26 @@ class RecallSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("empty reference set"))
   }
+
+  test("maxCosToRef: a wrong-dimension corpus or reference vector fails naming both dimensions") {
+    val ref = Seq((5L, Seq(1.0, 0.0, 0.0)), (6L, Seq(0.0, 1.0, 0.0)))
+      .toDF("vec_id", "embedding")
+    def failsNaming(got: Int, want: Int)(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      assert(msg.contains(s"dimension $got") && msg.contains(s"dimension $want"),
+        s"error does not name both dimensions: $msg")
+    }
+    // shorter corpus row: was a silent prefix cosine; longer: was an
+    // ArrayIndexOutOfBoundsException
+    for (v <- Seq(Seq(1.0, 0.0), Seq(1.0, 0.0, 0.0, 0.0))) {
+      val corpus = Seq((1L, Seq(1.0, 0.0, 0.0)), (2L, v)).toDF("vec_id", "embedding")
+      failsNaming(v.length, 3)(Similarity.maxCosToRef(corpus, ref).collect())
+    }
+    // mixed-dimension reference set: refused on the driver, before any scan
+    val mixed = ref.union(Seq((7L, Seq(1.0, 1.0))).toDF("vec_id", "embedding"))
+    val corpus = Seq((1L, Seq(1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
+    failsNaming(2, 3)(Similarity.maxCosToRef(corpus, mixed))
+  }
 }
