@@ -16,10 +16,11 @@ object Bench {
     warmUp(spark, sfDir)
     val r = run(spark, sfDir)
     val full = fullLine(r, sfDir)
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL_latest.json"),
+    artifactPath(Verify.only).foreach { path =>
+      try java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // cwd may be read-only; the lines below still land
+      catch { case _: Throwable => () } // cwd may be read-only; the lines below still land
+    }
     // Stop Spark BEFORE the final prints so no shutdown log line can land
     // after the compact line in the captured stream.
     spark.stop()
@@ -30,6 +31,12 @@ object Bench {
     println(compactLine(r, sfDir))
     if (r.failed.nonEmpty) sys.exit(1)
   }
+
+  /** Where a run writes its full line: BENCH_FULL_latest.json records the
+    * WHOLE suite, so only an unfiltered run writes it — a SPARK_GRAFT_ONLY
+    * subset (`only`) leaves the artifact alone and just prints. */
+  def artifactPath(only: Option[Set[String]]): Option[String] =
+    if (only.isEmpty) Some("BENCH_FULL_latest.json") else None
 
   /** Compute every output column of `df` and write nothing. `count()` is no
     * substitute: Catalyst prunes whatever a count does not need (t22's

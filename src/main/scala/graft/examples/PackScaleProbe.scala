@@ -7,8 +7,8 @@ import graft.{Tables, Verify}
 import graft.llm.{Packing, TextOps}
 
 /** Scale-shape probe for the two round-6 fixes, at 10× the bench corpus
-  * (~500 k docs, built in-memory from sf0.1 with per-copy alphabet
-  * rotation like GateScale10Probe):
+  * (~500 k docs, built in-memory from sf0.1 with a per-copy alphabet
+  * rotation; `AmplifyTestdata` builds the same 10× scale on disk):
   *
   *  1. PACKING fan-out: run `packStreaming` at shardHexWidth 1/2/3 and
   *     report the MAX per-shard row count — the size of the largest

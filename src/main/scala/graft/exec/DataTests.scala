@@ -191,6 +191,41 @@ object DataTests {
     }.reduce(_.unionAll(_))
   }
 
+  /** The numeric drift core [[driftPsi]] and [[driftKs]] share: `bins`
+    * equal-width bins over the BASELINE min/max (current values outside
+    * the range clamp to the edge bins; the min/max scalars ride a
+    * broadcast, never collected), one map-side-combined grouped count per
+    * snapshot, a static `sequence` bin spine that makes EMPTY bins
+    * explicit rows, and the snapshot totals alongside. Returns one row
+    * per bin: (bin, n_base, n_cur, __tb, __tc). */
+  private def binnedCounts(base: DataFrame, cur: DataFrame, valueCol: String,
+      bins: Int): DataFrame = {
+    val stats = base.agg(
+      min(col(valueCol)).cast("double").as("__lo"),
+      max(col(valueCol)).cast("double").as("__hi"))
+    def binned(df: DataFrame): DataFrame =
+      df.select(col(valueCol).cast("double").as("__x"))
+        .filter(col("__x").isNotNull)
+        .crossJoin(broadcast(stats))
+        .select(least(lit(bins - 1), greatest(lit(0),
+          floor((col("__x") - col("__lo"))
+            / ((col("__hi") - col("__lo")) / bins)).cast("int")))
+          .as("bin"))
+        .groupBy(col("bin")).agg(count(lit(1)).as("n"))
+    val spine = base.sparkSession.range(1)
+      .select(explode(sequence(lit(0), lit(bins - 1))).as("__b"))
+      .select(col("__b").cast("int").as("bin"))
+    val joined = spine
+      .join(binned(base).withColumnRenamed("n", "n_base"), Seq("bin"), "left")
+      .join(binned(cur).withColumnRenamed("n", "n_cur"), Seq("bin"), "left")
+      .select(col("bin"),
+        coalesce(col("n_base"), lit(0L)).as("n_base"),
+        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
+    val totals = joined.agg(sum(col("n_base")).as("__tb"),
+      sum(col("n_cur")).as("__tc"))
+    joined.crossJoin(broadcast(totals))
+  }
+
   /** Distribution-drift test between two snapshots of a numeric column —
     * the Population Stability Index every model-monitoring pipeline runs
     * when a table is re-materialized: `bins` equal-width bins over the
@@ -216,36 +251,13 @@ object DataTests {
       bins: Int = 10, eps: Double = 1e-6): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
     require(eps > 0, s"eps must be positive, got $eps")
-    val stats = base.agg(
-      min(col(valueCol)).cast("double").as("__lo"),
-      max(col(valueCol)).cast("double").as("__hi"))
-    def binned(df: DataFrame): DataFrame =
-      df.select(col(valueCol).cast("double").as("__x"))
-        .filter(col("__x").isNotNull)
-        .crossJoin(broadcast(stats))
-        .select(least(lit(bins - 1), greatest(lit(0),
-          floor((col("__x") - col("__lo"))
-            / ((col("__hi") - col("__lo")) / bins)).cast("int")))
-          .as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as("n"))
-    val spine = base.sparkSession.range(1)
-      .select(explode(sequence(lit(0), lit(bins - 1))).as("__b"))
-      .select(col("__b").cast("int").as("bin"))
-    val joined = spine
-      .join(binned(base).withColumnRenamed("n", "n_base"), Seq("bin"), "left")
-      .join(binned(cur).withColumnRenamed("n", "n_cur"), Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    val totals = joined.agg(sum(col("n_base")).as("__tb"),
-      sum(col("n_cur")).as("__tc"))
     // explicit double casts: under ANSI mode a Long/Long `/` resolves to
     // integral `div`, which both truncates and throws on a zero divisor
     val p = greatest(col("n_base").cast("double") / col("__tb").cast("double"),
       lit(eps))
     val q = greatest(col("n_cur").cast("double") / col("__tc").cast("double"),
       lit(eps))
-    val withTerms = joined.crossJoin(broadcast(totals))
+    val withTerms = binnedCounts(base, cur, valueCol, bins)
       .select(col("bin"), col("n_base"), col("n_cur"),
         round(p, 6).as("p_base"), round(q, 6).as("p_cur"),
         round((q - p) * log(q / p), 6).as("psi_term"))
@@ -279,36 +291,13 @@ object DataTests {
   def driftKs(base: DataFrame, cur: DataFrame, valueCol: String,
       bins: Int = 64): DataFrame = {
     require(bins >= 2, s"bins must be >= 2, got $bins")
-    val stats = base.agg(
-      min(col(valueCol)).cast("double").as("__lo"),
-      max(col(valueCol)).cast("double").as("__hi"))
-    def binned(df: DataFrame): DataFrame =
-      df.select(col(valueCol).cast("double").as("__x"))
-        .filter(col("__x").isNotNull)
-        .crossJoin(broadcast(stats))
-        .select(least(lit(bins - 1), greatest(lit(0),
-          floor((col("__x") - col("__lo"))
-            / ((col("__hi") - col("__lo")) / bins)).cast("int")))
-          .as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as("n"))
-    val spine = base.sparkSession.range(1)
-      .select(explode(sequence(lit(0), lit(bins - 1))).as("__b"))
-      .select(col("__b").cast("int").as("bin"))
-    val joined = spine
-      .join(binned(base).withColumnRenamed("n", "n_base"), Seq("bin"), "left")
-      .join(binned(cur).withColumnRenamed("n", "n_cur"), Seq("bin"), "left")
-      .select(col("bin"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    val totals = joined.agg(sum(col("n_base")).as("__tb"),
-      sum(col("n_cur")).as("__tc"))
     // the cumulative window is unpartitioned BY DESIGN: its input is the
     // bins-sized joined frame, not the corpus (the corpus was reduced by
-    // the two grouped counts above)
+    // the two grouped counts in binnedCounts)
     val wCum = org.apache.spark.sql.expressions.Window.orderBy(col("bin"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     // explicit double casts: ANSI Long/Long `/` is integral div
-    val withCdf = joined.crossJoin(broadcast(totals))
+    val withCdf = binnedCounts(base, cur, valueCol, bins)
       .select(col("bin"), col("n_base"), col("n_cur"),
         (sum(col("n_base")).over(wCum).cast("double")
           / col("__tb").cast("double")).as("__fb"),
@@ -334,64 +323,21 @@ object DataTests {
     * no homogeneity to test — expected counts would be 0 and the terms
     * NaN — so the plan raises a loud error instead (in-plan `raise_error`,
     * no extra validation job, no re-scan of the corpus-scale counts). */
-  def driftChi2(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
-    def counted(df: DataFrame, as: String): DataFrame =
-      df.select(coalesce(col(valueCol).cast("string"), lit("__null"))
-          .as("category"))
-        .groupBy(col("category")).agg(count(lit(1)).as(as))
-    val joined = counted(base, "n_base")
-      .join(counted(cur, "n_cur"), Seq("category"), "full")
-      .select(col("category"),
-        coalesce(col("n_base"), lit(0L)).as("n_base"),
-        coalesce(col("n_cur"), lit(0L)).as("n_cur"))
-    val totals = joined.agg(sum(col("n_base")).as("__tb"),
-      sum(col("n_cur")).as("__tc"), count(lit(1)).as("__k"))
-    // the empty-side guards live on the TOTALS row, which exists even when
-    // `joined` is empty (a global aggregate always emits one row) — the
-    // r14 form guarded per JOINED row, so BOTH snapshots empty produced a
-    // silently empty frame instead of the promised loud error (ADVICE
-    // r14). The guarded row flows into every output row via the
-    // crossJoin, so the one-side-empty case still raises per-row too.
-    val guarded = totals.select(
-      when(coalesce(col("__tb"), lit(0L)) > 0, col("__tb")).otherwise(
-        raise_error(lit("driftChi2: base snapshot is empty — " +
-          "chi-squared homogeneity is undefined against an empty sample")))
-        .as("__tb"),
-      when(coalesce(col("__tc"), lit(0L)) > 0, col("__tc")).otherwise(
-        raise_error(lit("driftChi2: current snapshot is empty — " +
-          "chi-squared homogeneity is undefined against an empty sample")))
-        .as("__tc"),
-      col("__k"))
-    // both-empty: `joined` is empty, so the crossJoin below emits no rows
-    // and (under adaptive planning) may never evaluate the broadcast side —
-    // the guard row is therefore ALSO unioned in through an always-false
-    // filter whose predicate REFERENCES the guarded totals (the raise
-    // lives inside the referenced value, so the optimizer cannot fold the
-    // branch away — a `when(c, null)` form folded to a constant and the
-    // raise with it); it evaluates whenever the result materializes, then
-    // contributes no rows
-    val guardRows = guarded
-      .select((col("__tb") + col("__tc")).cast("string").as("category"))
-      .filter(col("category").isNull)
-      .select(col("category"), lit(0L).as("n_base"), lit(0L).as("n_cur"),
-        lit(0.0).as("exp_base"), lit(0.0).as("exp_cur"),
-        lit(0.0).as("chi2_term"), lit(0L).as("dof"))
-    val withExp = joined.crossJoin(broadcast(guarded))
-      .withColumn("__row", (col("n_base") + col("n_cur")).cast("double"))
-      .withColumn("__g", (col("__tb") + col("__tc")).cast("double"))
-      .withColumn("__eb", col("__row") * col("__tb").cast("double") / col("__g"))
-      .withColumn("__ec", col("__row") * col("__tc").cast("double") / col("__g"))
-      .select(col("category"), col("n_base"), col("n_cur"),
-        round(col("__eb"), 6).as("exp_base"),
-        round(col("__ec"), 6).as("exp_cur"),
-        round(pow(col("n_base").cast("double") - col("__eb"), 2) / col("__eb")
-          + pow(col("n_cur").cast("double") - col("__ec"), 2) / col("__ec"), 6)
-          .as("chi2_term"),
-        (col("__k") - 1).as("dof"))
-    val full = withExp.unionByName(guardRows)
-    val stat = full.agg(round(sum(col("chi2_term")), 6).as("chi2_stat"))
-    full.crossJoin(broadcast(stat))
-  }
+  def driftChi2(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame =
+    categoricalDrift(base, cur, valueCol, "driftChi2", "chi2_term",
+        "chi2_stat") {
+      _.withColumn("__row", (col("n_base") + col("n_cur")).cast("double"))
+        .withColumn("__g", (col("__tb") + col("__tc")).cast("double"))
+        .withColumn("__eb", col("__row") * col("__tb").cast("double") / col("__g"))
+        .withColumn("__ec", col("__row") * col("__tc").cast("double") / col("__g"))
+        .select(col("category"), col("n_base"), col("n_cur"),
+          round(col("__eb"), 6).as("exp_base"),
+          round(col("__ec"), 6).as("exp_cur"),
+          round(pow(col("n_base").cast("double") - col("__eb"), 2) / col("__eb")
+            + pow(col("n_cur").cast("double") - col("__ec"), 2) / col("__ec"), 6)
+            .as("chi2_term"),
+          (col("__k") - 1).as("dof"))
+    }
 
   /** Total-variation distance between two CATEGORICAL distributions —
     * the SCALE-FREE companion to [[driftChi2]]. Chi-squared grows ∝ n
@@ -416,7 +362,31 @@ object DataTests {
     * share against an empty sample is undefined). Scale shape: two
     * map-side-combined grouped counts; everything after is
     * categories-sized. */
-  def driftTv(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame = {
+  def driftTv(base: DataFrame, cur: DataFrame, valueCol: String): DataFrame =
+    categoricalDrift(base, cur, valueCol, "driftTv", "tv_term", "tv_stat") {
+      _.withColumn("__sb",
+          col("n_base").cast("double") / col("__tb").cast("double"))
+        .withColumn("__sc",
+          col("n_cur").cast("double") / col("__tc").cast("double"))
+        .select(col("category"), col("n_base"), col("n_cur"),
+          round(col("__sb"), 6).as("share_base"),
+          round(col("__sc"), 6).as("share_cur"),
+          round(abs(col("__sb") - col("__sc")) / 2, 6).as("tv_term"))
+    }
+
+  /** The categorical drift core [[driftChi2]] and [[driftTv]] share. The
+    * ONLY corpus-scale work is one map-side-combined grouped count per
+    * snapshot (NULL is its own category — a drift in null-rate is drift),
+    * full-joined into (category, n_base, n_cur); the snapshot totals and
+    * the category count (__tb, __tc, __k) ride a broadcast onto every row,
+    * never a collect. `terms` turns those rows into the per-category
+    * output, and round(Σ `termCol`, 6) rides every row as `statCol`. An
+    * EMPTY snapshot on either side has no distribution to compare, so the
+    * plan raises a loud error naming `fn` instead (in-plan `raise_error`,
+    * no extra validation job, no re-scan of the counts). */
+  private def categoricalDrift(base: DataFrame, cur: DataFrame,
+      valueCol: String, fn: String, termCol: String, statCol: String)(
+      terms: DataFrame => DataFrame): DataFrame = {
     def counted(df: DataFrame, as: String): DataFrame =
       df.select(coalesce(col(valueCol).cast("string"), lit("__null"))
           .as("category"))
@@ -427,37 +397,35 @@ object DataTests {
         coalesce(col("n_base"), lit(0L)).as("n_base"),
         coalesce(col("n_cur"), lit(0L)).as("n_cur"))
     val totals = joined.agg(sum(col("n_base")).as("__tb"),
-      sum(col("n_cur")).as("__tc"))
-    val guarded = totals.select(
-      when(coalesce(col("__tb"), lit(0L)) > 0, col("__tb")).otherwise(
-        raise_error(lit("driftTv: base snapshot is empty — a share " +
-          "against an empty sample is undefined")))
-        .as("__tb"),
-      when(coalesce(col("__tc"), lit(0L)) > 0, col("__tc")).otherwise(
-        raise_error(lit("driftTv: current snapshot is empty — a share " +
-          "against an empty sample is undefined")))
-        .as("__tc"))
-    // both-empty: joined is empty, so the crossJoin emits nothing and the
-    // broadcast side may never evaluate — the guard row rides an
-    // always-false filter REFERENCING the guarded totals, exactly the
-    // driftChi2 device
+      sum(col("n_cur")).as("__tc"), count(lit(1)).as("__k"))
+    // the empty-side guards live on the TOTALS row, which exists even when
+    // `joined` is empty (a global aggregate always emits one row) — the
+    // r14 form guarded per JOINED row, so BOTH snapshots empty produced a
+    // silently empty frame instead of the promised loud error (ADVICE
+    // r14). The guarded row flows into every output row via the
+    // crossJoin, so the one-side-empty case still raises per-row too.
+    def nonEmpty(total: String, side: String): Column =
+      when(coalesce(col(total), lit(0L)) > 0, col(total)).otherwise(
+        raise_error(lit(s"$fn: $side snapshot is empty — drift is " +
+          "undefined against an empty sample"))).as(total)
+    val guarded = totals.select(nonEmpty("__tb", "base"),
+      nonEmpty("__tc", "current"), col("__k"))
+    val scored = terms(joined.crossJoin(broadcast(guarded)))
+    // both-empty: `joined` is empty, so the crossJoin above emits no rows
+    // and (under adaptive planning) may never evaluate the broadcast side —
+    // the guard row is therefore ALSO unioned in through an always-false
+    // filter whose predicate REFERENCES the guarded totals (the raise
+    // lives inside the referenced value, so the optimizer cannot fold the
+    // branch away — a `when(c, null)` form folded to a constant and the
+    // raise with it); it evaluates whenever the result materializes, then
+    // contributes no rows (zeros of the terms' schema)
     val guardRows = guarded
       .select((col("__tb") + col("__tc")).cast("string").as("category"))
       .filter(col("category").isNull)
-      .select(col("category"), lit(0L).as("n_base"), lit(0L).as("n_cur"),
-        lit(0.0).as("share_base"), lit(0.0).as("share_cur"),
-        lit(0.0).as("tv_term"))
-    val terms = joined.crossJoin(broadcast(guarded))
-      .withColumn("__sb",
-        col("n_base").cast("double") / col("__tb").cast("double"))
-      .withColumn("__sc",
-        col("n_cur").cast("double") / col("__tc").cast("double"))
-      .select(col("category"), col("n_base"), col("n_cur"),
-        round(col("__sb"), 6).as("share_base"),
-        round(col("__sc"), 6).as("share_cur"),
-        round(abs(col("__sb") - col("__sc")) / 2, 6).as("tv_term"))
-      .unionByName(guardRows)
-    val stat = terms.agg(round(sum(col("tv_term")), 6).as("tv_stat"))
-    terms.crossJoin(broadcast(stat))
+      .select(col("category") +: scored.schema.fields.toSeq.tail.map(f =>
+        lit(0).cast(f.dataType).as(f.name)): _*)
+    val full = scored.unionByName(guardRows)
+    val stat = full.agg(round(sum(col(termCol)), 6).as(statCol))
+    full.crossJoin(broadcast(stat))
   }
 }

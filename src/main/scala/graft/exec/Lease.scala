@@ -101,6 +101,16 @@ object Lease {
     * ceiling (≥3 beats must fit), bounded to [50 ms, 60 s]. */
   def intervalFor(maxAgeMs: Long): Long =
     math.max(50L, math.min(60000L, maxAgeMs / 3))
+
+  /** The one stale ceiling for every heartbeated lease — the table-swap
+    * writer markers ([[WriterLease]]) and the DedupStore compaction lease
+    * alike: a lease whose mtime is older than this counts as a dead
+    * holder's leftover. A LIVE holder beats every [[intervalFor]] of it,
+    * so only a holder that actually died ever ages out.
+    * `spark.graft.lease.maxAgeMs`, default 30 min. */
+  def maxAgeMs(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.conf.getOption("spark.graft.lease.maxAgeMs")
+      .map(_.toLong).getOrElse(30L * 60 * 1000)
 }
 
 /** Per-writer PRESENCE markers for table swaps: each
@@ -118,14 +128,10 @@ object Lease {
   * renames), and a marker inside one would travel with it. Concurrent same-table writers
   * each hold their own stamped marker (presence, not mutual exclusion —
   * same-table concurrency stays supported); a crashed writer's marker
-  * stops beating and ages out at `spark.graft.writerLease.maxAgeMs`
-  * (default 30 min), after which recover proceeds exactly as before. */
+  * stops beating and ages out at [[Lease.maxAgeMs]] (default 30 min),
+  * after which recover proceeds exactly as before. */
 object WriterLease {
   private[exec] val LeaseDirName = ".graft_writer_leases"
-
-  private[exec] def maxAgeMs(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.writerLease.maxAgeMs")
-      .map(_.toLong).getOrElse(30L * 60 * 1000)
 
   private def leaseDir(spark: org.apache.spark.sql.SparkSession,
       target: graft.catalog.TableRef): HPath = {
@@ -147,7 +153,7 @@ object WriterLease {
     val fs = fsOf(spark, dir)
     val handle = Lease.acquirePresence(fs,
       new HPath(dir, s"${target.name}__$stamp"),
-      Lease.intervalFor(maxAgeMs(spark)))
+      Lease.intervalFor(Lease.maxAgeMs(spark)))
     try body finally handle.release()
   }
 
@@ -158,7 +164,7 @@ object WriterLease {
     val dir = leaseDir(spark, target)
     val fs = fsOf(spark, dir)
     if (!fs.exists(dir)) return Nil
-    val ceiling = maxAgeMs(spark)
+    val ceiling = Lease.maxAgeMs(spark)
     val prefix = target.name + "__"
     fs.listStatus(dir).toSeq
       .filter(_.getPath.getName.startsWith(prefix))

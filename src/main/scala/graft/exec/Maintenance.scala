@@ -455,7 +455,7 @@ object Maintenance {
     if (live.nonEmpty)
       return Seq(s"SKIPPED recover of ${target.render} — live writer " +
         s"lease(s) ${live.mkString(", ")} present (heartbeated; a crashed " +
-        "writer's lease ages out at spark.graft.writerLease.maxAgeMs)")
+        "writer's lease ages out at spark.graft.lease.maxAgeMs)")
     val cat = spark.sessionState.catalog
     def exists(r: TableRef) =
       spark.catalog.tableExists(r.render.replace("`", ""))

@@ -110,15 +110,6 @@ object DedupStore {
       root: String): Option[Long] =
     graft.exec.Lease.age(f, leasePath(root))
 
-  /** A lease older than this is treated as a dead compactor's leftover and
-    * reclaimed (the [[graft.exec.Maintenance]] `minAgeMs` convention). A
-    * LIVE compact never ages out: it heartbeats the lease mtime every
-    * `min(60 s, maxAge/3)` for its whole run, so the ceiling only ever
-    * reclaims a compactor that actually died. */
-  private def leaseMaxAgeMs(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedupstore.leaseMaxAgeMs")
-      .map(_.toLong).getOrElse(30L * 60 * 1000)
-
   /** Append one batch's rows as segment `batchId`. Returns true if the
     * segment was committed by THIS call, false when the batchId was already
     * committed (replay — store unchanged; its rows may since have been
@@ -144,10 +135,11 @@ object DedupStore {
     // segment the concurrent compact doesn't fold — it survives the retire
     // pass untouched and folds next time.
     def failIfCompacting(): Unit = leaseAge(f, root).foreach { age =>
-      if (age <= leaseMaxAgeMs(spark)) throw new IllegalStateException(
-        s"DedupStore at $root: compaction in flight (lease age ${age} ms) — " +
-          "appends during the maintenance window are forbidden; retry after " +
-          "compact finishes or raise spark.graft.dedupstore.leaseMaxAgeMs")
+      if (age <= graft.exec.Lease.maxAgeMs(spark))
+        throw new IllegalStateException(s"DedupStore at $root: " +
+          s"compaction in flight (lease age ${age} ms) — appends during " +
+          "the maintenance window are forbidden; retry after compact " +
+          "finishes or raise spark.graft.lease.maxAgeMs")
       f.delete(leasePath(root), false)
     }
     failIfCompacting()
@@ -303,7 +295,7 @@ object DedupStore {
     * r12): compact holds a `compacting` lease (temp+rename — the atomic
     * arbiter between racing compacts) for its whole run and HEARTBEATS its
     * mtime every `min(60 s, maxAge/3)`; the stale ceiling
-    * (`spark.graft.dedupstore.leaseMaxAgeMs`, default 30 min) only
+    * ([[graft.exec.Lease.maxAgeMs]], default 30 min) only
     * reclaims a compactor that died mid-run. [[append]] checks the lease
     * before its write and before its marker rename, so a mis-scheduled
     * append fails loud. An append whose final check beat the lease by
@@ -314,7 +306,7 @@ object DedupStore {
       upToIngest: Option[Long] = None): Long = {
     val f = fs(spark, root)
     leaseAge(f, root) match {
-      case Some(age) if age <= leaseMaxAgeMs(spark) =>
+      case Some(age) if age <= graft.exec.Lease.maxAgeMs(spark) =>
         throw new IllegalStateException(
           s"DedupStore at $root: another compaction holds the lease " +
             s"(age ${age} ms)")
@@ -325,7 +317,7 @@ object DedupStore {
     // setTimes-no-op object-store fallback and the release/beat
     // serialization live there — graft.exec.Lease)
     val handle = graft.exec.Lease.tryAcquire(f, leasePath(root),
-        graft.exec.Lease.intervalFor(leaseMaxAgeMs(spark)))
+        graft.exec.Lease.intervalFor(graft.exec.Lease.maxAgeMs(spark)))
       .getOrElse(throw new IllegalStateException(
         s"DedupStore at $root: lost the compaction-lease race"))
     try {

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{Path => HPath}
 
@@ -17,30 +17,41 @@ import graft.llm.Similarity.ResidualQuantizer
   *
   * Two halves, two lifecycles:
   *
-  *  - **Quantizer** (`<root>/quantizer/…`): a one-shot immutable
-  *    artifact — nlist coarse centroids, nlist cell means,
-  *    m·codebookSize residual codebook rows, a one-row param frame.
-  *    Kilobytes. Staged into a PRIVATE per-attempt directory, published
-  *    by ONE atomic whole-directory rename — the rename IS the commit
-  *    (see [[saveQuantizer]] for why a shared-directory marker protocol
-  *    is not enough here); a crash mid-save leaves only inert staging
-  *    debris, and the final directory never exists partially. Replayed
-  *    and racing saves are no-ops that converge on the committed
-  *    artifact.
+  *  - **Artifact** (`<root>/<family>/artifact`): the fit product, a
+  *    one-shot immutable artifact of kilobytes — for the residual family
+  *    (`quantizer/`) nlist coarse centroids, nlist cell means and
+  *    m·codebookSize residual codebook rows. Every family writes it as
+  *    ONE tagged (kind, i, j, vec) frame ([[commitArtifact]]) and reads
+  *    it back through ONE decoder path with its meta-row and count
+  *    checks ([[loadArtifact]], cached per root). Staged into a PRIVATE
+  *    per-attempt directory, published by ONE atomic whole-directory
+  *    rename — the rename IS the commit (see [[saveQuantizer]] for why a
+  *    shared-directory marker protocol is not enough here); a crash
+  *    mid-save leaves only inert staging debris, and the final directory
+  *    never exists partially. Replayed and racing saves are no-ops that
+  *    converge on the committed artifact.
   *  - **Codes** (`<root>/codes/…`): append-only encoded inverted-list
-  *    segments — (centroid_id, corpus_id, codes) rows, m bytes of PQ
-  *    code per vector — managed by [[DedupStore.append]]/[[DedupStore.read]]
+  *    segments managed by [[DedupStore.append]]/[[DedupStore.read]]
   *    verbatim (same markers, same compaction lease, same replay
   *    idempotency). Indexing a NEW batch = encode against the loaded
-  *    quantizer + append ONE segment: cost ∝ batch, history never
+  *    artifact + append ONE segment: cost ∝ batch, history never
   *    re-encoded, never rescanned.
   *
-  * The store holds codes, never raw vectors: full-precision vectors stay
-  * in the source-of-truth corpus table, touched only by the exact
-  * re-rank tail over the rerank·k ADC survivors per query
-  * ([[Similarity.rerankExactCandidates]]). At m=8 / codebookSize=256 the
-  * persisted index is ~8 bytes + ids per vector — the dial that keeps a
-  * 100 TB corpus' index within executor memory.
+  * One code path per family: a store is the persisted half of
+  * [[Similarity]]'s fit → encode → search. `train*` persists the fit;
+  * `append*` runs the family's Similarity encode on the batch
+  * (`assignToCentroids` flat, `encodeInt8`, top-1 `imiAssignTop`,
+  * `encodeResidual`); `searchTopK*` runs the family's Similarity search
+  * (`searchFlat`, `searchInt8`, `searchImi`, `searchResidual`) over
+  * [[readCodes]]. A store search and the fit-per-query search at the
+  * same dials and seed are the same search over the same lists.
+  *
+  * The residual store holds codes, never raw vectors: full-precision
+  * vectors stay in the source-of-truth corpus table, touched only by the
+  * exact re-rank tail over the rerank·k ADC survivors per query. At
+  * m=8 / codebookSize=256 the persisted index is ~8 bytes + ids per
+  * vector — the dial that keeps a 100 TB corpus' index within executor
+  * memory.
   *
   * Staleness contract: the quantizer is fit ONCE (on the corpus snapshot
   * available at train time) and deliberately NOT refit as batches
@@ -55,15 +66,28 @@ object IndexStore {
   private def fs(spark: SparkSession, root: String) =
     new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def qDir(root: String) = new HPath(root, "quantizer")
   private def codesRoot(root: String) = s"$root/codes"
 
-  /** True when a committed quantizer artifact exists under `root`. The
-    * final `quantizer/` directory can ONLY appear via [[saveQuantizer]]'s
-    * atomic whole-directory rename, so its existence IS the commit —
-    * there is no observable partial state. */
+  /** The artifact families a store root can hold, by directory name: the
+    * residual-PQ quantizer, the IVF coarse centroids (flat and int8
+    * stores), the IMI half-space codebooks. A family's directory can ONLY
+    * appear via [[commitArtifact]]'s atomic whole-directory rename, so
+    * its existence IS the commit — there is no observable partial
+    * state. */
+  private val Families = Seq("quantizer", "ivf", "imi")
+
+  private def committed(spark: SparkSession, root: String,
+      family: String): Boolean =
+    fs(spark, root).exists(new HPath(root, family))
+
+  /** The family whose artifact is committed under `root`, if any. */
+  private def committedFamily(spark: SparkSession,
+      root: String): Option[String] =
+    Families.find(committed(spark, root, _))
+
+  /** True when a committed quantizer artifact exists under `root`. */
   def quantizerCommitted(spark: SparkSession, root: String): Boolean =
-    fs(spark, root).exists(qDir(root))
+    committed(spark, root, "quantizer")
 
   /** Persist a fitted quantizer under `root`. Returns true if THIS call
     * committed it, false when one was already committed (replay — store
@@ -97,44 +121,35 @@ object IndexStore {
     * nested-inside-the-winner copy. */
   def saveQuantizer(spark: SparkSession, root: String,
       rq: ResidualQuantizer): Boolean =
-    commitArtifact(spark, root, "quantizer") { base =>
-      import spark.implicits._
-      // ONE tagged frame, ONE write job (r19): the r18 layout wrote
-      // meta/centroids/cellmeans/codebooks as four parquet dirs — four
-      // driver-materialized write jobs per train, four read+collect jobs
-      // per cold load, each paying full action overhead for kilobytes.
-      // Rows: (kind, i, j, vec); meta rides as ("meta", dim, nlist,
-      // [m, codebookSize]). Old-layout stores still load (legacy read).
-      val rows: Seq[(String, Int, Int, Seq[Double])] =
-        Seq(("meta", rq.dim, rq.nlist,
-          Seq(rq.m.toDouble, rq.codebookSize.toDouble))) ++
-        rq.centroids.map { case (i, v) => ("centroid", i, 0, v) } ++
-        rq.cellMeans.toSeq.zipWithIndex.map { case (v, i) =>
-          ("cellmean", i, 0, v.toSeq) } ++
-        rq.codebooks.toSeq.zipWithIndex.flatMap { case (cb, mi) =>
-          cb.toSeq.zipWithIndex.map { case (c, j) =>
-            ("codebook", mi, j, c.toSeq) }
-        }
-      rows.toDF("kind", "i", "j", "vec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/artifact")
-    }
+    commitArtifact(spark, root, "quantizer",
+      Seq(("meta", rq.dim, rq.nlist,
+        Seq(rq.m.toDouble, rq.codebookSize.toDouble))) ++
+      rq.centroids.map { case (i, v) => ("centroid", i, 0, v) } ++
+      rq.cellMeans.toSeq.zipWithIndex.map { case (v, i) =>
+        ("cellmean", i, 0, v.toSeq) } ++
+      rq.codebooks.toSeq.zipWithIndex.flatMap { case (cb, mi) =>
+        cb.toSeq.zipWithIndex.map { case (c, j) =>
+          ("codebook", mi, j, c.toSeq) }
+      })
 
-  /** The rename-as-commit protocol shared by every artifact kind under a
-    * store root (`quantizer/` for the residual family, `ivf/` / `imi/`
-    * for the flat-vector families): stage into a private
-    * `.<dirName>-tmp-<uuid>`, stamp the attempt token, publish with one
-    * rename, detect the win via the token (see [[saveQuantizer]]'s
-    * scaladoc for why the rename's return value cannot be trusted).
-    * Returns true iff THIS attempt's staging became the committed
-    * artifact. */
+  /** The write half of the one artifact codec, under the rename-as-commit
+    * protocol every family shares: the fit product is ONE tagged
+    * (kind, i, j, vec) frame — one write job; meta rides as a "meta" row
+    * — staged into a private `.<family>-tmp-<uuid>`, stamped with the
+    * attempt token, published with one rename, and the win detected via
+    * the token (see [[saveQuantizer]]'s scaladoc for why the rename's
+    * return value cannot be trusted). Returns true iff THIS attempt's
+    * staging became the committed artifact. */
   private def commitArtifact(spark: SparkSession, root: String,
-      dirName: String)(write: String => Unit): Boolean = {
+      family: String, rows: Seq[(String, Int, Int, Seq[Double])]): Boolean = {
+    import spark.implicits._
     val f = fs(spark, root)
-    val dst = new HPath(root, dirName)
+    val dst = new HPath(root, family)
     if (f.exists(dst)) return false
     val uuid = java.util.UUID.randomUUID().toString
-    val stage = new HPath(root, s".$dirName-tmp-$uuid")
-    write(stage.toString)
+    val stage = new HPath(root, s".$family-tmp-$uuid")
+    rows.toDF("kind", "i", "j", "vec")
+      .coalesce(1).write.mode("overwrite").parquet(s"$stage/artifact")
     // the commit receipt: travels with the directory through the rename,
     // so "did MY staging become the committed dir?" is one exists() check
     val token = s"attempt-$uuid"
@@ -149,97 +164,96 @@ object IndexStore {
       f.delete(new HPath(dst, stage.getName), true)
       if (!f.exists(dst))
         throw new java.io.IOException(
-          s"IndexStore: cannot publish $dirName under $root")
+          s"IndexStore: cannot publish $family under $root")
     }
     won
   }
 
-  /** Per-root cache of loaded quantizers. The artifact is IMMUTABLE by
-    * contract (a refit is a new root, never an in-place mutation), so
-    * caching by committed-dir path is trivially safe; SoftReference lets
-    * the JVM reclaim entries under memory pressure (each is kilobytes,
-    * but a long-lived session may touch many roots). Cuts the per-call
-    * reload — four bounded parquet collects — out of hot loops like the
-    * streaming ingest, which calls [[appendCodes]] once per microbatch. */
-  private val quantizerCache =
+  /** Per-root cache of loaded artifacts, keyed by the committed
+    * directory. Artifacts are IMMUTABLE by contract (a refit is a new
+    * root, never an in-place mutation), so caching by path is safe;
+    * SoftReference lets the JVM reclaim entries under memory pressure
+    * (each is kilobytes, but a long-lived session may touch many roots).
+    * Cuts the per-call reload out of hot loops like the streaming
+    * ingest, which calls [[appendCodes]] once per microbatch. */
+  private val artifactCache =
     new java.util.concurrent.ConcurrentHashMap[
-      String, java.lang.ref.SoftReference[ResidualQuantizer]]()
+      String, java.lang.ref.SoftReference[AnyRef]]()
 
-  /** Load the committed quantizer. Cached per root (immutable-artifact
-    * contract); a cold load is bounded collects by construction:
-    * nlist + nlist + m·codebookSize rows of dim-width vectors. */
-  def loadQuantizer(spark: SparkSession, root: String): ResidualQuantizer = {
-    require(quantizerCommitted(spark, root),
-      s"IndexStore at $root has no committed quantizer — run train/" +
-        "saveQuantizer (a crashed save leaves only inert staging debris; " +
-        "the final directory only ever appears whole)")
-    val key = fs(spark, root).makeQualified(qDir(root)).toString
-    val hit = Option(quantizerCache.get(key)).flatMap(r => Option(r.get))
-    hit.getOrElse {
-      val rq = loadQuantizerUncached(spark, root)
-      quantizerCache.put(key, new java.lang.ref.SoftReference(rq))
-      rq
+  private def cached[A <: AnyRef](spark: SparkSession, root: String,
+      family: String)(load: => A): A = {
+    val key = fs(spark, root).makeQualified(new HPath(root, family)).toString
+    Option(artifactCache.get(key)).flatMap(r => Option(r.get)) match {
+      case Some(a) => a.asInstanceOf[A]
+      case None =>
+        val a = load
+        artifactCache.put(key, new java.lang.ref.SoftReference[AnyRef](a))
+        a
     }
   }
 
-  private def loadQuantizerUncached(spark: SparkSession,
-      root: String): ResidualQuantizer = {
-    val base = qDir(root).toString
-    // single-frame layout (r19): one read+collect for the whole artifact
-    if (fs(spark, root).exists(new HPath(qDir(root), "artifact"))) {
-      val rows = spark.read.parquet(s"$base/artifact")
-        .select(col("kind"), col("i"), col("j"), col("vec")).collect()
-      def of(kind: String) = rows.filter(_.getString(0) == kind)
-      val meta = of("meta").headOption.getOrElse(throw new IllegalStateException(
-        s"IndexStore at $root: quantizer artifact is corrupt — no meta row"))
-      val (dim, nlist) = (meta.getInt(1), meta.getInt(2))
-      val mv = meta.getSeq[Double](3)
-      val (m, cbs) = (mv(0).toInt, mv(1).toInt)
-      val cents = of("centroid")
-        .map(r => (r.getInt(1), r.getSeq[Double](3).toArray)).sortBy(_._1)
-      val means = of("cellmean")
-        .map(r => (r.getInt(1), r.getSeq[Double](3).toArray)).sortBy(_._1)
-      require(cents.length == nlist && means.length == nlist,
-        s"IndexStore at $root: quantizer artifact is corrupt — " +
-          s"${cents.length} centroids / ${means.length} cell means vs nlist=$nlist")
-      val cbRows = of("codebook")
-        .map(r => ((r.getInt(1), r.getInt(2)), r.getSeq[Double](3).toArray))
-        .toMap
-      require(cbRows.size == m * cbs,
-        s"IndexStore at $root: quantizer artifact is corrupt — " +
-          s"${cbRows.size} codebook rows vs m·codebookSize=${m * cbs}")
-      return ResidualQuantizer(dim, nlist, m, cbs,
+  /** A committed artifact's tagged rows, with the corruption check every
+    * family's decoder shares. */
+  private final class Artifact(root: String, family: String,
+      rows: Array[Row]) {
+    def check(ok: Boolean, what: => String): Unit =
+      if (!ok) throw new IllegalStateException(
+        s"IndexStore at $root: $family artifact is corrupt — $what")
+    val meta: Row = {
+      val m = rows.find(_.getString(0) == "meta")
+      check(m.isDefined, "no meta row")
+      m.get
+    }
+    private def of(kind: String) = rows.filter(_.getString(0) == kind)
+    /** `kind` rows as (i, vec), ascending i. */
+    def vectors(kind: String): Array[(Int, Array[Double])] =
+      of(kind).map(r => (r.getInt(1), r.getSeq[Double](3).toArray))
+        .sortBy(_._1)
+    /** `kind` rows as (i, j) → vec. */
+    def grid(kind: String): Map[(Int, Int), Array[Double]] =
+      of(kind).map(r => ((r.getInt(1), r.getInt(2)),
+        r.getSeq[Double](3).toArray)).toMap
+  }
+
+  /** The read half of the one artifact codec: the commit check, the
+    * per-root cache, and on a miss ONE read+collect of the tagged frame
+    * (kilobytes by construction), decoded by `decode`. A committed family
+    * directory without its `artifact/` frame fails loud, naming the root
+    * and the family. */
+  private def loadArtifact[A <: AnyRef](spark: SparkSession, root: String,
+      family: String, trainWith: String)(decode: Artifact => A): A = {
+    require(committed(spark, root, family),
+      s"IndexStore at $root has no committed $family artifact — run $trainWith")
+    cached(spark, root, family) {
+      val frame = new HPath(new HPath(root, family), "artifact")
+      if (!fs(spark, root).exists(frame)) throw new IllegalStateException(
+        s"IndexStore at $root: the committed $family directory has no " +
+          "artifact/ frame (an unreadable layout or a damaged store) — " +
+          "retrain into a new root")
+      decode(new Artifact(root, family, spark.read.parquet(frame.toString)
+        .select(col("kind"), col("i"), col("j"), col("vec")).collect()))
+    }
+  }
+
+  /** Load the committed quantizer: nlist + nlist + m·codebookSize rows of
+    * dim-width vectors, cached per root. */
+  def loadQuantizer(spark: SparkSession, root: String): ResidualQuantizer =
+    loadArtifact(spark, root, "quantizer", "train/saveQuantizer") { a =>
+      val (dim, nlist) = (a.meta.getInt(1), a.meta.getInt(2))
+      val mc = a.meta.getSeq[Double](3)
+      val (m, cbs) = (mc(0).toInt, mc(1).toInt)
+      val cents = a.vectors("centroid")
+      val means = a.vectors("cellmean")
+      a.check(cents.length == nlist && means.length == nlist,
+        s"${cents.length} centroids / ${means.length} cell means vs nlist=$nlist")
+      val cb = a.grid("codebook")
+      a.check(cb.size == m * cbs,
+        s"${cb.size} codebook rows vs m·codebookSize=${m * cbs}")
+      ResidualQuantizer(dim, nlist, m, cbs,
         cents.map { case (i, v) => (i, v.toSeq) }.toSeq,
         means.map(_._2),
-        Array.tabulate(m)(mi => Array.tabulate(cbs)(j => cbRows((mi, j)))))
+        Array.tabulate(m)(mi => Array.tabulate(cbs)(j => cb((mi, j)))))
     }
-    // legacy four-dir layout (pre-r19 stores)
-    val meta = spark.read.parquet(s"$base/meta").collect()(0)
-    val (dim, nlist) = (meta.getInt(0), meta.getInt(1))
-    val (m, cbs) = (meta.getInt(2), meta.getInt(3))
-    def vecRows(sub: String): Array[(Int, Array[Double])] =
-      spark.read.parquet(s"$base/$sub")
-        .select(col("centroid_id"), col("vec"))
-        .collect()
-        .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-    val cents = vecRows("centroids").sortBy(_._1)
-    val means = vecRows("cellmeans").sortBy(_._1)
-    require(cents.length == nlist && means.length == nlist,
-      s"IndexStore at $root: quantizer artifact is corrupt — " +
-        s"${cents.length} centroids / ${means.length} cell means vs nlist=$nlist")
-    val cbRows = spark.read.parquet(s"$base/codebooks")
-      .select(col("subspace"), col("code"), col("vec"))
-      .collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
-    require(cbRows.size == m * cbs,
-      s"IndexStore at $root: quantizer artifact is corrupt — " +
-        s"${cbRows.size} codebook rows vs m·codebookSize=${m * cbs}")
-    ResidualQuantizer(dim, nlist, m, cbs,
-      cents.map { case (i, v) => (i, v.toSeq) }.toSeq,
-      means.map(_._2),
-      Array.tabulate(m)(mi => Array.tabulate(cbs)(j => cbRows((mi, j)))))
-  }
 
   /** Fit a quantizer on `corpus` and persist it — the `train` step, run
     * ONCE per store. Replay-idempotent: an already-committed store wins
@@ -357,13 +371,16 @@ object IndexStore {
       .agg(count(lit(1)).as("n"))
 
   /** Top-k cosine search over the PERSISTED index: load the quantizer
-    * (kilobytes), ADC-score the committed code segments against the
-    * probed cells, exact-re-rank the rerank·k survivors against the raw
-    * `corpus` (the source-of-truth vector table — the store itself never
-    * holds vectors). ZERO fit jobs, zero corpus-side encode: the
-    * corpus-scale work is one narrow scan of the code segments plus the
-    * candidate-sized re-rank. */
-  /** `matchCols`: metadata-FILTERED search (same-language / same-tenant
+    * (kilobytes) and run [[Similarity.searchResidual]] — the search
+    * [[Similarity.ivfTopKPQResidual]] runs over its in-query encode — on
+    * the committed code segments: ADC-score the probed cells,
+    * exact-re-rank the rerank·k survivors against the raw `corpus` (the
+    * source-of-truth vector table — the store itself never holds
+    * vectors). ZERO fit jobs, zero corpus-side encode: the corpus-scale
+    * work is one narrow scan of the code segments plus the
+    * candidate-sized re-rank.
+    *
+    * `matchCols`: metadata-FILTERED search (same-language / same-tenant
     * retrieval) — each query's neighbors come only from indexed vectors
     * agreeing with it on these columns. Requires the store's segments to
     * carry them ([[appendCodes]] carryCols). PRE-filter semantics: the
@@ -386,17 +403,15 @@ object IndexStore {
     val codes =
       if (asOfBatch == Long.MaxValue) readCodes(spark, root)
       else DedupStore.readAsOf(spark, codesRoot(root), asOfBatch)
-    val approx = Similarity.adcScoreResidual(codes,
-      queries, rq, nprobe, idCol, vecCol, matchCols)
-    Similarity.rerankExactCandidates(corpus, queries, approx, k, rerank,
-      idCol, vecCol)
+    Similarity.searchResidual(codes, rq, corpus, queries, k, nprobe, rerank,
+      idCol, vecCol, matchCols)
   }
 
   // ---------------------------------- persisted IVF-Flat / int8 / IMI stores
 
   /** The remaining ANN families' fit products, persisted under the same
-    * rename-as-commit protocol as the residual quantizer, so NO family
-    * re-fits per query or per ingest batch:
+    * rename-as-commit protocol and tagged-frame codec as the residual
+    * quantizer, so NO family re-fits per query or per ingest batch:
     *
     *  - **IVF artifact** (`<root>/ivf/`): the coarse centroids alone —
     *    shared by the FLAT store (segments carry raw vectors, FAISS
@@ -422,68 +437,21 @@ object IndexStore {
   final case class ImiArtifact(dim: Int,
       cbA: Array[Array[Double]], cbB: Array[Array[Double]])
 
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.lang.ref.SoftReference[AnyRef]]()
-
-  private def cached[A <: AnyRef](spark: SparkSession, root: String,
-      dirName: String)(load: => A): A = {
-    val key = fs(spark, root).makeQualified(new HPath(root, dirName)).toString
-    Option(artifactCache.get(key)).flatMap(r => Option(r.get)) match {
-      case Some(a) => a.asInstanceOf[A]
-      case None =>
-        val a = load
-        artifactCache.put(key, new java.lang.ref.SoftReference[AnyRef](a))
-        a
-    }
-  }
-
-  def ivfCommitted(spark: SparkSession, root: String): Boolean =
-    fs(spark, root).exists(new HPath(root, "ivf"))
-
   /** Persist fitted coarse centroids (the IVF-Flat / int8 families' whole
     * fit product). Same replay/race contract as [[saveQuantizer]]. */
   def saveIvf(spark: SparkSession, root: String, art: IvfArtifact): Boolean =
-    commitArtifact(spark, root, "ivf") { base =>
-      import spark.implicits._
-      // one tagged frame, one write job (r19 — see saveQuantizer)
-      (Seq(("meta", art.dim, art.nlist, Seq.empty[Double])) ++
+    commitArtifact(spark, root, "ivf",
+      Seq(("meta", art.dim, art.nlist, Seq.empty[Double])) ++
         art.centroids.map { case (i, v) => ("centroid", i, 0, v) })
-        .toDF("kind", "i", "j", "vec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/artifact")
-    }
 
-  def loadIvf(spark: SparkSession, root: String): IvfArtifact = {
-    require(ivfCommitted(spark, root),
-      s"IndexStore at $root has no committed IVF artifact — run trainIvf")
-    cached(spark, root, "ivf") {
-      val base = new HPath(root, "ivf").toString
-      if (fs(spark, root).exists(new HPath(base, "artifact"))) {
-        val rows = spark.read.parquet(s"$base/artifact")
-          .select(col("kind"), col("i"), col("j"), col("vec")).collect()
-        val meta = rows.find(_.getString(0) == "meta")
-          .getOrElse(throw new IllegalStateException(
-            s"IndexStore at $root: IVF artifact is corrupt — no meta row"))
-        val (dim, nlist) = (meta.getInt(1), meta.getInt(2))
-        val cents = rows.filter(_.getString(0) == "centroid")
-          .map(r => (r.getInt(1), r.getSeq[Double](3))).sortBy(_._1).toSeq
-        require(cents.length == nlist,
-          s"IndexStore at $root: IVF artifact is corrupt — " +
-            s"${cents.length} centroids vs nlist=$nlist")
-        IvfArtifact(dim, nlist, cents)
-      } else { // legacy two-dir layout (pre-r19 stores)
-        val meta = spark.read.parquet(s"$base/meta").collect()(0)
-        val (dim, nlist) = (meta.getInt(0), meta.getInt(1))
-        val cents = spark.read.parquet(s"$base/centroids")
-          .select(col("centroid_id"), col("vec")).collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
-        require(cents.length == nlist,
-          s"IndexStore at $root: IVF artifact is corrupt — " +
-            s"${cents.length} centroids vs nlist=$nlist")
-        IvfArtifact(dim, nlist, cents)
-      }
+  def loadIvf(spark: SparkSession, root: String): IvfArtifact =
+    loadArtifact(spark, root, "ivf", "trainIvf") { a =>
+      val (dim, nlist) = (a.meta.getInt(1), a.meta.getInt(2))
+      val cents = a.vectors("centroid")
+      a.check(cents.length == nlist,
+        s"${cents.length} centroids vs nlist=$nlist")
+      IvfArtifact(dim, nlist, cents.map { case (i, v) => (i, v.toSeq) }.toSeq)
     }
-  }
 
   /** Fit coarse centroids on `corpus` and persist them — run ONCE per
     * store; replays load the committed artifact. */
@@ -491,12 +459,19 @@ object IndexStore {
       dim: Int, nlist: Int = 16, seed: Long = 42L,
       vecCol: String = "embedding",
       fitSampleLimit: Int = 100000): IvfArtifact = {
-    if (ivfCommitted(spark, root)) return loadIvf(spark, root)
+    if (committed(spark, root, "ivf")) return loadIvf(spark, root)
     val art = IvfArtifact(dim, nlist,
       Similarity.kmeansCentroids(corpus, nlist, seed, "", vecCol,
         fitSampleLimit))
     if (saveIvf(spark, root, art)) art else loadIvf(spark, root)
   }
+
+  /** The id/vector widths every vector-carrying segment is written with:
+    * long ids, double vectors. */
+  private def widened(batch: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    batch.select(col(idCol).cast("long").as(idCol),
+      col(vecCol).cast("array<double>").as(vecCol))
 
   /** Encode + append one batch to a FLAT store: nearest-centroid
     * assignment (single projection), segments carry the raw vectors.
@@ -506,129 +481,68 @@ object IndexStore {
       vecCol: String = "embedding"): Boolean = {
     val art = loadIvf(spark, root)
     DedupStore.append(spark, codesRoot(root), batchId,
-      Similarity.assignToCentroids(
-        batch.select(col(idCol).cast("long").as(idCol),
-          col(vecCol).cast("array<double>").as(vecCol)),
+      Similarity.assignToCentroids(widened(batch, idCol, vecCol),
         art.centroids, idCol, vecCol))
   }
 
-  /** Top-k cosine over the FLAT store: probe the nprobe nearest cells per
-    * query (projection over the loaded centroids — zero fit jobs), scan
-    * the probed inverted lists with EXACT cosine (the store holds the
-    * vectors), bounded top-k. Row-identical to the fit-per-query
-    * [[Similarity.ivfTopK]] at the same dials and seed (spec-pinned). */
+  /** Top-k cosine over the FLAT store: [[Similarity.searchFlat]] over the
+    * committed segments with the loaded centroids — zero fit jobs. The
+    * fit-per-query [[Similarity.ivfTopK]] runs the same search over the
+    * lists it just encoded, so the two are row-identical at the same
+    * dials and seed (spec-pinned). */
   def searchTopKFlat(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int = 4, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val art = loadIvf(spark, root)
-    val probes = Similarity.assignTopCentroids(queries, art.centroids,
-        nprobe, idCol, vecCol)
-      .select(col("centroid_id"), col("corpus_id").as("query_id"),
-        col("c_vec").as("q_vec"))
-    val scored = readCodes(spark, root).join(broadcast(probes),
-        Seq("centroid_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(Similarity.cosine(col("q_vec"), col("c_vec")), 6).as("cos"))
-    Similarity.finalTopK(scored, k)
+    Similarity.searchFlat(readCodes(spark, root), art.centroids, queries, k,
+      nprobe, idCol, vecCol)
   }
 
-  /** Encode + append one batch to an INT8 store: nearest-centroid
-    * assignment, then per-vector L2-normalize + int8-quantize — segments
-    * carry (centroid_id, corpus_id, cq struct(scale, codes)), 1 byte per
-    * dimension. */
+  /** Encode + append one batch to an INT8 store ([[Similarity.encodeInt8]]):
+    * segments carry (centroid_id, corpus_id, cq struct(scale, codes)),
+    * 1 byte per dimension. */
   def appendInt8(spark: SparkSession, root: String, batchId: Long,
       batch: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): Boolean = {
     val art = loadIvf(spark, root)
-    val assigned = Similarity.assignToCentroids(
-      batch.select(col(idCol).cast("long").as(idCol),
-        col(vecCol).cast("array<double>").as(vecCol)),
-      art.centroids, idCol, vecCol)
     DedupStore.append(spark, codesRoot(root), batchId,
-      assigned.select(col("centroid_id"), col("corpus_id"),
-        Similarity.quantizeInt8(Similarity.l2Normalize(col("c_vec")))
-          .as("cq")))
+      Similarity.encodeInt8(widened(batch, idCol, vecCol), art.centroids,
+        idCol, vecCol))
   }
 
-  /** Top-k cosine over the INT8 store: int8 dot-product scan of the
-    * probed lists ([[graft.functions.DotInt8]], 8× less traffic than
-    * float64), exact re-rank of the rerank·k survivors against the raw
-    * `corpus` — the [[Similarity.ivfTopKQuantized]] plan with the fit
-    * and corpus-side encode replaced by the persisted artifact. */
+  /** Top-k cosine over the INT8 store: [[Similarity.searchInt8]] — the int8
+    * dot-product scan of the probed lists, then the exact re-rank of the
+    * rerank·k survivors against the raw `corpus` — over the committed
+    * segments, the search [[Similarity.ivfTopKQuantized]] runs over its
+    * in-query encode. */
   def searchTopKInt8(spark: SparkSession, root: String, corpus: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int = 4, rerank: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(rerank >= 1, "rerank >= 1")
     val art = loadIvf(spark, root)
-    val probes = Similarity.assignTopCentroids(queries, art.centroids,
-        nprobe, idCol, vecCol)
-      .select(col("centroid_id"), col("corpus_id").as("query_id"),
-        Similarity.quantizeInt8(Similarity.l2Normalize(col("c_vec")))
-          .as("qq"))
-    val approx = readCodes(spark, root).join(broadcast(probes),
-        Seq("centroid_id"))
-      .select(col("query_id"), col("corpus_id"),
-        (col("qq").getField("scale") * col("cq").getField("scale") *
-          graft.functions.DotInt8(col("qq").getField("codes"),
-            col("cq").getField("codes"))).as("ascore"))
-    Similarity.rerankExactCandidates(corpus, queries, approx, k, rerank,
-      idCol, vecCol)
+    Similarity.searchInt8(readCodes(spark, root), art.centroids, corpus,
+      queries, k, nprobe, rerank, idCol, vecCol)
   }
-
-  def imiCommitted(spark: SparkSession, root: String): Boolean =
-    fs(spark, root).exists(new HPath(root, "imi"))
 
   /** Persist fitted IMI half-space codebooks. Same replay/race contract
     * as [[saveQuantizer]]. */
   def saveImi(spark: SparkSession, root: String, art: ImiArtifact): Boolean =
-    commitArtifact(spark, root, "imi") { base =>
-      import spark.implicits._
-      // one tagged frame, one write job (r19 — see saveQuantizer)
-      (Seq(("meta", art.dim, art.cbA.length + art.cbB.length,
+    commitArtifact(spark, root, "imi",
+      Seq(("meta", art.dim, art.cbA.length + art.cbB.length,
         Seq(art.cbA.length.toDouble, art.cbB.length.toDouble))) ++
         art.cbA.zipWithIndex.map { case (v, j) => ("codebook", 0, j, v.toSeq) } ++
         art.cbB.zipWithIndex.map { case (v, j) => ("codebook", 1, j, v.toSeq) })
-        .toDF("kind", "i", "j", "vec")
-        .coalesce(1).write.mode("overwrite").parquet(s"$base/artifact")
-    }
 
-  def loadImi(spark: SparkSession, root: String): ImiArtifact = {
-    require(imiCommitted(spark, root),
-      s"IndexStore at $root has no committed IMI artifact — run trainImi")
-    cached(spark, root, "imi") {
-      val base = new HPath(root, "imi").toString
-      if (fs(spark, root).exists(new HPath(base, "artifact"))) {
-        val all = spark.read.parquet(s"$base/artifact")
-          .select(col("kind"), col("i"), col("j"), col("vec")).collect()
-        val meta = all.find(_.getString(0) == "meta")
-          .getOrElse(throw new IllegalStateException(
-            s"IndexStore at $root: IMI artifact is corrupt — no meta row"))
-        val dim = meta.getInt(1)
-        val kk = meta.getSeq[Double](3)
-        val (ka, kb) = (kk(0).toInt, kk(1).toInt)
-        val rows = all.filter(_.getString(0) == "codebook")
-          .map(r => ((r.getInt(1), r.getInt(2)), r.getSeq[Double](3).toArray))
-          .toMap
-        require(rows.size == ka + kb,
-          s"IndexStore at $root: IMI artifact is corrupt — " +
-            s"${rows.size} codebook rows vs kA+kB=${ka + kb}")
-        ImiArtifact(dim, Array.tabulate(ka)(j => rows((0, j))),
-          Array.tabulate(kb)(j => rows((1, j))))
-      } else { // legacy two-dir layout (pre-r19 stores)
-        val meta = spark.read.parquet(s"$base/meta").collect()(0)
-        val (dim, ka, kb) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-        val rows = spark.read.parquet(s"$base/codebooks")
-          .select(col("half"), col("code"), col("vec")).collect()
-          .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-          .toMap
-        require(rows.size == ka + kb,
-          s"IndexStore at $root: IMI artifact is corrupt — " +
-            s"${rows.size} codebook rows vs kA+kB=${ka + kb}")
-        ImiArtifact(dim, Array.tabulate(ka)(j => rows((0, j))),
-          Array.tabulate(kb)(j => rows((1, j))))
-      }
+  def loadImi(spark: SparkSession, root: String): ImiArtifact =
+    loadArtifact(spark, root, "imi", "trainImi") { a =>
+      val kk = a.meta.getSeq[Double](3)
+      val (ka, kb) = (kk(0).toInt, kk(1).toInt)
+      val cb = a.grid("codebook")
+      a.check(cb.size == ka + kb,
+        s"${cb.size} codebook rows vs kA+kB=${ka + kb}")
+      ImiArtifact(a.meta.getInt(1), Array.tabulate(ka)(j => cb((0, j))),
+        Array.tabulate(kb)(j => cb((1, j))))
     }
-  }
 
   /** Fit IMI half-space codebooks on `corpus` and persist them — run ONCE
     * per store; replays load the committed artifact. */
@@ -636,7 +550,7 @@ object IndexStore {
       dim: Int, kA: Int = 8, kB: Int = 8, seed: Long = 42L,
       vecCol: String = "embedding",
       fitSampleLimit: Int = 100000): ImiArtifact = {
-    if (imiCommitted(spark, root)) return loadImi(spark, root)
+    if (committed(spark, root, "imi")) return loadImi(spark, root)
     val (cbA, cbB) = Similarity.imiCodebooks(corpus, kA, kB, seed, vecCol,
       fitSampleLimit)
     val art = ImiArtifact(dim, cbA, cbB)
@@ -654,24 +568,16 @@ object IndexStore {
       Similarity.imiAssignTop(batch, art.cbA, art.cbB, 1, idCol, vecCol))
   }
 
-  /** Top-k cosine over the IMI store: rank the kA·kB cells per query from
-    * kA+kB half-dots (loaded codebooks — zero fit jobs), scan the probed
-    * cells with exact cosine, bounded top-k. Row-identical to the
-    * fit-per-query [[Similarity.imiTopK]] at the same dials and seed
-    * (spec-pinned). */
+  /** Top-k cosine over the IMI store: [[Similarity.searchImi]] over the
+    * committed segments with the loaded codebooks — zero fit jobs, the
+    * search [[Similarity.imiTopK]] runs over its in-query encode
+    * (row-identical at the same dials and seed, spec-pinned). */
   def searchTopKImi(spark: SparkSession, root: String, queries: DataFrame,
       k: Int, nprobe: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val art = loadImi(spark, root)
-    val probes = Similarity.imiAssignTop(queries, art.cbA, art.cbB, nprobe,
-        idCol, vecCol)
-      .select(col("cell_id"), col("corpus_id").as("query_id"),
-        col("c_vec").as("q_vec"))
-    val scored = readCodes(spark, root).join(broadcast(probes),
-        Seq("cell_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(Similarity.cosine(col("q_vec"), col("c_vec")), 6).as("cos"))
-    Similarity.finalTopK(scored, k)
+    Similarity.searchImi(readCodes(spark, root), art.cbA, art.cbB, queries,
+      k, nprobe, idCol, vecCol)
   }
 
   // ------------------------------------------------- retrain-rotate cutover
@@ -730,8 +636,7 @@ object IndexStore {
     * complete (committed quantizer) — publishing a half-built root is the
     * one way to break the reader contract. */
   def publishRoot(spark: SparkSession, alias: String, storeRoot: String): Unit = {
-    require(quantizerCommitted(spark, storeRoot) ||
-        ivfCommitted(spark, storeRoot) || imiCommitted(spark, storeRoot),
+    require(committedFamily(spark, storeRoot).nonEmpty,
       s"IndexStore: refusing to publish $storeRoot — no committed " +
         "artifact of any family (readers must never resolve to a " +
         "half-built store)")
@@ -808,14 +713,15 @@ object IndexStore {
     val root = currentRoot(spark, alias).getOrElse(throw
       new IllegalStateException(
         s"IndexStore alias $alias has no published store — run rotate"))
-    if (quantizerCommitted(spark, root))
+    val family = committedFamily(spark, root)
+    if (family.contains("quantizer"))
       searchTopK(spark, root, corpus, queries, k, nprobe, rerank, idCol,
         vecCol, matchCols)
     else {
       require(matchCols.isEmpty,
         "metadata-filtered search requires a residual-PQ store " +
           "(the attribute-carrying segment layout)")
-      if (imiCommitted(spark, root))
+      if (family.contains("imi"))
         searchTopKImi(spark, root, queries, k, nprobe, idCol, vecCol)
       else if (readCodes(spark, root).columns.contains("cq"))
         searchTopKInt8(spark, root, corpus, queries, k, nprobe, rerank,
@@ -1176,24 +1082,25 @@ object IndexStore {
     * fingerprint: ("quantizer", fp) / ("ivf", fp) / ("imi", fp). Loads
     * ride the per-root cache — kilobytes either way. */
   private def familyFingerprint(spark: SparkSession,
-      root: String): (String, String) =
-    if (quantizerCommitted(spark, root)) {
-      val rq = loadQuantizer(spark, root)
-      ("quantizer", artifactFingerprint("quantizer",
-        Seq(rq.dim, rq.nlist, rq.m, rq.codebookSize),
-        rq.centroids.iterator.map(_._2.toArray) ++
-          rq.cellMeans.iterator ++
-          rq.codebooks.iterator.flatMap(_.iterator)))
-    } else if (ivfCommitted(spark, root)) {
-      val art = loadIvf(spark, root)
-      ("ivf", artifactFingerprint("ivf", Seq(art.dim, art.nlist),
-        art.centroids.iterator.map(_._2.toArray)))
-    } else if (imiCommitted(spark, root)) {
-      val art = loadImi(spark, root)
-      ("imi", artifactFingerprint("imi", Seq(art.dim),
-        art.cbA.iterator ++ art.cbB.iterator))
-    } else throw new IllegalArgumentException(
-      s"IndexStore at $root has no committed artifact of any family")
+      root: String): (String, String) = {
+    val family = committedFamily(spark, root).getOrElse(
+      throw new IllegalArgumentException(
+        s"IndexStore at $root has no committed artifact of any family"))
+    val (ints, vecs) = family match {
+      case "quantizer" =>
+        val rq = loadQuantizer(spark, root)
+        (Seq(rq.dim, rq.nlist, rq.m, rq.codebookSize),
+          rq.centroids.iterator.map(_._2.toArray) ++ rq.cellMeans.iterator ++
+            rq.codebooks.iterator.flatMap(_.iterator))
+      case "ivf" =>
+        val art = loadIvf(spark, root)
+        (Seq(art.dim, art.nlist), art.centroids.iterator.map(_._2.toArray))
+      case _ =>
+        val art = loadImi(spark, root)
+        (Seq(art.dim), art.cbA.iterator ++ art.cbB.iterator)
+    }
+    (family, artifactFingerprint(family, ints, vecs))
+  }
 
   /** Merge committed sibling stores into `dstRoot` — the FAISS
     * `merge_from`/`merge_ondisk` discipline on Spark: shard builders

@@ -200,6 +200,22 @@ object Similarity {
       when(dot >= 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce((a, b) => a.bitwiseOR(b))
 
+  /** The LSH keys of `vec` as one `array<struct<t, b>>` column: one
+    * (table, bucket) key per hyperplane family `t` (planes seeded
+    * `seed + t`), so families never cross-match. `probeBits = n` adds,
+    * per family, the n buckets at hamming distance 1 on the lowest n bits
+    * (multi-probe). Every LSH path keys BOTH its sides here, so the stored
+    * and the probing side hash with the same planes by construction. */
+  private def lshKeys(vec: Column, dim: Int, bits: Int, seed: Long,
+      tables: Int, probeBits: Int = 0): Column = {
+    require(tables >= 1, "tables >= 1")
+    array((0 until tables).flatMap { t =>
+      val b0 = bucketCol(vec, planes(bits, dim, seed + t))
+      (b0 +: (0 until probeBits).map(j => b0.bitwiseXOR(lit(1L << j))))
+        .map(b => struct(lit(t).as("t"), b.as("b")))
+    }: _*)
+  }
+
   /** Approximate top-k via random-hyperplane buckets. Recall/cost dials:
     * `probeBits=n` additionally probes the n buckets at hamming distance 1
     * on the lowest n bits (multi-probe); `tables=L` runs L INDEPENDENT
@@ -212,19 +228,11 @@ object Similarity {
       bits: Int = 12, probeBits: Int = 4, seed: Long = 42L,
       tables: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(tables >= 1, "tables >= 1")
-    val hps = Array.tabulate(tables)(t => planes(bits, dim, seed + t))
-    // (table, bucket) keys so families never cross-match
-    val cKeys = hps.zipWithIndex.map { case (hp, t) =>
-      struct(lit(t).as("t"), bucketCol(col(vecCol), hp).as("b")) }
     val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("c_vec"),
-      explode(array(cKeys.toIndexedSeq: _*)).as("tb"))
-    val qKeys = hps.zipWithIndex.flatMap { case (hp, t) =>
-      val b0 = bucketCol(col(vecCol), hp)
-      (b0 +: (0 until probeBits).map(j => b0.bitwiseXOR(lit(1L << j))))
-        .map(b => struct(lit(t).as("t"), b.as("b"))) }
+      explode(lshKeys(col(vecCol), dim, bits, seed, tables)).as("tb"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"),
-      explode(array(qKeys.toIndexedSeq: _*)).as("tb"))
+      explode(lshKeys(col(vecCol), dim, bits, seed, tables, probeBits))
+        .as("tb"))
     val scored = c.join(broadcast(q), Seq("tb"))
       .select(col("query_id"), col("corpus_id"),
         round(cosine(col("q_vec"), col("c_vec")), 6).as("cos"))
@@ -243,18 +251,12 @@ object Similarity {
       queries: DataFrame, k: Int, nlist: Int = 16, nprobe: Int = 4,
       seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", fitSampleLimit: Int = 100000): DataFrame = {
-    val (assigned, probes) = ivfAssignProbe(corpus, queries, nlist, nprobe,
-      seed, idCol, vecCol, fitSampleLimit)
-    val scored = assigned.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(cosine(col("q_vec"), col("c_vec")), 6).as("cos"))
-    finalTopK(scored, k)
+    val centroids = kmeansCentroids(corpus, nlist, seed, idCol, vecCol,
+      fitSampleLimit)
+    searchFlat(assignToCentroids(corpus, centroids, idCol, vecCol),
+      centroids, queries, k, nprobe, idCol, vecCol)
   }
 
-  /** Shared IVF plumbing: k-means centroids (bounded-sample fit) +
-    * shuffle-free nearest-centroid corpus assignment + per-query nprobe
-    * probe list. Returns (`assigned`: centroid_id, corpus_id, c_vec;
-    * `probes`: centroid_id, query_id, q_vec). */
   /** Bounded-sample k-means fit: k-means over the full corpus would be a
     * multi-pass O(corpus) job at 100 TB for centroids whose quality
     * saturates at ~10³ points per list; the limit reads only as many
@@ -430,18 +432,75 @@ object Similarity {
         .as("centroid_id"),
       col(idCol).as("corpus_id"), col(vecCol).as("c_vec"))
 
-  /** Shared IVF plumbing: bounded-sample centroids + shuffle-free corpus
-    * assignment + per-query nprobe probe list. */
-  private def ivfAssignProbe(corpus: DataFrame, queries: DataFrame,
-      nlist: Int, nprobe: Int, seed: Long, idCol: String, vecCol: String,
-      fitSampleLimit: Int): (DataFrame, DataFrame) = {
-    val centroids = kmeansCentroids(corpus, nlist, seed, idCol, vecCol,
-      fitSampleLimit)
-    val assigned = assignToCentroids(corpus, centroids, idCol, vecCol)
-    val probes = assignTopCentroids(queries, centroids, nprobe, idCol, vecCol)
+  // ------------------------------ one encode and one search per IVF family
+  //
+  // Every IVF family is fit → encode → search. The fit-per-query entry
+  // points fit in-query, encode the corpus and search the lists they just
+  // built; [[IndexStore]] loads its persisted fit, appends the SAME encode
+  // per batch and runs the SAME search over its committed segments.
+  //
+  //   family    encode (corpus/batch → lists)   search (lists → top-k)
+  //   flat      assignToCentroids               searchFlat
+  //   int8      encodeInt8                      searchInt8
+  //   IMI       imiAssignTop(…, n = 1, …)       searchImi
+  //   residual  encodeResidual                  searchResidual
+
+  /** The probe side of the centroid families: each query's `nprobe`
+    * nearest centroids as (centroid_id, query_id, q_vec). */
+  private def probeCells(queries: DataFrame,
+      centroids: Seq[(Int, Seq[Double])], nprobe: Int, idCol: String,
+      vecCol: String): DataFrame =
+    assignTopCentroids(queries, centroids, nprobe, idCol, vecCol)
       .select(col("centroid_id"), col("corpus_id").as("query_id"),
         col("c_vec").as("q_vec"))
-    (assigned, probes)
+
+  /** Exact-cosine scan of the probed inverted lists, then the bounded
+    * top-k — the whole search of the families whose lists hold raw
+    * vectors. `lists` carry (`cell`, corpus_id, c_vec), `probes` (`cell`,
+    * query_id, q_vec); the probe side is broadcast, the lists are scanned
+    * once, never shuffled. */
+  private def scanExact(lists: DataFrame, probes: DataFrame, cell: String,
+      k: Int): DataFrame =
+    finalTopK(lists.join(broadcast(probes), Seq(cell))
+      .select(col("query_id"), col("corpus_id"),
+        round(cosine(col("q_vec"), col("c_vec")), 6).as("cos")), k)
+
+  /** IVF-Flat search over (centroid_id, corpus_id, c_vec) lists: each
+    * query probes its `nprobe` nearest cells, scored with exact cosine. */
+  private[graft] def searchFlat(lists: DataFrame,
+      centroids: Seq[(Int, Seq[Double])], queries: DataFrame, k: Int,
+      nprobe: Int, idCol: String, vecCol: String): DataFrame =
+    scanExact(lists, probeCells(queries, centroids, nprobe, idCol, vecCol),
+      "centroid_id", k)
+
+  /** IVF-int8 encode: nearest-centroid assignment, then per-vector
+    * L2-normalize + [[quantizeInt8]] — rows (centroid_id, corpus_id,
+    * cq struct(scale, codes)), 1 byte per dimension. */
+  private[graft] def encodeInt8(corpus: DataFrame,
+      centroids: Seq[(Int, Seq[Double])], idCol: String,
+      vecCol: String): DataFrame =
+    assignToCentroids(corpus, centroids, idCol, vecCol)
+      .select(col("centroid_id"),
+        col("corpus_id").cast("long").as("corpus_id"),
+        quantizeInt8(l2Normalize(col("c_vec"))).as("cq"))
+
+  /** IVF-int8 search over [[encodeInt8]] lists: the probed lists score
+    * `scale_q · scale_c · dot(codes_q, codes_c)` ([[graft.functions.DotInt8]]),
+    * then the [[rerankExact]] tail re-scores the rerank·k survivors per
+    * query against the raw `corpus`. */
+  private[graft] def searchInt8(lists: DataFrame,
+      centroids: Seq[(Int, Seq[Double])], corpus: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int, rerank: Int, idCol: String,
+      vecCol: String): DataFrame = {
+    val probes = probeCells(queries, centroids, nprobe, idCol, vecCol)
+      .select(col("centroid_id"), col("query_id"),
+        quantizeInt8(l2Normalize(col("q_vec"))).as("qq"))
+    val approx = lists.join(broadcast(probes), Seq("centroid_id"))
+      .select(col("query_id"), col("corpus_id"),
+        (col("qq").getField("scale") * col("cq").getField("scale") *
+          graft.functions.DotInt8(col("qq").getField("codes"),
+            col("cq").getField("codes"))).as("ascore"))
+    rerankExact(corpus, queries, approx, k, rerank, idCol, vecCol)
   }
 
   /** IVF top-k with an int8-quantized candidate scan and exact re-rank —
@@ -464,19 +523,10 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       fitSampleLimit: Int = 100000): DataFrame = {
     require(rerank >= 1, "rerank >= 1")
-    val (assigned, probes) = ivfAssignProbe(corpus, queries, nlist, nprobe,
-      seed, idCol, vecCol, fitSampleLimit)
-    val cq = assigned.select(col("centroid_id"),
-      col("corpus_id").cast("long").as("corpus_id"),
-      quantizeInt8(l2Normalize(col("c_vec"))).as("cq"))
-    val pq = probes.select(col("centroid_id"), col("query_id"),
-      quantizeInt8(l2Normalize(col("q_vec"))).as("qq"))
-    val approx = cq.join(broadcast(pq), Seq("centroid_id"))
-      .select(col("query_id"), col("corpus_id"),
-        (col("qq").getField("scale") * col("cq").getField("scale") *
-          graft.functions.DotInt8(col("qq").getField("codes"),
-            col("cq").getField("codes"))).as("ascore"))
-    rerankExact(corpus, queries, approx, k, rerank, idCol, vecCol)
+    val centroids = kmeansCentroids(corpus, nlist, seed, idCol, vecCol,
+      fitSampleLimit)
+    searchInt8(encodeInt8(corpus, centroids, idCol, vecCol), centroids,
+      corpus, queries, k, nprobe, rerank, idCol, vecCol)
   }
 
   /** Shared tail of the quantized ANN paths: per query the best
@@ -618,15 +668,19 @@ object Similarity {
       nprobe: Int = 8, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding", fitSampleLimit: Int = 100000): DataFrame = {
     val (cbA, cbB) = imiCodebooks(corpus, kA, kB, seed, vecCol, fitSampleLimit)
-    val assigned = imiAssignTop(corpus, cbA, cbB, 1, idCol, vecCol)
-    val probes = imiAssignTop(queries, cbA, cbB, nprobe, idCol, vecCol)
-      .select(col("cell_id"), col("corpus_id").as("query_id"),
-        col("c_vec").as("q_vec"))
-    val scored = assigned.join(broadcast(probes), Seq("cell_id"))
-      .select(col("query_id"), col("corpus_id"),
-        round(cosine(col("q_vec"), col("c_vec")), 6).as("cos"))
-    finalTopK(scored, k)
+    searchImi(imiAssignTop(corpus, cbA, cbB, 1, idCol, vecCol), cbA, cbB,
+      queries, k, nprobe, idCol, vecCol)
   }
+
+  /** IMI search over (cell_id, corpus_id, c_vec) lists — the top-1
+    * [[imiAssignTop]] encode: each query ranks the kA·kB cells from kA+kB
+    * half-dots, and its `nprobe` best cells are scored with exact cosine. */
+  private[graft] def searchImi(lists: DataFrame, cbA: Array[Array[Double]],
+      cbB: Array[Array[Double]], queries: DataFrame, k: Int, nprobe: Int,
+      idCol: String, vecCol: String): DataFrame =
+    scanExact(lists, imiAssignTop(queries, cbA, cbB, nprobe, idCol, vecCol)
+      .select(col("cell_id"), col("corpus_id").as("query_id"),
+        col("c_vec").as("q_vec")), "cell_id", k)
 
   // ------------------------------------------------ IVF-PQ (ADC) variant
 
@@ -799,24 +853,25 @@ object Similarity {
     val pool = sampleVectors(corpus, vecCol, fitSampleLimit, seed,
       "ivfTopKPQ")
     val centroids = kmeansCentroidsFromSample(pool, nlist, seed)
-    val assigned = assignToCentroids(corpus, centroids, idCol, vecCol)
-    val probes = assignTopCentroids(queries, centroids, nprobe, idCol, vecCol)
-      .select(col("centroid_id"), col("corpus_id").as("query_id"),
-        col("c_vec").as("q_vec"))
     val cb = pqCodebooksFromSample(pool.map(l2NormalizeLocal), dim, m,
       codebookSize, seed)
-    val cq = assigned.select(col("centroid_id"),
-      col("corpus_id").cast("long").as("corpus_id"),
-      pqEncode(l2Normalize(col("c_vec")), cb).as("codes"))
-    val pq = probes.select(col("centroid_id"), col("query_id"),
-      pqAdcTable(l2Normalize(col("q_vec")), cb).as("adc"))
+    val cq = assignToCentroids(corpus, centroids, idCol, vecCol)
+      .select(col("centroid_id"),
+        col("corpus_id").cast("long").as("corpus_id"),
+        pqEncode(l2Normalize(col("c_vec")), cb).as("codes"))
+    val pq = probeCells(queries, centroids, nprobe, idCol, vecCol)
+      .select(col("centroid_id"), col("query_id"),
+        pqAdcTable(l2Normalize(col("q_vec")), cb).as("adc"))
     val approx = cq.join(broadcast(pq), Seq("centroid_id"))
-      .select(col("query_id"), col("corpus_id"),
-        aggregate(
-          zip_with(col("adc"), col("codes"), (tm, cm) => get(tm, cm)),
-          lit(0.0), (acc, x) => acc + x).as("ascore"))
+      .select(col("query_id"), col("corpus_id"), adcSum.as("ascore"))
     rerankExact(corpus, queries, approx, k, rerank, idCol, vecCol)
   }
+
+  /** A candidate's ADC score: `Σ adc(subspace)(codes(subspace))` — `m`
+    * array lookups into the per-query table, no dot product. */
+  private def adcSum: Column =
+    aggregate(zip_with(col("adc"), col("codes"), (tm, cm) => get(tm, cm)),
+      lit(0.0), (acc, x) => acc + x)
 
   /** RESIDUAL IVF-PQ (the FAISS-standard IVFADC shape): PQ codes encode
     * the residual `x̂ − c` of each (normalized) vector against its
@@ -834,10 +889,12 @@ object Similarity {
     * bottleneck.
     * Mechanics: residual codebooks fit on a bounded sample
     * (driver-assigned with [[cosineLocal]], mirroring the distributed
-    * argmax), corpus codes via [[pqEncode]] on `zip_with` residuals with
-    * the centroid attached from a broadcast frame, candidate score =
-    * centroid term + `m` ADC lookups, then the shared [[rerankExact]]
-    * tail. Zero corpus shuffle, same plan skeleton as ivfTopKPQ. */
+    * argmax), corpus codes via [[encodeResidual]] ([[pqEncode]] on
+    * `zip_with` residuals with the centroid attached from a broadcast
+    * frame), then [[searchResidual]] — candidate score = centroid term +
+    * `m` ADC lookups, then the shared [[rerankExact]] tail — the same
+    * encode and search [[IndexStore]] runs. Zero corpus shuffle, same plan
+    * skeleton as ivfTopKPQ. */
   def ivfTopKPQResidual(spark: org.apache.spark.sql.SparkSession,
       corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
       nlist: Int = 16, nprobe: Int = 4, m: Int = 8, codebookSize: Int = 16,
@@ -854,9 +911,8 @@ object Similarity {
       "ivfTopKPQResidual")
     val rq = fitResidualQuantizerFromPool(pool, dim, nlist, m, codebookSize,
       seed)
-    val approx = adcScoreResidual(encodeResidual(corpus, rq, idCol, vecCol),
-      queries, rq, nprobe, idCol, vecCol)
-    rerankExact(corpus, queries, approx, k, rerank, idCol, vecCol)
+    searchResidual(encodeResidual(corpus, rq, idCol, vecCol), rq, corpus,
+      queries, k, nprobe, rerank, idCol, vecCol)
   }
 
   /** Fit the three IVFADC stages from an already-drawn sample pool —
@@ -966,20 +1022,19 @@ object Similarity {
         .map(col): _*)
   }
 
-  /** ADC-score encoded inverted lists against `queries`: per query the
+  /** Residual IVF-PQ search over [[encodeResidual]] lists: per query the
     * nprobe nearest cells, a per-query ADC lookup table plus the exact
     * `q·c` centroid term (the residual decomposition `q·x̂ = q·c +
-    * q·(x̂−c)`), then candidate score = centroid term + m array lookups.
-    * Probe side is broadcast; the encoded side — the only corpus-scale
-    * frame — is scanned once, never shuffled. */
-  private[graft] def adcScoreResidual(encoded: DataFrame, queries: DataFrame,
-      rq: ResidualQuantizer, nprobe: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding",
+    * q·(x̂−c)`), candidate score = centroid term + m array lookups, then
+    * the [[rerankExact]] tail against the raw `corpus` — the only place
+    * full-precision vectors are touched. Probe side is broadcast; the
+    * encoded side — the only corpus-scale frame — is scanned once, never
+    * shuffled. */
+  private[graft] def searchResidual(lists: DataFrame, rq: ResidualQuantizer,
+      corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+      rerank: Int, idCol: String, vecCol: String,
       matchCols: Seq[String] = Nil): DataFrame = {
-    val probes = assignTopCentroids(queries, rq.centroids, nprobe, idCol,
-        vecCol)
-      .select(col("centroid_id"), col("corpus_id").as("query_id"),
-        col("c_vec").as("q_vec"))
+    val probes = probeCells(queries, rq.centroids, nprobe, idCol, vecCol)
     val pq0 = probes.join(broadcast(cellMeanDf(rq, queries.sparkSession)),
         Seq("centroid_id"))
       .select(col("centroid_id"), col("query_id"),
@@ -987,7 +1042,7 @@ object Similarity {
         graft.functions.DotDouble(l2Normalize(col("q_vec")), col("__cent"))
           .as("__qc"))
     // metadata-filtered search: the query's match values ride the (tiny)
-    // broadcast side; `encoded` must carry the same columns (the
+    // broadcast side; `lists` must carry the same columns (the
     // attribute-carrying index, [[encodeResidual]]'s carryCols) so the
     // scan PRE-filters — rejected candidates never consume the rerank
     // budget and the corpus is never joined before the rerank tail
@@ -995,25 +1050,14 @@ object Similarity {
       else pq0.join(broadcast(queries.select(
         col(idCol).as("query_id") +:
           matchCols.map(c => col(c).as(s"__q_$c")): _*)), Seq("query_id"))
-    val joined = encoded.join(broadcast(pq), Seq("centroid_id"))
+    val joined = lists.join(broadcast(pq), Seq("centroid_id"))
     val filtered = matchCols.foldLeft(joined) { (df, c) =>
       df.filter(col(c) <=> col(s"__q_$c"))
     }
-    filtered.select(col("query_id"), col("corpus_id"),
-      (col("__qc") + aggregate(
-        zip_with(col("adc"), col("codes"), (tm, cm) => get(tm, cm)),
-        lit(0.0), (acc, x) => acc + x)).as("ascore"))
-  }
-
-  /** Exact re-rank of an approximate candidate set against the raw
-    * corpus, exposed for [[IndexStore.searchTopK]] — the store holds only
-    * m-byte codes; full-precision vectors stay in the source-of-truth
-    * corpus table and are touched only for the rerank·k survivors. */
-  private[graft] def rerankExactCandidates(corpus: DataFrame,
-      queries: DataFrame, approx: DataFrame, k: Int, rerank: Int,
-      idCol: String, vecCol: String): DataFrame =
+    val approx = filtered.select(col("query_id"), col("corpus_id"),
+      (col("__qc") + adcSum).as("ascore"))
     rerankExact(corpus, queries, approx, k, rerank, idCol, vecCol)
-
+  }
 
   /** Embedding-cosine near-duplicate pairs (both sides the full corpus):
     * LSH-bucketed self-join, cosine ≥ threshold. `tables=L` unions the
@@ -1024,12 +1068,8 @@ object Similarity {
   def nearDupPairs(corpus: DataFrame, threshold: Double, dim: Int,
       bits: Int = 8, seed: Long = 42L, tables: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(tables >= 1, "tables >= 1")
-    val hps = Array.tabulate(tables)(t => planes(bits, dim, seed + t))
-    val keys = hps.zipWithIndex.map { case (hp, t) =>
-      struct(lit(t).as("t"), bucketCol(col(vecCol), hp).as("b")) }
     val c = corpus.select(col(idCol), col(vecCol),
-      explode(array(keys.toIndexedSeq: _*)).as("tb"))
+      explode(lshKeys(col(vecCol), dim, bits, seed, tables)).as("tb"))
     val a = c.select(col("tb"), col(idCol).as("id_a"), col(vecCol).as("v_a"))
     val b = c.select(col("tb"), col(idCol).as("id_b"), col(vecCol).as("v_b"))
     a.join(b, Seq("tb")).filter(col("id_a") < col("id_b"))
@@ -1127,12 +1167,8 @@ object Similarity {
   def embeddingStore(corpus: DataFrame, dim: Int, bits: Int = 8,
       tables: Int = 2, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding"): (DataFrame, DataFrame) = {
-    require(tables >= 1, "tables >= 1")
-    val hps = Array.tabulate(tables)(t => planes(bits, dim, seed + t))
-    val keys = hps.zipWithIndex.map { case (hp, t) =>
-      struct(lit(t).as("t"), bucketCol(col(vecCol), hp).as("b")) }
     val banded = corpus.select(col(idCol).as("sid"),
-      explode(array(keys.toIndexedSeq: _*)).as("tb"))
+      explode(lshKeys(col(vecCol), dim, bits, seed, tables)).as("tb"))
     val vecs = corpus.select(col(idCol).as("sid"),
       col(vecCol).cast("array<double>").as("s_vec"))
     (banded, vecs)
@@ -1161,17 +1197,13 @@ object Similarity {
       store: (DataFrame, DataFrame), threshold: Double, dim: Int,
       bits: Int = 8, tables: Int = 2, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(tables >= 1, "tables >= 1")
     val (storeBanded, storeVecs) = store
-    val hps = Array.tabulate(tables)(t => planes(bits, dim, seed + t))
-    val keys = hps.zipWithIndex.map { case (hp, t) =>
-      struct(lit(t).as("t"), bucketCol(col("__bv"), hp).as("b")) }
     // cheap narrow projection — re-derived (at most twice) rather than
     // persisted; the expensive side (the store) is probed, not rebuilt
     val bvec = batch.select(col(idCol),
       col(vecCol).cast("array<double>").as("__bv"))
     val banded = bvec.select(col(idCol),
-      explode(array(keys.toIndexedSeq: _*)).as("tb"))
+      explode(lshKeys(col("__bv"), dim, bits, seed, tables)).as("tb"))
     val cand = banded.join(storeBanded, Seq("tb"))
       .select(col(idCol), col("sid")).distinct()
     val hits = cand

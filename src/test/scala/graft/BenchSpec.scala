@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bench over Verify's shared suite loop: what a run reports when a query
-  * throws. */
+  * throws, and which runs write the full-suite artifact. */
 class BenchSpec extends SparkSpec {
 
   test("a query that throws is listed as failed, never timed") {
@@ -20,5 +20,10 @@ class BenchSpec extends SparkSpec {
       assert(!line.contains(""""b01_boom":"""), line)
       assert(line.contains(""""a01_ok":"""), line)
     }
+  }
+
+  test("only a full-suite run writes BENCH_FULL_latest.json; a subset leaves it alone") {
+    assert(Bench.artifactPath(None) == Some("BENCH_FULL_latest.json"))
+    assert(Bench.artifactPath(Some(Set("s05_cosine_topk_ivf"))).isEmpty)
   }
 }

@@ -489,6 +489,23 @@ class IndexStoreSpec extends SparkSpec {
     assert(e.getMessage.contains("no committed quantizer"), e.getMessage)
   }
 
+  test("a committed artifact dir holding only the old meta/ layout fails " +
+      "loud, naming the root and the family") {
+    val loaders = Seq[(String, String => AnyRef)](
+      "quantizer" -> (r => IndexStore.loadQuantizer(spark, r)),
+      "ivf" -> (r => IndexStore.loadIvf(spark, r)),
+      "imi" -> (r => IndexStore.loadImi(spark, r)))
+    for ((family, load) <- loaders) {
+      val root = freshRoot()
+      // the multi-directory layout's one-row param frame, no artifact/
+      Seq((64, 8, 8, 16)).toDF("dim", "nlist", "m", "codebook_size")
+        .write.parquet(s"$root/$family/meta")
+      val e = intercept[IllegalStateException](load(root))
+      assert(e.getMessage.contains(root) && e.getMessage.contains(family) &&
+        e.getMessage.contains("artifact/"), e.getMessage)
+    }
+  }
+
   test("ingestWithDriftGuard: same-distribution batches append, drift rotates, replay no-ops across the cutover") {
     val alias = freshRoot()
     val e = emb.select($"vec_id", $"embedding")

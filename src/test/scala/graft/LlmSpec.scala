@@ -1113,14 +1113,14 @@ class LlmSpec extends SparkSpec {
         Seq(s"fp_$b").toDF("fp")))
     // a ceiling far shorter than the compact: without the heartbeat the
     // lease would age out mid-run and an append would reclaim it mid-compact
-    spark.conf.set("spark.graft.dedupstore.leaseMaxAgeMs", "400")
+    spark.conf.set("spark.graft.lease.maxAgeMs", "400")
     try {
       val compacting = Future(DedupStore.compact(spark, root))
       val lease = new java.io.File(root, "compacting")
       val t0 = System.currentTimeMillis()
       while (!lease.exists() && !compacting.isCompleted &&
         System.currentTimeMillis() - t0 < 10000) Thread.sleep(5)
-      Thread.sleep(600) // > leaseMaxAgeMs: a non-heartbeated lease is stale now
+      Thread.sleep(600) // > the lease ceiling: a non-heartbeated lease is stale now
       if (!compacting.isCompleted) {
         // live compact, lease older than the ceiling by wall-clock — the
         // heartbeat must have kept it fresh, so the append still fails loud
@@ -1135,7 +1135,7 @@ class LlmSpec extends SparkSpec {
       assert(!lease.exists())
       assert(DedupStore.committedBatches(spark, root) == (0L to 15L) :+ newId)
       assert(DedupStore.readFingerprints(spark, root).count() == 16)
-    } finally spark.conf.unset("spark.graft.dedupstore.leaseMaxAgeMs")
+    } finally spark.conf.unset("spark.graft.lease.maxAgeMs")
   }
 
   test("DedupStore near-dup: persisted sigs probe identically to the in-memory store") {

@@ -104,7 +104,7 @@ class MaintenanceSpec extends SparkSpec {
     val ref = TableRef("default.maint_lease_age")
     Seq((1L, "a")).toDF("id", "v")
       .write.mode("overwrite").saveAsTable(ref.render)
-    spark.conf.set("spark.graft.writerLease.maxAgeMs", "300")
+    spark.conf.set("spark.graft.lease.maxAgeMs", "300")
     try {
       // crashed writer: marker exists but nothing heartbeats it
       val cat = spark.sessionState.catalog
@@ -137,7 +137,7 @@ class MaintenanceSpec extends SparkSpec {
       t.join(10000)
       assert(graft.exec.WriterLease.liveWriters(spark, ref).isEmpty,
         "release must remove the marker")
-    } finally spark.conf.unset("spark.graft.writerLease.maxAgeMs")
+    } finally spark.conf.unset("spark.graft.lease.maxAgeMs")
   }
 
   test("Retry does NOT retry data-destroying or unknown failures") {
