@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Benchmark main: times every SparkEntry query (read paths AND the full
   * materialization suite) against SPARK_GRAFT_SF_DIR through Verify's suite
@@ -46,22 +47,33 @@ object Bench {
     df.write.format("noop").mode("overwrite").save()
 
   /** One pass over the suite: seconds of each query that succeeded, in suite
-    * order, and the names of those that threw. A failed query's
-    * time-to-failure measures nothing, so it never enters `seconds`. */
-  final case class Run(seconds: Seq[(String, Double)], failed: Seq[String]) {
+    * order, the classes codegen compiled while each of them ran, and the
+    * names of those that threw. A failed query's time-to-failure measures
+    * nothing, so it never enters `seconds` or `compiles`. */
+  final case class Run(seconds: Seq[(String, Double)],
+      compiles: Seq[(String, Long)], failed: Seq[String]) {
     def total: Double = seconds.map(_._2).sum
   }
+
+  /** Classes Spark's code generator has compiled in this JVM so far: each
+    * miss of its generated-class cache is one Janino compile, recorded in
+    * this histogram. */
+  def compiledClasses(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def run(spark: SparkSession, sfDir: String,
       queries: Map[String, (SparkSession, String) => DataFrame] = SparkEntry.queries): Run = {
     val timed = Verify.suite(spark, queries) { (name, fn) =>
+      val c0 = compiledClasses()
       val t0 = System.nanoTime()
-      try { evaluate(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9) }
-      catch { case e: Throwable =>
+      try {
+        evaluate(fn(spark, sfDir))
+        Some(((System.nanoTime() - t0) / 1e9, compiledClasses() - c0))
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
     }
-    Run(timed.collect { case (n, Some(s)) => n -> s },
+    Run(timed.collect { case (n, Some((s, _))) => n -> s },
+      timed.collect { case (n, Some((_, c))) => n -> c },
       timed.collect { case (n, None) => n })
   }
 
@@ -86,9 +98,14 @@ object Bench {
     s"""{"metric":"total","value":$value,"unit":"sec","queries":$qs,"failed":$failed$extra,"sf":$sf}"""
   }
 
-  /** Full-precision artifact (BENCH_FULL_latest.json): full names, 4 decimals. */
-  def fullLine(r: Run, sfDir: String): String =
-    line(r, identity, v => f"$v%.4f", f"${r.total}%.4f", Verify.q(sfDir))
+  /** Full-precision artifact (BENCH_FULL_latest.json): full names, 4
+    * decimals, and each timed query's compile count. */
+  def fullLine(r: Run, sfDir: String): String = {
+    val compiles = r.compiles.map { case (k, n) => s"${Verify.q(k)}:$n" }
+      .mkString("{", ",", "}")
+    line(r, identity, v => f"$v%.4f", f"${r.total}%.4f", Verify.q(sfDir),
+      s""","compiles":$compiles""")
+  }
 
   /** The driver keeps only the last ~2000 bytes of output, so the compact
     * line must fit in 1,950 WHOLE. Degrade in steps until it does:

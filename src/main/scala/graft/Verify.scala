@@ -39,6 +39,16 @@ object Verify {
     // default 30 min, far past a bench run; 90 s bounds the garbage
     // window at negligible GC cost.
     .config("spark.cleaner.periodicGC.interval", "90s")
+    // Compiled whole-stage-codegen classes live in one JVM-wide LRU of
+    // this many entries (static: sized once, at the first compile).
+    // Spark's default of 100 is smaller than one unit of graft work: a
+    // 16-model DAG build plus its `dbt test` pass needs ~195 distinct
+    // classes, one ingest cycle ~300 (~370 over a run), so at 100 every
+    // repeat evicted what it was about to need and compiled it all again
+    // (172-177 compiles per DAG refresh, 293-319 per ingest cycle, 4-vCPU
+    // host). At 1,000 a repeat compiles 0-18; plans, jobs and results
+    // are unchanged.
+    .config("spark.sql.codegen.cache.maxEntries", "1000")
     .config("spark.sql.warehouse.dir", {
       val wh = Files.createTempDirectory("graft_wh")
       // exit-time delete AFTER Spark's own teardown (low-priority hook on

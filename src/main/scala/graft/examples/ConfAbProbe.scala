@@ -8,7 +8,7 @@ import graft.{Bench, SparkEntry, Verify}
   * adopted from numbers, not folklore. Overrides apply at session BUILD
   * time (the shuffle codec cannot be set on a live context). Each rep is
   * one `Bench.run` over the named queries, so a rep times the same full
-  * evaluation the bench does.
+  * evaluation the bench does, and counts the classes codegen compiled.
   *
   * Usage: runMain graft.examples.ConfAbProbe <sfDir> <reps> <k=v,k=v|none> name…
   */
@@ -28,13 +28,15 @@ object ConfAbProbe {
     spark.sparkContext.setLogLevel("ERROR")
     println(s"[confab] overrides: ${if (confs.isEmpty) "none" else confs}")
     Bench.warmUp(spark, sfDir)
-    val runs = (1 to reps).map(_ => Bench.run(spark, sfDir, queries).seconds.toMap)
+    val runs = (1 to reps).map(_ => Bench.run(spark, sfDir, queries))
     names.foreach { n =>
-      val ts = runs.flatMap(_.get(n))
+      val ts = runs.flatMap(_.seconds.toMap.get(n))
+      val cs = runs.flatMap(_.compiles.toMap.get(n))
       if (ts.isEmpty) println(s"[confab] $n failed in every rep")
       else println(f"[confab] $n%-34s min ${ts.min}%7.2f s  " +
         f"median ${ts.sorted.apply(ts.size / 2)}%7.2f s  " +
-        ts.map(t => f"$t%.2f").mkString("(", ", ", ")"))
+        ts.map(t => f"$t%.2f").mkString("(", ", ", ")") +
+        cs.mkString("  compiles (", ", ", ")"))
     }
     spark.stop()
   }

@@ -261,10 +261,6 @@ object Incremental {
       .drop(GN)
   }
 
-  /** Distinct partition values the operation touches: the source's partition
-    * values ∪ the partition values of target rows matched by source keys
-    * (column-pruned scan of keys+partition cols only). Returned as
-    * ''-joined strings; None for unpartitioned targets. */
   /** Above this many touched partitions, partition-scoped rewriting stops
     * paying: the driver-side key set and the isin pruning expression both
     * grow O(|touched|) (an in-list over 10⁵ hourly×tenant partitions is an
@@ -276,6 +272,10 @@ object Incremental {
     spark.conf.getOption("spark.graft.touchedPartitions.cap")
       .map(_.toInt).getOrElse(5000)
 
+  /** Distinct partition values the operation touches: the source's partition
+    * values ∪ the partition values of target rows matched by source keys
+    * (column-pruned scan of keys+partition cols only). Returned as
+    * ''-joined strings; None for unpartitioned targets. */
   private def touchedPartitions(spark: SparkSession, tgt: DataFrame,
       srcP: DataFrame, uniqueKey: Seq[String],
       partition: PartitionSpec): Option[Set[String]] = {

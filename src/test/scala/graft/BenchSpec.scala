@@ -22,6 +22,21 @@ class BenchSpec extends SparkSpec {
     }
   }
 
+  test("the full line carries every timed query's compile count; the compact line none") {
+    // a constant no other plan in this JVM holds: its class is compiled here
+    val k = System.nanoTime()
+    val queries = Map[String, (SparkSession, String) => DataFrame](
+      "a01_new" -> ((s, _) => s.range(10).selectExpr(s"id * $k AS x")),
+      "b01_boom" -> ((s, _) => s.range(10).selectExpr("raise_error('boom') AS x")),
+      "c01_ok" -> ((s, _) => s.range(10).toDF("id")))
+    val r = Bench.run(spark, "unused", queries)
+    assert(r.compiles.map(_._1) == r.seconds.map(_._1))
+    assert(r.compiles.head._2 >= 1, r.compiles)
+    val counts = r.compiles.map { case (n, c) => s""""$n":$c""" }.mkString(",")
+    assert(Bench.fullLine(r, "/data/sf0.1").contains(s""""compiles":{$counts}"""))
+    assert(!Bench.compactLine(r, "/data/sf0.1").contains("compiles"))
+  }
+
   test("only a full-suite run writes BENCH_FULL_latest.json; a subset leaves it alone") {
     assert(Bench.artifactPath(None) == Some("BENCH_FULL_latest.json"))
     assert(Bench.artifactPath(Some(Set("s05_cosine_topk_ivf"))).isEmpty)
