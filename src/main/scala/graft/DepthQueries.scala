@@ -1261,7 +1261,8 @@ object DepthQueries {
     * odd-id half, with the even half indexed): no drift while the batch
     * statistic stays within 20× of the calibration split's; the planted
     * +0.5-per-dimension shift (a different embedding region → different
-    * cells, chi² ∝ n) must exceed it. DriftDialProbe measured the dial:
+    * cells, chi² ∝ n) must exceed it. DriftDialProbe (retired,
+    * `git show 82306df:src/main/scala/graft/examples/DriftDialProbe.scala`) measured the dial:
     * calibration chi² 5.6 / 4.9 / 4.8 / 9.3 / 1469.6 at sf0.001→sf10
     * (the sf10 jump IS the ~100-copy inflation), shift/calibration
     * ratios 51 / 78 / 273 / 1414 / 99.7 — factor 20 keeps ≥ 2.5× margin

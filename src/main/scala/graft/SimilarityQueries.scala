@@ -203,7 +203,8 @@ private[graft] object SimilarityQueries {
   /** Approximate k-NN graph — [[Similarity.knnGraph]], SELF-VERIFYING:
     * mean recall of the per-node exact top-5 edge set (brute-force twin,
     * labeled oracle-scale — the graph itself never leaves cell-local
-    * work + bounded heaps) gated at 0.6. Dials from the KnnDial sweep:
+    * work + bounded heaps) gated at 0.6. Dials from the KnnDial sweep
+    * (retired, `git show 82306df:src/main/scala/graft/examples/KnnDial.scala`):
     * (nlist=16, nprobe=4) measures 0.948/0.944 recall at sf0.01/sf0.1 —
     * recall tracks the cell geometry, not the corpus size. nlist DERIVES
     * from the corpus (~125 rows per cell, the capSample move): a fixed
@@ -634,7 +635,8 @@ private[graft] object SimilarityQueries {
     * ([[Similarity.jlTopK]]), SELF-VERIFYING like s05/s07: recall@5 vs
     * the brute-force twin, gated at 0.6. 64 → 32 dims halves the scan
     * arithmetic/bandwidth; rerank=16 re-scores the top 80 projected
-    * candidates per query at full width. JlDialProbe on these UNIFORM
+    * candidates per query at full width. JlDialProbe (retired,
+    * `git show 82306df:src/main/scala/graft/examples/JlDialProbe.scala`) on these UNIFORM
     * embeddings (the JL worst case — no cluster margin between true
     * neighbors and the pack) measures 0.76 / 0.88 at sf0.001 / sf0.01;
     * real embedding corpora cluster, buying more recall at smaller

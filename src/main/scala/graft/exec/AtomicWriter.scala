@@ -35,7 +35,7 @@ import graft.functions.Fns
 object AtomicWriter {
 
   /** Separator joining multi-column partition values in `touched` sets
-    * (shared with Incremental/Mutations' touched-partition scans). */
+    * (see [[touchedKeys]]). */
   private[graft] val SEP = "\u0001"
 
   /** Hive's directory name for the NULL (and empty-string) partition value —
@@ -282,6 +282,47 @@ object AtomicWriter {
     }
     if (staleListings) spark.sql(s"REFRESH TABLE ${target.render}")
   }
+
+  /** The partitions a row-level write touches: the distinct
+    * [[partitionKey]] values of `keys` (a frame carrying the target's
+    * partition columns), collected once. None for an unpartitioned target,
+    * without running a job, and None past the cap: above it,
+    * partition-scoped rewriting stops paying, since the driver-side key set
+    * and the isin pruning expression both grow O(|touched|) (an in-list
+    * over 10⁵ hourly×tenant partitions is an expression-tree blowup, and
+    * the collect bloats the driver); at that point most of the table is
+    * touched anyway, and [[rewrite]] swaps the whole table instead.
+    * Tunable via `spark.graft.touchedPartitions.cap` (default 5000). */
+  def touchedKeys(spark: SparkSession, partition: PartitionSpec,
+      keys: DataFrame): Option[Set[String]] = {
+    val pcols = partition.partitionColumns
+    if (pcols.isEmpty) return None
+    val cap = spark.conf.getOption("spark.graft.touchedPartitions.cap")
+      .map(_.toInt).getOrElse(5000)
+    val got = keys.select(partitionKey(pcols.map(keys(_))).as("p")).distinct()
+      .limit(cap + 1).collect().map(_.getString(0))
+    if (got.length > cap) None else Some(got.toSet)
+  }
+
+  /** Commit a row-level rewrite (merge, delete+insert, DELETE, UPDATE):
+    * `rows` is the target's new content for the `touched` partitions, as
+    * [[touchedKeys]] returned them. None (unpartitioned, or past the cap)
+    * swaps the whole table, keeping its bucket spec; an empty set writes
+    * nothing; otherwise only the touched partitions are staged and
+    * committed, and a touched partition left without rows is dropped. */
+  def rewrite(spark: SparkSession, rows: DataFrame, target: TableRef,
+      partition: PartitionSpec, touched: Option[Set[String]]): Unit =
+    touched match {
+      case None =>
+        overwriteTable(spark, rows, target, partition,
+          currentBucketing(spark, target))
+      case Some(parts) if parts.isEmpty =>
+      case Some(parts) =>
+        val inTouched =
+          partitionKey(partition.partitionColumns.map(col)).isin(parts.toSeq: _*)
+        overwritePartitions(spark, rows.filter(inTouched), target, partition,
+          Some(parts))
+    }
 
   /** Plain append (`INSERT INTO`), position-based, partition cols last. */
   def append(spark: SparkSession, df: DataFrame, target: TableRef,

@@ -3,7 +3,6 @@ package graft.exec
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.{PartitionSpec, TableRef}
-import graft.functions.Fns
 
 /** The five incremental-update strategies of the reference
   * (macros/materializations/incremental/), re-expressed as join rewrites on
@@ -14,13 +13,12 @@ import graft.functions.Fns
   *    unavoidable without a lakehouse format; on a PARTITIONED table we
   *    compute the touched-partition set (source partitions ∪ partitions of
   *    matched target rows, via a column-pruned key scan) and rewrite only
-  *    those partitions with dynamic partition-overwrite.
+  *    those partitions, through [[AtomicWriter.rewrite]].
   *  - the source side of a merge is typically ≪ target; AQE/broadcast picks
   *    broadcast-hash for the anti/inner joins automatically.
   */
 object Incremental {
 
-  private val SEP = AtomicWriter.SEP
   private val PRED = "__graft_pred"
   private val SMARK = "__graft_src"
 
@@ -68,6 +66,10 @@ object Incremental {
       predicates: Seq[Column] = Nil): Unit = {
     if (uniqueKey.isEmpty) { AtomicWriter.append(spark, src, target, partition); return }
     val tgt = spark.table(target.render)
+    // MERGE … UPDATE SET rejects an unknown column; so does updateColumns
+    val missing = updateColumns.filterNot(tgt.columns.contains)
+    require(missing.isEmpty,
+      s"merge: updateColumns ${missing.mkString(", ")} not in ${target.render}")
     // standard MERGE raises on multi-match; silently fanning the target row
     // out (one copy per duplicate source key) would permanently duplicate
     // "unique"-keyed rows and compound on every later merge. The guard RIDES
@@ -134,7 +136,7 @@ object Incremental {
           .select(dataCols.map(col): _*)
         upserted.unionByName(inserted)
       }
-      writeResult(spark, result, target, partition, touched)
+      AtomicWriter.rewrite(spark, result, target, partition, touched)
     } finally srcP.unpersist()
   }
 
@@ -159,7 +161,8 @@ object Incremental {
         keyCond(tgtF, srcP, uniqueKey) && tgtF(PRED), "left_anti")
         .select(tgt.columns.map(col).toIndexedSeq: _*)
       val inserted = srcP.select(tgt.columns.map(col).toIndexedSeq: _*)
-      writeResult(spark, kept.unionByName(inserted), target, partition, touched)
+      AtomicWriter.rewrite(spark, kept.unionByName(inserted), target, partition,
+        touched)
     } finally srcP.unpersist()
   }
 
@@ -261,58 +264,21 @@ object Incremental {
       .drop(GN)
   }
 
-  /** Above this many touched partitions, partition-scoped rewriting stops
-    * paying: the driver-side key set and the isin pruning expression both
-    * grow O(|touched|) (an in-list over 10⁵ hourly×tenant partitions is an
-    * expression-tree blowup, and the collect bloats the driver). Past the
-    * cap the strategies fall back to the whole-table staged rewrite — at
-    * that point most of the table is touched anyway. Tunable via
-    * `spark.graft.touchedPartitions.cap`. */
-  private[graft] def touchedCap(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.touchedPartitions.cap")
-      .map(_.toInt).getOrElse(5000)
-
-  /** Distinct partition values the operation touches: the source's partition
-    * values ∪ the partition values of target rows matched by source keys
-    * (column-pruned scan of keys+partition cols only). Returned as
-    * ''-joined strings; None for unpartitioned targets. */
+  /** Partitions the operation touches ([[AtomicWriter.touchedKeys]]): the
+    * source's partition values ∪ the partition values of target rows
+    * matched by source keys (column-pruned scan of keys + partition cols
+    * only). ONE distinct over the union: aggregate partial-combine dedups
+    * map-side before the shuffle, and the semi join neither multiplies rows
+    * nor needs a pre-distinct right side (broadcast-hash builds dedup) —
+    * the inner distincts this used to do were two extra full shuffles. */
   private def touchedPartitions(spark: SparkSession, tgt: DataFrame,
       srcP: DataFrame, uniqueKey: Seq[String],
       partition: PartitionSpec): Option[Set[String]] = {
     val pcols = partition.partitionColumns
-    if (pcols.isEmpty) return None
-    def pkey(df: DataFrame): Column =
-      AtomicWriter.partitionKey(pcols.map(df(_)))
-    // ONE distinct at the end: aggregate partial-combine dedups map-side
-    // before the shuffle, and the semi join neither multiplies rows nor
-    // needs a pre-distinct right side (broadcast-hash builds dedup) — the
-    // inner distincts this used to do were two extra full shuffles
-    val fromSrc = srcP.select(pkey(srcP).as("p"))
-    val matchedTgt = tgt
-      .join(srcP.select(uniqueKey.map(srcP(_)): _*),
-        keyCond(tgt, srcP, uniqueKey), "left_semi")
-      .select(pkey(tgt).as("p"))
-    val cap = touchedCap(spark)
-    val keys = fromSrc.union(matchedTgt).distinct()
-      .limit(cap + 1).collect().map(_.getString(0))
-    if (keys.length > cap) None else Some(keys.toSet)
+    val matchedTgt = tgt.join(srcP.select(uniqueKey.map(srcP(_)): _*),
+      keyCond(tgt, srcP, uniqueKey), "left_semi")
+    AtomicWriter.touchedKeys(spark, partition,
+      srcP.select(pcols.map(srcP(_)): _*)
+        .union(matchedTgt.select(pcols.map(tgt(_)): _*)))
   }
-
-  /** Partitioned targets: prune the result to the touched partitions and
-    * dynamic-overwrite only those; unpartitioned: whole-table staged swap. */
-  private def writeResult(spark: SparkSession, result: DataFrame,
-      target: TableRef, partition: PartitionSpec,
-      touched: Option[Set[String]]): Unit =
-    (partition, touched) match {
-      case (PartitionSpec.None, _) | (_, None) =>
-        AtomicWriter.overwriteTable(spark, result, target, partition,
-          AtomicWriter.currentBucketing(spark, target))
-      case (p, Some(parts)) =>
-        val pcols = p.partitionColumns
-        val pruned = result.filter(
-          AtomicWriter.partitionKey(pcols.map(col)).isin(parts.toSeq: _*))
-        // pass the touched set so partitions the op fully emptied (e.g.
-        // every row's key deleted and re-inserted elsewhere) get dropped
-        AtomicWriter.overwritePartitions(spark, pruned, target, p, Some(parts))
-    }
 }

@@ -119,8 +119,7 @@ object Layout {
     val spark = df.sparkSession
     val target = new HPath(path)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val stamp = f"${System.currentTimeMillis()}%013d_${
-      new java.security.SecureRandom().nextInt(1000000)}%06d"
+    val stamp = Committer.newStamp()
     val staged = new HPath(target.getParent,
       s".${target.getName}_zw_$stamp")
     // the layout stats are COLLECTED once (4 longs — the one bounded
@@ -309,8 +308,7 @@ object Layout {
       s => s.getPath.getName.stripPrefix("tile-").takeWhile(_.isDigit).toLong
     val oldByTile = tileFiles.filter(s => touched.contains(tileIdOf(s)))
       .groupBy(tileIdOf)
-    val stamp = f"${System.currentTimeMillis()}%013d_${
-      new java.security.SecureRandom().nextInt(1000000)}%06d"
+    val stamp = Committer.newStamp()
     // stage ONLY the slab rows, z-sorted, one file per touched tile —
     // stored tile rows never enter a Spark plan on the merge path
     val stagedNew = new HPath(target.getParent, s".${target.getName}_zi_$stamp")
@@ -443,8 +441,7 @@ object Layout {
     import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val stamp = f"${System.currentTimeMillis()}%013d_${
-      new java.security.SecureRandom().nextInt(1000000)}%06d"
+    val stamp = Committer.newStamp()
     val staged = new HPath(p.getParent, s".${p.getName}_zstage_$stamp")
     // the staged write completes BEFORE the live dir is touched (the scan
     // of `path` is fully consumed by the write action)

@@ -1,16 +1,16 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.catalog.{PartitionSpec, TableRef}
 
 /** Row-level DELETE / UPDATE / TRUNCATE on parquet tables — the reference's
   * transactional-table operations (`tblproperties("transactional"="true")`,
   * exercised by test_core.py:1128-1140) re-expressed as scoped rewrites:
-  *
-  *  - on a PARTITIONED table, only partitions containing affected rows are
-  *    rewritten (predicate → touched-partition scan → dynamic overwrite);
-  *  - unpartitioned tables take the staged whole-table swap.
+  * each operation builds its affected rows' key frame for
+  * [[AtomicWriter.touchedKeys]] and commits through [[AtomicWriter.rewrite]],
+  * so on a PARTITIONED table only partitions containing affected rows are
+  * rewritten, and unpartitioned tables take the staged whole-table swap.
   *
   * TRUNCATE is the catalog operation (adapters.sql:6-12).
   */
@@ -18,78 +18,37 @@ object Mutations {
 
   /** DELETE FROM target WHERE pred. SQL DELETE removes only rows where the
     * predicate is TRUE — rows where it evaluates NULL survive, so the
-    * survivor filter is `NOT coalesce(pred, false)`, not `!pred` (3VL). */
+    * survivor filter is `NOT coalesce(pred, false)`, not `!pred` (3VL).
+    * A partition whose every row is deleted is dropped, not left with its
+    * old files. */
   def delete(spark: SparkSession, target: TableRef, pred: Column,
       partition: PartitionSpec = PartitionSpec.None): Unit = {
     val tgt = spark.table(target.render)
-    val survives = !coalesce(pred, lit(false))
-    partition.partitionColumns match {
-      case Nil =>
-        AtomicWriter.overwriteTable(spark, tgt.filter(survives), target,
-          partition, AtomicWriter.currentBucketing(spark, target))
-      case pcols =>
-        // NULL-safe: touched keys use the canonical partitionKey encoding
-        // (NULL → default-partition sentinel), so deleting from a NULL
-        // partition neither NPEs nor escapes the emptied-partition cleanup
-        val key = AtomicWriter.partitionKey(pcols.map(col))
-        touchedSet(spark, tgt, pred, key) match {
-          case None => // past the cap: whole-table rewrite (see touchedCap)
-            AtomicWriter.overwriteTable(spark, tgt.filter(survives), target,
-              partition, AtomicWriter.currentBucketing(spark, target))
-          case Some(touched) if touched.nonEmpty =>
-            // declare the touched set so a partition whose every row is
-            // deleted ends up DROPPED, not silently left with its old files
-            AtomicWriter.overwritePartitions(spark,
-              tgt.filter(key.isin(touched.toSeq: _*) && survives), target,
-              partition, Some(touched))
-          case _ => // predicate matched nothing
-        }
-    }
-  }
-
-  /** Distinct partition keys of rows matched by `pred`, capped by
-    * [[Incremental.touchedCap]]: None past the cap — callers then rewrite
-    * the whole table instead of building an O(|touched|) in-list. */
-  private def touchedSet(spark: SparkSession,
-      tgt: org.apache.spark.sql.DataFrame, pred: Column,
-      key: Column): Option[Set[String]] = {
-    val cap = Incremental.touchedCap(spark)
-    val keys = tgt.filter(pred).select(key.as("p")).distinct()
-      .limit(cap + 1).collect().map(_.getString(0))
-    if (keys.length > cap) None else Some(keys.toSet)
+    AtomicWriter.rewrite(spark, tgt.filter(!coalesce(pred, lit(false))), target,
+      partition, AtomicWriter.touchedKeys(spark, partition, tgt.filter(pred)))
   }
 
   /** UPDATE target SET assignments WHERE pred. Partition columns may not be
     * assigned (rows never move across partitions — same discipline as the
-    * reference's merge, merge.sql:7-16). */
+    * reference's merge, merge.sql:7-16), and, as in SQL UPDATE … SET, every
+    * assigned column must exist. */
   def update(spark: SparkSession, target: TableRef,
       assignments: Map[String, Column], pred: Column,
       partition: PartitionSpec = PartitionSpec.None): Unit = {
     val pset = partition.partitionColumns.toSet
     require(!assignments.keys.exists(pset), "cannot assign partition columns")
     val tgt = spark.table(target.render)
-    def applied = tgt.select(tgt.columns.map { c =>
+    val missing = assignments.keys.filterNot(tgt.columns.contains)
+    require(missing.isEmpty,
+      s"update: ${missing.toSeq.sorted.mkString(", ")} not in ${target.render}")
+    val applied = tgt.select(tgt.columns.map { c =>
       assignments.get(c) match {
         case Some(v) => when(pred, v).otherwise(col(c)).as(c)
         case None => col(c)
       }
     }.toIndexedSeq: _*)
-    partition.partitionColumns match {
-      case Nil =>
-        AtomicWriter.overwriteTable(spark, applied, target, partition,
-          AtomicWriter.currentBucketing(spark, target))
-      case pcols =>
-        val key = AtomicWriter.partitionKey(pcols.map(col))
-        touchedSet(spark, tgt, pred, key) match {
-          case None =>
-            AtomicWriter.overwriteTable(spark, applied, target, partition,
-              AtomicWriter.currentBucketing(spark, target))
-          case Some(touched) if touched.nonEmpty =>
-            AtomicWriter.overwritePartitions(spark,
-              applied.filter(key.isin(touched.toSeq: _*)), target, partition)
-          case _ =>
-        }
-    }
+    AtomicWriter.rewrite(spark, applied, target, partition,
+      AtomicWriter.touchedKeys(spark, partition, tgt.filter(pred)))
   }
 
   /** DELETE FROM target WHERE (key...) IN (keys) with the key set arriving
@@ -99,14 +58,14 @@ object Mutations {
     * in-list [[delete]]'s predicate would need. The survivor set is one
     * distributed left-anti join (hash build dedups the key frame, AQE
     * broadcasts a churn-sized one); on a partitioned table only partitions
-    * actually containing matched keys are rewritten (semi-join touched
-    * scan, same cap-and-fallback discipline as [[delete]]).
+    * actually containing matched keys are rewritten (semi-join key frame,
+    * same cap-and-fallback discipline as [[delete]]).
     *
     * Key matching is null-safe (`<=>`): a NULL key component matches a NULL
     * target component — the key frame SAYS to delete that row. Callers who
     * want SQL IN's NULL-never-matches semantics should filter NULL keys out
     * of the frame first. */
-  def deleteKeys(spark: SparkSession, target: TableRef, keys: org.apache.spark.sql.DataFrame,
+  def deleteKeys(spark: SparkSession, target: TableRef, keys: DataFrame,
       keyCols: Seq[String], partition: PartitionSpec = PartitionSpec.None): Unit = {
     require(keyCols.nonEmpty, "deleteKeys needs at least one key column")
     val tgt = spark.table(target.render)
@@ -114,26 +73,10 @@ object Mutations {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       def cond = keyCols.map(c => tgt(c) <=> k(c)).reduce(_ && _)
-      def kept = tgt.join(k, cond, "left_anti")
+      val kept = tgt.join(k, cond, "left_anti")
         .select(tgt.columns.map(col).toIndexedSeq: _*)
-      partition.partitionColumns match {
-        case Nil =>
-          AtomicWriter.overwriteTable(spark, kept, target, partition,
-            AtomicWriter.currentBucketing(spark, target))
-        case pcols =>
-          val key = AtomicWriter.partitionKey(pcols.map(col))
-          val cap = Incremental.touchedCap(spark)
-          val touched = tgt.join(k, cond, "left_semi")
-            .select(key.as("p")).distinct()
-            .limit(cap + 1).collect().map(_.getString(0))
-          if (touched.length > cap)
-            AtomicWriter.overwriteTable(spark, kept, target, partition,
-              AtomicWriter.currentBucketing(spark, target))
-          else if (touched.nonEmpty)
-            AtomicWriter.overwritePartitions(spark,
-              kept.filter(key.isin(touched.toSeq: _*)), target, partition,
-              Some(touched.toSet))
-      }
+      AtomicWriter.rewrite(spark, kept, target, partition,
+        AtomicWriter.touchedKeys(spark, partition, tgt.join(k, cond, "left_semi")))
     } finally k.unpersist()
   }
 

@@ -787,7 +787,9 @@ object IndexStore {
     * stat file per append). The third leg is load-bearing on real
     * corpora: duplicate clusters (the ~100-copy boilerplate)
     * multiply between-batch sampling noise by the duplication factor —
-    * AutoRotateDialProbe measured the stale-batch statistic at 3.9 /
+    * AutoRotateDialProbe (retired,
+    * `git show 82306df:src/main/scala/graft/examples/AutoRotateDialProbe.scala`)
+    * measured the stale-batch statistic at 3.9 /
     * 5.9 / 71 / 1880 across sf0.001→sf10 while the id-hash halves
     * (which split every copy-cluster evenly) stayed ≈ dof, so an
     * iid-only dial false-fires at scale; the prior-batch yardstick is
@@ -895,7 +897,9 @@ object IndexStore {
         // total-variation distance over cell SHARES can: TV is scale-free,
         // centered on the true distributional distance at any duplication
         // level (duplication widens only its noise floor, by √copies).
-        // DriftSeparatorProbe measured same-dist TV ≤ 0.136 and drifted
+        // DriftSeparatorProbe (retired,
+        // `git show 82306df:src/main/scala/graft/examples/DriftSeparatorProbe.scala`)
+        // measured same-dist TV ≤ 0.136 and drifted
         // TV ≥ 0.507 across sf0.001→sf10 (1×→100× duplication) — floor
         // 0.3 holds ≥ 2.2× margin against a false warm-up rotation and
         // ≥ 1.69× against a missed one (which appends gracefully and

@@ -152,46 +152,44 @@ object Streaming {
           try {
             val batchP = graft.exec.AtomicWriter.withPartitionCols(batch, partition)
             val key = graft.exec.AtomicWriter.partitionKey(pcols.map(col))
-            val cap = Incremental.touchedCap(spark)
-            val keysDf = batchP.select(key.as("p")).distinct()
-            val probe = keysDf.limit(cap + 1).collect().map(_.getString(0))
+            val touched = graft.exec.AtomicWriter.touchedKeys(spark, partition, batchP)
             val tmp = new HPath(stateDir, s".done-$id.tmp")
-            if (probe.length <= cap) {
-              val keys = probe.toSet
-              val overlap = keys.intersect(written)
-              val df =
-                if (overlap.isEmpty) batchP
-                else batchP.unionByName(spark.table(target.render)
-                  .filter(key.isin(overlap.toSeq: _*)))
-              Incremental.insertOverwriteDynamic(spark, target, df, partition)
-              // marker written via create+rename so it appears atomically
-              val out = fs.create(tmp, true)
-              try out.write(keys.mkString("\n").getBytes("UTF-8"))
-              finally out.close()
-            } else {
-              // WIDE batch (> touchedCap partitions, e.g. hourly × tenant
-              // backfill): the key set never lands on the driver or in an
-              // isin expression tree. Overlap = target semi-joined against
-              // (batch keys ∩ already-written keys); the done marker is
-              // written by the executors as a text-file DIRECTORY.
-              import spark.implicits._
-              val writtenDf = written.toSeq.toDF("p")
-              val overlapKeys = keysDf.join(writtenDf, Seq("p"), "left_semi")
-              val tgt = spark.table(target.render)
-              val tgtOverlap = tgt.join(overlapKeys,
-                graft.exec.AtomicWriter.partitionKey(pcols.map(tgt(_)))
-                  === overlapKeys("p"), "left_semi")
-              Incremental.insertOverwriteDynamic(spark, target,
-                batchP.unionByName(tgtOverlap), partition)
-              keysDf.write.mode("overwrite").text(tmp.toString)
+            touched match {
+              case Some(keys) =>
+                val overlap = keys.intersect(written)
+                val df =
+                  if (overlap.isEmpty) batchP
+                  else batchP.unionByName(spark.table(target.render)
+                    .filter(key.isin(overlap.toSeq: _*)))
+                Incremental.insertOverwriteDynamic(spark, target, df, partition)
+                // marker written via create+rename so it appears atomically
+                val out = fs.create(tmp, true)
+                try out.write(keys.mkString("\n").getBytes("UTF-8"))
+                finally out.close()
+              case None =>
+                // WIDE batch (past the touched-partition cap, e.g. hourly ×
+                // tenant backfill): the key set never lands on the driver or
+                // in an isin expression tree. Overlap = target semi-joined
+                // against (batch keys ∩ already-written keys); the done marker
+                // is written by the executors as a text-file DIRECTORY.
+                import spark.implicits._
+                val keysDf = batchP.select(key.as("p")).distinct()
+                val writtenDf = written.toSeq.toDF("p")
+                val overlapKeys = keysDf.join(writtenDf, Seq("p"), "left_semi")
+                val tgt = spark.table(target.render)
+                val tgtOverlap = tgt.join(overlapKeys,
+                  graft.exec.AtomicWriter.partitionKey(pcols.map(tgt(_)))
+                    === overlapKeys("p"), "left_semi")
+                Incremental.insertOverwriteDynamic(spark, target,
+                  batchP.unionByName(tgtOverlap), partition)
+                keysDf.write.mode("overwrite").text(tmp.toString)
             }
             if (!fs.rename(tmp, done(id)))
               throw new java.io.IOException(s"cannot commit marker ${done(id)}")
             fs.delete(attempt(id), false)
             // the wide path re-reads the marker it just wrote (bounded MBs,
             // line-per-key) instead of ever collecting the keys as a set
-            if (probe.length <= cap) written ++= probe
-            else written ++= readKeys(done(id))
+            written ++= touched.getOrElse(readKeys(done(id)))
             ()
           } catch {
             case e: Throwable =>

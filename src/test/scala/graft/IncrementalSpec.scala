@@ -134,6 +134,33 @@ class IncrementalSpec extends SparkSpec {
       "untouched partition p02 was rewritten")
   }
 
+  test("partitioned merge and delete+insert of an empty delta leave every file in place") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = fresh(part)
+    def files(): Map[String, Long] = {
+      val ident = spark.sessionState.sqlParser
+        .parseTableIdentifier(ref.render.replace("`", ""))
+      val loc = new java.io.File(new java.net.URI(
+        spark.sessionState.catalog.getTableMetadata(ident).location.toString))
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
+        else Seq(f)
+      walk(loc).map(f => loc.toPath.relativize(f.toPath).toString -> f.lastModified)
+        .toMap
+    }
+    def partitions(): Seq[String] =
+      spark.sql(s"SHOW PARTITIONS ${ref.render}").as[String].collect().sorted.toSeq
+    val (filesBefore, partsBefore, rowsBefore) = (files(), partitions(), idsAndNames(ref))
+    assert(filesBefore.nonEmpty)
+    Incremental.merge(spark, ref, delta().limit(0), uniqueKey = Seq("id"),
+      partition = part)
+    Incremental.deleteInsert(spark, ref, delta().limit(0), uniqueKey = Seq("id"),
+      partition = part)
+    assert(files() == filesBefore)
+    assert(partitions() == partsBefore)
+    assert(idsAndNames(ref) == rowsBefore)
+  }
+
   test("merge update-column subsetting and exclusion") {
     val ref = fresh(PartitionSpec.None)
     val d = Seq((5L, "EveX", "2099-01-01", "pXX"))
@@ -144,6 +171,17 @@ class IncrementalSpec extends SparkSpec {
     val r5 = spark.table(ref.render).filter($"id" === 5).collect().head
     assert(r5.getAs[String]("name") == "EveX")
     assert(r5.getAs[String]("pt") == "p05") // untouched: not in update set
+  }
+
+  test("merge updateColumns naming a column the target lacks fails and writes nothing") {
+    val ref = fresh(PartitionSpec.None)
+    val e = intercept[IllegalArgumentException] {
+      Incremental.merge(spark, ref, delta(), uniqueKey = Seq("id"),
+        updateColumns = Seq("name", "nope"))
+    }
+    assert(e.getMessage.contains("nope"), e.getMessage)
+    assert(idsAndNames(ref) == seed().select($"id", $"name").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq)
   }
 
   test("merge with no unique key degrades to append (ref merge.sql:52-58)") {

@@ -752,7 +752,9 @@ class IndexStoreSpec extends SparkSpec {
     // the very first post-bootstrap batch. Chi² alone cannot fire here
     // (no yardstick, and its magnitude is duplication-ambiguous); the
     // TV-over-shares statistic can, because this batch's mass actually
-    // MOVED (DriftSeparatorProbe: TV ≥ 0.507 across five scales vs
+    // MOVED (DriftSeparatorProbe, retired,
+    // `git show 82306df:src/main/scala/graft/examples/DriftSeparatorProbe.scala`:
+    // TV ≥ 0.507 across five scales vs
     // ≤ 0.136 for same-dist at up to 100× duplication).
     val alias = freshRoot()
     val e = emb.select($"vec_id", $"embedding")

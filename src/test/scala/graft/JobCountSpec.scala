@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.catalog.{PartitionSpec, TableRef}
-import graft.exec.Incremental
+import graft.exec.{Incremental, Mutations}
 import graft.mat.Materializer
 
 /** Structural guard on the write path's FIXED job count. At sf0.1 the
@@ -67,6 +67,31 @@ class JobCountSpec extends SparkSpec {
     info(s"unpartitioned merge jobs = $jobs")
     // single-pass (anti-join ∪ src) form since r5; measured 5
     assert(jobs <= 6, s"flat merge fixed job count regressed: $jobs")
+  }
+
+  test("partitioned delete and deleteKeys stay within their fixed job budgets") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    def base(name: String): TableRef = {
+      val ref = TableRef(s"default.$name")
+      Materializer.table(spark, ref,
+        (1 to 40).map(i => (i.toLong, s"v$i", s"p${i % 4}")).toDF("id", "v", "pt"),
+        part)
+      ref
+    }
+    // both touch p1 and p2: one capped touched collect, then the scoped
+    // staged write of those two partitions (measured 4 and 7)
+    val del = base("jc_delete")
+    val delJobs = countJobs { Mutations.delete(spark, del, $"id" <= 2, part) }
+    info(s"partitioned delete jobs = $delJobs")
+    assert(delJobs <= 4, s"partitioned delete job count regressed: $delJobs")
+    assert(spark.table(del.render).count() == 38)
+    val dk = base("jc_delete_keys")
+    val dkJobs = countJobs {
+      Mutations.deleteKeys(spark, dk, Seq(1L, 2L).toDF("id"), Seq("id"), part)
+    }
+    info(s"partitioned deleteKeys jobs = $dkJobs")
+    assert(dkJobs <= 7, s"partitioned deleteKeys job count regressed: $dkJobs")
+    assert(spark.table(dk.render).count() == 38)
   }
 
   test("dynamic insert_overwrite stays within its fixed job budget") {

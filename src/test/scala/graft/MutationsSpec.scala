@@ -87,6 +87,39 @@ class MutationsSpec extends SparkSpec {
     }
   }
 
+  test("partitioned update rewrites only the touched partition and keeps every partition") {
+    val part = PartitionSpec.Static(Seq("pt" -> "string"))
+    val ref = fresh(part)
+    def filesOf(p: String): Map[String, Long] = {
+      val ident = spark.sessionState.sqlParser
+        .parseTableIdentifier(ref.render.replace("`", ""))
+      val loc = new java.io.File(new java.net.URI(
+        spark.sessionState.catalog.getTableMetadata(ident).location.toString))
+      Option(new java.io.File(loc, s"pt=$p").listFiles).getOrElse(Array.empty)
+        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified).toMap
+    }
+    val p1Before = filesOf("p1")
+    Mutations.update(spark, ref, Map("v" -> lit("Z")), $"id" === 3, part)
+    assert(filesOf("p1") == p1Before, "untouched partition p1 was rewritten")
+    assert(filesOf("p2").size == 1)
+    assert(spark.sql(s"SHOW PARTITIONS ${ref.render}").as[String].collect().sorted
+      .toSeq == Seq("pt=p1", "pt=p2"))
+    assert(spark.table(ref.render).orderBy($"id").collect()
+      .map(_.getString(1)).toSeq == Seq("a", "b", "Z", "d"))
+  }
+
+  test("update naming a column the target lacks fails and writes nothing") {
+    val ref = fresh(PartitionSpec.None)
+    val e = intercept[IllegalArgumentException] {
+      Mutations.update(spark, ref, Map("v" -> lit("Z"), "nope" -> lit("x")),
+        $"id" === 3)
+    }
+    assert(e.getMessage.contains("nope"), e.getMessage)
+    assert(spark.table(ref.render).orderBy($"id").collect()
+      .map(_.getString(1)).toSeq == Seq("a", "b", "c", "d"))
+  }
+
   test("delete with no matching rows is a no-op") {
     val part = PartitionSpec.Static(Seq("pt" -> "string"))
     val ref = fresh(part)

@@ -184,7 +184,8 @@ class RecallSpec extends SparkSpec {
     val q = emb.filter($"vec_id" < 10)
     // 64 → 32 dims, top rerank·k = 80 projected candidates re-scored at
     // full width. Uniform embeddings are the JL worst case (no cluster
-    // margin between true neighbors and the pack) — JlDialProbe measures
+    // margin between true neighbors and the pack) — JlDialProbe (retired,
+    // `git show 82306df:src/main/scala/graft/examples/JlDialProbe.scala`) measured
     // 0.76 at sf0.001 with these dials; the s11 gate is 0.6.
     val got = Similarity.jlTopK(emb, q, k = 5, dim = 64, outDim = 32,
       rerank = 16)

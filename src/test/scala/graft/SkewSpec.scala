@@ -71,6 +71,35 @@ class SkewSpec extends SparkSpec {
       // DELETE past the cap empties partitions via the whole-table path
       Mutations.delete(spark, ref, $"id" <= 4, part)
       assert(spark.table(ref.render).count() == 4)
+      // the whole-table path rewrites even partitions the operation does
+      // not touch: p8's file names change only on the fallback
+      def filesOf(p: String): Set[String] = {
+        val ident = spark.sessionState.sqlParser
+          .parseTableIdentifier("default.skew_capfall")
+        val loc = new java.io.File(new java.net.URI(
+          spark.sessionState.catalog.getTableMetadata(ident).location.toString))
+        Option(new java.io.File(loc, s"pt=$p").listFiles).getOrElse(Array.empty)
+          .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
+      }
+      // delete+insert re-inserting ids 1..4 touches 4 partitions > cap=3
+      val p8Before = filesOf("p8")
+      assert(p8Before.nonEmpty)
+      val back = (1 to 4).map(i => (i.toLong, s"B$i", s"p$i")).toDF("id", "v", "pt")
+      Incremental.deleteInsert(spark, ref, back, uniqueKey = Seq("id"), partition = part)
+      val got3 = spark.table(ref.render).select("id", "v").as[(Long, String)]
+        .collect().sortBy(_._1).toSeq
+      assert(got3 == (1 to 4).map(i => (i.toLong, s"B$i")) ++ got2.drop(4))
+      assert(filesOf("p8") != p8Before, "delete+insert past the cap stayed scoped")
+      // deleteKeys of ids 1..4 touches 4 partitions > cap=3; the emptied
+      // partitions disappear with the whole-table rewrite
+      val p8Mid = filesOf("p8")
+      Mutations.deleteKeys(spark, ref, (1 to 4).map(_.toLong).toDF("id"),
+        Seq("id"), part)
+      assert(spark.table(ref.render).select("id").as[Long].collect().sorted.toSeq ==
+        (5 to 8).map(_.toLong))
+      assert(spark.sql("SHOW PARTITIONS default.skew_capfall").as[String]
+        .collect().sorted.toSeq == (5 to 8).map(i => s"pt=p$i"))
+      assert(filesOf("p8") != p8Mid, "deleteKeys past the cap stayed scoped")
     } finally spark.conf.unset("spark.graft.touchedPartitions.cap")
   }
 }
