@@ -798,9 +798,7 @@ object DepthQueries {
     def files(): Map[String, (Long, Long)] = {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      fs.listStatus(p).toSeq.filter(f => f.isFile &&
-          !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
+      fs.listStatus(p).toSeq.filter(graft.exec.AtomicWriter.isDataFile)
         .map(f => f.getPath.getName -> (f.getLen, f.getModificationTime))
         .toMap
     }

@@ -24,13 +24,7 @@ private[graft] object LlmShared {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft_${prefix}_" +
       dir.replaceAll("[^A-Za-z0-9]", "_") +
       s"_${ProcessHandle.current().pid()}"
-    if (stagingRegistered.add(path))
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def del(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-        }
-        del(new java.io.File(path))
-      }))
+    if (stagingRegistered.add(path)) Verify.deleteAtExit(path)
     path
   }
 

@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
 import graft.catalog.{PartitionSpec, TableRef}
 import graft.exec.{Incremental, SnapshotExec}
+import graft.streaming.Streaming
 import graft.mat.{Materializer, SeedLoader}
 import graft.mat.Materializer.IncrementalStrategy
 
@@ -28,23 +31,87 @@ object MatQueries {
     * runs must not accumulate /tmp garbage across processes (the j01/j02
     * staging lesson, applied to the per-call sites). */
   private[graft] def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    // LOW-priority hook on Hadoop's ordered shutdown manager: a plain
-    // Runtime hook runs CONCURRENTLY with Spark's own shutdown, which can
-    // still be flushing checkpoint/stream state into these dirs — the
-    // delete silently loses the race and the dir survives (observed).
-    // Priority 1 runs after Spark's (priority ≥ 30) teardown completes.
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-      new Runnable {
-        def run(): Unit = {
-          def del(f: java.io.File): Unit = {
-            Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-          }
-          del(p.toFile)
-        }
-      }, 1)
-    p.toString
+    val p = java.nio.file.Files.createTempDirectory(prefix).toString
+    Verify.deleteAtExit(p)
+    p
   }
+
+  // ------------------------------------- the streaming store replay proof
+
+  /** Land `slabs` as a file-stream backlog under `base/src`: slab k becomes
+    * `filesPerSlab` parquet files (`coalesce(1)` for one; `repartition`
+    * for more, which keeps a wide slab's staging write parallel), each
+    * stamped mtime (k+1)·600,000 ms. The file source drains by mtime, so
+    * with `maxFilesPerTrigger = filesPerSlab` slab k IS micro-batch k.
+    * `first` numbers the slabs from there, for a backlog landed one slab
+    * at a time. Returns the slab schema for the stream reader. */
+  private[graft] def landSlabs(base: String, slabs: Seq[DataFrame],
+      filesPerSlab: Int = 1, first: Int = 0): StructType = {
+    val src = new java.io.File(s"$base/src")
+    src.mkdirs()
+    slabs.zipWithIndex.foreach { case (df, i) =>
+      val k = first + i
+      val tmp = s"$base/stage_$k"
+      (if (filesPerSlab == 1) df.coalesce(1) else df.repartition(filesPerSlab))
+        .write.mode("overwrite").parquet(tmp)
+      val parts = new java.io.File(tmp).listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      require(parts.length == filesPerSlab,
+        s"staging must land $filesPerSlab files, got ${parts.length}")
+      parts.zipWithIndex.foreach { case (part, j) =>
+        val dst = new java.io.File(src, s"slab-$k-$j.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        dst.setLastModified((k + 1) * 600000L)
+      }
+    }
+    slabs.head.schema
+  }
+
+  /** Drain the backlog under `base/src` to completion through the ingest
+    * stream `start(source, checkpointDir)`, `filesPerSlab` files per
+    * trigger: one micro-batch per slab. */
+  private[graft] def drainSlabs(s: SparkSession, base: String,
+      schema: StructType, ckpt: String, filesPerSlab: Int = 1)(
+      start: (DataFrame, String) => StreamingQuery): Unit =
+    Streaming.runToCompletion(start(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", filesPerSlab).parquet(s"$base/src"), ckpt))
+
+  /** The exactly-once proof every store-backed ingest row shares: drain the
+    * backlog through `base/ckpt1` and take `first`, then drain it again
+    * through a fresh `base/ckpt2` and take `second`. The fresh checkpoint
+    * re-offers every batch, so a working replay ledger makes the second
+    * drain a no-op and the two snapshots agree. A frame in `first` must be
+    * pinned (`localCheckpoint`): the replay rewrites what it reads. */
+  private[graft] def replayDrains[A, B](s: SparkSession, base: String,
+      schema: StructType, filesPerSlab: Int = 1)(
+      start: (DataFrame, String) => StreamingQuery)(
+      first: => A)(second: => B): (A, B) = {
+    drainSlabs(s, base, schema, s"$base/ckpt1", filesPerSlab)(start)
+    val a = first
+    drainSlabs(s, base, schema, s"$base/ckpt2", filesPerSlab)(start)
+    (a, second)
+  }
+
+  /** The ingest output under `base/out`: `cols` plus its INT `batch`
+    * partition. */
+  private[graft] def ingestOut(s: SparkSession, base: String,
+      cols: String*): DataFrame =
+    s.read.parquet(s"$base/out")
+      .select(cols.map(col) :+ col("batch").cast("int").as("batch"): _*)
+
+  /** One row, `__n_diff`: the `keys` rows found in only one of the two
+    * snapshots (NULL when both are empty). */
+  private[graft] def nDiff(a: DataFrame, b: DataFrame,
+      keys: Seq[String]): DataFrame =
+    a.select(keys.map(col): _*).withColumn("__a", lit(1))
+      .join(b.select(keys.map(col): _*).withColumn("__b", lit(1)), keys,
+        "full_outer")
+      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
+        .as("__n_diff"))
+
+  /** The replay gate over a [[nDiff]] row. */
+  private[graft] val replayStable: Column =
+    (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable")
 
   private val orderCols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
     "o_totalprice", "o_orderdate", "o_orderpriority")
@@ -617,48 +684,18 @@ object MatQueries {
         .select((col("doc_id") + 4 * off).as("doc_id"),
           concat(lit("fresh "), col("text")).as("text")))
     val base = tempDir("g_m19")
-    // one file per slab with stamped mtimes: the file source drains by
-    // mtime, so batch k = slab k (the m18 recipe)
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      ()
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
+    val schema = landSlabs(base, Seq(slabA, slabB))
     val store = s"$base/store"
     DedupStore.appendFingerprints(s, store, -1L, Dedup.fingerprintStore(hist))
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.dedupIngestStream(s,
-          s.readStream.schema(slabA.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", ckpt))
-    drain(s"$base/ckpt1")
-    // snapshot after the first drain, then REPLAY the backlog with a
-    // fresh checkpoint — markers must skip every batch end-to-end
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readFingerprints(s, store).count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("batch").cast("int").as("batch"))
-    val storeRows2 = DedupStore.readFingerprints(s, store).count()
-    val sym = out1.withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)), Seq("doc_id", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    def storeRows = DedupStore.readFingerprints(s, store).count()
+    val ((out1, storeRows1), (out2, storeRows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.dedupIngestStream(s, _, store, s"$base/out", _))(
+        (ingestOut(s, base, "doc_id").localCheckpoint(), storeRows))(
+        (ingestOut(s, base, "doc_id"), storeRows))
     out1
-      .crossJoin(broadcast(sym))
-      .select(col("doc_id"), col("batch"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("doc_id", "batch"))))
+      .select(col("doc_id"), col("batch"), replayStable,
         lit(storeRows1 == storeRows2).as("store_stable"))
       .orderBy(col("doc_id"))
   }
@@ -735,42 +772,17 @@ object MatQueries {
     val slabB = stream(13, 2 * off, "novel", " graftmarker")
       .unionByName(stream(17, 3 * off, "fresh"))
     val base = tempDir("g_m20")
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      ()
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
+    val schema = landSlabs(base, Seq(slabA, slabB))
     val store = s"$base/store"
     val sigs0 = Dedup.nearDupStore(hist)._2
     val histSigs = sigs0.count()
     DedupStore.appendNearDupSigs(s, store, -1L, sigs0)
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.nearDupIngestStream(s,
-          s.readStream.schema(slabA.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", ckpt))
-    drain(s"$base/ckpt1")
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readNearDup(s, store)._2.count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("batch").cast("int").as("batch"))
-    val storeRows2 = DedupStore.readNearDup(s, store)._2.count()
-    val sym = out1.withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)), Seq("doc_id", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    def storeRows = DedupStore.readNearDup(s, store)._2.count()
+    val ((out1, storeRows1), (out2, storeRows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.nearDupIngestStream(s, _, store, s"$base/out", _))(
+        (ingestOut(s, base, "doc_id").localCheckpoint(), storeRows))(
+        (ingestOut(s, base, "doc_id"), storeRows))
     out1.agg(
         sum(when(col("batch") === 0, 1L).otherwise(0L)).cast("bigint")
           .as("n_a_kept"),
@@ -779,11 +791,11 @@ object MatQueries {
         sum(when(col("batch") === 1 && col("doc_id") < 3 * off, 1L)
           .otherwise(0L)).as("__planted_kept"),
         count(lit(1)).as("__n_out"))
-      .crossJoin(broadcast(sym))
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("doc_id", "batch"))))
       .select(col("n_a_kept"), col("n_fresh_kept"),
         ((lit(1.0) - col("__planted_kept").cast("double") / col("n_a_kept"))
           >= 0.6).as("recall_ok"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+        replayStable,
         (lit(storeRows1) === lit(histSigs) + col("__n_out"))
           .as("store_consistent"),
         lit(storeRows2 == storeRows1).as("store_stable"))
@@ -830,43 +842,19 @@ object MatQueries {
     val slabB = vstream(13, 2 * off, "nv", shift = 0.0005)
       .unionByName(vstream(17, 3 * off, "fv"))
     val base = tempDir("g_m21")
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      ()
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
+    val schema = landSlabs(base, Seq(slabA, slabB))
     val store = s"$base/store"
     val dim = 64; val bits = 12
     val histVecs = hist.count()
     DedupStore.appendVectors(s, store, -1L,
       Similarity.embeddingStore(hist, dim, bits)._2)
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.semanticIngestStream(s,
-          s.readStream.schema(slabA.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", ckpt, dim = dim, bits = bits))
-    drain(s"$base/ckpt1")
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("vec_id"), col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readVectors(s, store, dim, bits)._2.count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("vec_id"), col("batch").cast("int").as("batch"))
-    val storeRows2 = DedupStore.readVectors(s, store, dim, bits)._2.count()
-    val sym = out1.withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)), Seq("vec_id", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    def storeRows = DedupStore.readVectors(s, store, dim, bits)._2.count()
+    val ((out1, storeRows1), (out2, storeRows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.semanticIngestStream(s, _, store, s"$base/out", _,
+          dim = dim, bits = bits))(
+        (ingestOut(s, base, "vec_id").localCheckpoint(), storeRows))(
+        (ingestOut(s, base, "vec_id"), storeRows))
     out1.agg(
         sum(when(col("batch") === 0, 1L).otherwise(0L)).cast("bigint")
           .as("n_a_kept"),
@@ -875,11 +863,11 @@ object MatQueries {
         sum(when(col("batch") === 1 && col("vec_id") < 3 * off, 1L)
           .otherwise(0L)).as("__planted_kept"),
         count(lit(1)).as("__n_out"))
-      .crossJoin(broadcast(sym))
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("vec_id", "batch"))))
       .select(col("n_a_kept"), col("n_fresh_kept"),
         ((lit(1.0) - col("__planted_kept").cast("double") / col("n_a_kept"))
           >= 0.6).as("recall_ok"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+        replayStable,
         (lit(storeRows1) === lit(histVecs) + col("__n_out"))
           .as("store_consistent"),
         lit(storeRows2 == storeRows1).as("store_stable"))
@@ -1362,32 +1350,15 @@ object MatQueries {
     import graft.llm.{DedupStore, IndexStore, Similarity}
     val emb = t(s, dir, "embeddings")
     val base = tempDir("g_m29")
-    (0 until 3).foreach { b =>
-      val tmp = s"$base/stage_$b"
-      emb.filter(col("vec_id") % 3 === b)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/slab-$b.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      ()
-    }
+    val schema = landSlabs(base,
+      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     val store = s"$base/store"
     IndexStore.train(s, store, emb, dim = 64, nlist = 8, m = 8,
       codebookSize = 16, seed = 42L)
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.indexIngestStream(s,
-          s.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, ckpt))
-    drain(s"$base/ckpt1")
-    val segs1 = DedupStore.committedBatches(s, s"$store/codes").size
-    val rows1 = IndexStore.readCodes(s, store).count()
-    drain(s"$base/ckpt2")
-    val segs2 = DedupStore.committedBatches(s, s"$store/codes").size
-    val rows2 = IndexStore.readCodes(s, store).count()
+    def snap = (DedupStore.committedBatches(s, s"$store/codes").size,
+      IndexStore.readCodes(s, store).count())
+    val ((segs1, rows1), (segs2, rows2)) = replayDrains(s, base, schema)(
+      Streaming.indexIngestStream(s, _, store, _))(snap)(snap)
     val embCount = emb.count()
     val q = emb.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(emb, q, k = 5)
@@ -1450,38 +1421,13 @@ object MatQueries {
         .select((col("doc_id") + lit(100000L)).as("doc_id"))
         .unionByName(docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
           .select(col("doc_id").cast("long").as("doc_id"))), "doc_id")
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      ()
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.videoIngestStream(s,
-          s.readStream.schema(slabA.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", ckpt))
-    drain(s"$base/ckpt1")
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("id"), col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readVideoSigs(s, store).count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("id"), col("batch").cast("int").as("batch"))
-    val storeRows2 = DedupStore.readVideoSigs(s, store).count()
-    val sym = out1.withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)), Seq("id", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    val schema = landSlabs(base, Seq(slabA, slabB))
+    def storeRows = DedupStore.readVideoSigs(s, store).count()
+    val ((out1, storeRows1), (out2, storeRows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.videoIngestStream(s, _, store, s"$base/out", _))(
+        (ingestOut(s, base, "id").localCheckpoint(), storeRows))(
+        (ingestOut(s, base, "id"), storeRows))
     // appended signature rows per kept clip = its frame count, closed form
     val framesKept = out1
       .agg(sum(expr("2 + (id % 100000) % 3")).as("__frames_kept"))
@@ -1492,9 +1438,10 @@ object MatQueries {
           .otherwise(0L)).cast("bigint").as("n_b_fresh_kept"),
         sum(when(col("batch") === 1 && col("id") >= 100000L, 1L)
           .otherwise(0L)).cast("bigint").as("n_b_reenc_kept"))
-      .crossJoin(broadcast(sym)).crossJoin(broadcast(framesKept))
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("id", "batch"))))
+      .crossJoin(broadcast(framesKept))
       .select(col("n_a_kept"), col("n_b_fresh_kept"), col("n_b_reenc_kept"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+        replayStable,
         (lit(storeRows1) === lit(histSigRows) + col("__frames_kept"))
           .as("store_consistent"),
         lit(storeRows2 == storeRows1).as("store_stable"))
@@ -1593,38 +1540,13 @@ object MatQueries {
         .select((col("doc_id") + lit(100000L)).as("doc_id"))
         .unionByName(docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
           .select(col("doc_id").cast("long").as("doc_id"))), "doc_id")
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/$name.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mtime)
-      ()
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.audioIngestStream(s,
-          s.readStream.schema(slabA.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", ckpt))
-    drain(s"$base/ckpt1")
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("id"), col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readAudioSigs(s, store).count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("id"), col("batch").cast("int").as("batch"))
-    val storeRows2 = DedupStore.readAudioSigs(s, store).count()
-    val sym = out1.withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)), Seq("id", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    val schema = landSlabs(base, Seq(slabA, slabB))
+    def storeRows = DedupStore.readAudioSigs(s, store).count()
+    val ((out1, storeRows1), (out2, storeRows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.audioIngestStream(s, _, store, s"$base/out", _))(
+        (ingestOut(s, base, "id").localCheckpoint(), storeRows))(
+        (ingestOut(s, base, "id"), storeRows))
     // appended signature rows per kept clip = its frame count, closed form
     val framesKept = out1
       .agg(sum(expr("2 + (id % 100000) % 3")).as("__frames_kept"))
@@ -1635,9 +1557,10 @@ object MatQueries {
           .otherwise(0L)).cast("bigint").as("n_b_fresh_kept"),
         sum(when(col("batch") === 1 && col("id") >= 100000L, 1L)
           .otherwise(0L)).cast("bigint").as("n_b_reenc_kept"))
-      .crossJoin(broadcast(sym)).crossJoin(broadcast(framesKept))
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("id", "batch"))))
+      .crossJoin(broadcast(framesKept))
       .select(col("n_a_kept"), col("n_b_fresh_kept"), col("n_b_reenc_kept"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+        replayStable,
         (lit(storeRows1) === lit(histSigRows) + col("__frames_kept"))
           .as("store_consistent"),
         lit(storeRows2 == storeRows1).as("store_stable"))
@@ -1720,34 +1643,19 @@ object MatQueries {
       transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
     val corpus = s0.unionByName(s1).unionByName(s2).localCheckpoint()
     val base = tempDir("g_m32")
-    Seq(s0, s1, s2).zipWithIndex.foreach { case (df, b) =>
-      val tmp = s"$base/stage_$b"
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/slab-$b.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      // slab order IS arrival order: the file source drains by mtime
-      dst.setLastModified((b + 1) * 600000L)
-      ()
-    }
+    // slab order IS arrival order: the file source drains by mtime
+    val schema = landSlabs(base, Seq(s0, s1, s2))
     val alias = s"$base/alias"
-    def drain(ckpt: String): Unit =
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.autoRotateIndexIngest(s,
-          s.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          alias, corpus, ckpt, dim = 64, nlist = 8, m = 8,
-          codebookSize = 16, seed = 42L))
-    def ptrs: Int = new java.io.File(alias).listFiles()
-      .count(_.getName.startsWith("ptr-"))
-    drain(s"$base/ckpt1")
-    val root1 = IndexStore.currentRoot(s, alias).get
-    val (ptrs1, rows1) = (ptrs, IndexStore.readCodes(s, root1).count())
-    drain(s"$base/ckpt2") // fresh checkpoint: full-backlog replay
-    val root2 = IndexStore.currentRoot(s, alias).get
-    val (ptrs2, rows2) = (ptrs, IndexStore.readCodes(s, root2).count())
+    def snap = {
+      val root = IndexStore.currentRoot(s, alias).get
+      (root, new java.io.File(alias).listFiles()
+        .count(_.getName.startsWith("ptr-")),
+        IndexStore.readCodes(s, root).count())
+    }
+    val ((root1, ptrs1, rows1), (root2, ptrs2, rows2)) =
+      replayDrains(s, base, schema)(
+        Streaming.autoRotateIndexIngest(s, _, alias, corpus, _, dim = 64,
+          nlist = 8, m = 8, codebookSize = 16, seed = 42L))(snap)(snap)
     val corpusCount = corpus.count()
     val q = corpus.filter(col("vec_id") < 10)
     val exact = Similarity.bruteForceTopK(corpus, q, k = 5)
@@ -1943,8 +1851,7 @@ object MatQueries {
         new org.apache.hadoop.fs.Path(meta.location), "l_returnflag=N")
       val fs = p.getFileSystem(s.sessionState.newHadoopConf())
       fs.listStatus(p).toSeq
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
+        .filter(graft.exec.AtomicWriter.isDataFile)
         .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
         .sortBy(_._1)
     }

@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.llm.{CompressionSignal, Dedup, Multimodal, NumericQuality, Packing, Sampling, Similarity, Sketches, TextOps}
 import graft.LlmShared.{t, staging, idOffset, docsWithNearDups, qualitySqlExpr}
+import graft.streaming.Streaming
 
 /** Ingest and end-to-end curation pipelines (j01–j06, p01–p04):
   * JSONL quarantine, provenance, the composed ingest chain, CDC, schema
@@ -677,6 +679,34 @@ private[graft] object PipelineQueries {
 
   // ---------------------------------- p05 STREAMING export pipeline
 
+  /** Stage the p05/p06 two-epoch document backlog under `base/src`
+    * (slab A = raw corpus, slab B = exact re-publications of every 4th
+    * doc + fresh extended-text docs, both under offset ids) and return
+    * the slab schema for the file-stream reader. */
+  private def stageExportSlabs(s: SparkSession, dir: String,
+      base: String): org.apache.spark.sql.types.StructType = {
+    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+    val off = idOffset(docs)
+    val slabA = docs
+    val slabB = docs.filter(col("doc_id") % 4 === 0)
+      .select((col("doc_id") + lit(off)).as("doc_id"), col("text"))
+      .unionByName(docs.filter(col("doc_id") % 4 === 1)
+        .select((col("doc_id") + lit(off)).as("doc_id"),
+          concat(col("text"), lit(" zq")).as("text")))
+    // `SlabFiles` files per slab keep the staging write parallel (a
+    // coalesce(1) stage was the serial bottleneck at sf10 — the slab is
+    // the whole corpus here, not an id-capped plant)
+    MatQueries.landSlabs(base, Seq(slabA, slabB), SlabFiles)
+  }
+
+  /** Files per staged slab; the file-stream trigger consumes exactly this
+    * many per micro-batch, so the slab boundary IS the batch boundary. */
+  private val SlabFiles = 4
+
+  private def exportStream(s: SparkSession, base: String)(src: DataFrame,
+      ckpt: String): StreamingQuery =
+    Streaming.exportIngestStream(s, src, s"$base/store", s"$base/out", ckpt)
+
   /** Streaming incremental EXPORT pipeline
     * ([[graft.streaming.Streaming.exportIngestStream]]) — the p04
     * curation-export DAG run per MICRO-BATCH against durable state
@@ -694,86 +724,24 @@ private[graft] object PipelineQueries {
     * full-backlog replay byte-stability and store accounting (fingerprint
     * rows = exported docs). At 100 TB this is the shape that matters:
     * curation cost ∝ new slab, never ∝ corpus. */
-  /** Stage the p05/p06 two-epoch document backlog under `base/src`
-    * (slab A = raw corpus, slab B = exact re-publications of every 4th
-    * doc + fresh extended-text docs, both under offset ids) and return
-    * the slab schema for the file-stream reader. */
-  private def stageExportSlabs(s: SparkSession, dir: String,
-      base: String): org.apache.spark.sql.types.StructType = {
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val off = idOffset(docs)
-    val slabA = docs
-    val slabB = docs.filter(col("doc_id") % 4 === 0)
-      .select((col("doc_id") + lit(off)).as("doc_id"), col("text"))
-      .unionByName(docs.filter(col("doc_id") % 4 === 1)
-        .select((col("doc_id") + lit(off)).as("doc_id"),
-          concat(col("text"), lit(" zq")).as("text")))
-    // each slab lands as EXACTLY `SlabFiles` parquet files sharing one
-    // mtime, so `maxFilesPerTrigger = SlabFiles` makes slab == micro-batch
-    // while the staging write stays parallel (a coalesce(1) stage was the
-    // serial bottleneck at sf10 — the slab is the whole corpus here, not
-    // an id-capped plant)
-    def moveIn(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = s"$base/stage_$name"
-      df.repartition(SlabFiles).write.mode("overwrite").parquet(tmp)
-      val parts = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      require(parts.length == SlabFiles,
-        s"staging must land $SlabFiles files, got ${parts.length}")
-      new java.io.File(s"$base/src").mkdirs()
-      parts.zipWithIndex.foreach { case (part, i) =>
-        val dst = new java.io.File(s"$base/src/$name-$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath)
-        dst.setLastModified(mtime)
-      }
-    }
-    moveIn(slabA, "slab-a", 600000L)
-    moveIn(slabB, "slab-b", 1200000L)
-    slabA.schema
-  }
-
-  /** Files per staged slab; the file-stream trigger consumes exactly this
-    * many per micro-batch, so the slab boundary IS the batch boundary. */
-  private val SlabFiles = 4
-
-  private def exportDrain(s: SparkSession, base: String,
-      schema: org.apache.spark.sql.types.StructType, ckpt: String): Unit =
-    graft.streaming.Streaming.runToCompletion(
-      graft.streaming.Streaming.exportIngestStream(s,
-        s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", SlabFiles).parquet(s"$base/src"),
-        s"$base/store", s"$base/out", ckpt))
-
   private def p05(s: SparkSession, dir: String): DataFrame = {
     import graft.llm.DedupStore
+    import MatQueries.{ingestOut, nDiff, replayDrains, replayStable}
     val base = MatQueries.tempDir("g_p05")
-    val store = s"$base/store"
     val schema = stageExportSlabs(s, dir, base)
-    def drain(ckpt: String): Unit = exportDrain(s, base, schema, ckpt)
-    drain(s"$base/ckpt1")
-    val out1 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("n_tokens"), col("shard"),
-        col("batch").cast("int").as("batch"))
-      .localCheckpoint()
-    val storeRows1 = DedupStore.readFingerprints(s, store).count()
-    drain(s"$base/ckpt2")
-    val out2 = s.read.parquet(s"$base/out")
-      .select(col("doc_id"), col("shard"), col("batch").cast("int").as("batch"))
-    val sym = out1.select(col("doc_id"), col("shard"), col("batch"))
-      .withColumn("__a", lit(1))
-      .join(out2.withColumn("__b", lit(1)),
-        Seq("doc_id", "shard", "batch"), "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
-        .as("__n_diff"))
+    val ((out1, storeRows1), out2) =
+      replayDrains(s, base, schema, SlabFiles)(exportStream(s, base))(
+        (ingestOut(s, base, "doc_id", "n_tokens", "shard").localCheckpoint(),
+          DedupStore.readFingerprints(s, s"$base/store").count()))(
+        ingestOut(s, base, "doc_id", "shard"))
     val nOut = out1.count()
     out1.groupBy(col("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tokens")).as("total_tokens"),
         sum(col("doc_id")).as("id_sum"))
-      .crossJoin(broadcast(sym))
+      .crossJoin(broadcast(nDiff(out1, out2, Seq("doc_id", "shard", "batch"))))
       .select(col("shard").cast("int").as("shard"), col("n_docs"),
-        col("total_tokens"), col("id_sum"),
-        (coalesce(col("__n_diff"), lit(0L)) === 0L).as("replay_stable"),
+        col("total_tokens"), col("id_sum"), replayStable,
         lit(storeRows1 == nOut).as("store_consistent"))
       .orderBy(col("shard"))
   }
@@ -848,7 +816,8 @@ private[graft] object PipelineQueries {
     import graft.exec.Maintenance
     val base = MatQueries.tempDir("g_p06")
     val schema = stageExportSlabs(s, dir, base)
-    exportDrain(s, base, schema, s"$base/ckpt1")
+    MatQueries.drainSlabs(s, base, schema, s"$base/ckpt1", SlabFiles)(
+      exportStream(s, base))
     val export = s.read.parquet(s"$base/out")
     val manifest = Sampling.shardManifest(export, col("text"),
       col("doc_id"), nShards = 8, salt = "p05")

@@ -50,23 +50,29 @@ object Verify {
     // are unchanged.
     .config("spark.sql.codegen.cache.maxEntries", "1000")
     .config("spark.sql.warehouse.dir", {
-      val wh = Files.createTempDirectory("graft_wh")
-      // exit-time delete AFTER Spark's own teardown (low-priority hook on
-      // the ordered Hadoop manager — a plain Runtime hook races Spark's
-      // shutdown writes and can lose): repeated sessions must not
-      // accumulate warehouse dirs under /tmp
-      org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
-        new Runnable {
-          def run(): Unit = {
-            def del(f: java.io.File): Unit = {
-              Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-            }
-            del(wh.toFile)
-          }
-        }, 1)
-      wh.toString
+      // repeated sessions must not accumulate warehouse dirs under /tmp
+      val wh = Files.createTempDirectory("graft_wh").toString
+      deleteAtExit(wh)
+      wh
     })
     .config("spark.ui.enabled", "false")
+
+  /** Delete `path` recursively when the JVM exits, AFTER Spark's own
+    * teardown: a priority-1 hook on Hadoop's ordered shutdown manager runs
+    * once Spark's (priority ≥ 30) hooks are done. A plain Runtime hook runs
+    * CONCURRENTLY with them, and Spark can still be flushing checkpoint or
+    * stream state into the dir: the delete loses that race and the dir
+    * survives (observed). */
+  private[graft] def deleteAtExit(path: String): Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      new Runnable {
+        def run(): Unit = {
+          def del(f: java.io.File): Unit = {
+            Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
+          }
+          del(new java.io.File(path))
+        }
+      }, 1)
 
   /** Run one query and dump it under `outDir/<name>`. A THROWN query must
     * stay visible: it leaves an (otherwise parquet-less) output dir holding

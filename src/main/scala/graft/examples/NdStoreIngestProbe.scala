@@ -1,12 +1,15 @@
 package graft.examples
 
 import org.apache.spark.sql.functions._
-import graft.{Tables, Verify}
+import graft.{MatQueries, Tables, Verify}
 import graft.llm.{Dedup, DedupStore}
+import graft.streaming.Streaming
 
 /** Scale-shape probe for the streaming NEAR-dup ingest loop
   * ([[graft.streaming.Streaming.nearDupIngestStream]]) — the MinHash
-  * sibling of [[StoreIngestProbe]]: seed the signature store from a
+  * sibling of the retired exact-dedup StoreIngestProbe (`git show
+  * b0a1153:src/main/scala/graft/examples/StoreIngestProbe.scala`; perfbench
+  * `ingest_cycles` now measures that loop): seed the signature store from a
   * history corpus, then drain ten successive slabs (fresh novel token
   * streams + planted near-dups of history and of the previous slab's
   * fresh docs) through the SAME checkpoint, timing each drain. The claim
@@ -61,20 +64,10 @@ object NdStoreIngestProbe {
       val slab = fresh.unionByName(histDups).unionByName(prevDups)
         .localCheckpoint()
       val slabN = slab.count()
-      val tmp = s"$base/stage_$k"
-      slab.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(s"$base/src/slab-$k.parquet")
-      dst.getParentFile.mkdirs()
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified((k + 1) * 600000L)
+      val schema = MatQueries.landSlabs(base, Seq(slab), first = k)
       val tb = System.nanoTime()
-      graft.streaming.Streaming.runToCompletion(
-        graft.streaming.Streaming.nearDupIngestStream(spark,
-          spark.readStream.schema(slab.schema)
-            .option("maxFilesPerTrigger", 1).parquet(s"$base/src"),
-          store, s"$base/out", s"$base/ckpt"))
+      MatQueries.drainSlabs(spark, base, schema, s"$base/ckpt")(
+        Streaming.nearDupIngestStream(spark, _, store, s"$base/out", _))
       val dt = (System.nanoTime() - tb) / 1e9
       spark.catalog.clearCache() // incrementalNearDup persists batch sigs
       val storeRows = DedupStore.readNearDup(spark, store)._2.count()

@@ -1,6 +1,6 @@
 package graft.exec
 
-import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem => HFileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, concat_ws, lit, when}
@@ -362,6 +362,14 @@ object AtomicWriter {
   private def fsOf(spark: SparkSession, p: HPath): HFileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
+  /** The one data-file rule, Spark's hidden-file filter: `_`- and
+    * `.`-prefixed entries (`_SUCCESS`, checksums, the committer's
+    * `._graft_swap_*` ownership markers, layout sidecars) are not data. */
+  private[graft] def isDataFile(st: FileStatus): Boolean = {
+    val name = st.getPath.getName
+    st.isFile && !name.startsWith("_") && !name.startsWith(".")
+  }
+
   /** Relative `k1=v1[/k2=v2…]` paths of all leaf partition dirs. */
   private[exec] def partitionDirs(fs: HFileSystem, root: HPath,
       depth: Int): Seq[String] = {
@@ -386,12 +394,10 @@ object AtomicWriter {
       s"`$k`='$uv'"
     }.mkString(", ")
 
-  /** Spark/Hive's own dir-name escaping — NOT a home-grown variant: Spark
-    * leaves space/'+'/etc. literal and only ever emits 2-hex %XX sequences,
-    * so anything else round-trips wrongly against dirs Spark itself wrote. */
-  private def escapePathName(s: String): String =
-    ExternalCatalogUtils.escapePathName(s)
-
+  /** Spark/Hive's own dir-name unescaping — NOT a home-grown variant:
+    * Spark leaves space/'+'/etc. literal and only ever emits 2-hex %XX
+    * sequences, so anything else round-trips wrongly against dirs Spark
+    * itself wrote. */
   private[exec] def unescapePathName(s: String): String =
     ExternalCatalogUtils.unescapePathName(s)
 

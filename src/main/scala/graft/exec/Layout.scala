@@ -152,8 +152,7 @@ object Layout {
     var moved = 0
     fs.listStatus(staged).filter(_.isDirectory).foreach { d =>
       fs.listStatus(d.getPath)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith("."))
+        .filter(AtomicWriter.isDataFile)
         .foreach { f =>
           // strip the leading underscores: _-prefixed files are hidden
           // from Spark/parquet readers
@@ -215,22 +214,6 @@ object Layout {
     blocks
   }
 
-  /** INCREMENTAL Z-order maintenance: restore a z-ordered directory whose
-    * locality has degraded under plain appends. An appended slab lands as
-    * unclustered files whose footer min/max spans the full key range —
-    * every filtered scan reads them, and the table degrades monotonically
-    * with each append (the m06-style ingest pattern). The fix is a
-    * re-cluster: read everything, [[zorderWrite]] into PRIVATE staging,
-    * and swap directories with trash-aside renames — the same
-    * all-or-nothing discipline as [[Committer]]'s partition swap (old data
-    * moves ASIDE before the staged dir moves in; any failure restores it;
-    * the trash is deleted only after the swap completes). Rows are
-    * preserved exactly (one shuffle — the clustered write's own range
-    * exchange — same cost as the original write); LayoutSpec measures
-    * pruning restored to fresh-write level, and q36 value-matches the
-    * row set through the compact. Path-based layouts only (q34's shape);
-    * CATALOG tables get the same machinery through
-    * [[Maintenance.compact]] + the committer seam. */
   /** INCREMENTAL z-order maintenance with cost ∝ APPENDED DATA, not
     * table size — the 100 TB form of [[zorderCompact]], which rewrites
     * the whole directory. Appended slab files (anything not named
@@ -286,8 +269,7 @@ object Layout {
       s"zorderCompactIncremental: $path has no _zstats sidecar (not a " +
         "zorderWrite layout, or one predating r16) — run the full " +
         "zorderCompact, which re-anchors the layout stats"))
-    val data = fs.listStatus(target).toSeq.filter(s => s.isFile &&
-      !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+    val data = fs.listStatus(target).toSeq.filter(AtomicWriter.isDataFile)
     val (tileFiles, slabs) = data.partition(_.getPath.getName.startsWith("tile-"))
     if (slabs.isEmpty) return Nil
     def withTile(df: DataFrame): DataFrame =
@@ -323,8 +305,7 @@ object Layout {
       .filter(_.isDirectory).map { d =>
         d.getPath.getName.stripPrefix("__tile=").toLong ->
           fs.listStatus(d.getPath).toSeq
-            .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-              !f.getPath.getName.startsWith("."))
+            .filter(AtomicWriter.isDataFile)
             .map(_.getPath)
       }.toMap
     import org.apache.parquet.hadoop.ParquetFileReader
@@ -421,8 +402,7 @@ object Layout {
           // "."-filtered like the stagedNew listing: a hidden sidecar
           // published here would become a live "tile" file the NEXT
           // maintenance pass feeds to readFooter
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
+          .filter(AtomicWriter.isDataFile)
           .foreach { f =>
             publish(f.getPath,
               s"${d.getPath.getName.stripPrefix("__").replace('=', '-')}-${
@@ -436,6 +416,22 @@ object Layout {
     touched
   }
 
+  /** FULL Z-order maintenance: restore a z-ordered directory whose
+    * locality has degraded under plain appends. An appended slab lands as
+    * unclustered files whose footer min/max spans the full key range —
+    * every filtered scan reads them, and the table degrades monotonically
+    * with each append (the m06-style ingest pattern). The fix is a
+    * re-cluster: read everything, [[zorderWrite]] into PRIVATE staging,
+    * and swap directories with trash-aside renames — the same
+    * all-or-nothing discipline as [[Committer]]'s partition swap (old data
+    * moves ASIDE before the staged dir moves in; any failure restores it;
+    * the trash is deleted only after the swap completes). Rows are
+    * preserved exactly (one shuffle — the clustered write's own range
+    * exchange — same cost as the original write); LayoutSpec measures
+    * pruning restored to fresh-write level, and q36 value-matches the
+    * row set through the compact. Path-based layouts only (q34's shape);
+    * CATALOG tables get the same machinery through
+    * [[Maintenance.zorderCompact]] + the committer seam. */
   def zorderCompact(spark: org.apache.spark.sql.SparkSession, path: String,
       xCol: String, yCol: String, nFiles: Int, bits: Int = 8): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}

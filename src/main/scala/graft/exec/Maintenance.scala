@@ -36,29 +36,18 @@ object Maintenance {
   def partitionFileStats(spark: SparkSession, target: TableRef,
       partition: PartitionSpec): Map[String, (Int, Long)] = {
     val root = AtomicWriter.tableDir(spark, target)
-    val conf = spark.sessionState.newHadoopConf()
-    val pcols = partition.partitionColumns
-    // exclude "_" AND "." prefixed files (Spark's hidden-file filter):
-    // _SUCCESS and the committer's ._graft_swap_* ownership markers are
-    // not data files and must not trigger compaction
-    def dataFiles(stats: Seq[org.apache.hadoop.fs.FileStatus]): (Int, Long) = {
-      val data = stats.filter(s => s.isFile &&
-        !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      (data.size, data.map(_.getLen).sum)
-    }
-    def ls(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
-      try p.getFileSystem(conf).listStatus(p).toSeq
-      catch { case _: java.io.FileNotFoundException => Nil }
-    def walk(p: org.apache.hadoop.fs.Path, d: Int,
-        rel: String): Seq[(String, (Int, Long))] = {
-      val stats = ls(p)
-      if (d == 0) Seq(rel -> dataFiles(stats))
-      else stats.filter(s => s.isDirectory && s.getPath.getName.contains("="))
-        .flatMap(s => walk(s.getPath, d - 1,
-          if (rel.isEmpty) s.getPath.getName else rel + "/" + s.getPath.getName))
-    }
-    walk(root, pcols.size, "").toMap
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val depth = partition.partitionColumns.size
+    val leaves =
+      if (depth == 0) Seq("" -> root)
+      else AtomicWriter.partitionDirs(fs, root, depth)
+        .map(rel => rel -> new org.apache.hadoop.fs.Path(root, rel))
+    leaves.map { case (rel, dir) =>
+      val data =
+        try fs.listStatus(dir).toSeq.filter(AtomicWriter.isDataFile)
+        catch { case _: java.io.FileNotFoundException => Nil }
+      rel -> (data.size, data.map(_.getLen).sum)
+    }.toMap
   }
 
   private val HiveDefaultPartition = AtomicWriter.HiveDefaultPartition
@@ -634,8 +623,7 @@ object Maintenance {
         .flatMap(b => fs.listStatus(b.getPath).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("shard=")))
         .flatMap(sh => fs.listStatus(sh.getPath).toSeq
-          .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
-            !f.getPath.getName.startsWith("."))
+          .filter(AtomicWriter.isDataFile)
           .map(f => sh.getPath.getName -> f.getPath))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val out = new HPath(outDir)
@@ -689,9 +677,7 @@ object Maintenance {
         try fs.listStatus(p).toSeq
         catch { case _: java.io.FileNotFoundException => Nil }
       stats.map { s =>
-        if (s.isFile)
-          (if (!s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith(".")) 1 else 0)
+        if (s.isFile) (if (AtomicWriter.isDataFile(s)) 1 else 0)
         else walk(s.getPath)
       }.sum
     }

@@ -354,10 +354,8 @@ object DedupStore {
       val newId = math.max(ids.max + 1, CompactBase)
       val dstDir = segDir(root, newId)
       val segFiles = ids.flatMap { id =>
-        f.listStatus(segDir(root, id)).toSeq.filter(s => s.isFile &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-          .map(_.getPath)
+        f.listStatus(segDir(root, id)).toSeq
+          .filter(graft.exec.AtomicWriter.isDataFile).map(_.getPath)
       }
       val conf = spark.sessionState.newHadoopConf()
       if (graft.exec.ParquetStitch.stitchable(conf, f, segFiles)) {

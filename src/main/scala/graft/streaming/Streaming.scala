@@ -15,9 +15,39 @@ import graft.exec.Incremental
   *    per micro-batch via foreachBatch, `Trigger.AvailableNow` (process the
   *    backlog, then stop) — the streaming twin of Incremental.microbatch;
   *  - `windowedCounts`: watermarked event-time windowed aggregation;
-  *  - appends to a catalog table with exactly-once file-sink semantics.
+  *  - the store-backed ingest streams (exact / near-dup / semantic /
+  *    video / audio dedup, the curation export, the ANN index): every
+  *    micro-batch commits into a durable store, whose ledger makes a
+  *    replayed batch a no-op.
+  *
+  * Every stream here runs the one ingest loop [[ingestLoop]]; the six
+  * `DedupStore`-backed ones share its ledger skip, [[storeIngestLoop]].
   */
 object Streaming {
+
+  /** The one ingest loop: `Trigger.AvailableNow` drains the available
+    * backlog of `src` through `checkpointDir`, then stops, handing each
+    * micro-batch and its id to `apply`. */
+  private def ingestLoop(src: DataFrame, checkpointDir: String)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(apply)
+      .start()
+
+  /** [[ingestLoop]] for a stream that commits each batch as
+    * [[graft.llm.DedupStore]] segment `<id>`: the store's done markers are
+    * the replay ledger, so a batch whose id is committed (a replay, also
+    * after a compaction) or that is empty is skipped before any job runs
+    * on it. `apply` also gets the committed ids. */
+  private def storeIngestLoop(spark: SparkSession, src: DataFrame,
+      storeRoot: String, checkpointDir: String)(
+      apply: (DataFrame, Long, Seq[Long]) => Unit): StreamingQuery =
+    ingestLoop(src, checkpointDir) { (batch, id) =>
+      val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
+      if (!committed.contains(id) && !batch.isEmpty) apply(batch, id, committed)
+    }
 
   /** Read a parquet path as a stream with the schema of its static twin
     * (file streams require an explicit schema). */
@@ -131,77 +161,73 @@ object Streaming {
     if (fs.exists(stateDir))
       fs.listStatus(stateDir).filter(_.getPath.getName.startsWith("done-"))
         .foreach(st => written ++= readKeys(st.getPath))
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (fs.exists(done(id))) {
-          written ++= readKeys(done(id)); () // replay of an applied batch: skip
-        } else if (!batch.isEmpty) {
-          if (fs.exists(attempt(id)))
-            throw new IllegalStateException(
-              s"micro-batch $id started applying but never committed " +
-                s"(${attempt(id)}) — the target may hold a half-applied " +
-                "overwrite; restore from .graft_trash/backup before rerunning")
-          fs.create(attempt(id), true).close()
-          // a CLEAN in-process failure (the swap is all-or-nothing and
-          // rolls back) must clear its attempt marker before rethrowing —
-          // otherwise a transient error would permanently poison the
-          // checkpoint with a false half-applied alarm. Only a process
-          // crash mid-apply leaves the marker for the loud path above.
-          try {
-            val batchP = graft.exec.AtomicWriter.withPartitionCols(batch, partition)
-            val key = graft.exec.AtomicWriter.partitionKey(pcols.map(col))
-            val touched = graft.exec.AtomicWriter.touchedKeys(spark, partition, batchP)
-            val tmp = new HPath(stateDir, s".done-$id.tmp")
-            touched match {
-              case Some(keys) =>
-                val overlap = keys.intersect(written)
-                val df =
-                  if (overlap.isEmpty) batchP
-                  else batchP.unionByName(spark.table(target.render)
-                    .filter(key.isin(overlap.toSeq: _*)))
-                Incremental.insertOverwriteDynamic(spark, target, df, partition)
-                // marker written via create+rename so it appears atomically
-                val out = fs.create(tmp, true)
-                try out.write(keys.mkString("\n").getBytes("UTF-8"))
-                finally out.close()
-              case None =>
-                // WIDE batch (past the touched-partition cap, e.g. hourly ×
-                // tenant backfill): the key set never lands on the driver or
-                // in an isin expression tree. Overlap = target semi-joined
-                // against (batch keys ∩ already-written keys); the done marker
-                // is written by the executors as a text-file DIRECTORY.
-                import spark.implicits._
-                val keysDf = batchP.select(key.as("p")).distinct()
-                val writtenDf = written.toSeq.toDF("p")
-                val overlapKeys = keysDf.join(writtenDf, Seq("p"), "left_semi")
-                val tgt = spark.table(target.render)
-                val tgtOverlap = tgt.join(overlapKeys,
-                  graft.exec.AtomicWriter.partitionKey(pcols.map(tgt(_)))
-                    === overlapKeys("p"), "left_semi")
-                Incremental.insertOverwriteDynamic(spark, target,
-                  batchP.unionByName(tgtOverlap), partition)
-                keysDf.write.mode("overwrite").text(tmp.toString)
-            }
-            if (!fs.rename(tmp, done(id)))
-              throw new java.io.IOException(s"cannot commit marker ${done(id)}")
-            fs.delete(attempt(id), false)
-            // the wide path re-reads the marker it just wrote (bounded MBs,
-            // line-per-key) instead of ever collecting the keys as a set
-            written ++= touched.getOrElse(readKeys(done(id)))
-            ()
-          } catch {
-            case e: Throwable =>
-              fs.delete(attempt(id), false)
-              throw e
+    ingestLoop(src, checkpointDir) { (batch, id) =>
+      if (fs.exists(done(id))) {
+        written ++= readKeys(done(id)); () // replay of an applied batch: skip
+      } else if (!batch.isEmpty) {
+        if (fs.exists(attempt(id)))
+          throw new IllegalStateException(
+            s"micro-batch $id started applying but never committed " +
+              s"(${attempt(id)}) — the target may hold a half-applied " +
+              "overwrite; restore from .graft_trash/backup before rerunning")
+        fs.create(attempt(id), true).close()
+        // a CLEAN in-process failure (the swap is all-or-nothing and
+        // rolls back) must clear its attempt marker before rethrowing —
+        // otherwise a transient error would permanently poison the
+        // checkpoint with a false half-applied alarm. Only a process
+        // crash mid-apply leaves the marker for the loud path above.
+        try {
+          val batchP = graft.exec.AtomicWriter.withPartitionCols(batch, partition)
+          val key = graft.exec.AtomicWriter.partitionKey(pcols.map(col))
+          val touched = graft.exec.AtomicWriter.touchedKeys(spark, partition, batchP)
+          val tmp = new HPath(stateDir, s".done-$id.tmp")
+          touched match {
+            case Some(keys) =>
+              val overlap = keys.intersect(written)
+              val df =
+                if (overlap.isEmpty) batchP
+                else batchP.unionByName(spark.table(target.render)
+                  .filter(key.isin(overlap.toSeq: _*)))
+              Incremental.insertOverwriteDynamic(spark, target, df, partition)
+              // marker written via create+rename so it appears atomically
+              val out = fs.create(tmp, true)
+              try out.write(keys.mkString("\n").getBytes("UTF-8"))
+              finally out.close()
+            case None =>
+              // WIDE batch (past the touched-partition cap, e.g. hourly ×
+              // tenant backfill): the key set never lands on the driver or
+              // in an isin expression tree. Overlap = target semi-joined
+              // against (batch keys ∩ already-written keys); the done marker
+              // is written by the executors as a text-file DIRECTORY.
+              import spark.implicits._
+              val keysDf = batchP.select(key.as("p")).distinct()
+              val writtenDf = written.toSeq.toDF("p")
+              val overlapKeys = keysDf.join(writtenDf, Seq("p"), "left_semi")
+              val tgt = spark.table(target.render)
+              val tgtOverlap = tgt.join(overlapKeys,
+                graft.exec.AtomicWriter.partitionKey(pcols.map(tgt(_)))
+                  === overlapKeys("p"), "left_semi")
+              Incremental.insertOverwriteDynamic(spark, target,
+                batchP.unionByName(tgtOverlap), partition)
+              keysDf.write.mode("overwrite").text(tmp.toString)
           }
-        } else {
-          fs.mkdirs(stateDir)
-          fs.create(done(id), true).close() // empty batch: nothing touched
+          if (!fs.rename(tmp, done(id)))
+            throw new java.io.IOException(s"cannot commit marker ${done(id)}")
+          fs.delete(attempt(id), false)
+          // the wide path re-reads the marker it just wrote (bounded MBs,
+          // line-per-key) instead of ever collecting the keys as a set
+          written ++= touched.getOrElse(readKeys(done(id)))
+          ()
+        } catch {
+          case e: Throwable =>
+            fs.delete(attempt(id), false)
+            throw e
         }
+      } else {
+        fs.mkdirs(stateDir)
+        fs.create(done(id), true).close() // empty batch: nothing touched
       }
-      .start()
+    }
   }
 
   /** Drive a streaming query to completion of the available data. */
@@ -234,23 +260,16 @@ object Streaming {
   def dedupIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val kept = graft.llm.Dedup.incrementalExact(batch,
-              graft.llm.DedupStore.readFingerprints(spark, storeRoot),
-              idCol, textCol)
-            .localCheckpoint() // feeds the doc semi-join AND the append
-          batch.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendFingerprints(spark, storeRoot, id, kept)
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, _) =>
+        val kept = graft.llm.Dedup.incrementalExact(batch,
+            graft.llm.DedupStore.readFingerprints(spark, storeRoot),
+            idCol, textCol)
+          .localCheckpoint() // feeds the doc semi-join AND the append
+        batch.join(kept.select(col(idCol)), Seq(idCol), "left_semi")
+          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendFingerprints(spark, storeRoot, id, kept)
+    }
 
   /** Streaming EXPORT pipeline — the incremental form of the batch
     * curation-export DAG (p04): each micro-batch flows quality gate →
@@ -273,37 +292,30 @@ object Streaming {
       storeRoot: String, outDir: String, checkpointDir: String,
       minQuality: Double = 0.3, shards: Int = 8, saltPrefix: String = "p05",
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val kept = batch.filter(
-            graft.llm.TextOps.qualityScore(col(textCol)) >= minQuality)
-          // bootstrap-friendly: a brand-new pipeline's first batch sees an
-          // EMPTY store, not a missing-segment error (no seeding ceremony)
-          val store = if (committed.isEmpty)
-            graft.llm.Dedup.fingerprintStore(batch.limit(0), textCol)
-          else graft.llm.DedupStore.readFingerprints(spark, storeRoot)
-          val newFps = graft.llm.Dedup.incrementalExact(kept, store,
-              idCol, textCol)
-            .localCheckpoint() // feeds the export semi-join AND the append
-          kept.join(newFps.select(col(idCol)), Seq(idCol), "left_semi")
-            .select(col(idCol), col(textCol),
-              graft.llm.TextOps.tokenCount(col(textCol)).cast("long")
-                .as("n_tokens"),
-              pmod(conv(substring(md5(concat(lit(saltPrefix),
-                col(textCol))), 1, 4), 16, 10).cast("long"),
-                lit(shards.toLong)).cast("int").as("shard"))
-            .write.partitionBy("shard").mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendFingerprints(spark, storeRoot, id,
-            newFps)
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, committed) =>
+        val kept = batch.filter(
+          graft.llm.TextOps.qualityScore(col(textCol)) >= minQuality)
+        // bootstrap-friendly: a brand-new pipeline's first batch sees an
+        // EMPTY store, not a missing-segment error (no seeding ceremony)
+        val store = if (committed.isEmpty)
+          graft.llm.Dedup.fingerprintStore(batch.limit(0), textCol)
+        else graft.llm.DedupStore.readFingerprints(spark, storeRoot)
+        val newFps = graft.llm.Dedup.incrementalExact(kept, store,
+            idCol, textCol)
+          .localCheckpoint() // feeds the export semi-join AND the append
+        kept.join(newFps.select(col(idCol)), Seq(idCol), "left_semi")
+          .select(col(idCol), col(textCol),
+            graft.llm.TextOps.tokenCount(col(textCol)).cast("long")
+              .as("n_tokens"),
+            pmod(conv(substring(md5(concat(lit(saltPrefix),
+              col(textCol))), 1, 4), 16, 10).cast("long"),
+              lit(shards.toLong)).cast("int").as("shard"))
+          .write.partitionBy("shard").mode("overwrite")
+          .parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendFingerprints(spark, storeRoot, id,
+          newFps)
+    }
 
   /** The NEAR-dup sibling of [[dedupIngestStream]] — streaming ingest
     * deduplication against the durable MinHash signature store: each
@@ -331,28 +343,21 @@ object Streaming {
       storeRoot: String, outDir: String, checkpointDir: String,
       threshold: Double = 0.8, k: Int = 128, bands: Int = 32,
       idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val flags = graft.llm.Dedup.incrementalNearDup(batch,
-              graft.llm.DedupStore.readNearDup(spark, storeRoot, bands),
-              threshold, k, bands, idCol, textCol)
-            .localCheckpoint() // feeds the doc semi-join AND the signing
-          val survivors = batch.join(
-            flags.filter(!col("is_dup")).select(col(idCol)),
-            Seq(idCol), "left_semi")
-            .localCheckpoint() // one slab: sink write + signature append
-          survivors.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendNearDupSigs(spark, storeRoot, id,
-            graft.llm.Dedup.minhashSignatures(survivors, k, idCol, textCol)
-              .select(col(idCol).as("sid"), col("sig")))
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, _) =>
+        val flags = graft.llm.Dedup.incrementalNearDup(batch,
+            graft.llm.DedupStore.readNearDup(spark, storeRoot, bands),
+            threshold, k, bands, idCol, textCol)
+          .localCheckpoint() // feeds the doc semi-join AND the signing
+        val survivors = batch.join(
+          flags.filter(!col("is_dup")).select(col(idCol)),
+          Seq(idCol), "left_semi")
+          .localCheckpoint() // one slab: sink write + signature append
+        survivors.write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendNearDupSigs(spark, storeRoot, id,
+          graft.llm.Dedup.minhashSignatures(survivors, k, idCol, textCol)
+            .select(col(idCol).as("sid"), col("sig")))
+    }
 
   /** Streaming SEMANTIC near-dup ingest — the embedding sibling of
     * [[nearDupIngestStream]], same commit discipline: each micro-batch
@@ -370,28 +375,21 @@ object Streaming {
       threshold: Double = 0.95, dim: Int = 64, bits: Int = 12,
       tables: Int = 2, seed: Long = 42L, idCol: String = "vec_id",
       vecCol: String = "embedding"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val flags = graft.llm.Similarity.incrementalEmbeddingNearDup(batch,
-              graft.llm.DedupStore.readVectors(spark, storeRoot, dim, bits,
-                tables, seed),
-              threshold, dim, bits, tables, seed, idCol, vecCol)
-            .localCheckpoint() // feeds the semi-join AND the append
-          val survivors = batch.join(
-            flags.filter(!col("is_dup")).select(col(idCol)),
-            Seq(idCol), "left_semi")
-            .localCheckpoint() // one slab: sink write + vector append
-          survivors.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendVectors(spark, storeRoot, id,
-            survivors.select(col(idCol).as("sid"), col(vecCol).as("s_vec")))
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, _) =>
+        val flags = graft.llm.Similarity.incrementalEmbeddingNearDup(batch,
+            graft.llm.DedupStore.readVectors(spark, storeRoot, dim, bits,
+              tables, seed),
+            threshold, dim, bits, tables, seed, idCol, vecCol)
+          .localCheckpoint() // feeds the semi-join AND the append
+        val survivors = batch.join(
+          flags.filter(!col("is_dup")).select(col(idCol)),
+          Seq(idCol), "left_semi")
+          .localCheckpoint() // one slab: sink write + vector append
+        survivors.write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendVectors(spark, storeRoot, id,
+          survivors.select(col(idCol).as("sid"), col(vecCol).as("s_vec")))
+    }
 
   /** Streaming ANN index ingest — the streaming sibling of
     * [[graft.llm.IndexStore.appendCodes]], completing the store modality
@@ -411,17 +409,11 @@ object Streaming {
   def indexIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, checkpointDir: String, idCol: String = "vec_id",
       vecCol: String = "embedding"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          graft.llm.IndexStore.appendCodes(spark, storeRoot, id, batch,
-            idCol, vecCol)
-          ()
-        }
-      }
-      .start()
+    ingestLoop(src, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.llm.IndexStore.appendCodes(spark, storeRoot, id, batch,
+          idCol, vecCol)
+    }
 
   /** SELF-HEALING streaming index ingest — [[indexIngestStream]] with the
     * drift guard in the loop ([[graft.llm.IndexStore.ingestWithDriftGuard]]):
@@ -445,18 +437,12 @@ object Streaming {
       vecCol: String = "embedding", minChi2: Double = 100.0,
       calibFactor: Double = 20.0, priorFactor: Double = 10.0,
       warmupTvFloor: Double = 0.3): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          graft.llm.IndexStore.ingestWithDriftGuard(spark, alias, id,
-            batch, corpus, dim, nlist, m, codebookSize, seed, idCol,
-            vecCol, minChi2, calibFactor, priorFactor, warmupTvFloor)
-          ()
-        }
-      }
-      .start()
+    ingestLoop(src, checkpointDir) { (batch, id) =>
+      if (!batch.isEmpty)
+        graft.llm.IndexStore.ingestWithDriftGuard(spark, alias, id,
+          batch, corpus, dim, nlist, m, codebookSize, seed, idCol,
+          vecCol, minChi2, calibFactor, priorFactor, warmupTvFloor)
+    }
 
   /** Streaming VIDEO ingest dedup — the video sibling of
     * [[nearDupIngestStream]], completing streaming parity for the store
@@ -478,32 +464,25 @@ object Streaming {
       storeRoot: String, outDir: String, checkpointDir: String,
       maxHamming: Int = 3, bands: Int = 4, idCol: String = "id",
       payloadCol: String = "payload"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val sigs = graft.llm.Multimodal.videoAhashes(batch, idCol,
-              payloadCol)
-            .localCheckpoint() // decode once: feeds the probe AND the append
-          val keptIds = graft.llm.Multimodal.videoStoreProbe(sigs,
-              graft.llm.DedupStore.readVideoSigs(spark, storeRoot),
-              maxHamming, bands)
-            .filter(col("kept")).select(col("id"))
-            .localCheckpoint() // feeds the clip semi-join AND the signing
-          batch.select(col(idCol).cast("long").as("id"),
-              col(payloadCol).as("payload"))
-            .join(keptIds, Seq("id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendVideoSigs(spark, storeRoot, id,
-            sigs.join(keptIds, Seq("id"), "left_semi")
-              .select(col("id").as("vid_id"), col("n_frames"),
-                col("frame_idx"), col("ahash")))
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, _) =>
+        val sigs = graft.llm.Multimodal.videoAhashes(batch, idCol,
+            payloadCol)
+          .localCheckpoint() // decode once: feeds the probe AND the append
+        val keptIds = graft.llm.Multimodal.videoStoreProbe(sigs,
+            graft.llm.DedupStore.readVideoSigs(spark, storeRoot),
+            maxHamming, bands)
+          .filter(col("kept")).select(col("id"))
+          .localCheckpoint() // feeds the clip semi-join AND the signing
+        batch.select(col(idCol).cast("long").as("id"),
+            col(payloadCol).as("payload"))
+          .join(keptIds, Seq("id"), "left_semi")
+          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendVideoSigs(spark, storeRoot, id,
+          sigs.join(keptIds, Seq("id"), "left_semi")
+            .select(col("id").as("vid_id"), col("n_frames"),
+              col("frame_idx"), col("ahash")))
+    }
 
   /** Streaming AUDIO ingest dedup — the audio sibling of
     * [[videoIngestStream]], completing streaming parity for the store
@@ -525,31 +504,24 @@ object Streaming {
   def audioIngestStream(spark: SparkSession, src: DataFrame,
       storeRoot: String, outDir: String, checkpointDir: String,
       idCol: String = "id", payloadCol: String = "payload"): StreamingQuery =
-    src.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val committed = graft.llm.DedupStore.committedBatches(spark, storeRoot)
-        if (!committed.contains(id) && !batch.isEmpty) {
-          val sigs = graft.llm.Multimodal.audioSignSigs(batch, idCol,
-              payloadCol)
-            .localCheckpoint() // decode once: feeds the probe AND the append
-          val keptIds = graft.llm.Multimodal.audioStoreProbe(sigs,
-              graft.llm.DedupStore.readAudioSigs(spark, storeRoot))
-            .filter(col("kept")).select(col("id"))
-            .localCheckpoint() // feeds the clip semi-join AND the signing
-          batch.select(col(idCol).cast("long").as("id"),
-              col(payloadCol).as("payload"))
-            .join(keptIds, Seq("id"), "left_semi")
-            .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-          graft.llm.DedupStore.appendAudioSigs(spark, storeRoot, id,
-            sigs.join(keptIds, Seq("id"), "left_semi")
-              .select(col("id").as("clip_id"), col("n_frames"),
-                col("frame_idx"), col("sig")))
-          ()
-        }
-      }
-      .start()
+    storeIngestLoop(spark, src, storeRoot, checkpointDir) {
+      (batch, id, _) =>
+        val sigs = graft.llm.Multimodal.audioSignSigs(batch, idCol,
+            payloadCol)
+          .localCheckpoint() // decode once: feeds the probe AND the append
+        val keptIds = graft.llm.Multimodal.audioStoreProbe(sigs,
+            graft.llm.DedupStore.readAudioSigs(spark, storeRoot))
+          .filter(col("kept")).select(col("id"))
+          .localCheckpoint() // feeds the clip semi-join AND the signing
+        batch.select(col(idCol).cast("long").as("id"),
+            col(payloadCol).as("payload"))
+          .join(keptIds, Seq("id"), "left_semi")
+          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.llm.DedupStore.appendAudioSigs(spark, storeRoot, id,
+          sigs.join(keptIds, Seq("id"), "left_semi")
+            .select(col("id").as("clip_id"), col("n_frames"),
+              col("frame_idx"), col("sig")))
+    }
 
   // --------------------------------------------------------- stateful ops
 

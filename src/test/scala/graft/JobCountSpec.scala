@@ -489,4 +489,25 @@ class JobCountSpec extends SparkSpec {
     // the fold's cost must not grow with the number of ids it retires
     assert(two == eight, s"compactCodes jobs grew with segments: $two vs $eight")
   }
+
+  test("streaming store replay rows stay within their fixed job budgets") {
+    // one row per replay shape, each the shared slab lander + two-drain
+    // replay harness: m19 (two 1-file slabs into a DedupStore stream,
+    // output dir + store snapshots), m29 (three slabs into the index
+    // stream, store-only snapshots), p05 (two 4-file slabs into the export
+    // stream). Budgets = the counts measured at sf0.001 before the harness
+    // existed (the same in two separate runs): the harness adds no job.
+    val dir = "/root/testdata/sf0.001"
+    for ((name, budget) <- Seq(
+        "m19_streaming_store_dedup" -> 38,
+        "m29_streaming_index_ingest" -> 35,
+        "p05_streaming_export" -> 36)) {
+      val jobs = countJobs {
+        assert(SparkEntry.queries(name)(spark, dir).count() > 0)
+        spark.catalog.clearCache()
+      }
+      info(s"$name jobs = $jobs (budget $budget)")
+      assert(jobs <= budget, s"$name fixed job count regressed: $jobs")
+    }
+  }
 }

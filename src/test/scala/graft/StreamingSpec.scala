@@ -484,4 +484,49 @@ class StreamingSpec extends SparkSpec {
     assert(want.nonEmpty)
     assert(out.toArray(Array.empty[Seq[Any]]).toSet == want)
   }
+
+  test("the shared replay gate: a ledger-less sink fails it, dedupIngestStream passes it") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+    import graft.llm.{Dedup, DedupStore}
+    import MatQueries.{ingestOut, landSlabs, nDiff, replayDrains}
+    // slab 1 repeats slab 0's "a x" under a new id
+    val slabs = Seq(Seq((10L, "a x"), (11L, "b y")),
+      Seq((20L, "a x"), (21L, "c z"))).map(_.toDF("doc_id", "text"))
+    def replayDiff(base: String)(
+        start: (DataFrame, String) => StreamingQuery): Long = {
+      val schema = landSlabs(base, slabs)
+      val (out1, out2) = replayDrains(spark, base, schema)(start)(
+        ingestOut(spark, base, "doc_id").localCheckpoint())(
+        ingestOut(spark, base, "doc_id"))
+      assert(out1.count() == 3)
+      nDiff(out1, out2, Seq("doc_id", "batch")).head().getLong(0)
+    }
+    // the store-backed streams' shape WITHOUT their ledger: every delivery,
+    // a replay too, drops the texts already seen, overwrites its batch
+    // dir with the rest and appends them to the seen set
+    val bare = MatQueries.tempDir("replay_bare")
+    val seen = s"$bare/seen"
+    val nBare = replayDiff(bare) { (src, ckpt) =>
+      src.writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val kept = (if (new java.io.File(seen).exists())
+              batch.join(spark.read.parquet(seen), Seq("text"), "left_anti")
+            else batch.dropDuplicates("text")).localCheckpoint()
+          kept.write.mode("overwrite").parquet(s"$bare/out/batch=$id")
+          kept.select($"text").write.mode("append").parquet(seen); ()
+        }
+        .start()
+    }
+    // the replay re-delivers both batches against a seen set holding
+    // every text: both batch dirs come back empty
+    assert(nBare == 3)
+    val base = MatQueries.tempDir("replay_dedup")
+    val store = s"$base/store"
+    DedupStore.appendFingerprints(spark, store, -1L,
+      Dedup.fingerprintStore(Seq((1L, "history")).toDF("doc_id", "text")))
+    assert(replayDiff(base)(
+      Streaming.dedupIngestStream(spark, _, store, s"$base/out", _)) == 0)
+  }
 }
