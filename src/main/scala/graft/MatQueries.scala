@@ -99,14 +99,16 @@ object MatQueries {
     s.read.parquet(s"$base/out")
       .select(cols.map(col) :+ col("batch").cast("int").as("batch"): _*)
 
-  /** One row, `__n_diff`: the `keys` rows found in only one of the two
-    * snapshots (NULL when both are empty). */
+  /** One row, `__n_diff`: the `keys` values whose row count differs
+    * between the two snapshots — found in only one, or a different number
+    * of times, so a replay that re-appends rows counts (NULL when both
+    * are empty). */
   private[graft] def nDiff(a: DataFrame, b: DataFrame,
       keys: Seq[String]): DataFrame =
-    a.select(keys.map(col): _*).withColumn("__a", lit(1))
-      .join(b.select(keys.map(col): _*).withColumn("__b", lit(1)), keys,
-        "full_outer")
-      .agg(sum(when(col("__a").isNull || col("__b").isNull, 1L).otherwise(0L))
+    a.groupBy(keys.map(col): _*).count().withColumnRenamed("count", "__a")
+      .join(b.groupBy(keys.map(col): _*).count()
+        .withColumnRenamed("count", "__b"), keys, "full_outer")
+      .agg(sum(when(!(col("__a") <=> col("__b")), 1L).otherwise(0L))
         .as("__n_diff"))
 
   /** The replay gate over a [[nDiff]] row. */

@@ -49,6 +49,19 @@ object Verify {
     // host). At 1,000 a repeat compiles 0-18; plans, jobs and results
     // are unchanged.
     .config("spark.sql.codegen.cache.maxEntries", "1000")
+    // Hadoop without its native library sets a created file's or dir's
+    // mode by running `chmod`, and resolves a FileContext rename's links
+    // by running `readlink`: one child process per data file, `.crc`,
+    // directory and checkpoint-file rename, ~3.5 ms each on the writing
+    // thread (4-vCPU host: 1,419 per perfbench `ingest_cycles` run, ~350
+    // per cycle; 494 per `dag_refresh` run). graft's local filesystem sets
+    // the same modes through java.nio (exec/LocalFs.scala). Hadoop's
+    // FileSystem cache ignores the conf, so this holds only for `file:`
+    // filesystems first obtained through this session's Hadoop conf.
+    .config("spark.hadoop.fs.file.impl",
+      classOf[graft.exec.ForkFreeLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+      classOf[graft.exec.ForkFreeLocalFs].getName)
     .config("spark.sql.warehouse.dir", {
       // repeated sessions must not accumulate warehouse dirs under /tmp
       val wh = Files.createTempDirectory("graft_wh").toString

@@ -493,13 +493,13 @@ class StreamingSpec extends SparkSpec {
     // slab 1 repeats slab 0's "a x" under a new id
     val slabs = Seq(Seq((10L, "a x"), (11L, "b y")),
       Seq((20L, "a x"), (21L, "c z"))).map(_.toDF("doc_id", "text"))
-    def replayDiff(base: String)(
+    def replayDiff(base: String, firstRows: Long = 3)(
         start: (DataFrame, String) => StreamingQuery): Long = {
       val schema = landSlabs(base, slabs)
       val (out1, out2) = replayDrains(spark, base, schema)(start)(
         ingestOut(spark, base, "doc_id").localCheckpoint())(
         ingestOut(spark, base, "doc_id"))
-      assert(out1.count() == 3)
+      assert(out1.count() == firstRows)
       nDiff(out1, out2, Seq("doc_id", "batch")).head().getLong(0)
     }
     // the store-backed streams' shape WITHOUT their ledger: every delivery,
@@ -522,6 +522,17 @@ class StreamingSpec extends SparkSpec {
     // the replay re-delivers both batches against a seen set holding
     // every text: both batch dirs come back empty
     assert(nBare == 3)
+    // a plain appending sink: the replay re-appends all 4 rows under the
+    // same (doc_id, batch) keys, so every key's count goes 1 -> 2
+    val appending = MatQueries.tempDir("replay_append")
+    assert(replayDiff(appending, firstRows = 4) { (src, ckpt) =>
+      src.writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batch.write.mode("append").parquet(s"$appending/out/batch=$id"); ()
+        }
+        .start()
+    } == 4)
     val base = MatQueries.tempDir("replay_dedup")
     val store = s"$base/store"
     DedupStore.appendFingerprints(spark, store, -1L,
