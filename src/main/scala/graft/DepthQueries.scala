@@ -652,9 +652,10 @@ object DepthQueries {
     * file a tight footer min/max on BOTH keys; m06-style appends then land
     * UNCLUSTERED slabs whose footers span the full key range, so filtered
     * scans stop pruning and the table degrades monotonically with each
-    * append. The maintenance op re-clusters the directory (one shuffle —
-    * the clustered write's own hash exchange) and swaps it in with the
-    * trash-aside rename discipline. Self-measuring: per-file key spans
+    * append. The maintenance op is `zorderWrite` of the directory onto
+    * itself: it re-clusters (one shuffle — the clustered write's own hash
+    * exchange) into private staging and swaps the result in with
+    * [[graft.exec.Publish.dirSwap]]. Self-measuring: per-file key spans
     * (input_file_name + one grouped aggregate — the relational form of
     * LayoutSpec's footer audit) must show ≥ 0.9 of the global span on some
     * file BEFORE the compact (the degradation is real; boolean, because

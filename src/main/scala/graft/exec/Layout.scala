@@ -1,5 +1,6 @@
 package graft.exec
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.expressions.IntegralDivide
 import org.apache.spark.sql.functions._
@@ -100,9 +101,13 @@ object Layout {
     * contents are a pure function of the data — `repartitionByRange` here
     * would ride RangePartitioner's SAMPLED boundaries, and a sampling miss
     * merges two Morton quadrants into one file that then spans a full key
-    * range (the q36 r15 flake). The staged per-tile directories are
-    * flattened into `path` with metadata renames. Still one shuffle, same
-    * cost shape as any clustered write.
+    * range (the q36 r15 flake). Still one shuffle, same cost shape as any
+    * clustered write.
+    *
+    * The tile files (flattened by metadata renames) and the `_zstats`
+    * sidecar are built in private staging and replace `path` in one
+    * [[Publish.dirSwap]]: a failure leaves an existing layout untouched.
+    * `df` may read `path` itself ([[zorderCompact]]).
     *
     * The tile size is rounded UP to the next power of FOUR: `4^bits /
     * nFiles` is only Morton-block-aligned when `nFiles` is itself a power
@@ -112,16 +117,13 @@ object Layout {
     * 4 aligned tiles) — locality is never sacrificed to hit a file count. */
   def zorderWrite(df: DataFrame, xCol: String, yCol: String, nFiles: Int,
                   path: String, bits: Int = 8): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val blocks = tileBlocks(nFiles, bits)
     val tiles = (1L << (2 * bits)) / blocks
     val nParts = math.max(1L, math.min(tiles, 4096L)).toInt
     val spark = df.sparkSession
     val target = new HPath(path)
     val fs = target.getFileSystem(spark.sessionState.newHadoopConf())
-    val stamp = Committer.newStamp()
-    val staged = new HPath(target.getParent,
-      s".${target.getName}_zw_$stamp")
+    val staged = Publish.staging(target)
     // the layout stats are COLLECTED once (4 longs — the one bounded
     // driver read this module makes): they parameterize the row-side
     // quantization as literals AND persist as the `_zstats` sidecar that
@@ -145,56 +147,47 @@ object Layout {
       .sortWithinPartitions(col("__tile"), col("z"))
       .drop("z")
       .write.mode("overwrite").partitionBy("__tile").parquet(staged.toString)
-    // flatten __tile=K dirs into a plain parquet directory: file K IS tile K
-    fs.delete(target, true)
-    if (!fs.mkdirs(target))
-      throw new java.io.IOException(s"zorderWrite: cannot create $path")
-    var moved = 0
-    fs.listStatus(staged).filter(_.isDirectory).foreach { d =>
-      fs.listStatus(d.getPath)
-        .filter(AtomicWriter.isDataFile)
-        .foreach { f =>
-          // strip the leading underscores: _-prefixed files are hidden
-          // from Spark/parquet readers
-          val dst = new HPath(target,
-            s"${d.getPath.getName.stripPrefix("__").replace('=', '-')}-${
-              f.getPath.getName}")
-          if (!fs.rename(f.getPath, dst))
-            throw new java.io.IOException(
-              s"zorderWrite: cannot publish ${f.getPath} -> $dst")
-          moved += 1
-        }
+    val flat = flatTiles(fs, staged)
+    flat.foreach { case (f, name) =>
+      if (!fs.rename(f, new HPath(staged, name)))
+        throw new java.io.IOException(s"zorderWrite: cannot flatten $f")
     }
-    fs.delete(staged, true)
+    fs.listStatus(staged).filter(_.isDirectory).foreach(d => fs.delete(d.getPath, true))
+    fs.delete(new HPath(staged, "_SUCCESS"), false)
     // empty input writes no per-tile files; keep the read contract (a
     // schema-bearing empty parquet directory) that a plain write provides
-    if (moved == 0)
-      df.limit(0).write.mode("overwrite").parquet(path)
-    if (hasRows) writeStats(fs, target, ZStats(xlo, xhi, ylo, yhi, bits, blocks))
+    if (flat.isEmpty)
+      df.limit(0).write.mode("overwrite").parquet(staged.toString)
+    if (hasRows) {
+      val out = fs.create(statsPath(staged), false)
+      try out.write(s"$xlo,$xhi,$ylo,$yhi,$bits,$blocks".getBytes("UTF-8"))
+      finally out.close()
+    }
+    Publish.dirSwap(fs, staged, target)
   }
+
+  /** The data files of a `partitionBy("__tile")` write under `dir`, each
+    * with its flat name `tile-K-<file>` (file K IS tile K; `_`-prefixed
+    * names are hidden from readers, and hidden sidecars stay behind). */
+  private def flatTiles(fs: FileSystem, dir: HPath): Seq[(HPath, String)] =
+    fs.listStatus(dir).toSeq.filter(_.isDirectory).flatMap { d =>
+      fs.listStatus(d.getPath).toSeq.filter(AtomicWriter.isDataFile).map(f =>
+        f.getPath -> s"${d.getPath.getName.stripPrefix("__").replace('=', '-')}-${
+          f.getPath.getName}")
+    }
 
   /** The persisted layout parameters of a z-ordered directory — the
     * `_zstats` sidecar [[zorderWrite]] leaves beside the tile files. */
   case class ZStats(xlo: Long, xhi: Long, ylo: Long, yhi: Long,
       bits: Int, blocks: Long)
 
-  private def statsPath(dir: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dir, "_zstats")
-
-  private def writeStats(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, s: ZStats): Unit = {
-    val out = fs.create(statsPath(dir), true)
-    try out.write(
-      s"${s.xlo},${s.xhi},${s.ylo},${s.yhi},${s.bits},${s.blocks}"
-        .getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def statsPath(dir: HPath) = new HPath(dir, "_zstats")
 
   /** Read a layout's `_zstats` sidecar, None when the directory predates
     * it (or was never zorderWrite-laid). */
   def readStats(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[ZStats] = {
-    val p = statsPath(new org.apache.hadoop.fs.Path(path))
+    val p = statsPath(new HPath(path))
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(p)) return None
     val in = fs.open(p)
@@ -259,7 +252,6 @@ object Layout {
   def zorderCompactIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, xCol: String, yCol: String,
       maxRowGroupsPerTile: Int = 8): Seq[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
     require(maxRowGroupsPerTile >= 2,
       "maxRowGroupsPerTile >= 2 — a merge always yields at least two row groups")
     val target = new HPath(path)
@@ -286,7 +278,7 @@ object Layout {
     // small-cardinality id space by construction)
     val touched = slabRows.select(col("__tile")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
-    val tileIdOf: org.apache.hadoop.fs.FileStatus => Long =
+    val tileIdOf: FileStatus => Long =
       s => s.getPath.getName.stripPrefix("tile-").takeWhile(_.isDigit).toLong
     val oldByTile = tileFiles.filter(s => touched.contains(tileIdOf(s)))
       .groupBy(tileIdOf)
@@ -397,18 +389,7 @@ object Layout {
       case _ => () // REWRITE tiles flatten below
     }
     if (rwTiles.nonEmpty)
-      fs.listStatus(stagedRw).filter(_.isDirectory).foreach { d =>
-        fs.listStatus(d.getPath)
-          // "."-filtered like the stagedNew listing: a hidden sidecar
-          // published here would become a live "tile" file the NEXT
-          // maintenance pass feeds to readFooter
-          .filter(AtomicWriter.isDataFile)
-          .foreach { f =>
-            publish(f.getPath,
-              s"${d.getPath.getName.stripPrefix("__").replace('=', '-')}-${
-                f.getPath.getName}")
-          }
-      }
+      flatTiles(fs, stagedRw).foreach { case (f, name) => publish(f, name) }
     fs.delete(stagedNew, true)
     if (rwTiles.nonEmpty) fs.delete(stagedRw, true)
     if (merges.nonEmpty) fs.delete(stagedMg, true)
@@ -421,38 +402,14 @@ object Layout {
     * unclustered files whose footer min/max spans the full key range —
     * every filtered scan reads them, and the table degrades monotonically
     * with each append (the m06-style ingest pattern). The fix is a
-    * re-cluster: read everything, [[zorderWrite]] into PRIVATE staging,
-    * and swap directories with trash-aside renames — the same
-    * all-or-nothing discipline as [[Committer]]'s partition swap (old data
-    * moves ASIDE before the staged dir moves in; any failure restores it;
-    * the trash is deleted only after the swap completes). Rows are
-    * preserved exactly (one shuffle — the clustered write's own range
-    * exchange — same cost as the original write); LayoutSpec measures
-    * pruning restored to fresh-write level, and q36 value-matches the
-    * row set through the compact. Path-based layouts only (q34's shape);
-    * CATALOG tables get the same machinery through
+    * re-cluster: [[zorderWrite]] of the directory onto itself, which
+    * swaps the new layout in with [[Publish.dirSwap]]. Rows are preserved
+    * exactly (one shuffle, the same cost as the original write);
+    * LayoutSpec measures pruning restored to fresh-write level, and q36
+    * value-matches the row set through the compact. Path-based layouts
+    * only (q34's shape); CATALOG tables get the same machinery through
     * [[Maintenance.zorderCompact]] + the committer seam. */
   def zorderCompact(spark: org.apache.spark.sql.SparkSession, path: String,
-      xCol: String, yCol: String, nFiles: Int, bits: Int = 8): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val stamp = Committer.newStamp()
-    val staged = new HPath(p.getParent, s".${p.getName}_zstage_$stamp")
-    // the staged write completes BEFORE the live dir is touched (the scan
-    // of `path` is fully consumed by the write action)
-    zorderWrite(spark.read.parquet(path), xCol, yCol, nFiles,
-      staged.toString, bits)
-    val trash = new HPath(p.getParent, s".${p.getName}_ztrash_$stamp")
-    if (!fs.rename(p, trash))
-      throw new java.io.IOException(s"zorderCompact: cannot set aside $path")
-    if (!fs.rename(staged, p)) {
-      // restore: the old data is the only copy — failures here must be loud
-      if (!fs.rename(trash, p))
-        throw new java.io.IOException(
-          s"zorderCompact ROLLBACK INCOMPLETE: old data only in $trash")
-      throw new java.io.IOException(s"zorderCompact: cannot publish $path")
-    }
-    fs.delete(trash, true)
-  }
+      xCol: String, yCol: String, nFiles: Int, bits: Int = 8): Unit =
+    zorderWrite(spark.read.parquet(path), xCol, yCol, nFiles, path, bits)
 }

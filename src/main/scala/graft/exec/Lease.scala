@@ -6,9 +6,9 @@ import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
   * behind every "is this long-running operation still alive?" decision
   * (VERDICT r12 #7 parity sweep). Two use shapes:
   *
-  *  - EXCLUSIVE lease ([[graft.llm.DedupStore.compact]]): temp+rename is
-  *    the atomic arbiter between two acquirers; presence + freshness means
-  *    "someone is running, keep out".
+  *  - EXCLUSIVE lease ([[graft.llm.DedupStore.compact]]): of two racing
+  *    acquirers the first writer of the lease file wins ([[Publish.file]]);
+  *    presence + freshness means "someone is running, keep out".
   *  - PRESENCE marker ([[AtomicWriter.overwriteTable]] /
   *    [[AtomicWriter.overwritePartitions]] swaps): each writer heartbeats
   *    its OWN stamped file; [[Maintenance.recover]] treats any fresh marker
@@ -66,18 +66,14 @@ object Lease {
     }
   }
 
-  /** Atomically create `path` (temp+rename — the rename is the arbiter
-    * between two racing acquirers) and start its heartbeat. Returns None
-    * if another holder won the rename. Caller handles staleness of an
-    * EXISTING file before calling (see [[age]]). */
-  def tryAcquire(fs: HFileSystem, path: HPath, intervalMs: Long): Option[Handle] = {
-    val tmp = new HPath(path.getParent, "." + path.getName + ".tmp-" +
-      java.util.UUID.randomUUID().toString.take(8))
-    fs.mkdirs(path.getParent)
-    fs.create(tmp, true).close()
-    if (fs.rename(tmp, path)) Some(new Handle(fs, path, intervalMs))
-    else { try fs.delete(tmp, false) catch { case _: java.io.IOException => () }; None }
-  }
+  /** Atomically create `path` ([[Publish.file]]: first writer wins) and
+    * start its heartbeat. Returns None while `path` exists: held by a
+    * racing acquirer, or by anyone before this call. Caller handles
+    * staleness of an EXISTING file before calling (see [[age]]). */
+  def tryAcquire(fs: HFileSystem, path: HPath, intervalMs: Long): Option[Handle] =
+    if (Publish.file(fs, path, Array.emptyByteArray))
+      Some(new Handle(fs, path, intervalMs))
+    else None
 
   /** Create a PRESENCE marker (caller-unique name — no rename race to
     * arbitrate) and start its heartbeat. */

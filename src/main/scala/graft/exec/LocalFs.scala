@@ -1,7 +1,7 @@
 package graft.exec
 
 import java.net.URI
-import java.nio.file.{Files, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, LinkOption, Paths}
 import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
@@ -14,7 +14,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `.crc`) and directory it creates and `readlink` for every
   * `getFileLinkStatus`. These set the same mode through `java.nio` and
   * skip the `readlink` for a path that is no symlink; a mode NIO cannot
-  * express (sticky, setuid or setgid bit) and a real symlink take Hadoop's own route. */
+  * express (sticky, setuid or setgid bit) and a real symlink take Hadoop's own route.
+  * A file rename never replaces an existing file ([[rename]]). */
 class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val mode = permission.toShort.toInt
@@ -26,6 +27,26 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
         if ((mode & (0x100 >> i)) != 0) perms.add(pp)
       }
       Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
+    }
+  }
+
+  /** A file renamed onto an existing file fails and leaves it as it was,
+    * as HDFS and the Hadoop FileSystem specification do ([[Publish.file]]
+    * relies on it); Hadoop's `File.renameTo` replaces it. A hard link is
+    * the atomic no-replace step, then the old name goes. Directories, a
+    * rename onto itself, links across devices and `.crc` siblings (renamed
+    * only after their data file moved) take Hadoop's route. */
+  override def rename(src: Path, dst: Path): Boolean = {
+    val s = pathToFile(src).toPath
+    val d = pathToFile(dst).toPath
+    val crc = dst.getName.startsWith(".") && dst.getName.endsWith(".crc")
+    if (crc || s == d || !Files.isRegularFile(s, LinkOption.NOFOLLOW_LINKS) ||
+        Files.isDirectory(d)) super.rename(src, dst)
+    else try { Files.createLink(d, s); Files.delete(s); true }
+    catch {
+      case _: FileAlreadyExistsException => false
+      case _: java.io.IOException | _: UnsupportedOperationException =>
+        super.rename(src, dst)
     }
   }
 

@@ -588,22 +588,20 @@ object Maintenance {
 
   /** Compact a STREAMING EXPORT directory (`batch=<id>/shard=<s>` slabs
     * accumulated by [[graft.streaming.Streaming.exportIngestStream]]) into
-    * a consolidated `shard=<s>` layout with exactly one data file per
-    * shard: each micro-batch write lands its own small files per shard,
-    * and after N batches a consumer opens O(N·shards) files — the classic
-    * small-files tax that dominates scan cost at 100 TB long before
-    * bytes do. The consolidation is ROW-GROUP-STITCHED when it can be
-    * ([[ParquetStitch]], r16): each shard's per-batch files copy
-    * byte-for-byte into one file, one distributed task per shard, zero
-    * decode and zero shuffle of exported rows; past the stitch gate
-    * (schema drift, fragmentation bounds) it falls back to one shuffle
-    * on (shard) with `partitionBy` emitting one file per shard — either
-    * way the batch provenance column is dropped (membership, not
-    * lineage, is the compacted artifact's contract; the batched original
-    * remains the lineage record). Row membership is bit-preserved: the
-    * caller proves it by auditing the compacted dir against the
-    * pre-compact manifest ([[graft.llm.Sampling.auditShardExport]]).
-    * Returns the compacted frame. */
+    * a `shard=<s>` layout with exactly one data file per shard: after N
+    * micro-batches a consumer opens O(N·shards) small files, the tax that
+    * dominates scan cost at 100 TB long before bytes do. Each shard's
+    * per-batch files are ROW-GROUP-STITCHED ([[ParquetStitch]], r16) into
+    * one file, one task per shard, zero decode and zero shuffle; past the
+    * stitch gate (schema drift, fragmentation bounds) it falls back to one
+    * shuffle on (shard). Either way the batch provenance column is dropped
+    * (the batched original remains the lineage record) and row membership
+    * is bit-preserved: the caller audits the compacted dir against the
+    * pre-compact manifest ([[graft.llm.Sampling.auditShardExport]]). The
+    * output is built in private staging and replaces `outDir` in one
+    * [[Publish.dirSwap]]: readers see the previous output or the new one,
+    * and a failure leaves the previous one in place. Returns the
+    * compacted frame. */
   def compactExport(spark: SparkSession, exportDir: String, outDir: String,
       nShards: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -627,22 +625,22 @@ object Maintenance {
           .map(f => sh.getPath.getName -> f.getPath))
         .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
     val out = new HPath(outDir)
+    val staged = Publish.staging(out)
     def classic(): Unit = {
       spark.read.parquet(exportDir)
         .drop("batch")
         .repartition(nShards, col("shard"))
-        .write.partitionBy("shard").mode("overwrite").parquet(outDir)
+        .write.partitionBy("shard").mode("overwrite").parquet(staged.toString)
     }
     // the gate is FileStatus-only (a wide export pays more for driver
     // footer reads than for the copy); schema equality is verified inside
     // the distributed stitch, and a mismatch falls back to the re-encode
     if (byShard.nonEmpty &&
         byShard.values.forall(ParquetStitch.stitchableCheap(fs, _))) {
-      fs.delete(out, true)
       byShard.keys.foreach { sh =>
-        if (!fs.mkdirs(new HPath(out, sh)))
+        if (!fs.mkdirs(new HPath(staged, sh)))
           throw new java.io.IOException(s"compactExport: cannot create " +
-            s"$out/$sh")
+            s"$staged/$sh")
       }
       // Only a SCHEMA mismatch is a legitimate fallback trigger (sources
       // are intact; the re-encode is the right tool for drifted batches).
@@ -657,12 +655,13 @@ object Maintenance {
               .exists(_.contains("StitchSchemaMismatch")))
       try ParquetStitch.run(spark, byShard.toSeq.sortBy(_._1).map {
         case (sh, files) => (files.map(_.toString),
-          new HPath(new HPath(out, sh), "part-stitched.parquet").toString)
+          new HPath(new HPath(staged, sh), "part-stitched.parquet").toString)
       }) catch {
         case e: Exception if isSchemaMismatch(e) =>
           classic() // schema drift across batches: re-encode instead
       }
     } else classic()
+    Publish.dirSwap(fs, staged, out)
     spark.read.parquet(outDir)
   }
 

@@ -24,12 +24,9 @@ import graft.llm.Similarity.ResidualQuantizer
   *    ONE tagged (kind, i, j, vec) frame ([[commitArtifact]]) and reads
   *    it back through ONE decoder path with its meta-row and count
   *    checks ([[loadArtifact]], cached per root). Staged into a PRIVATE
-  *    per-attempt directory, published by ONE atomic whole-directory
-  *    rename — the rename IS the commit (see [[saveQuantizer]] for why a
-  *    shared-directory marker protocol is not enough here); a crash
-  *    mid-save leaves only inert staging debris, and the final directory
-  *    never exists partially. Replayed and racing saves are no-ops that
-  *    converge on the committed artifact.
+  *    per-attempt directory and published by
+  *    [[graft.exec.Publish.dirOnce]] (see [[saveQuantizer]]); replayed and
+  *    racing saves are no-ops that converge on the committed artifact.
   *  - **Codes** (`<root>/codes/…`): append-only encoded inverted-list
   *    segments managed by [[DedupStore.append]]/[[DedupStore.read]]
   *    verbatim (same markers, same compaction lease, same replay
@@ -71,7 +68,7 @@ object IndexStore {
   /** The artifact families a store root can hold, by directory name: the
     * residual-PQ quantizer, the IVF coarse centroids (flat and int8
     * stores), the IMI half-space codebooks. A family's directory can ONLY
-    * appear via [[commitArtifact]]'s atomic whole-directory rename, so
+    * appear via [[commitArtifact]]'s atomic whole-directory publish, so
     * its existence IS the commit — there is no observable partial
     * state. */
   private val Families = Seq("quantizer", "ivf", "imi")
@@ -95,30 +92,16 @@ object IndexStore {
     * immutable quantizer by contract, refits go to a new root).
     *
     * Commit protocol: every attempt writes into its own PRIVATE staging
-    * directory (`.quantizer-tmp-<uuid>`), then publishes with ONE atomic
-    * rename to `quantizer/`. A marker-file protocol over a SHARED data
-    * directory is not enough here: unlike DedupStore segments (same
-    * batchId ⇒ identical bytes by contract), two racing trainers hold
-    * DIFFERENT fits (their own corpus slice and seed), and overwrite-mode
-    * writes into one directory delete each other's in-flight task files
-    * (IndexStoreSpec's four-trainer race caught exactly that). With
-    * rename-as-commit the loser's rename fails, it discards its staging
-    * and loads the winner's artifact — every concurrent trainer converges
-    * on the ONE committed quantizer. A crash mid-save leaves only inert
-    * private staging debris; the final directory never exists partially.
-    *
-    * Win detection is a per-attempt TOKEN, not the rename's return value:
-    * Hadoop `FileSystem.rename` with an EXISTING destination directory
-    * moves the source INSIDE it and returns true (HDFS semantics;
-    * RawLocalFileSystem's copy fallback nests the same way), so a trainer
-    * whose rename raced a just-committed winner would otherwise read
-    * "true", return its OWN divergent fit to the caller, and leave its
-    * staging as debris nested inside the winner's `quantizer/`. Each
-    * attempt stamps `attempt-<uuid>` into its staging before the rename;
-    * the attempt won iff `quantizer/attempt-<uuid>` exists AFTERWARD —
-    * the token travels with the directory, so a nested loser can never
-    * read as a win. Losers sweep both the un-renamed staging AND the
-    * nested-inside-the-winner copy. */
+    * directory (`.quantizer-tmp-<uuid>`) and publishes it as `quantizer/`
+    * with [[graft.exec.Publish.dirOnce]]: first directory wins, decided
+    * by a token, since a rename onto an existing directory nests and
+    * returns true. A marker over a SHARED data directory is not enough:
+    * two racing trainers hold DIFFERENT fits, and overwrite-mode writes
+    * into one directory delete each other's in-flight task files
+    * (IndexStoreSpec's four-trainer race caught exactly that). A loser
+    * discards its staging and loads the winner's artifact, so every
+    * concurrent trainer converges on the ONE committed quantizer; a crash
+    * mid-save leaves only inert private staging debris. */
   def saveQuantizer(spark: SparkSession, root: String,
       rq: ResidualQuantizer): Boolean =
     commitArtifact(spark, root, "quantizer",
@@ -135,38 +118,19 @@ object IndexStore {
   /** The write half of the one artifact codec, under the rename-as-commit
     * protocol every family shares: the fit product is ONE tagged
     * (kind, i, j, vec) frame — one write job; meta rides as a "meta" row
-    * — staged into a private `.<family>-tmp-<uuid>`, stamped with the
-    * attempt token, published with one rename, and the win detected via
-    * the token (see [[saveQuantizer]]'s scaladoc for why the rename's
-    * return value cannot be trusted). Returns true iff THIS attempt's
-    * staging became the committed artifact. */
+    * — staged privately and published by [[graft.exec.Publish.dirOnce]].
+    * Returns true iff THIS attempt's staging became the committed
+    * artifact. */
   private def commitArtifact(spark: SparkSession, root: String,
       family: String, rows: Seq[(String, Int, Int, Seq[Double])]): Boolean = {
     import spark.implicits._
     val f = fs(spark, root)
     val dst = new HPath(root, family)
     if (f.exists(dst)) return false
-    val uuid = java.util.UUID.randomUUID().toString
-    val stage = new HPath(root, s".$family-tmp-$uuid")
+    val stage = graft.exec.Publish.staging(dst)
     rows.toDF("kind", "i", "j", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/artifact")
-    // the commit receipt: travels with the directory through the rename,
-    // so "did MY staging become the committed dir?" is one exists() check
-    val token = s"attempt-$uuid"
-    f.create(new HPath(stage, token), true).close()
-    f.rename(stage, dst)
-    val won = f.exists(new HPath(dst, token))
-    if (!won) {
-      // lost the race: our staging is either still at the root (rename
-      // failed outright) or nested INSIDE the winner's committed dir
-      // (rename-into-existing-dst semantics) — sweep both spots
-      f.delete(stage, true)
-      f.delete(new HPath(dst, stage.getName), true)
-      if (!f.exists(dst))
-        throw new java.io.IOException(
-          s"IndexStore: cannot publish $family under $root")
-    }
-    won
+    graft.exec.Publish.dirOnce(f, stage, dst)
   }
 
   /** Per-root cache of loaded artifacts, keyed by the committed
@@ -317,16 +281,13 @@ object IndexStore {
   def readCodes(spark: SparkSession, root: String): DataFrame =
     DedupStore.read(spark, codesRoot(root))
 
-  /** Sweep crashed trainers' staging debris: deletes `.<artifact>-tmp-*`
-    * directories older than `minAgeMs` (the [[graft.exec.Maintenance]]
-    * `recover` convention — age-gated so a LIVE trainer's in-flight
-    * staging is never swept; a healthy save lives seconds, the default
-    * floor is 30 min). Sweeps BOTH root-level debris (a crash before the
-    * publish rename) and debris nested INSIDE a committed artifact dir
-    * (a loser whose rename raced the winner — rename-into-existing-dst
-    * nests the source — and then crashed before its own sweep). Returns
-    * the swept paths. Debris is inert either way — this is disk hygiene,
-    * not correctness. */
+  /** Sweep crashed trainers' staging debris: [[graft.exec.Publish]]
+    * staging directories older than `minAgeMs` (age-gated so a LIVE
+    * trainer's in-flight staging is never swept; the default floor is 30
+    * min), at the root (a crash before the publish) and nested INSIDE a
+    * committed artifact dir (a race loser that crashed before its own
+    * sweep). Returns the swept paths. Debris is inert either way — this
+    * is disk hygiene, not correctness. */
   def recoverStaging(spark: SparkSession, root: String,
       minAgeMs: Long = 30L * 60 * 1000): Seq[String] = {
     val f = fs(spark, root)
@@ -334,8 +295,7 @@ object IndexStore {
     if (!f.exists(rootPath)) return Nil
     val now = System.currentTimeMillis()
     def debris(st: org.apache.hadoop.fs.FileStatus): Boolean =
-      st.isDirectory && st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.contains("-tmp-") &&
+      st.isDirectory && graft.exec.Publish.isStaging(st.getPath.getName) &&
         now - st.getModificationTime >= minAgeMs
     val top = f.listStatus(rootPath).toSeq
     val committedDirs = top.filter(st => st.isDirectory
@@ -630,8 +590,8 @@ object IndexStore {
   }
 
   /** Point the alias at `storeRoot` — the atomic cutover step. The
-    * pointer file is staged privately and published by one atomic FILE
-    * rename; concurrent publishes both land (distinct stamps) and the
+    * pointer file is published by [[graft.exec.Publish.file]] (one atomic
+    * FILE rename); concurrent publishes both land (distinct stamps) and the
     * newest wins deterministically. Requires the target store to be
     * complete (committed quantizer) — publishing a half-built root is the
     * one way to break the reader contract. */
@@ -640,17 +600,10 @@ object IndexStore {
       s"IndexStore: refusing to publish $storeRoot — no committed " +
         "artifact of any family (readers must never resolve to a " +
         "half-built store)")
-    val f = fs(spark, alias)
-    f.mkdirs(new HPath(alias))
-    val stamp = newStamp()
-    val tmp = new HPath(alias, s".$ptrPrefix$stamp-tmp")
-    val out = f.create(tmp, true)
-    try out.write(storeRoot.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, new HPath(alias, ptrPrefix + stamp))) {
-      f.delete(tmp, false)
+    if (!graft.exec.Publish.file(fs(spark, alias),
+        new HPath(alias, ptrPrefix + newStamp()), storeRoot.getBytes("UTF-8")))
       throw new java.io.IOException(
         s"IndexStore: cannot publish pointer under $alias")
-    }
   }
 
   /** Retrain-rotate: fit a FRESH quantizer on `corpus` at a new root
@@ -972,13 +925,9 @@ object IndexStore {
 
   private def writeGuardStat(spark: SparkSession, root: String,
       batchId: Long, v: Double): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(guardDir(root))
-    val tmp = new HPath(guardDir(root), s".stat-$batchId-tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    if (!f.rename(tmp, new HPath(guardDir(root), s"stat-$batchId")))
-      f.delete(tmp, false) // a concurrent replay already recorded it
+    // a loss means a concurrent replay already recorded it
+    graft.exec.Publish.file(fs(spark, root),
+      new HPath(guardDir(root), s"stat-$batchId"), v.toString.getBytes("UTF-8"))
   }
 
   /** Bound the drift guard's per-root yardstick state: keep the newest

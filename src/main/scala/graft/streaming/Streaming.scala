@@ -180,8 +180,7 @@ object Streaming {
           val batchP = graft.exec.AtomicWriter.withPartitionCols(batch, partition)
           val key = graft.exec.AtomicWriter.partitionKey(pcols.map(col))
           val touched = graft.exec.AtomicWriter.touchedKeys(spark, partition, batchP)
-          val tmp = new HPath(stateDir, s".done-$id.tmp")
-          touched match {
+          val published = touched match {
             case Some(keys) =>
               val overlap = keys.intersect(written)
               val df =
@@ -189,10 +188,8 @@ object Streaming {
                 else batchP.unionByName(spark.table(target.render)
                   .filter(key.isin(overlap.toSeq: _*)))
               Incremental.insertOverwriteDynamic(spark, target, df, partition)
-              // marker written via create+rename so it appears atomically
-              val out = fs.create(tmp, true)
-              try out.write(keys.mkString("\n").getBytes("UTF-8"))
-              finally out.close()
+              graft.exec.Publish.file(fs, done(id),
+                keys.mkString("\n").getBytes("UTF-8"))
             case None =>
               // WIDE batch (past the touched-partition cap, e.g. hourly ×
               // tenant backfill): the key set never lands on the driver or
@@ -209,9 +206,11 @@ object Streaming {
                   === overlapKeys("p"), "left_semi")
               Incremental.insertOverwriteDynamic(spark, target,
                 batchP.unionByName(tgtOverlap), partition)
-              keysDf.write.mode("overwrite").text(tmp.toString)
+              val stage = graft.exec.Publish.staging(done(id))
+              keysDf.write.text(stage.toString)
+              graft.exec.Publish.dirOnce(fs, stage, done(id))
           }
-          if (!fs.rename(tmp, done(id)))
+          if (!published)
             throw new java.io.IOException(s"cannot commit marker ${done(id)}")
           fs.delete(attempt(id), false)
           // the wide path re-reads the marker it just wrote (bounded MBs,

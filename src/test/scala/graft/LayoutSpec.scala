@@ -103,8 +103,14 @@ class LayoutSpec extends SparkSpec {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
     val base = java.nio.file.Files.createTempDirectory("zmaint")
     val path = s"$base/z"
+    // no staging or trash beside the layout (Publish's hidden `.z-tmp-*`
+    // and `.z-trash-*` siblings, or anything else) after a clean publish
+    def debris(): Seq[String] =
+      new java.io.File(base.toString).listFiles().map(_.getName).toSeq
+        .filter(_ != "z")
     Layout.zorderWrite(li.filter(col("l_orderkey") % 4 === 0),
       "l_partkey", "l_suppkey", 10, path)
+    assert(debris().isEmpty, s"zorderWrite left debris: ${debris()}")
     (1 to 3).foreach { r =>
       li.filter(col("l_orderkey") % 4 === r).write.mode("append").parquet(path)
     }
@@ -133,12 +139,7 @@ class LayoutSpec extends SparkSpec {
       .collect().head
     assert(checksumBefore == checksumAfter,
       s"compact changed the rows: $checksumBefore -> $checksumAfter")
-    // no staging/trash debris after a clean compact
-    val leftovers = new java.io.File(base.toString).listFiles()
-      .map(_.getName).filter(_.contains("zstage") ).toSeq ++
-      new java.io.File(base.toString).listFiles()
-        .map(_.getName).filter(_.contains("ztrash")).toSeq
-    assert(leftovers.isEmpty, s"compact left debris: $leftovers")
+    assert(debris().isEmpty, s"compact left debris: ${debris()}")
   }
 
   test("z-order layout prunes on BOTH keys; single-key sort prunes on one") {

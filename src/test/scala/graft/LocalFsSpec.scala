@@ -10,13 +10,15 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path => H
 import org.apache.hadoop.fs.permission.FsPermission
 import graft.catalog.{PartitionSpec, TableRef}
 import graft.exec.{AtomicWriter, ForkFreeLocalFileSystem, ForkFreeLocalFs,
-  ForkFreeRawLocalFileSystem}
+  ForkFreeRawLocalFileSystem, Lease}
 import graft.llm.{Dedup, DedupStore}
 import graft.streaming.Streaming
 
 /** graft's session writes local files without a Hadoop `Shell` child
   * process, and leaves on disk what Hadoop's stock local filesystem
-  * leaves: the same modes, `.crc` siblings and symlink answers. */
+  * leaves: the same modes, `.crc` siblings and symlink answers. A file
+  * rename never replaces an existing file, as the Hadoop FileSystem
+  * specification asks. */
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -130,5 +132,45 @@ class LocalFsSpec extends SparkSpec {
     fs.mkdirs(sticky)
     fs.setPermission(sticky, new FsPermission(Integer.parseInt("1775", 8).toShort))
     assert(mode(s"$dir/sticky") == Integer.parseInt("1775", 8))
+  }
+
+  test("a file renamed onto an existing file fails and leaves it intact") {
+    val dir = MatQueries.tempDir("localfs_rename")
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    def put(p: HPath, s: String): Unit = {
+      val out = fs.create(p, false)
+      try out.write(s.getBytes("UTF-8")) finally out.close()
+    }
+    // through the checksummed filesystem, so a replaced `.crc` would
+    // also fail the read below
+    def read(p: HPath): String = {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    val (src, dst) = (new HPath(s"$dir/src"), new HPath(s"$dir/dst"))
+    put(dst, "the first writer")
+    put(src, "the second writer, longer")
+    assert(!fs.rename(src, dst))
+    assert(read(dst) == "the first writer")
+    assert(read(src) == "the second writer, longer")
+    // onto a free name the file and its `.crc` move as before
+    val free = new HPath(s"$dir/free")
+    assert(fs.rename(src, free) && read(free) == "the second writer, longer")
+    assert(!fs.exists(src) && !new java.io.File(s"$dir/.src.crc").exists)
+    assert(new java.io.File(s"$dir/.free.crc").isFile)
+  }
+
+  test("a second Lease.tryAcquire on a held path gets None") {
+    val fs = FileSystem.get(new URI("file:///"), conf)
+    val path = new HPath(s"${MatQueries.tempDir("localfs_lease")}/compacting")
+    val first = Lease.tryAcquire(fs, path, 60000L)
+    assert(first.nonEmpty)
+    try assert(Lease.tryAcquire(fs, path, 60000L).isEmpty,
+      "two acquirers both hold the lease")
+    finally first.foreach(_.release())
+    assert(!fs.exists(path))
+    // released, the lease is free again, and no temp file is left beside it
+    Lease.tryAcquire(fs, path, 60000L).get.release()
+    assert(fs.listStatus(path.getParent).isEmpty)
   }
 }

@@ -1,0 +1,196 @@
+package graft
+
+import java.net.URI
+import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
+import graft.exec.{Layout, Publish}
+
+/** The three publish steps keep their race and failure contracts, and no
+  * source file outside the exempt ones hand-rolls a rename. */
+class PublishSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def fs: FileSystem =
+    FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
+
+  private def read(p: HPath): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def write(p: HPath, s: String): Unit = {
+    val out = fs.create(p, false)
+    try out.write(s.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Every name under `dir`, recursively, relative to it: `.crc`
+    * siblings too, which the checksummed filesystem's listing hides. */
+  private def tree(dir: HPath): Set[String] = {
+    val root = java.nio.file.Paths.get(dir.toUri.getPath)
+    val all = java.nio.file.Files.walk(root).iterator()
+    val names = Set.newBuilder[String]
+    while (all.hasNext) names += root.relativize(all.next()).toString
+    names.result() - ""
+  }
+
+  test("file: of two racing writers exactly one wins, and no temp is left") {
+    val dir = MatQueries.tempDir("publish_file")
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try for (round <- 0 until 200) {
+      val dst = new HPath(s"$dir/r$round/marker")
+      val barrier = new CyclicBarrier(2)
+      val wins = Await.result(Future.sequence((0 until 2).map { w =>
+        Future {
+          barrier.await(10, TimeUnit.SECONDS)
+          w -> Publish.file(fs, dst, s"writer $w of round $round".getBytes("UTF-8"))
+        }
+      }), 30.seconds).filter(_._2).map(_._1)
+      assert(wins.size == 1, s"round $round: winners $wins")
+      assert(read(dst) == s"writer ${wins.head} of round $round")
+      assert(tree(dst.getParent) == Set("marker", ".marker.crc"),
+        s"round $round left ${tree(dst.getParent)}")
+    } finally pool.shutdown()
+  }
+
+  test("dirOnce: a loser's staging is gone from beside and inside the winner") {
+    val dir = MatQueries.tempDir("publish_once")
+    val dst = new HPath(s"$dir/artifact")
+    def attempt(content: String): Boolean = {
+      val stage = Publish.staging(dst)
+      write(new HPath(stage, "data"), content)
+      Publish.dirOnce(fs, stage, dst)
+    }
+    assert(attempt("winner"))
+    val committed = tree(dst)
+    assert(!attempt("loser"))
+    assert(read(new HPath(dst, "data")) == "winner")
+    assert(tree(dst) == committed, "the loser's staging nested in the winner")
+    assert(tree(new HPath(dir)).forall(n => n == "artifact" ||
+      n.startsWith("artifact/")), s"debris beside: ${tree(new HPath(dir))}")
+  }
+
+  /** The session's local filesystem, with `rename` failing for the sources
+    * `fail` names. */
+  private def failingRenames(fail: HPath => Boolean): FileSystem =
+    new FilterFileSystem(fs) {
+      override def rename(src: HPath, dst: HPath): Boolean =
+        !fail(src) && super.rename(src, dst)
+    }
+
+  private def swapFixture(tag: String): (HPath, HPath) = {
+    val live = new HPath(s"${MatQueries.tempDir(tag)}/live")
+    write(new HPath(live, "old"), "old rows")
+    val staged = Publish.staging(live)
+    write(new HPath(staged, "new"), "new rows")
+    (staged, live)
+  }
+
+  test("dirSwap: a failed publish restores the old dir") {
+    val (staged, live) = swapFixture("publish_swap")
+    val e = intercept[java.io.IOException] {
+      Publish.dirSwap(failingRenames(_ == staged), staged, live)
+    }
+    assert(e.getMessage.contains("cannot publish"), e.getMessage)
+    assert(tree(live) == Set("old", ".old.crc"))
+    assert(read(new HPath(live, "old")) == "old rows")
+    // nothing is left in trash: the parent holds only the live dir and
+    // the staging the failed rename left
+    assert(fs.listStatus(live.getParent).map(_.getPath.getName).toSet ==
+      Set("live", staged.getName))
+    Publish.dirSwap(fs, staged, live)
+    assert(tree(live) == Set("new", ".new.crc"))
+    assert(fs.listStatus(live.getParent).map(_.getPath.getName).toSeq == Seq("live"))
+  }
+
+  test("dirSwap: a failed restore raises an error naming the trash dir") {
+    val (staged, live) = swapFixture("publish_restore")
+    val e = intercept[java.io.IOException] {
+      Publish.dirSwap(failingRenames(p => p == staged ||
+        p.getName.startsWith(".live-trash-")), staged, live)
+    }
+    val trash = fs.listStatus(live.getParent).map(_.getPath)
+      .filter(_.getName.startsWith(".live-trash-"))
+    assert(trash.length == 1)
+    assert(e.getMessage.contains("ROLLBACK INCOMPLETE") &&
+      e.getMessage.contains(trash.head.getName), e.getMessage)
+    assert(read(new HPath(trash.head, "old")) == "old rows")
+    assert(!fs.exists(live))
+  }
+
+  test("zorderWrite onto an existing layout replaces it whole") {
+    val path = s"${MatQueries.tempDir("publish_zorder")}/z"
+    val before = spark.range(0, 2000)
+      .select($"id", ($"id" % 97).as("x"), ($"id" % 89).as("y"))
+    val after = spark.range(5000, 5600)
+      .select($"id", ($"id" % 31 + 200).as("x"), ($"id" % 17 + 300).as("y"))
+    Layout.zorderWrite(before, "x", "y", 16, path)
+    val oldFiles = tree(new HPath(path)).filter(_.startsWith("tile-"))
+    assert(oldFiles.nonEmpty)
+    Layout.zorderWrite(after, "x", "y", 4, path)
+    val got = spark.read.parquet(path)
+    assert(got.select("id").as[Long].collect().sorted.toSeq == (5000L until 5600L))
+    val files = tree(new HPath(path))
+    assert(files.intersect(oldFiles).isEmpty, s"stale tiles: ${files.intersect(oldFiles)}")
+    assert(files.filter(n => n.startsWith("tile-") && n.endsWith(".parquet")).size <= 4)
+    assert(!files.exists(n => n.startsWith("__tile") || n == "_SUCCESS"), files)
+    assert(Layout.readStats(spark, path).contains(
+      Layout.ZStats(200L, 230L, 300L, 316L, 8, Layout.tileBlocks(4))))
+  }
+
+  /** The sources allowed to call `.rename(`, each with its reason. A
+    * member-scoped entry allows it only inside that top-level member. This
+    * list only shrinks. */
+  private val renameExempt: Seq[(String, Option[String], String)] = Seq(
+    ("exec/Publish.scala", None, "the three publish steps themselves"),
+    ("exec/LocalFs.scala", None, "the local filesystem's own rename"),
+    ("exec/Committer.scala", None,
+      "the multi-partition catalog swap, with its DDL and ownership markers"),
+    ("exec/Maintenance.scala", Some("recover"),
+      "crash recovery of the catalog swap's trash and nested staging"),
+    ("exec/ParquetStitch.scala", None,
+      "a task's deliberate delete-then-rename replace of its own output"),
+    ("exec/Layout.scala", Some("zorderCompactIncremental"),
+      "the per-tile publish into a live layout"),
+    ("exec/Layout.scala", Some("zorderWrite"),
+      "moves tile files inside its private staging dir, before one dirSwap"))
+
+  test("no hand-rolled publish: .rename( appears only in exempt sources") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val offenders = scala.collection.mutable.ListBuffer[String]()
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala")) {
+        val rel = root.relativize(f).toString
+        val lines = java.nio.file.Files.readAllLines(f).toArray.map(_.toString)
+        val rules = renameExempt.filter(_._1 == rel)
+        // the lines of each exempt top-level member: its `def` line up to
+        // the next line at the object's member indentation (its `}`)
+        def span(member: String): Range = {
+          val start = lines.indexWhere(_.matches(s"  (private.* )?def $member\\b.*"))
+          val end = lines.indexWhere(_.matches("  \\S.*"), start + 1)
+          if (start < 0) 0 until 0
+          else start to (if (end < 0) lines.length else end)
+        }
+        lines.zipWithIndex.foreach { case (l, i) =>
+          val code = l.trim
+          val comment = code.startsWith("*") || code.startsWith("/*") ||
+            code.startsWith("//")
+          val allowed = rules.exists(r => r._2.forall(m => span(m).contains(i)))
+          if (!comment && code.contains(".rename(") && !allowed)
+            offenders += s"$rel:${i + 1}: $code"
+        }
+      }
+    }
+    assert(offenders.isEmpty, "rename outside graft.exec.Publish (publish " +
+      s"through it, or add an exemption with its reason): $offenders")
+    // every exemption still names a member that exists
+    renameExempt.foreach { case (rel, member, _) =>
+      val src = new String(java.nio.file.Files.readAllBytes(root.resolve(rel)), "UTF-8")
+      member.foreach(m => assert(src.contains(s"def $m("), s"$rel has no $m"))
+    }
+  }
+}
