@@ -613,8 +613,8 @@ object MatQueries {
     * slab and evicts state behind it, so the bounded-per-key-state
     * property is genuinely exercised (an r7 version hash-partitioned the
     * backlog and needed a 3650-day horizon = no eviction at all;
-    * DedupDisorderProbe pins the drop/keep semantics when disorder DOES
-    * exceed the horizon). Final parquet state must equal the
+    * StreamingSpec's disorder test pins the drop/keep semantics when
+    * disorder DOES exceed the horizon). Final parquet state must equal the
     * duplicate-free source, row for row. */
   private def m18(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "events")

@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
@@ -13,6 +14,8 @@ final case class TableRef(database: Option[String], name: String) {
     case Some(db) => s"`$db`.`$name`"
     case None     => s"`$name`"
   }
+  /** The session catalog's identifier for this relation. */
+  def ident: TableIdentifier = TableIdentifier(name, database)
   override def toString: String = render
 }
 

@@ -8,7 +8,9 @@ import org.apache.spark.sql.types.BooleanType
   * column (the recall/error/bound gates all surface as booleans —
   * recall_ok, est_ok, superset_ok, …) is true on every row. Used for the
   * sf1 rehearsal, where the DuckDB oracle doesn't run but the gates must
-  * still hold with dials unchanged.
+  * still hold with dials unchanged. Runs through [[graft.Verify.suite]],
+  * so queries go in name order and `SPARK_GRAFT_ONLY` narrows the set.
+  * Exits 1 when any checked query is red, or has no gate column at all.
   * Run: sbt 'runMain graft.examples.GateCheck <sfDir> [query...]'. */
 object GateCheck {
   val gated = Seq(
@@ -132,33 +134,40 @@ object GateCheck {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val names = if (args.length > 1) args.drop(1).toSeq else gated
+    val names = (if (args.length > 1) args.drop(1).toSeq else gated).toSet
+    val unknown = names -- graft.SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = graft.Verify.session(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
-    var bad = 0
-    for (name <- names) {
+    val green = graft.Verify.suite(spark,
+        graft.SparkEntry.queries.filter { case (n, _) => names(n) }) {
+        (name, fn) =>
       val t0 = System.nanoTime()
-      val out = graft.SparkEntry.queries(name)(spark, dir)
+      val out = fn(spark, dir)
       val boolCols = gateColsOverride.getOrElse(name,
         out.schema.fields
           .filter(_.dataType == BooleanType).map(_.name).toSeq)
-      if (boolCols.isEmpty)
-        println(f"[gate] $name%-26s NO boolean gate column — check manually")
-      else {
-        val fails = out
+      // a gated query with no gate column proves nothing: its gate was
+      // renamed or dropped, so it counts as red
+      val fails =
+        if (boolCols.isEmpty) None
+        else Some(out
           .filter(boolCols.map(c => !coalesce(col(c), lit(false)))
             .reduce(_ || _))
-          .count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val verdict = if (fails == 0) "GREEN" else s"RED ($fails rows)"
-        println(f"[gate] $name%-26s ${boolCols.mkString(",")}%-22s " +
-          f"$verdict%-12s $dt%6.1f s")
-        if (fails > 0) bad += 1
+          .count())
+      val dt = (System.nanoTime() - t0) / 1e9
+      val verdict = fails match {
+        case None => "RED (no boolean gate column)"
+        case Some(0L) => "GREEN"
+        case Some(n) => s"RED ($n rows)"
       }
-      spark.catalog.clearCache()
+      println(f"[gate] $name%-26s ${boolCols.mkString(",")}%-22s " +
+        f"$verdict%-12s $dt%6.1f s")
+      fails.contains(0L)
     }
-    println(s"[gate] ${names.size} queries checked, $bad red")
+    val bad = green.count(!_._2)
+    println(s"[gate] ${green.size} queries checked, $bad red")
     spark.stop()
     if (bad > 0) sys.exit(1)
   }

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem => HFileSystem, Path => HPat
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.{col, concat_ws, lit, when}
-import graft.catalog.{PartitionSpec, TableRef}
+import graft.catalog.{CatalogOps, PartitionSpec, TableRef}
 import graft.functions.Fns
 
 /** All table mutation goes through this writer. OSS parquet has no row-level
@@ -66,10 +66,8 @@ object AtomicWriter {
     * instead. */
   def currentBucketing(spark: SparkSession,
       target: TableRef): Option[(Int, Seq[String])] = {
-    if (!spark.catalog.tableExists(target.render.replace("`", ""))) return None
-    val ident = spark.sessionState.sqlParser
-      .parseTableIdentifier(target.render.replace("`", ""))
-    spark.sessionState.catalog.getTableMetadata(ident).bucketSpec
+    if (!CatalogOps.exists(spark, target)) return None
+    spark.sessionState.catalog.getTableMetadata(target.ident).bucketSpec
       .map(bs => (bs.numBuckets, bs.bucketColumnNames))
   }
 
@@ -118,8 +116,7 @@ object AtomicWriter {
   def overwriteTable(spark: SparkSession, df: DataFrame, target: TableRef,
       partition: PartitionSpec = PartitionSpec.None,
       bucketBy: Option[(Int, Seq[String])] = None): Unit = {
-    def exists(r: TableRef) = spark.catalog.tableExists(r.render.replace("`", ""))
-    val existed = exists(target)
+    val existed = CatalogOps.exists(spark, target)
     val stamp = Committer.newStamp()
     // heartbeated writer-presence marker for the WHOLE swap (stage through
     // rename): Maintenance.recover won't sweep this table's stamped
@@ -144,7 +141,8 @@ object AtomicWriter {
         case e: Throwable =>
           try {
             if (movedAside) {
-              if (exists(target)) spark.sql(s"DROP TABLE IF EXISTS ${old.render}")
+              if (CatalogOps.exists(spark, target))
+                spark.sql(s"DROP TABLE IF EXISTS ${old.render}")
               else {
                 spark.sql(s"ALTER TABLE ${old.render} RENAME TO ${target.render}")
                 repairPartitionLocations(spark, target)
@@ -176,8 +174,7 @@ object AtomicWriter {
   private[exec] def repairPartitionLocations(spark: SparkSession,
       ref: TableRef): Unit = {
     val cat = spark.sessionState.catalog
-    val ident = spark.sessionState.sqlParser
-      .parseTableIdentifier(ref.render.replace("`", ""))
+    val ident = ref.ident
     val meta = cat.getTableMetadata(ident)
     if (meta.partitionColumnNames.isEmpty) return
     val root = new HPath(meta.location)
@@ -260,7 +257,7 @@ object AtomicWriter {
       }
       if (emptied.nonEmpty) {
         val cat = spark.sessionState.catalog
-        val ident = Committer.ident(spark, target)
+        val ident = target.ident
         val specs = emptied.toSeq.sorted.map { joined =>
           pcols.zip(joined.split(SEP, -1)).toMap
         }
@@ -353,9 +350,7 @@ object AtomicWriter {
   // rename by copy+delete are not a supported target.
 
   private[exec] def tableDir(spark: SparkSession, ref: TableRef): HPath = {
-    val ident = spark.sessionState.sqlParser
-      .parseTableIdentifier(ref.render.replace("`", ""))
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+    val meta = spark.sessionState.catalog.getTableMetadata(ref.ident)
     new HPath(meta.location)
   }
 

@@ -2,7 +2,6 @@ package graft.exec
 
 import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import graft.catalog.{PartitionSpec, TableRef}
 
 /** The partition swap's commit step: how staged data becomes the LIVE
@@ -34,9 +33,6 @@ import graft.catalog.{PartitionSpec, TableRef}
 object Committer {
 
   final case class Result(rels: Seq[String], replacedExisting: Boolean)
-
-  private[exec] def ident(spark: SparkSession, ref: TableRef): TableIdentifier =
-    spark.sessionState.sqlParser.parseTableIdentifier(ref.render.replace("`", ""))
 
   /** Per-operation stamp shared by every swap artifact (staging tables,
     * trash dirs, ownership markers, writer leases): millis-prefixed so

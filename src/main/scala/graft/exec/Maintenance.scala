@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.catalog.{PartitionSpec, TableRef}
+import graft.catalog.{CatalogOps, PartitionSpec, TableRef}
 
 /** Table-maintenance operators a 100 TB lakehouse needs around the
   * materialization lifecycle (not in the reference, which delegates storage
@@ -296,9 +296,7 @@ object Maintenance {
 
   private[exec] def tableProps(spark: SparkSession,
       target: TableRef): Map[String, String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser
-        .parseTableIdentifier(target.render.replace("`", ""))).properties
+    spark.sessionState.catalog.getTableMetadata(target.ident).properties
 
   /** The table's persisted z-layout parameters, established on first use:
     * read from table properties when present (a later compact must quantize
@@ -446,8 +444,7 @@ object Maintenance {
         s"lease(s) ${live.mkString(", ")} present (heartbeated; a crashed " +
         "writer's lease ages out at spark.graft.lease.maxAgeMs)")
     val cat = spark.sessionState.catalog
-    def exists(r: TableRef) =
-      spark.catalog.tableExists(r.render.replace("`", ""))
+    def exists(r: TableRef) = CatalogOps.exists(spark, r)
     val tmp = target.copy(name = target.name + "__dbt_tmp")
 
     val minAgeMs = spark.conf.getOption("spark.graft.recover.minAgeMs")
@@ -493,7 +490,7 @@ object Maintenance {
     }
     if (!exists(target)) return actions.toSeq
 
-    val ident = Committer.ident(spark, target)
+    val ident = target.ident
     val meta = cat.getTableMetadata(ident)
     val root = new org.apache.hadoop.fs.Path(meta.location)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())

@@ -34,8 +34,11 @@ final class StitchSchemaMismatch(msg: String)
   * [[stitch]] verifies exact footer-schema equality across its sources
   * — inside the stitch itself, where the footers are being read anyway,
   * not as a separate driver-side pass (a 1 600-file export paid more
-  * for sequential driver footer reads than for the copy; measured in
-  * CompactExportProbe). Two gates are offered: [[stitchable]] reads
+  * for sequential driver footer reads than for the copy; measured by the
+  * retired CompactExportProbe, `git show
+  * b49ec23:src/main/scala/graft/examples/CompactExportProbe.scala`; p06
+  * and ZorderTableSpec pin the stitch and its re-encode fallback). Two
+  * gates are offered: [[stitchable]] reads
   * footers (exact block counts — right for small source sets like
   * store-segment folds), [[stitchableCheap]] reads only FileStatus
   * (file-count proxy for blocks — right for wide fan-ins like export

@@ -2,7 +2,7 @@ package graft.exec
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.catalog.{PartitionSpec, TableRef}
+import graft.catalog.{CatalogOps, PartitionSpec, TableRef}
 import graft.functions.Fns
 
 /** SCD-2 snapshots (M9), mirroring the reference's snapshot materialization
@@ -62,7 +62,7 @@ object SnapshotExec {
           Fns.scdId((key.map(col) :+ u.cast("string")): _*))
     }
 
-    if (!spark.catalog.tableExists(target.render.replace("`", ""))) {
+    if (!CatalogOps.exists(spark, target)) {
       AtomicWriter.createOrReplace(spark, withMeta(src).drop(UPD), target)
       return
     }

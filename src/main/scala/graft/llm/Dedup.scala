@@ -497,7 +497,8 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of propagation rounds it took
     * to reach the fixpoint — the observable that proves the O(log L)
-    * convergence claim. Measured (examples/CcRoundsProbe, 2 M edges): a
+    * convergence claim. Measured by the retired CcRoundsProbe (`git show
+    * b49ec23:src/main/scala/graft/examples/CcRoundsProbe.scala`, 2 M edges): a
     * length-L worst-case chain takes 8/11/15/18/21 rounds at
     * L = 10^2..10^6 (+~3.3 per decade = log2), while 100× more star
     * components stays flat at 2 rounds — so maxIter = 40 covers chains to

@@ -482,6 +482,26 @@ object Multimodal {
       }(enc)
   }
 
+  /** `df`'s `keep` columns, one row per `64/bands`-bit slice of its 64-bit
+    * hash column `h`: `b` is the slice index, `bv` its value. Two hashes
+    * within `maxHamming` < `bands` differing bits cannot differ in every
+    * slice (pigeonhole), so an equi-join on (b, bv) finds every such pair. */
+  private def hashBands(df: DataFrame, h: String, keep: Seq[String],
+      maxHamming: Int, bands: Int): DataFrame = {
+    require(64 % bands == 0, s"bands must divide 64, got $bands")
+    require(maxHamming < bands,
+      s"pigeonhole-exact recall needs maxHamming ($maxHamming) < bands ($bands)")
+    val width = 64 / bands
+    val mask = (1L << width) - 1
+    df.select(keep.map(col) :+
+        explode(array((0 until bands).map(b =>
+          struct(lit(b).as("b"),
+            shiftrightunsigned(col(h), b * width)
+              .bitwiseAND(lit(mask)).as("bv"))): _*)).as("band"): _*)
+      .select(keep.map(col) ++
+        Seq(col("band.b").as("b"), col("band.bv").as("bv")): _*)
+  }
+
   /** Banded-Hamming near-duplicate IMAGE pairs over (id, ahash) rows — the
     * cross-image complement of [[ahash]]: the 64-bit hash splits into
     * `bands` contiguous slices, images sharing ANY slice value meet in a
@@ -495,19 +515,8 @@ object Multimodal {
     * NULL hashes (undecodable payloads) are excluded. */
   def ahashNearDupPairs(hashes: DataFrame, maxHamming: Int = 3,
       bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxHamming < bands,
-      s"pigeonhole-exact recall needs maxHamming ($maxHamming) < bands ($bands)")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
-    val banded = hashes.filter(col("ahash").isNotNull)
-      .select(col("id"), col("ahash"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("b"),
-            shiftrightunsigned(col("ahash"), b * width)
-              .bitwiseAND(lit(mask)).as("bv"))): _*)).as("band"))
-      .select(col("id"), col("ahash"),
-        col("band.b").as("b"), col("band.bv").as("bv"))
+    val banded = hashBands(hashes.filter(col("ahash").isNotNull), "ahash",
+      Seq("id", "ahash"), maxHamming, bands)
     val left = banded.select(col("b"), col("bv"),
       col("id").as("id_a"), col("ahash").as("ha"))
     val right = banded.select(col("b"), col("bv"),
@@ -534,18 +543,8 @@ object Multimodal {
     * kept (no history image within maxHamming), n_matches, min_ham. */
   def ahashStoreProbe(batch: DataFrame, store: DataFrame,
       maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxHamming < bands,
-      s"pigeonhole-exact recall needs maxHamming ($maxHamming) < bands ($bands)")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
     def banded(df: DataFrame, id: String, h: String): DataFrame =
-      df.filter(col(h).isNotNull).select(col(id), col(h),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("b"),
-            shiftrightunsigned(col(h), b * width)
-              .bitwiseAND(lit(mask)).as("bv"))): _*)).as("band"))
-        .select(col(id), col(h), col("band.b").as("b"), col("band.bv").as("bv"))
+      hashBands(df.filter(col(h).isNotNull), h, Seq(id, h), maxHamming, bands)
     val matches = banded(batch, "id", "ahash")
       .join(banded(store.select(col("img_id"), col("ahash").as("h_hash")),
         "img_id", "h_hash"), Seq("b", "bv"))
@@ -684,19 +683,9 @@ object Multimodal {
     * full frame coverage), failing safe toward kept. */
   def videoStoreProbe(batch: DataFrame, store: DataFrame,
       maxHamming: Int = 3, bands: Int = 4): DataFrame = {
-    require(64 % bands == 0, s"bands must divide 64, got $bands")
-    require(maxHamming < bands,
-      s"pigeonhole-exact recall needs maxHamming ($maxHamming) < bands ($bands)")
-    val width = 64 / bands
-    val mask = (1L << width) - 1
     def banded0(df: DataFrame, id: String, h: String): DataFrame =
-      df.filter(col("frame_idx") === 0 && col(h).isNotNull)
-        .select(col(id),
-          explode(array((0 until bands).map(b =>
-            struct(lit(b).as("b"),
-              shiftrightunsigned(col(h), b * width)
-                .bitwiseAND(lit(mask)).as("bv"))): _*)).as("band"))
-        .select(col(id), col("band.b").as("b"), col("band.bv").as("bv"))
+      hashBands(df.filter(col("frame_idx") === 0 && col(h).isNotNull), h,
+        Seq(id), maxHamming, bands)
     val cand = banded0(batch, "id", "ahash")
       .join(banded0(store.select(col("vid_id"), col("frame_idx"),
         col("ahash").as("h_hash")), "vid_id", "h_hash"), Seq("b", "bv"))

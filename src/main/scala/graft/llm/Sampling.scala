@@ -304,7 +304,9 @@ object Sampling {
     * decompose the boundary group the same way — per-bucket totals,
     * running totals over the distinct-bucket table, whole-keep/drop
     * buckets, and a per-row window only inside the single boundary
-    * BUCKET. Probed at 10× in examples/TokenBudgetScaleProbe.
+    * BUCKET. Probed at 10× by the retired TokenBudgetScaleProbe
+    * (`git show b49ec23:src/main/scala/graft/examples/TokenBudgetScaleProbe.scala`,
+    * numbers in BENCH_LOCAL_r10.md).
     *
     * Caller contract: `tokens` non-negative (they are token counts; the
     * wholesale drop relies on the running sum being monotone), `stratum`

@@ -108,7 +108,7 @@ object Materializer {
     // a dropped table with a half-written successor. First build = plain
     // CTAS (nothing to lose). The bucket spec rides the staged table
     // through the rename, so bucketed tables get the same guarantee.
-    val exists = spark.catalog.tableExists(target.render.replace("`", ""))
+    val exists = CatalogOps.exists(spark, target)
     if (exists)
       AtomicWriter.overwriteTable(spark, df, target, partition, bucketBy)
     else
@@ -144,7 +144,7 @@ object Materializer {
     if (strategy == Append && uniqueKey.nonEmpty)
       throw new IllegalArgumentException(
         "append strategy forbids unique_key (reference parity: incremental.sql:36-38)")
-    val exists = spark.catalog.tableExists(target.render.replace("`", ""))
+    val exists = CatalogOps.exists(spark, target)
     if (!exists || fullRefresh) {
       // full refresh of an EXISTING table takes the staged rename-swap —
       // a crash mid-CTAS must leave the previous contents recoverable
@@ -160,7 +160,7 @@ object Materializer {
     // plan does NOT scan the target we skip the staging write entirely —
     // at scale that's one full materialization of the delta saved.
     val scansTarget = {
-      val raw = target.render.replace("`", "").toLowerCase
+      val raw = target.ident.unquotedString.toLowerCase
       // analyzed identifiers are database-qualified; an unqualified
       // TableRef must be compared against its current-database form too
       val qualified =
@@ -217,7 +217,7 @@ object Materializer {
     * recreate). Returns "created" | "refreshed" | "replaced". */
   def materializedViewApply(spark: SparkSession, target: TableRef, sql: String,
       tblProperties: Map[String, String] = Map.empty): String = {
-    if (!spark.catalog.tableExists(target.render.replace("`", ""))) {
+    if (!CatalogOps.exists(spark, target)) {
       materializedView(spark, target, sql, tblProperties); "created"
     } else {
       val props = spark.sql(s"SHOW TBLPROPERTIES ${target.render}")

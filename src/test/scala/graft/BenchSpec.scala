@@ -41,4 +41,27 @@ class BenchSpec extends SparkSpec {
     assert(Bench.artifactPath(None) == Some("BENCH_FULL_latest.json"))
     assert(Bench.artifactPath(Some(Set("s05_cosine_topk_ivf"))).isEmpty)
   }
+
+  test("the run harness: src/main defines exactly five mains") {
+    // Verify and Bench run the suite; GateCheck re-proves the in-query
+    // gates at scale; ConfAbProbe times session-conf A/Bs through
+    // Bench.run; AmplifyTestdata builds the sf1/sf10 inputs. A new
+    // measurement belongs in one of them, not in another main.
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val mains = scala.collection.mutable.ListBuffer[String]()
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala")) {
+        val lines = java.nio.file.Files.readAllLines(f).toArray.map(_.toString.trim)
+        if (lines.exists { code =>
+          val comment = code.startsWith("*") || code.startsWith("/*") ||
+            code.startsWith("//")
+          !comment && (code.contains("def main(") || code.contains("extends App"))
+        }) mains += f.getFileName.toString.stripSuffix(".scala")
+      }
+    }
+    assert(mains.sorted == Seq("AmplifyTestdata", "Bench", "ConfAbProbe",
+      "GateCheck", "Verify"), mains)
+  }
 }
