@@ -104,9 +104,10 @@ object Layout {
     * range (the q36 r15 flake). Still one shuffle, same cost shape as any
     * clustered write.
     *
-    * The tile files (flattened by metadata renames) and the `_zstats`
-    * sidecar are built in private staging and replace `path` in one
-    * [[Publish.dirSwap]]: a failure leaves an existing layout untouched.
+    * The tile files (flattened by one [[Publish.replace]] inside the
+    * staging dir) and the `_zstats` sidecar are built in private staging
+    * and replace `path` in one [[Publish.dirSwap]]: a failure leaves an
+    * existing layout untouched.
     * `df` may read `path` itself ([[zorderCompact]]).
     *
     * The tile size is rounded UP to the next power of FOUR: `4^bits /
@@ -148,10 +149,7 @@ object Layout {
       .drop("z")
       .write.mode("overwrite").partitionBy("__tile").parquet(staged.toString)
     val flat = flatTiles(fs, staged)
-    flat.foreach { case (f, name) =>
-      if (!fs.rename(f, new HPath(staged, name)))
-        throw new java.io.IOException(s"zorderWrite: cannot flatten $f")
-    }
+    Publish.replace(fs, staged, Nil, flat)
     fs.listStatus(staged).filter(_.isDirectory).foreach(d => fs.delete(d.getPath, true))
     fs.delete(new HPath(staged, "_SUCCESS"), false)
     // empty input writes no per-tile files; keep the read contract (a
@@ -244,10 +242,10 @@ object Layout {
     * DISTRIBUTED (one task per touched tile).
     *
     * Swap discipline: every replacement file is built completely in
-    * private staging first; then old touched-tile files and the slabs
-    * move aside to a trash dir, the staged files move in, and the
-    * trash is deleted — any failure is loud and the trash holds the
-    * only-copy rows until resolved.
+    * private staging ([[Publish.staging]]) first; then one
+    * [[Publish.replace]] moves the old touched-tile files and the slabs
+    * out and the staged files in. A failure restores the layout as it
+    * was, and the staging dirs go either way.
     * Returns the touched tile ids (empty = nothing to do). */
   def zorderCompactIncremental(spark: org.apache.spark.sql.SparkSession,
       path: String, xCol: String, yCol: String,
@@ -282,119 +280,102 @@ object Layout {
       s => s.getPath.getName.stripPrefix("tile-").takeWhile(_.isDigit).toLong
     val oldByTile = tileFiles.filter(s => touched.contains(tileIdOf(s)))
       .groupBy(tileIdOf)
-    val stamp = Committer.newStamp()
-    // stage ONLY the slab rows, z-sorted, one file per touched tile —
-    // stored tile rows never enter a Spark plan on the merge path
-    val stagedNew = new HPath(target.getParent, s".${target.getName}_zi_$stamp")
-    slabRows
-      .withColumn("z", zValue(col(xCol), lit(st.xlo), lit(st.xhi),
-        col(yCol), lit(st.ylo), lit(st.yhi), st.bits))
-      .repartition(math.max(1, math.min(touched.size, 4096)), col("__tile"))
-      .sortWithinPartitions(col("__tile"), col("z"))
-      .drop("z")
-      .write.mode("overwrite").partitionBy("__tile").parquet(stagedNew.toString)
-    val stagedFiles: Map[Long, Seq[HPath]] = fs.listStatus(stagedNew).toSeq
-      .filter(_.isDirectory).map { d =>
-        d.getPath.getName.stripPrefix("__tile=").toLong ->
-          fs.listStatus(d.getPath).toSeq
-            .filter(AtomicWriter.isDataFile)
-            .map(_.getPath)
-      }.toMap
-    import org.apache.parquet.hadoop.ParquetFileReader
-    def footer(pp: HPath) = ParquetFileReader.readFooter(conf, pp)
-    // classify: MERGE stitches row groups; PUBLISH is a brand-new tile;
-    // REWRITE is the read-union-rewrite fallback (row-group bound hit,
-    // schema drift, or a legacy multi-file tile)
-    val MERGE = 0; val PUBLISH = 1; val REWRITE = 2
-    val acts: Map[Long, Int] = touched.map { t =>
-      val olds = oldByTile.getOrElse(t, Nil)
-      val news = stagedFiles.getOrElse(t, Nil)
-      val act =
-        if (olds.isEmpty && news.size == 1) PUBLISH
-        else if (olds.size == 1 && news.size == 1) {
-          val fo = footer(olds.head.getPath)
-          val fn = footer(news.head)
-          // gate on the MERGED block count (a hot tile's staged slab can
-          // itself carry several row groups) so the documented read-
-          // amplification cap holds by construction, not just usually
-          if (fo.getBlocks.size + fn.getBlocks.size <= maxRowGroupsPerTile &&
-              fo.getFileMetaData.getSchema ==
-                fn.getFileMetaData.getSchema) MERGE
-          else REWRITE
-        } else REWRITE
-      t -> act
-    }.toMap
-    // rewrite subset: old rows ∪ staged rows of those tiles, re-sorted
-    val rwTiles = acts.collect { case (t, REWRITE) => t }.toSeq.sorted
-    val stagedRw = new HPath(target.getParent, s".${target.getName}_zirw_$stamp")
-    if (rwTiles.nonEmpty) {
-      val oldPaths = rwTiles.flatMap(t =>
-        oldByTile.getOrElse(t, Nil).map(_.getPath.toString))
-      val newPaths = rwTiles.flatMap(t =>
-        stagedFiles.getOrElse(t, Nil).map(_.toString))
-      // old and staged files may disagree on column ORDER (a reordered
-      // slab is one of the reasons a tile lands here) — read separately,
-      // union by name
-      val union = Seq(oldPaths, newPaths).filter(_.nonEmpty)
-        .map(ps => spark.read.parquet(ps: _*))
-        .reduce(_ unionByName _)
-      withTile(union)
+    val stagedNew = Publish.staging(target)
+    val stagedRw = Publish.staging(target)
+    val stagedMg = Publish.staging(target)
+    try {
+      // stage ONLY the slab rows, z-sorted, one file per touched tile —
+      // stored tile rows never enter a Spark plan on the merge path
+      slabRows
         .withColumn("z", zValue(col(xCol), lit(st.xlo), lit(st.xhi),
           col(yCol), lit(st.ylo), lit(st.yhi), st.bits))
-        .repartition(math.max(1, math.min(rwTiles.size, 4096)), col("__tile"))
+        .repartition(math.max(1, math.min(touched.size, 4096)), col("__tile"))
         .sortWithinPartitions(col("__tile"), col("z"))
         .drop("z")
-        .write.mode("overwrite").partitionBy("__tile").parquet(stagedRw.toString)
-    }
-    // row-group merges: independent per tile, distributed one task per
-    // tile; each task is a sequential byte copy of two files' row groups
-    // plus a footer write, verified against the source footers' row count
-    val stagedMg = new HPath(target.getParent, s".${target.getName}_zimg_$stamp")
-    val merges = acts.collect { case (t, MERGE) =>
-      (t, oldByTile(t).head.getPath.toString, stagedFiles(t).head.toString)
-    }.toSeq.sortBy(_._1)
-    if (merges.nonEmpty) {
-      if (!fs.mkdirs(stagedMg))
-        throw new java.io.IOException(
-          s"zorderCompactIncremental: cannot create $stagedMg")
-      ParquetStitch.run(spark, merges.map { case (t, oldP, newP) =>
-        (Seq(oldP, newP), new HPath(stagedMg, s"tile-$t-rg.parquet").toString)
-      })
-    }
-    // swap: every replacement exists in staging; set aside old touched
-    // tiles + slabs, publish, clean up
-    val trash = new HPath(target.getParent, s".${target.getName}_zitrash_$stamp")
-    if (!fs.mkdirs(trash))
-      throw new java.io.IOException(s"zorderCompactIncremental: cannot " +
-        s"create $trash")
-    (oldByTile.values.flatten ++ slabs).foreach { s =>
-      if (!fs.rename(s.getPath, new HPath(trash, s.getPath.getName)))
-        throw new java.io.IOException(
-          s"zorderCompactIncremental: cannot set aside ${s.getPath}")
-    }
-    def publish(src: HPath, dstName: String): Unit = {
-      val dst = new HPath(target, dstName)
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(
-          s"zorderCompactIncremental: cannot publish $src -> $dst " +
-            s"(old rows preserved in $trash)")
-    }
-    acts.toSeq.sortBy(_._1).foreach {
-      case (t, MERGE) =>
-        publish(new HPath(stagedMg, s"tile-$t-rg.parquet"),
-          s"tile-$t-rg-$stamp.parquet")
-      case (t, PUBLISH) =>
-        val f0 = stagedFiles(t).head
-        publish(f0, s"tile-$t-${f0.getName}")
-      case _ => () // REWRITE tiles flatten below
-    }
-    if (rwTiles.nonEmpty)
-      flatTiles(fs, stagedRw).foreach { case (f, name) => publish(f, name) }
-    fs.delete(stagedNew, true)
-    if (rwTiles.nonEmpty) fs.delete(stagedRw, true)
-    if (merges.nonEmpty) fs.delete(stagedMg, true)
-    fs.delete(trash, true)
-    touched
+        .write.mode("overwrite").partitionBy("__tile").parquet(stagedNew.toString)
+      val stagedFiles: Map[Long, Seq[HPath]] = fs.listStatus(stagedNew).toSeq
+        .filter(_.isDirectory).map { d =>
+          d.getPath.getName.stripPrefix("__tile=").toLong ->
+            fs.listStatus(d.getPath).toSeq
+              .filter(AtomicWriter.isDataFile)
+              .map(_.getPath)
+        }.toMap
+      import org.apache.parquet.hadoop.ParquetFileReader
+      def footer(pp: HPath) = ParquetFileReader.readFooter(conf, pp)
+      // classify: MERGE stitches row groups; PUBLISH is a brand-new tile;
+      // REWRITE is the read-union-rewrite fallback (row-group bound hit,
+      // schema drift, or a legacy multi-file tile)
+      val MERGE = 0; val PUBLISH = 1; val REWRITE = 2
+      val acts: Map[Long, Int] = touched.map { t =>
+        val olds = oldByTile.getOrElse(t, Nil)
+        val news = stagedFiles.getOrElse(t, Nil)
+        val act =
+          if (olds.isEmpty && news.size == 1) PUBLISH
+          else if (olds.size == 1 && news.size == 1) {
+            val fo = footer(olds.head.getPath)
+            val fn = footer(news.head)
+            // gate on the MERGED block count (a hot tile's staged slab can
+            // itself carry several row groups) so the documented read-
+            // amplification cap holds by construction, not just usually
+            if (fo.getBlocks.size + fn.getBlocks.size <= maxRowGroupsPerTile &&
+                fo.getFileMetaData.getSchema ==
+                  fn.getFileMetaData.getSchema) MERGE
+            else REWRITE
+          } else REWRITE
+        t -> act
+      }.toMap
+      // rewrite subset: old rows ∪ staged rows of those tiles, re-sorted
+      val rwTiles = acts.collect { case (t, REWRITE) => t }.toSeq.sorted
+      if (rwTiles.nonEmpty) {
+        val oldPaths = rwTiles.flatMap(t =>
+          oldByTile.getOrElse(t, Nil).map(_.getPath.toString))
+        val newPaths = rwTiles.flatMap(t =>
+          stagedFiles.getOrElse(t, Nil).map(_.toString))
+        // old and staged files may disagree on column ORDER (a reordered
+        // slab is one of the reasons a tile lands here) — read separately,
+        // union by name
+        val union = Seq(oldPaths, newPaths).filter(_.nonEmpty)
+          .map(ps => spark.read.parquet(ps: _*))
+          .reduce(_ unionByName _)
+        withTile(union)
+          .withColumn("z", zValue(col(xCol), lit(st.xlo), lit(st.xhi),
+            col(yCol), lit(st.ylo), lit(st.yhi), st.bits))
+          .repartition(math.max(1, math.min(rwTiles.size, 4096)), col("__tile"))
+          .sortWithinPartitions(col("__tile"), col("z"))
+          .drop("z")
+          .write.mode("overwrite").partitionBy("__tile").parquet(stagedRw.toString)
+      }
+      // row-group merges: independent per tile, distributed one task per
+      // tile; each task is a sequential byte copy of two files' row groups
+      // plus a footer write, verified against the source footers' row count
+      val merges = acts.collect { case (t, MERGE) =>
+        (t, oldByTile(t).head.getPath.toString, stagedFiles(t).head.toString)
+      }.toSeq.sortBy(_._1)
+      if (merges.nonEmpty) {
+        if (!fs.mkdirs(stagedMg))
+          throw new java.io.IOException(
+            s"zorderCompactIncremental: cannot create $stagedMg")
+        ParquetStitch.run(spark, merges.map { case (t, oldP, newP) =>
+          (Seq(oldP, newP), new HPath(stagedMg, s"tile-$t-rg.parquet").toString)
+        })
+      }
+      // swap: every replacement exists in staging; the touched old tiles
+      // and the slabs move out and the merged, new and rewritten tiles move
+      // in, in one replace that rolls back on any failure
+      val stamp = Committer.newStamp()
+      val in = acts.toSeq.sortBy(_._1).flatMap {
+        case (t, MERGE) =>
+          Seq(new HPath(stagedMg, s"tile-$t-rg.parquet") ->
+            s"tile-$t-rg-$stamp.parquet")
+        case (t, PUBLISH) =>
+          val f0 = stagedFiles(t).head
+          Seq(f0 -> s"tile-$t-${f0.getName}")
+        case _ => Nil // REWRITE tiles flatten below
+      } ++ (if (rwTiles.nonEmpty) flatTiles(fs, stagedRw) else Nil)
+      Publish.replace(fs, target,
+        (oldByTile.values.flatten ++ slabs).map(_.getPath.getName).toSeq, in)
+      touched
+    } finally Seq(stagedNew, stagedRw, stagedMg).foreach(fs.delete(_, true))
   }
 
   /** FULL Z-order maintenance: restore a z-ordered directory whose

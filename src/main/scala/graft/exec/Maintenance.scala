@@ -425,19 +425,17 @@ object Maintenance {
     *     catalog partition references (a swap killed after moving a NEW
     *     partition's dir in, before its ADD PARTITION) — deleted.
     *
-    * Concurrency: recover assumes NO writer is in flight on this table
-    * (exclusive-admin semantics) — a live swap's staging table or trash
-    * dir looks exactly like a crash leftover.
-    * In shared environments set `spark.graft.recover.minAgeMs`: stamped
-    * artifacts younger than it (stamps embed epoch millis) are SKIPPED, so
-    * any writer that started within the window keeps its rollback state. */
+    * Concurrency: a live swap's staging table or trash dir looks exactly
+    * like a crash leftover, so recover sweeps nothing while a writer of
+    * this table holds a fresh [[WriterLease]]: every stamped artifact it
+    * sweeps is made inside one ([[AtomicWriter.overwriteTable]],
+    * [[AtomicWriter.overwritePartitions]]). */
   def recover(spark: SparkSession, target: TableRef): Seq[String] = {
     val actions = scala.collection.mutable.ListBuffer[String]()
     // a LIVE writer lease (heartbeated presence marker, [[WriterLease]])
-    // is a positive "writer in flight" signal — stronger than the stamp
-    // age heuristic below, which a write merely LONGER than minAgeMs
-    // defeats. Refuse to sweep anything while one is fresh; a crashed
-    // writer's marker stops beating and ages out of the ceiling.
+    // is the "writer in flight" signal. Refuse to sweep anything while
+    // one is fresh; a crashed writer's marker stops beating and ages out
+    // of the ceiling.
     val live = WriterLease.liveWriters(spark, target)
     if (live.nonEmpty)
       return Seq(s"SKIPPED recover of ${target.render} — live writer " +
@@ -447,43 +445,21 @@ object Maintenance {
     def exists(r: TableRef) = CatalogOps.exists(spark, r)
     val tmp = target.copy(name = target.name + "__dbt_tmp")
 
-    val minAgeMs = spark.conf.getOption("spark.graft.recover.minAgeMs")
-      .map(_.toLong).getOrElse(0L)
-    val nowMs = System.currentTimeMillis()
-    // an artifact is "young" (possibly a LIVE writer's) iff its name ends
-    // with a parseable stamp inside the grace window; unstamped legacy
-    // names count as infinitely old
-    def isYoung(name: String): Boolean =
-      "([0-9]{13})_[0-9]{6}$".r.findFirstMatchIn(name)
-        .exists(m => nowMs - m.group(1).toLong < minAgeMs)
-
     val db = target.database.getOrElse(cat.getCurrentDatabase)
     def tablesWithPrefix(p: String): Seq[String] =
       cat.listTables(db).map(_.table)
         .filter(t => t == p || t.startsWith(p + "_")).sorted
     val oldPrefix = target.name + "__graft_old"
 
-    // a YOUNG old-table with the target missing is exactly a live
-    // overwriteTable sitting between its two renames — restoring it would
-    // make the live writer's `stg RENAME TO target` fail and leak its
-    // staging table. Honor the same grace window as steps 2–4: skip (and
-    // say so) until the newest old-table ages out.
     if (!exists(target)) tablesWithPrefix(oldPrefix).lastOption.foreach { o =>
-      if (isYoung(o))
-        actions += s"SKIPPED restore of ${target.render} from $o — inside " +
-          "the spark.graft.recover.minAgeMs grace window (a live " +
-          "whole-table swap may be mid-rename); re-run recover after it ages"
-      else {
-        val latest = target.copy(name = o)
-        spark.sql(s"ALTER TABLE ${latest.render} RENAME TO ${target.render}")
-        AtomicWriter.repairPartitionLocations(spark, target)
-        actions += s"restored ${target.render} from ${latest.render}"
-      }
+      val latest = target.copy(name = o)
+      spark.sql(s"ALTER TABLE ${latest.render} RENAME TO ${target.render}")
+      AtomicWriter.repairPartitionLocations(spark, target)
+      actions += s"restored ${target.render} from ${latest.render}"
     }
     val staleHelpers =
       (tablesWithPrefix(target.name + "__graft_stg") ++ tablesWithPrefix(oldPrefix))
-        .filterNot(isYoung).map(t => target.copy(name = t)) ++
-        Seq(tmp).filter(exists)
+        .map(t => target.copy(name = t)) ++ Seq(tmp).filter(exists)
     staleHelpers.foreach { r =>
       spark.sql(s"DROP TABLE IF EXISTS ${r.render}")
       actions += s"dropped abandoned ${r.render}"
@@ -501,10 +477,8 @@ object Maintenance {
       catch { case _: java.io.FileNotFoundException => Nil }
 
     // 3. trash dirs: restore what the live table lost, drop the rest
-    // (young = possibly a live swap's rollback state — leave untouched)
     if (depth > 0) ls(root).filter(e => e.isDirectory &&
-        e.getPath.getName.startsWith(".graft_trash") &&
-        !isYoung(e.getPath.getName)).foreach { t =>
+        e.getPath.getName.startsWith(".graft_trash")).foreach { t =>
       // the trash may hold the ONLY copy of a partition — purge it only if
       // every stranded partition restored cleanly; a failed rename-back
       // leaves the trash in place (and says so) rather than destroying
@@ -539,16 +513,15 @@ object Maintenance {
     // of that partition. Move it aside under the loser's own trash stamp;
     // step 3 of the NEXT recover purges the copy once the live dir is
     // confirmed present (or restores from it if the live dir has meanwhile
-    // vanished). Age-gated like every other step: a YOUNG marker may be a
-    // live loser about to run its own pull-back. Runs AFTER step 3 so the
-    // crashed loser's own trash dir (same stamp) has already been cleared —
-    // if it still exists (a restore failure kept it), skip rather than
-    // rename onto it (Hadoop would nest again).
+    // vanished). Runs AFTER step 3 so the crashed loser's own trash dir
+    // (same stamp) has already been cleared — if it still exists (a
+    // restore failure kept it), skip rather than rename onto it (Hadoop
+    // would nest again).
     if (depth > 0) AtomicWriter.partitionDirs(fs, root, depth).foreach { rel =>
       val live = new org.apache.hadoop.fs.Path(root, rel)
       val nested = new org.apache.hadoop.fs.Path(live, live.getName)
       ls(nested).map(_.getPath.getName)
-        .find(_.startsWith("._graft_swap_")).filterNot(isYoung)
+        .find(_.startsWith("._graft_swap_"))
         .foreach { marker =>
           val stamp = marker.stripPrefix("._graft_swap_")
           val aside = new org.apache.hadoop.fs.Path(

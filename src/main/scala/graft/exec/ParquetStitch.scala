@@ -94,11 +94,11 @@ object ParquetStitch {
     * row count.
     *
     * RETRY-SAFE: the copy lands at an attempt-unique dot-prefixed temp
-    * name and renames into place after verification (replacing any
-    * partial `dst` a previous dead attempt left behind) — so a retried
-    * or speculative Spark task re-running the same job is idempotent,
-    * never fails on its predecessor's leftovers, and `dst` is only ever
-    * absent or complete-and-verified. */
+    * name and goes live after verification through [[Publish.replace]]
+    * (any partial `dst` a previous dead attempt left behind moves out) —
+    * so a retried or speculative Spark task re-running the same job is
+    * idempotent, never fails on its predecessor's leftovers, and `dst` is
+    * only ever absent or complete-and-verified. */
   def stitch(conf: Configuration, sources: Seq[HPath], dst: HPath): Long = {
     require(sources.nonEmpty, "ParquetStitch.stitch: no sources")
     val foots = sources.map(footer(conf, _))
@@ -112,7 +112,7 @@ object ParquetStitch {
     val fs = dst.getFileSystem(conf)
     val tmp = new HPath(dst.getParent,
       s".${dst.getName}.stitch-${java.util.UUID.randomUUID()}")
-    val got = try {
+    try {
       val w = new ParquetFileWriter(HadoopOutputFile.fromPath(tmp, conf),
         schema, ParquetFileWriter.Mode.CREATE, 134217728L, 8388608)
       w.start()
@@ -129,17 +129,15 @@ object ParquetStitch {
       if (n != want)
         throw new IllegalStateException(s"ParquetStitch: $tmp holds $n " +
           s"rows, sources hold $want — refusing to publish")
+      // a previous attempt's partial file, if any, moves out
+      Publish.replace(fs, dst.getParent, Seq(dst.getName),
+        Seq(tmp -> dst.getName))
       n
     } catch {
       case t: Throwable =>
         try fs.delete(tmp, false) catch { case _: Exception => () }
         throw t
     }
-    fs.delete(dst, false) // a previous attempt's partial file, if any
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(
-        s"ParquetStitch: cannot rename $tmp to $dst")
-    got
   }
 
   /** Run independent stitch jobs DISTRIBUTED, one task per destination

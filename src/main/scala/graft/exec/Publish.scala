@@ -50,22 +50,52 @@ object Publish {
     won
   }
 
-  /** Replace with rollback: `live` moves aside to a trash sibling, the
-    * complete `staged` moves in, the trash is deleted. Readers see the old
-    * directory or the new one. A failed move-in moves the old one back; a
-    * failed restore raises an error naming the trash, its only copy. */
-  def dirSwap(fs: FileSystem, staged: Path, live: Path): Unit = {
-    val trash = new Path(live.getParent,
-      s".${live.getName}-trash-${Committer.newStamp()}")
-    val aside = fs.exists(live)
-    if (aside && !fs.rename(live, trash))
-      throw new java.io.IOException(s"cannot set aside $live")
-    if (!fs.rename(staged, live)) {
-      if (aside && !fs.rename(trash, live))
-        throw new java.io.IOException(
-          s"ROLLBACK INCOMPLETE: the old $live is only in $trash")
-      throw new java.io.IOException(s"cannot publish $staged as $live")
+  /** Replace with rollback, for a set of direct children of `dir`: each
+    * existing `out` entry moves aside to its trash sibling, each staged
+    * `in` path moves to `dir/<name>`, and the trash is deleted. A reader
+    * listing `dir` mid-call may see a mix; after the call it sees every
+    * new entry, or after a failure every old one: a failed move undoes
+    * every completed one, newest first, before the error is rethrown, and
+    * a failed undo raises an error naming the trash entries, the only
+    * copies of what moved out. With nothing to move out nothing is
+    * created, so a plain publish is one rename per entry. Race: last
+    * writer wins; callers keep one writer per `dir`. */
+  def replace(fs: FileSystem, dir: Path, out: Seq[String],
+      in: Seq[(Path, String)]): Unit = {
+    val stamp = Committer.newStamp()
+    val aside = out.map(new Path(dir, _)).filter(fs.exists)
+      .map(p => p -> new Path(dir, s".${p.getName}-trash-$stamp"))
+    var done = List.empty[(Path, Path)]
+    def move(from: Path, to: Path, what: String): Unit = {
+      if (!fs.rename(from, to)) throw new java.io.IOException(what)
+      done = (from -> to) :: done
     }
-    if (aside) fs.delete(trash, true)
+    try {
+      aside.foreach { case (p, t) => move(p, t, s"cannot set aside $p") }
+      in.foreach { case (src, name) =>
+        move(src, new Path(dir, name), s"cannot publish $src as $dir/$name")
+      }
+    } catch {
+      case e: Throwable =>
+        done.foreach { case (from, to) =>
+          val back = try fs.rename(to, from)
+            catch { case _: java.io.IOException => false }
+          if (!back) {
+            val left = aside.map(_._2).filter(fs.exists)
+            val err = new java.io.IOException(s"ROLLBACK INCOMPLETE: cannot " +
+              s"move $to back to $from; the old entries of $dir are only in " +
+              left.mkString(", "))
+            err.addSuppressed(e)
+            throw err
+          }
+        }
+        throw e
+    }
+    aside.foreach { case (_, t) => fs.delete(t, true) }
   }
+
+  /** [[replace]] of one directory: the complete `staged` becomes `live`,
+    * and a failure leaves the old `live` in place. */
+  def dirSwap(fs: FileSystem, staged: Path, live: Path): Unit =
+    replace(fs, live.getParent, Seq(live.getName), Seq(staged -> live.getName))
 }

@@ -263,6 +263,27 @@ object Sampling {
       splitCol: String = "split"): DataFrame =
     hashSplit(df, groupKey, salt, thresholds, splitCol)
 
+  /** Bounded release seam for [[tokenBudget]]'s persisted classify tables
+    * (ADVICE r12): keep the newest few handles, unpersist the oldest — the
+    * leak is bounded at `keep` CacheManager entries per JVM instead of one
+    * per call for the session lifetime, and a recycled entry's surviving
+    * consumers simply recompute. Non-blocking unpersist: an in-flight job
+    * over a recycled cache finishes from the blocks it already holds. */
+  private val persistedClassify = new java.util.ArrayDeque[DataFrame]()
+  private def boundedPersist(side: DataFrame, keep: Int = 8): DataFrame = {
+    val p = side.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    persistedClassify.synchronized {
+      persistedClassify.addLast(p)
+      while (persistedClassify.size > keep)
+        persistedClassify.removeFirst().unpersist(false)
+    }
+    p
+  }
+
+  /** Most classified score groups [[tokenBudget]] broadcasts for its
+    * join; past it AQE picks the join from runtime sizes. */
+  val MaxBroadcastGroups = 1000000L
+
   /** Budget-constrained greedy selection — the final assembly step of a
     * training mix: per stratum, rank rows by (score desc, tie asc) and
     * keep them while the RUNNING token total stays within `budget`
@@ -295,8 +316,7 @@ object Sampling {
     *     common case: the corpus side never shuffles for the join); a
     *     degenerate near-unique score column falls back to AQE's runtime
     *     join choice instead of an unconditional driver broadcast
-    *     (threshold: `spark.graft.tokenBudget.maxBroadcastGroups`,
-    *     default 1e6 rows).
+    *     (threshold: [[MaxBroadcastGroups]] rows).
     *
     * The residual skew is a MODAL score (one score value dominating a
     * stratum) landing on the boundary: pass `tieBucket` (any
@@ -313,23 +333,6 @@ object Sampling {
     * and `score` non-null (the decomposition joins on them — same
     * contract as qualityTopQ), `tie` unique within a stratum so the kept
     * set is deterministic. */
-  /** Bounded release seam for [[tokenBudget]]'s persisted classify tables
-    * (ADVICE r12): keep the newest few handles, unpersist the oldest — the
-    * leak is bounded at `keep` CacheManager entries per JVM instead of one
-    * per call for the session lifetime, and a recycled entry's surviving
-    * consumers simply recompute. Non-blocking unpersist: an in-flight job
-    * over a recycled cache finishes from the blocks it already holds. */
-  private val persistedClassify = new java.util.ArrayDeque[DataFrame]()
-  private def boundedPersist(side: DataFrame, keep: Int = 8): DataFrame = {
-    val p = side.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persistedClassify.synchronized {
-      persistedClassify.addLast(p)
-      while (persistedClassify.size > keep)
-        persistedClassify.removeFirst().unpersist(false)
-    }
-    p
-  }
-
   def tokenBudget(df: DataFrame, stratum: Column, tokens: Column,
       score: Column, tie: Column, budget: Long,
       tieBucket: Option[Column] = None): DataFrame = {
@@ -360,9 +363,6 @@ object Sampling {
     // not corpus), count cheaply off the cache, and only hint when the side
     // is provably small; past the threshold AQE picks the join from runtime
     // sizes. The persist also means the classify agg runs once, not twice.
-    val maxBcast = df.sparkSession.conf
-      .getOption("spark.graft.tokenBudget.maxBroadcastGroups")
-      .map(_.toLong).getOrElse(1000000L)
     def sizeGatedBroadcast(side: DataFrame): DataFrame = {
       // persist + bounded release registry: a persist() here has no natural
       // unpersist point (the cache must outlive this call), so each
@@ -374,7 +374,7 @@ object Sampling {
       // cluster. The count is necessarily eager: the broadcast-vs-shuffle
       // decision needs the size at plan-construction time.
       val p = boundedPersist(side)
-      if (p.count() <= maxBcast) broadcast(p) else p
+      if (p.count() <= MaxBroadcastGroups) broadcast(p) else p
     }
     val cand = keyed.join(sizeGatedBroadcast(groups), Seq("__tb_g", "__tb_s"))
     val kept = tieBucket match {

@@ -53,24 +53,6 @@ class AtomicSwapSpec extends SparkSpec {
       == Seq((1L, "new")))
   }
 
-  test("recover age gate spares young stamped leftovers") {
-    val ref = TableRef("default.swap_age")
-    Seq((1L, "keep")).toDF("id", "v")
-      .write.mode("overwrite").saveAsTable(ref.render)
-    val young = f"${System.currentTimeMillis()}%013d_000001"
-    Seq((9L, "stg")).toDF("id", "v").write.mode("overwrite")
-      .saveAsTable(s"default.swap_age__graft_stg_$young")
-    spark.conf.set("spark.graft.recover.minAgeMs", "3600000")
-    try {
-      Maintenance.recover(spark, ref)
-      assert(tables().contains(s"swap_age__graft_stg_$young"),
-        "young staging table must be spared inside the grace window")
-    } finally spark.conf.unset("spark.graft.recover.minAgeMs")
-    // outside the window (default 0) it is swept
-    Maintenance.recover(spark, ref)
-    assert(!tables().exists(_.startsWith("swap_age__graft_stg")))
-  }
-
   test("partitioned overwrite recovers from a stale staging table") {
     val part = PartitionSpec.Static(Seq("pt" -> "string"))
     val ref = TableRef("default.swap_recover_part")

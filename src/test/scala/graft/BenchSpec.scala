@@ -64,4 +64,24 @@ class BenchSpec extends SparkSpec {
     assert(mains.sorted == Seq("AmplifyTestdata", "Bench", "ConfAbProbe",
       "GateCheck", "Verify"), mains)
   }
+
+  test("src/main reads three spark.graft.* keys") {
+    // each key is a knob a deployment must know about; a fixed value is
+    // a named constant instead. This list only shrinks.
+    val allowed = Set("spark.graft.lease.maxAgeMs",
+      "spark.graft.touchedPartitions.cap", "spark.graft.zorder.parallelMinBytes")
+    val key = """spark\.graft(\.\w+)+""".r
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val keys = scala.collection.mutable.SortedSet[String]()
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala"))
+        java.nio.file.Files.readAllLines(f).toArray.map(_.toString.trim)
+          .filterNot(c => c.startsWith("*") || c.startsWith("/*") ||
+            c.startsWith("//"))
+          .foreach(c => keys ++= key.findAllIn(c))
+    }
+    assert(keys.toSet.subsetOf(allowed), s"keys read in src/main: $keys")
+  }
 }

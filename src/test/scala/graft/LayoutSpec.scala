@@ -1,7 +1,24 @@
 package graft
 
+import java.net.URI
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath}
 import org.apache.spark.sql.functions._
-import graft.exec.Layout
+import graft.exec.{ForkFreeRawLocalFileSystem, Layout}
+
+/** The local filesystem under the `failmv` scheme, whose rename refuses
+  * the moves [[FailingMoveFs.fail]] names: a spec registers it in the
+  * session conf (`fs.failmv.impl`) to fail one step of a publish. */
+class FailingMoveFs extends LocalFileSystem(new ForkFreeRawLocalFileSystem {
+  override def getUri: URI = URI.create("failmv:///")
+}) {
+  override def getScheme: String = "failmv"
+  override def rename(src: HPath, dst: HPath): Boolean =
+    !FailingMoveFs.fail(src, dst) && super.rename(src, dst)
+}
+
+object FailingMoveFs {
+  @volatile var fail: (HPath, HPath) => Boolean = (_, _) => false
+}
 
 /** Z-order layout: the pruning claim is MEASURED, not asserted — write the
   * same table z-ordered and single-key-sorted, recover each FILE's min/max
@@ -11,6 +28,13 @@ import graft.exec.Layout
 class LayoutSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** What a publish left beside the layout `base/z`, or inside it as
+    * staging (`-tmp-`), trash (`-trash-`) or an old `_zi*` sibling name. */
+  private def debris(base: java.nio.file.Path): Seq[String] =
+    new java.io.File(base.toString).list().toSeq.filter(_ != "z") ++
+      new java.io.File(s"$base/z").list().toSeq.filter(n =>
+        n.contains("-tmp-") || n.contains("-trash-") || n.contains("_zi"))
 
   test("quantize + interleave are exact integer arithmetic") {
     import spark.implicits._
@@ -103,14 +127,9 @@ class LayoutSpec extends SparkSpec {
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
     val base = java.nio.file.Files.createTempDirectory("zmaint")
     val path = s"$base/z"
-    // no staging or trash beside the layout (Publish's hidden `.z-tmp-*`
-    // and `.z-trash-*` siblings, or anything else) after a clean publish
-    def debris(): Seq[String] =
-      new java.io.File(base.toString).listFiles().map(_.getName).toSeq
-        .filter(_ != "z")
     Layout.zorderWrite(li.filter(col("l_orderkey") % 4 === 0),
       "l_partkey", "l_suppkey", 10, path)
-    assert(debris().isEmpty, s"zorderWrite left debris: ${debris()}")
+    assert(debris(base).isEmpty, s"zorderWrite left debris: ${debris(base)}")
     (1 to 3).foreach { r =>
       li.filter(col("l_orderkey") % 4 === r).write.mode("append").parquet(path)
     }
@@ -139,7 +158,7 @@ class LayoutSpec extends SparkSpec {
       .collect().head
     assert(checksumBefore == checksumAfter,
       s"compact changed the rows: $checksumBefore -> $checksumAfter")
-    assert(debris().isEmpty, s"compact left debris: ${debris()}")
+    assert(debris(base).isEmpty, s"compact left debris: ${debris(base)}")
   }
 
   test("z-order layout prunes on BOTH keys; single-key sort prunes on one") {
@@ -211,6 +230,7 @@ class LayoutSpec extends SparkSpec {
     val touched = Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey")
     assert(touched.nonEmpty, "slab rows must touch some tiles")
+    assert(debris(base).isEmpty, s"compact left debris: ${debris(base)}")
     val after = files()
     // every surviving file is a tile file — the slabs were absorbed
     assert(after.keys.forall(_.startsWith("tile-")), after.keys.toSeq)
@@ -242,6 +262,7 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey").isEmpty)
     assert(files() == after, "a no-op pass must not rewrite anything")
+    assert(debris(base).isEmpty, s"no-op pass left debris: ${debris(base)}")
     // the stats sidecar anchors future increments
     assert(Layout.readStats(spark, path).contains(st))
     // a layout without the sidecar refuses loudly
@@ -287,6 +308,7 @@ class LayoutSpec extends SparkSpec {
       .collect().head
     val touched1 = Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey", maxRowGroupsPerTile = 3)
+    assert(debris(base).isEmpty, s"1: debris ${debris(base)}")
     assert(touched1.nonEmpty)
     val b1 = blocksOf()
     assert(touched1.forall(t => b1(t) == 2),
@@ -299,6 +321,7 @@ class LayoutSpec extends SparkSpec {
       .write.mode("append").parquet(path)
     val touched2 = Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey", maxRowGroupsPerTile = 3)
+    assert(debris(base).isEmpty, s"2: debris ${debris(base)}")
     val b2 = blocksOf()
     assert(touched2.forall(t => b2(t) == 3))
     li.filter(col("l_orderkey") % 8 === 3)
@@ -308,6 +331,7 @@ class LayoutSpec extends SparkSpec {
       .collect().head
     val touched3 = Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey", maxRowGroupsPerTile = 3)
+    assert(debris(base).isEmpty, s"3: debris ${debris(base)}")
     val b3 = blocksOf()
     assert(touched3.forall(t => b3(t) == 1),
       s"at the block bound the tile must re-sort to one row group " +
@@ -323,12 +347,43 @@ class LayoutSpec extends SparkSpec {
       .collect().head
     val touched4 = Layout.zorderCompactIncremental(spark, path,
       "l_partkey", "l_suppkey", maxRowGroupsPerTile = 3)
+    assert(debris(base).isEmpty, s"4: debris ${debris(base)}")
     assert(touched4.nonEmpty)
     val b4 = blocksOf()
     assert(touched4.forall(t => b4(t) == 1),
       "a reordered-column slab must take the rewrite path (schema equality " +
         "is required to stitch)")
     assert(checksum() == sum4, "schema-fallback rewrite changed the row set")
+  }
+
+  test("zorderCompactIncremental: a failed tile publish restores the layout") {
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .select(col("id"), (col("id") % 97).as("x"), (col("id") % 89).as("y"))
+    val base = java.nio.file.Files.createTempDirectory("zfail")
+    val path = s"$base/z"
+    Layout.zorderWrite(rows(0, 8000), "x", "y", 8, path)
+    rows(8000, 12000).write.mode("append").parquet(path)
+    def names() = new java.io.File(path).list().toSet
+    def stored() = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
+    val (namesBefore, rowsBefore) = (names(), stored())
+    // the second staged tile to move into the layout fails
+    val moveIns = new java.util.concurrent.atomic.AtomicInteger()
+    FailingMoveFs.fail = (src, dst) =>
+      dst.getParent.toUri.getPath == path &&
+        src.getParent.toUri.getPath != path &&
+        dst.getName.startsWith("tile-") && moveIns.incrementAndGet() == 2
+    spark.conf.set("fs.failmv.impl", classOf[FailingMoveFs].getName)
+    try intercept[java.io.IOException] {
+      Layout.zorderCompactIncremental(spark, s"failmv://$path", "x", "y")
+    } finally {
+      FailingMoveFs.fail = (_, _) => false
+      spark.conf.unset("fs.failmv.impl")
+    }
+    assert(moveIns.get >= 2, "the injected failure never fired")
+    assert(names() == namesBefore,
+      s"gone: ${namesBefore -- names()}; new: ${names() -- namesBefore}")
+    assert(stored() == rowsBefore, "the layout lost or gained rows")
+    assert(debris(base).isEmpty, s"failed compact left debris: ${debris(base)}")
   }
 
   test("zorderWrite file assignment is deterministic across runs and " +

@@ -72,8 +72,8 @@ class MaintenanceSpec extends SparkSpec {
     val ref = TableRef("default.maint_lease_race")
     Seq((1L, "a")).toDF("id", "v")
       .write.mode("overwrite").saveAsTable(ref.render)
-    // an abandoned staging table with an ANCIENT stamp (year 2001): far
-    // outside any minAgeMs grace window, so only the lease protects it
+    // an abandoned staging table with an ANCIENT stamp (year 2001): only
+    // the lease protects it
     val stg = ref.copy(name = ref.name + "__graft_stg_1000000000000_000001")
     Seq((9L, "z")).toDF("id", "v").write.saveAsTable(stg.render)
     // a "live writer": heartbeated presence marker held across the recover

@@ -7,7 +7,7 @@ import scala.concurrent.duration._
 import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
 import graft.exec.{Layout, Publish}
 
-/** The three publish steps keep their race and failure contracts, and no
+/** The publish steps keep their race and failure contracts, and no
   * source file outside the exempt ones hand-rolls a rename. */
 class PublishSpec extends SparkSpec {
   import spark.implicits._
@@ -120,6 +120,72 @@ class PublishSpec extends SparkSpec {
     assert(!fs.exists(live))
   }
 
+  /** `live` holding `a` and `b`, and three staged files `a`, `b`, `c`
+    * (content "new <name>") in its staging sibling. */
+  private def replaceFixture(tag: String): (HPath, Seq[(HPath, String)]) = {
+    val live = new HPath(s"${MatQueries.tempDir(tag)}/live")
+    Seq("a", "b").foreach(n => write(new HPath(live, n), s"old $n"))
+    val stage = Publish.staging(live)
+    val in = Seq("a", "b", "c").map { n =>
+      write(new HPath(stage, n), s"new $n")
+      new HPath(stage, n) -> n
+    }
+    (live, in)
+  }
+
+  test("replace: a failed k-th move-in restores every entry, no debris") {
+    val (live, in) = replaceFixture("publish_replace")
+    val stage = in.head._1.getParent
+    val before = tree(live.getParent)
+    for (k <- in.indices) {
+      val e = intercept[java.io.IOException] {
+        Publish.replace(failingRenames(_ == in(k)._1), live, Seq("a", "b"), in)
+      }
+      assert(e.getMessage.contains("cannot publish"), e.getMessage)
+      assert(tree(live.getParent) == before, s"move-in $k")
+      Seq("a", "b").foreach(n => assert(read(new HPath(live, n)) == s"old $n"))
+      in.foreach { case (p, n) => assert(read(p) == s"new $n") }
+    }
+    Publish.replace(fs, live, Seq("a", "b"), in)
+    assert(tree(live) == Set("a", "b", "c", ".a.crc", ".b.crc", ".c.crc"))
+    Seq("a", "b", "c").foreach(n => assert(read(new HPath(live, n)) == s"new $n"))
+    assert(tree(stage).isEmpty)
+  }
+
+  test("replace: a failed undo raises an error naming the trash") {
+    val (live, in) = replaceFixture("publish_undo")
+    val e = intercept[java.io.IOException] {
+      Publish.replace(failingRenames(p => p == in(1)._1 ||
+        p.getName.startsWith(".a-trash-")), live, Seq("a", "b"), in)
+    }
+    val trash = fs.listStatus(live).map(_.getPath)
+      .filter(_.getName.startsWith(".a-trash-"))
+    assert(trash.length == 1)
+    assert(e.getMessage.contains("ROLLBACK INCOMPLETE") &&
+      e.getMessage.contains(trash.head.getName), e.getMessage)
+    assert(read(trash.head) == "old a")
+    assert(read(new HPath(live, "b")) == "old b")
+    assert(!fs.exists(new HPath(live, "a")))
+  }
+
+  test("replace: with nothing to move out, a publish is one rename per entry") {
+    val (live, in) = replaceFixture("publish_plain")
+    val moves = scala.collection.mutable.ListBuffer[(HPath, HPath)]()
+    val recording = new FilterFileSystem(fs) {
+      override def rename(src: HPath, dst: HPath): Boolean = {
+        moves += src -> dst
+        super.rename(src, dst)
+      }
+    }
+    val fresh = in.map { case (p, n) => p -> s"$n-new" }
+    Publish.replace(recording, live, Seq("absent"), fresh)
+    assert(moves.toList == fresh.map { case (p, n) => p -> new HPath(live, n) })
+    assert(!tree(live.getParent).exists(_.contains("-trash-")),
+      tree(live.getParent))
+    Seq("a", "b", "c").foreach(n =>
+      assert(read(new HPath(live, s"$n-new")) == s"new $n"))
+  }
+
   test("zorderWrite onto an existing layout replaces it whole") {
     val path = s"${MatQueries.tempDir("publish_zorder")}/z"
     val before = spark.range(0, 2000)
@@ -144,18 +210,12 @@ class PublishSpec extends SparkSpec {
     * member-scoped entry allows it only inside that top-level member. This
     * list only shrinks. */
   private val renameExempt: Seq[(String, Option[String], String)] = Seq(
-    ("exec/Publish.scala", None, "the three publish steps themselves"),
+    ("exec/Publish.scala", None, "the publish steps themselves"),
     ("exec/LocalFs.scala", None, "the local filesystem's own rename"),
     ("exec/Committer.scala", None,
       "the multi-partition catalog swap, with its DDL and ownership markers"),
     ("exec/Maintenance.scala", Some("recover"),
-      "crash recovery of the catalog swap's trash and nested staging"),
-    ("exec/ParquetStitch.scala", None,
-      "a task's deliberate delete-then-rename replace of its own output"),
-    ("exec/Layout.scala", Some("zorderCompactIncremental"),
-      "the per-tile publish into a live layout"),
-    ("exec/Layout.scala", Some("zorderWrite"),
-      "moves tile files inside its private staging dir, before one dirSwap"))
+      "crash recovery of the catalog swap's trash and nested staging"))
 
   test("no hand-rolled publish: .rename( appears only in exempt sources") {
     val root = java.nio.file.Paths.get("src/main/scala/graft")

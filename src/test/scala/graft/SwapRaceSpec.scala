@@ -2,7 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.{Path => HPath}
 import graft.catalog.TableRef
-import graft.exec.{Maintenance, Retry}
+import graft.exec.{Maintenance, Retry, WriterLease}
 
 /** Round-6 concurrency hardening:
   *
@@ -15,9 +15,9 @@ import graft.exec.{Maintenance, Retry}
   *    existing dir nests src INSIDE dst (this is the behavior that could
   *    tear a partition, and what `fs.exists(new Path(dst, dst.getName))`
   *    detects).
-  *  - Maintenance.recover's restore step honors the minAgeMs grace window:
-  *    a YOUNG `__graft_old_<stamp>` with the target missing is a live
-  *    whole-table swap mid-rename, not a crash.
+  *  - Maintenance.recover leaves a live writer's rollback state alone:
+  *    while a [[WriterLease]] is held, a `__graft_old_<stamp>` with the
+  *    target missing is a whole-table swap mid-rename, not a crash.
   */
 class SwapRaceSpec extends SparkSpec {
   import spark.implicits._
@@ -90,12 +90,10 @@ class SwapRaceSpec extends SparkSpec {
       fs.mkdirs(nested)
       fs.create(new HPath(nested, "part-00000.parquet"), true).close()
       fs.create(new HPath(nested, s"._graft_swap_$stamp"), true).close()
-      // young marker = possibly a LIVE loser about to run its own pull-back
-      spark.conf.set("spark.graft.recover.minAgeMs", String.valueOf(24L * 3600 * 1000))
-      Maintenance.recover(spark, ref)
-      assert(fs.exists(nested), "young nested dir must be left for the live loser")
-      // aged out: the nest is a crash leftover — moved aside, live data intact
-      spark.conf.set("spark.graft.recover.minAgeMs", "0")
+      // a held lease = possibly a LIVE loser about to run its own pull-back
+      WriterLease.holding(spark, ref, stamp) { Maintenance.recover(spark, ref) }
+      assert(fs.exists(nested), "a live writer's nested dir must be left alone")
+      // no writer: the nest is a crash leftover — moved aside, live data intact
       val a1 = Maintenance.recover(spark, ref)
       assert(a1.exists(_.contains("nested swap leftover")), a1.mkString("; "))
       assert(!fs.exists(nested), "torn partition still readable after recover")
@@ -107,30 +105,28 @@ class SwapRaceSpec extends SparkSpec {
       Maintenance.recover(spark, ref)
       assert(!fs.exists(trash))
     } finally {
-      spark.conf.unset("spark.graft.recover.minAgeMs")
       spark.sql("DROP TABLE IF EXISTS default.nest_sweep_t")
     }
   }
 
-  test("recover: young __graft_old with target missing is skipped, then restored") {
+  test("recover: a leased __graft_old with target missing is skipped, then restored") {
     val ref = TableRef(Some("default"), "race_restore_t")
     val stamp = f"${System.currentTimeMillis()}%013d_000042"
     val old = TableRef(Some("default"), s"race_restore_t__graft_old_$stamp")
     Seq((1L, "a")).toDF("id", "v").write
       .saveAsTable(old.render.replace("`", ""))
     try {
-      spark.conf.set("spark.graft.recover.minAgeMs", "600000")
-      val a1 = Maintenance.recover(spark, ref)
-      assert(a1.exists(_.contains("SKIPPED restore")), a1.mkString("; "))
+      val a1 = WriterLease.holding(spark, ref, stamp) {
+        Maintenance.recover(spark, ref)
+      }
+      assert(a1.exists(_.contains("SKIPPED")), a1.mkString("; "))
       assert(!spark.catalog.tableExists("default.race_restore_t"),
         "recover must not rename a live swap's old-table back")
-      // aged out: the same leftover is now a genuine crash — restore runs
-      spark.conf.set("spark.graft.recover.minAgeMs", "0")
+      // lease released: the same leftover is now a genuine crash — restore runs
       val a2 = Maintenance.recover(spark, ref)
       assert(a2.exists(_.startsWith("restored")), a2.mkString("; "))
       assert(spark.catalog.tableExists("default.race_restore_t"))
     } finally {
-      spark.conf.unset("spark.graft.recover.minAgeMs")
       spark.sql("DROP TABLE IF EXISTS default.race_restore_t")
       spark.sql(s"DROP TABLE IF EXISTS ${old.render}")
     }
