@@ -3,10 +3,14 @@ package graft.exec
 import java.util.UUID
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The only ways a staged file or directory goes live outside the catalog
-  * swap ([[Committer]]), each with its rule for a race. Staging and trash
-  * are hidden siblings of the destination: `.<name>.tmp-<uuid>` (a file),
-  * `.<name>-tmp-<uuid>` (a directory, [[staging]]), `.<name>-trash-<stamp>`. */
+/** The only ways a staged file or directory goes live, each with its rule
+  * for a race; the catalog partition swap ([[Committer]]) is a [[replace]]
+  * of partition dirs. Staging is a hidden sibling of the destination:
+  * `.<name>.tmp-<uuid>` (a file), `.<name>-tmp-<uuid>` (a directory,
+  * [[staging]]). What a replace moves out waits in its trash dir
+  * `.graft_trash_<stamp>`, and a directory carries the hidden ownership
+  * marker `._graft_swap_<stamp>` through its rename: the names
+  * [[Maintenance.recover]] reads after a crash. */
 object Publish {
 
   /** A private staging directory for one attempt at publishing `dst`. */
@@ -30,17 +34,26 @@ object Publish {
     won
   }
 
+  /** The ownership marker: a hidden empty file stamped into a directory
+    * before its rename. A directory renamed onto an existing one nests
+    * inside it and the rename returns true, so which directory a path
+    * holds afterwards is read from the marker that travelled with it. */
+  private final case class Marker(token: String) {
+    private val name = s"._graft_swap_$token"
+    def stamp(fs: FileSystem, dir: Path): Unit = fs.create(new Path(dir, name), false).close()
+    def in(fs: FileSystem, dir: Path): Boolean = fs.exists(new Path(dir, name))
+    def clear(fs: FileSystem, dir: Path): Unit = fs.delete(new Path(dir, name), false)
+  }
+
   /** First directory wins: rename the complete `stage` (from [[staging]])
-    * onto `dst`. A directory renamed onto an existing one nests inside it
-    * and the rename returns true, so the win is read from a per-attempt
-    * token that travels with the directory. Returns true iff `stage`
-    * became `dst`; a loser deletes its staging from beside `dst` and from
-    * inside the winner's `dst`. */
+    * onto `dst`; the win is read from this attempt's [[Marker]]. Returns
+    * true iff `stage` became `dst`; a loser deletes its staging from
+    * beside `dst` and from inside the winner's `dst`. */
   def dirOnce(fs: FileSystem, stage: Path, dst: Path): Boolean = {
-    val token = s"attempt-${UUID.randomUUID()}"
-    fs.create(new Path(stage, token), false).close()
+    val mark = Marker(UUID.randomUUID().toString)
+    mark.stamp(fs, stage)
     fs.rename(stage, dst)
-    val won = fs.exists(new Path(dst, token))
+    val won = mark.in(fs, dst)
     if (!won) {
       fs.delete(stage, true)
       fs.delete(new Path(dst, stage.getName), true)
@@ -50,48 +63,105 @@ object Publish {
     won
   }
 
-  /** Replace with rollback, for a set of direct children of `dir`: each
-    * existing `out` entry moves aside to its trash sibling, each staged
-    * `in` path moves to `dir/<name>`, and the trash is deleted. A reader
-    * listing `dir` mid-call may see a mix; after the call it sees every
-    * new entry, or after a failure every old one: a failed move undoes
-    * every completed one, newest first, before the error is rethrown, and
-    * a failed undo raises an error naming the trash entries, the only
-    * copies of what moved out. With nothing to move out nothing is
-    * created, so a plain publish is one rename per entry. Race: last
-    * writer wins; callers keep one writer per `dir`. */
+  /** One completed move of [[replace]]; its undo moves `to` back to `from`. */
+  private final case class Move(from: Path, to: Path, aside: Boolean, marked: Boolean)
+
+  /** Replace with rollback, for entries of `dir` named by their path
+    * relative to it (`name`, or `k1=v1/k2=v2`): each existing `out` entry
+    * moves into this call's trash `dir/.graft_trash_<stamp>/<name>`, each
+    * staged `in` path moves to `dir/<name>` (parents made once each), and
+    * the trash is deleted. Returns the names moved out. An entry in both
+    * is set aside just before its replacement moves in, so it is missing
+    * for one rename. A reader listing `dir` mid-call may see a mix; after
+    * the call it sees every new entry, or after a failure every old one:
+    * a failed move undoes every completed one, newest first, before the
+    * error is rethrown, and a failed undo raises an error naming the
+    * trash, which then holds the only copies of what moved out. With
+    * nothing to move out no trash is made, so a plain publish is one
+    * rename per entry.
+    *
+    * Race: every staged directory carries a [[Marker]]. A move-in that
+    * nested inside a directory a concurrent writer published is pulled
+    * back out, and the call throws [[Retry.ConcurrentSwapException]] after
+    * its undo. An undo moves a directory back only while it holds the
+    * marker, and restores a set-aside entry only while its name is free;
+    * a skipped restore leaves the trash for [[Maintenance.recover]]. A
+    * file rename never replaces a file ([[file]]): files carry no marker. */
   def replace(fs: FileSystem, dir: Path, out: Seq[String],
-      in: Seq[(Path, String)]): Unit = {
+      in: Seq[(Path, String)]): Seq[String] = {
     val stamp = Committer.newStamp()
-    val aside = out.map(new Path(dir, _)).filter(fs.exists)
-      .map(p => p -> new Path(dir, s".${p.getName}-trash-$stamp"))
-    var done = List.empty[(Path, Path)]
-    def move(from: Path, to: Path, what: String): Unit = {
-      if (!fs.rename(from, to)) throw new java.io.IOException(what)
-      done = (from -> to) :: done
+    val mark = Marker(stamp)
+    val trash = new Path(dir, s".graft_trash_$stamp")
+    // which entries are directories: one call per staging parent, a stat
+    // where it stages one entry (a stitch's temp among its siblings), a
+    // listing where it stages several (a staging table's partitions)
+    val dirs = in.map(_._1).groupBy(_.getParent).toSeq.flatMap {
+      case (_, Seq(src)) => Seq(src).filter(fs.getFileStatus(_).isDirectory)
+      case (p, srcs) =>
+        val sub = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSet
+        srcs.filter(s => sub(s.getName))
+    }.toSet
+    val entries = in.map { case (src, name) => (src, name, dirs(src)) }
+    entries.foreach { case (src, _, marked) => if (marked) mark.stamp(fs, src) }
+    def parent(name: String): Option[String] =
+      Some(name.lastIndexOf('/')).filter(_ > 0).map(name.take)
+    in.flatMap(e => parent(e._2)).distinct.foreach(p => fs.mkdirs(new Path(dir, p)))
+    val trashDirs = scala.collection.mutable.Set[Path]()
+    val movedOut = scala.collection.mutable.ListBuffer[String]()
+    var done = List.empty[Move]
+    def move(m: Move, what: => String): Unit = {
+      if (!fs.rename(m.from, m.to)) throw new java.io.IOException(what)
+      done = m :: done
+    }
+    def setAside(name: String): Unit = {
+      val live = new Path(dir, name)
+      if (fs.exists(live)) {
+        val to = new Path(trash, name)
+        if (trashDirs.add(to.getParent)) fs.mkdirs(to.getParent)
+        move(Move(live, to, aside = true, marked = false), s"cannot set aside $live")
+        movedOut += name
+      }
     }
     try {
-      aside.foreach { case (p, t) => move(p, t, s"cannot set aside $p") }
-      in.foreach { case (src, name) =>
-        move(src, new Path(dir, name), s"cannot publish $src as $dir/$name")
+      val outNames = out.toSet
+      val inNames = in.map(_._2).toSet
+      out.filterNot(inNames).foreach(setAside)
+      entries.foreach { case (src, name, marked) =>
+        if (outNames(name)) setAside(name)
+        val dst = new Path(dir, name)
+        move(Move(src, dst, aside = false, marked), s"cannot publish $src as $dst")
+        val nested = new Path(dst, dst.getName)
+        if (marked && !mark.in(fs, dst) && mark.in(fs, nested)) {
+          done = Move(src, nested, aside = false, marked) :: done.tail
+          throw new Retry.ConcurrentSwapException(s"lost a replace race on " +
+            s"$dst: a concurrent writer published it mid-call")
+        }
       }
     } catch {
       case e: Throwable =>
-        done.foreach { case (from, to) =>
-          val back = try fs.rename(to, from)
-            catch { case _: java.io.IOException => false }
-          if (!back) {
-            val left = aside.map(_._2).filter(fs.exists)
-            val err = new java.io.IOException(s"ROLLBACK INCOMPLETE: cannot " +
-              s"move $to back to $from; the old entries of $dir are only in " +
-              left.mkString(", "))
-            err.addSuppressed(e)
-            throw err
-          }
+        var skipped = false
+        val failed = scala.collection.mutable.ListBuffer[String]()
+        done.foreach { m =>
+          if (if (m.aside) fs.exists(m.from) else m.marked && !mark.in(fs, m.to))
+            skipped = true
+          else if (!(try fs.rename(m.to, m.from)
+              catch { case _: java.io.IOException => false }))
+            failed += s"${m.to} back to ${m.from}"
+        }
+        if (failed.nonEmpty) {
+          val err = new java.io.IOException(s"ROLLBACK INCOMPLETE: cannot " +
+            s"move ${failed.mkString(", ")}; what moved out of $dir is only in $trash")
+          err.addSuppressed(e)
+          throw err
+        }
+        if (!skipped) {
+          entries.foreach { case (src, _, marked) => if (marked) mark.clear(fs, src) }
+          if (trashDirs.nonEmpty) fs.delete(trash, true)
         }
         throw e
     }
-    aside.foreach { case (_, t) => fs.delete(t, true) }
+    if (trashDirs.nonEmpty) fs.delete(trash, true)
+    movedOut.toList
   }
 
   /** [[replace]] of one directory: the complete `staged` becomes `live`,

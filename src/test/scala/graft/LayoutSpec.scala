@@ -30,11 +30,13 @@ class LayoutSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   /** What a publish left beside the layout `base/z`, or inside it as
-    * staging (`-tmp-`), trash (`-trash-`) or an old `_zi*` sibling name. */
+    * staging (`-tmp-`), trash (`-trash-`, `.graft_trash_`) or an old
+    * `_zi*` sibling name. */
   private def debris(base: java.nio.file.Path): Seq[String] =
     new java.io.File(base.toString).list().toSeq.filter(_ != "z") ++
       new java.io.File(s"$base/z").list().toSeq.filter(n =>
-        n.contains("-tmp-") || n.contains("-trash-") || n.contains("_zi"))
+        n.contains("-tmp-") || n.contains("-trash-") ||
+          n.contains(".graft_trash_") || n.contains("_zi"))
 
   test("quantize + interleave are exact integer arithmetic") {
     import spark.implicits._

@@ -4,8 +4,14 @@ import java.net.URI
 import java.util.concurrent.{CyclicBarrier, Executors, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
-import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
-import graft.exec.{Layout, Publish}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem,
+  FilterFileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.DataFrame
+import graft.catalog.{PartitionSpec, TableRef}
+import graft.exec.{Committer, Layout, Maintenance, Publish}
+import graft.mat.Materializer
 
 /** The publish steps keep their race and failure contracts, and no
   * source file outside the exempt ones hand-rolls a rename. */
@@ -101,7 +107,9 @@ class PublishSpec extends SparkSpec {
     assert(fs.listStatus(live.getParent).map(_.getPath.getName).toSet ==
       Set("live", staged.getName))
     Publish.dirSwap(fs, staged, live)
-    assert(tree(live) == Set("new", ".new.crc"))
+    // the published dir carries its ownership marker and that marker's .crc
+    val (marks, data) = tree(live).partition(_.contains("._graft_swap_"))
+    assert(data == Set("new", ".new.crc") && marks.size == 2, tree(live))
     assert(fs.listStatus(live.getParent).map(_.getPath.getName).toSeq == Seq("live"))
   }
 
@@ -109,14 +117,14 @@ class PublishSpec extends SparkSpec {
     val (staged, live) = swapFixture("publish_restore")
     val e = intercept[java.io.IOException] {
       Publish.dirSwap(failingRenames(p => p == staged ||
-        p.getName.startsWith(".live-trash-")), staged, live)
+        p.getParent.getName.startsWith(".graft_trash_")), staged, live)
     }
     val trash = fs.listStatus(live.getParent).map(_.getPath)
-      .filter(_.getName.startsWith(".live-trash-"))
+      .filter(_.getName.startsWith(".graft_trash_"))
     assert(trash.length == 1)
     assert(e.getMessage.contains("ROLLBACK INCOMPLETE") &&
       e.getMessage.contains(trash.head.getName), e.getMessage)
-    assert(read(new HPath(trash.head, "old")) == "old rows")
+    assert(read(new HPath(trash.head, "live/old")) == "old rows")
     assert(!fs.exists(live))
   }
 
@@ -156,14 +164,15 @@ class PublishSpec extends SparkSpec {
     val (live, in) = replaceFixture("publish_undo")
     val e = intercept[java.io.IOException] {
       Publish.replace(failingRenames(p => p == in(1)._1 ||
-        p.getName.startsWith(".a-trash-")), live, Seq("a", "b"), in)
+        p.getParent.getName.startsWith(".graft_trash_") && p.getName == "a"),
+        live, Seq("a", "b"), in)
     }
     val trash = fs.listStatus(live).map(_.getPath)
-      .filter(_.getName.startsWith(".a-trash-"))
+      .filter(_.getName.startsWith(".graft_trash_"))
     assert(trash.length == 1)
     assert(e.getMessage.contains("ROLLBACK INCOMPLETE") &&
       e.getMessage.contains(trash.head.getName), e.getMessage)
-    assert(read(trash.head) == "old a")
+    assert(read(new HPath(trash.head, "a")) == "old a")
     assert(read(new HPath(live, "b")) == "old b")
     assert(!fs.exists(new HPath(live, "a")))
   }
@@ -180,10 +189,34 @@ class PublishSpec extends SparkSpec {
     val fresh = in.map { case (p, n) => p -> s"$n-new" }
     Publish.replace(recording, live, Seq("absent"), fresh)
     assert(moves.toList == fresh.map { case (p, n) => p -> new HPath(live, n) })
-    assert(!tree(live.getParent).exists(_.contains("-trash-")),
-      tree(live.getParent))
+    assert(!tree(live.getParent).exists(n =>
+      n.contains("-trash-") || n.contains(".graft_trash_")), tree(live.getParent))
     Seq("a", "b", "c").foreach(n =>
       assert(read(new HPath(live, s"$n-new")) == s"new $n"))
+  }
+
+  test("replace: a directory nested in a concurrent writer's loses, and every move is undone") {
+    val base = new HPath(MatQueries.tempDir("publish_nest"))
+    val live = new HPath(base, "t")
+    write(new HPath(live, "p1/old"), "old rows")
+    val in = Seq("p1", "p2").map { n =>
+      write(new HPath(base, s"s/$n/new"), s"new $n")
+      new HPath(base, s"s/$n") -> n
+    }
+    val before = tree(base)
+    // a concurrent writer publishes p2 just before this call's move-in,
+    // which therefore nests inside it
+    val racing = new FilterFileSystem(fs) {
+      override def rename(src: HPath, dst: HPath): Boolean = {
+        if (src == in(1)._1) write(new HPath(dst, "winner"), "winner rows")
+        super.rename(src, dst)
+      }
+    }
+    intercept[graft.exec.Retry.ConcurrentSwapException] {
+      Publish.replace(racing, live, Seq("p1", "p2"), in)
+    }
+    assert(tree(base) == before ++ Set("t/p2", "t/p2/winner", "t/p2/.winner.crc"))
+    assert(read(new HPath(live, "p1/old")) == "old rows")
   }
 
   test("zorderWrite onto an existing layout replaces it whole") {
@@ -206,14 +239,133 @@ class PublishSpec extends SparkSpec {
       Layout.ZStats(200L, 230L, 300L, 316L, 8, Layout.tileBlocks(4))))
   }
 
+  private val byPt = PartitionSpec.Static(Seq("pt" -> "string"))
+
+  /** `default.<name>` partitioned by `pt` and holding p1 and p2, its root,
+    * and a write of the partitions p1 to p`n`, aligned to its columns. */
+  private def partitioned(name: String, n: Int): (TableRef, HPath, DataFrame) = {
+    val ref = TableRef(s"default.$name")
+    Materializer.table(spark, ref, Seq((1L, "old", "p1"), (2L, "old", "p1"),
+      (3L, "old", "p2")).toDF("id", "v", "pt"), byPt)
+    val root = new HPath(spark.sessionState.catalog.getTableMetadata(ref.ident).location)
+    (ref, root, (1 to n).map(i => (100L + i, "new", s"p$i")).toDF("id", "v", "pt"))
+  }
+
+  /** What readers and the catalog see of `ref`: rows and partitions. */
+  private def seen(ref: TableRef): (Seq[(Long, String, String)], Seq[String]) = {
+    spark.sql(s"REFRESH TABLE ${ref.render}")
+    (spark.table(ref.render).as[(Long, String, String)].collect().sorted.toSeq,
+      spark.sql(s"SHOW PARTITIONS ${ref.render}").as[String].collect().sorted.toSeq)
+  }
+
+  /** What a catalog swap left behind: trash dirs under `root`, staging tables. */
+  private def leftovers(ref: TableRef, root: HPath): Seq[String] =
+    fs.listStatus(root).map(_.getPath.getName).filter(_.startsWith(".graft_trash")) ++
+      spark.catalog.listTables("default").collect().map(_.name)
+        .filter(_.startsWith(s"${ref.name}__graft_stg"))
+
+  /** [[failingRenames]] failing the `k`-th rename out of a staging table
+    * (a catalog swap's move-in, counted from 0) and every rename `also`
+    * names. */
+  private def failingMoveIn(k: Int, also: HPath => Boolean = _ => false): FileSystem = {
+    var moveIns = 0
+    failingRenames { src =>
+      val moveIn = src.getParent.getName.contains("__graft_stg_")
+      if (moveIn) moveIns += 1
+      (moveIn && moveIns == k + 1) || also(src)
+    }
+  }
+
+  test("catalog swap: a failed k-th move-in leaves rows, partitions and files as before") {
+    val (ref, root, write) = partitioned("publish_cat_rollback", 3)
+    try {
+      val before = seen(ref)
+      val files = tree(root)
+      for (k <- 0 until 3) {
+        intercept[java.io.IOException] {
+          Committer.stageAndCommit(spark, write, ref, byPt, root, failingMoveIn(k))
+        }
+        assert(seen(ref) == before, s"move-in $k")
+        assert(tree(root) == files, s"move-in $k")
+        assert(leftovers(ref, root).isEmpty, s"move-in $k")
+      }
+      val done = Committer.stageAndCommit(spark, write, ref, byPt, root, fs)
+      assert(done.replacedExisting && done.rels.sorted == Seq("pt=p1", "pt=p2", "pt=p3"))
+      assert(seen(ref) == ((1 to 3).map(i => (100L + i, "new", s"p$i")),
+        Seq("pt=p1", "pt=p2", "pt=p3")))
+      assert(leftovers(ref, root).isEmpty)
+    } finally spark.sql(s"DROP TABLE IF EXISTS ${ref.render}")
+  }
+
+  test("catalog swap: a failed undo names the trash, and recover restores the old rows") {
+    val (ref, root, write) = partitioned("publish_cat_undo", 3)
+    try {
+      val before = seen(ref)
+      val e = intercept[java.io.IOException] {
+        Committer.stageAndCommit(spark, write, ref, byPt, root,
+          failingMoveIn(2, _.getParent.getName.startsWith(".graft_trash")))
+      }
+      val trash = fs.listStatus(root).map(_.getPath.getName)
+        .filter(_.startsWith(".graft_trash_"))
+      assert(trash.length == 1)
+      assert(e.getMessage.toLowerCase.contains("rollback incomplete") &&
+        e.getMessage.contains(trash.head), e.getMessage)
+      Maintenance.recover(spark, ref)
+      assert(seen(ref) == before)
+      assert(leftovers(ref, root).isEmpty)
+    } finally spark.sql(s"DROP TABLE IF EXISTS ${ref.render}")
+  }
+
+  test("catalog swap: filesystem calls of a 4-partition write, 2 existing") {
+    val (ref, root, write) = partitioned("publish_cat_calls", 4)
+    val calls = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    val recording = new FilterFileSystem(fs) {
+      override def rename(src: HPath, dst: HPath): Boolean = {
+        calls("rename") += 1; super.rename(src, dst)
+      }
+      override def mkdirs(p: HPath): Boolean = {
+        calls("mkdirs") += 1; super.mkdirs(p)
+      }
+      override def mkdirs(p: HPath, perm: FsPermission): Boolean = {
+        calls("mkdirs") += 1; super.mkdirs(p, perm)
+      }
+      override def create(p: HPath, perm: FsPermission, overwrite: Boolean,
+          buffer: Int, replication: Short, block: Long,
+          progress: Progressable): FSDataOutputStream = {
+        calls("create") += 1
+        super.create(p, perm, overwrite, buffer, replication, block, progress)
+      }
+      override def delete(p: HPath, recursive: Boolean): Boolean = {
+        calls("delete") += 1; super.delete(p, recursive)
+      }
+      // `exists` reads through here
+      override def getFileStatus(p: HPath): FileStatus = {
+        calls("getFileStatus") += 1; super.getFileStatus(p)
+      }
+      override def listStatus(p: HPath): Array[FileStatus] = {
+        calls("listStatus") += 1; super.listStatus(p)
+      }
+    }
+    try {
+      Committer.stageAndCommit(spark, write, ref, byPt, root, recording)
+      assert(seen(ref)._1 == (1 to 4).map(i => (100L + i, "new", s"p$i")))
+      info(calls.toSeq.sorted.mkString(", "))
+      // upper bounds, measured on the swap before it went through
+      // Publish.replace: no per-partition call may be added
+      val budget = Map("rename" -> 6, "mkdirs" -> 2, "create" -> 4,
+        "delete" -> 1, "getFileStatus" -> 8)
+      budget.foreach { case (call, most) =>
+        assert(calls(call) <= most, s"$call: ${calls(call)} > $most ($calls)")
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS ${ref.render}")
+  }
+
   /** The sources allowed to call `.rename(`, each with its reason. A
     * member-scoped entry allows it only inside that top-level member. This
     * list only shrinks. */
   private val renameExempt: Seq[(String, Option[String], String)] = Seq(
     ("exec/Publish.scala", None, "the publish steps themselves"),
     ("exec/LocalFs.scala", None, "the local filesystem's own rename"),
-    ("exec/Committer.scala", None,
-      "the multi-partition catalog swap, with its DDL and ownership markers"),
     ("exec/Maintenance.scala", Some("recover"),
       "crash recovery of the catalog swap's trash and nested staging"))
 
