@@ -220,26 +220,29 @@ object Layout {
     *
     * A touched tile is ROW-GROUP-MERGED, not rewritten (r16): the new
     * rows land as a z-sorted parquet file per tile, and the tile's
-    * replacement is stitched with `ParquetFileWriter.appendFile` — the
-    * old file's row groups COPY byte-for-byte (no decode, no re-encode,
-    * no shuffle of stored rows) and the new rows' row group appends
-    * after them, so the touched-tile cost is a sequential byte copy +
-    * the appended rows' encode, ∝ appended data + touched bytes
-    * streamed, never a distributed rewrite of stored rows. Per-file
+    * replacement is stitched ([[ParquetStitch]]) — the old file's row
+    * groups COPY byte-for-byte (no decode, no re-encode, no shuffle of
+    * stored rows) and the new rows' row group appends after them, so
+    * the touched-tile cost is a sequential byte copy + the appended
+    * rows' encode, ∝ appended data + touched bytes streamed, never a
+    * distributed rewrite of stored rows. Per-file
     * footer min/max — the pruning contract — is the union over row
     * groups and is preserved exactly; WITHIN the merged file each row
     * group stays z-sorted but the file is no longer globally z-sorted
     * (the Delta/Iceberg merge-on-write tradeoff — file-level pruning,
-    * which is what the layout exists for, is unaffected). Row groups
-    * accumulate one per compact, so a tile at `maxRowGroupsPerTile`
-    * blocks takes the full read-union-rewrite for that tile instead,
-    * which re-sorts it and resets the bound — read amplification is
-    * capped by construction. A tile whose old/new parquet schemas
-    * differ (e.g. a slab appended with reordered columns) also falls
-    * back to the rewrite path — `appendFile` under a mismatched writer
-    * schema would mis-stitch, so equality is REQUIRED, checked per
-    * tile from the footers. Merges are independent per tile and run
-    * DISTRIBUTED (one task per touched tile).
+    * which is what the layout exists for, is unaffected).
+    *
+    * Each touched tile takes one of three routes. A tile with ONE old
+    * file and one staged file is merged by [[ParquetStitch.run]] (one
+    * distributed task per tile). The stitch reads both footers and
+    * declines when the merged file would pass `maxRowGroupsPerTile` row
+    * groups (row groups accumulate one per compact) or when the two
+    * schemas differ (e.g. a slab appended with reordered columns — a
+    * byte copy under a mismatched writer schema would mis-stitch); a
+    * declined tile takes the read-union-rewrite, which re-sorts it into
+    * one row group — read amplification is capped by construction. A
+    * tile with NO old file publishes its staged file as is. Any other
+    * shape (a legacy multi-file tile) is rewritten too.
     *
     * Swap discipline: every replacement file is built completely in
     * private staging ([[Publish.staging]]) first; then one
@@ -300,32 +303,31 @@ object Layout {
               .filter(AtomicWriter.isDataFile)
               .map(_.getPath)
         }.toMap
-      import org.apache.parquet.hadoop.ParquetFileReader
-      def footer(pp: HPath) = ParquetFileReader.readFooter(conf, pp)
-      // classify: MERGE stitches row groups; PUBLISH is a brand-new tile;
-      // REWRITE is the read-union-rewrite fallback (row-group bound hit,
-      // schema drift, or a legacy multi-file tile)
-      val MERGE = 0; val PUBLISH = 1; val REWRITE = 2
-      val acts: Map[Long, Int] = touched.map { t =>
-        val olds = oldByTile.getOrElse(t, Nil)
-        val news = stagedFiles.getOrElse(t, Nil)
-        val act =
-          if (olds.isEmpty && news.size == 1) PUBLISH
-          else if (olds.size == 1 && news.size == 1) {
-            val fo = footer(olds.head.getPath)
-            val fn = footer(news.head)
-            // gate on the MERGED block count (a hot tile's staged slab can
-            // itself carry several row groups) so the documented read-
-            // amplification cap holds by construction, not just usually
-            if (fo.getBlocks.size + fn.getBlocks.size <= maxRowGroupsPerTile &&
-                fo.getFileMetaData.getSchema ==
-                  fn.getFileMetaData.getSchema) MERGE
-            else REWRITE
-          } else REWRITE
-        t -> act
-      }.toMap
-      // rewrite subset: old rows ∪ staged rows of those tiles, re-sorted
-      val rwTiles = acts.collect { case (t, REWRITE) => t }.toSeq.sorted
+      // row-group merges: a tile with one old file and one staged file is
+      // stitched, distributed one task per tile; each task is a sequential
+      // byte copy of two files' row groups plus a footer write, verified
+      // against the source footers' row count. The stitch declines on
+      // schema drift or past `maxRowGroupsPerTile` MERGED blocks (a hot
+      // tile's staged slab can itself carry several row groups, so the
+      // read-amplification cap holds by construction)
+      val pairs = touched.filter(t => oldByTile.get(t).exists(_.size == 1) &&
+        stagedFiles.get(t).exists(_.size == 1))
+      def mergedFile(t: Long) = new HPath(stagedMg, s"tile-$t-rg.parquet")
+      val declined = if (pairs.isEmpty) Set.empty[String] else {
+        if (!fs.mkdirs(stagedMg))
+          throw new java.io.IOException(
+            s"zorderCompactIncremental: cannot create $stagedMg")
+        ParquetStitch.run(spark, pairs.map(t =>
+          (Seq(oldByTile(t).head.getPath.toString, stagedFiles(t).head.toString),
+            mergedFile(t).toString)), maxRowGroupsPerTile, Long.MaxValue).toSet
+      }
+      val merged = pairs.filterNot(t => declined(mergedFile(t).toString)).toSet
+      // a brand-new tile publishes its staged file as is
+      val fresh = touched.filter(t => !oldByTile.contains(t) &&
+        stagedFiles.get(t).exists(_.size == 1)).toSet
+      // everything else — a declined merge, a legacy multi-file tile — is
+      // rewritten: old rows ∪ staged rows of those tiles, re-sorted
+      val rwTiles = touched.filterNot(t => merged(t) || fresh(t))
       if (rwTiles.nonEmpty) {
         val oldPaths = rwTiles.flatMap(t =>
           oldByTile.getOrElse(t, Nil).map(_.getPath.toString))
@@ -345,32 +347,16 @@ object Layout {
           .drop("z")
           .write.mode("overwrite").partitionBy("__tile").parquet(stagedRw.toString)
       }
-      // row-group merges: independent per tile, distributed one task per
-      // tile; each task is a sequential byte copy of two files' row groups
-      // plus a footer write, verified against the source footers' row count
-      val merges = acts.collect { case (t, MERGE) =>
-        (t, oldByTile(t).head.getPath.toString, stagedFiles(t).head.toString)
-      }.toSeq.sortBy(_._1)
-      if (merges.nonEmpty) {
-        if (!fs.mkdirs(stagedMg))
-          throw new java.io.IOException(
-            s"zorderCompactIncremental: cannot create $stagedMg")
-        ParquetStitch.run(spark, merges.map { case (t, oldP, newP) =>
-          (Seq(oldP, newP), new HPath(stagedMg, s"tile-$t-rg.parquet").toString)
-        })
-      }
       // swap: every replacement exists in staging; the touched old tiles
       // and the slabs move out and the merged, new and rewritten tiles move
       // in, in one replace that rolls back on any failure
       val stamp = Committer.newStamp()
-      val in = acts.toSeq.sortBy(_._1).flatMap {
-        case (t, MERGE) =>
-          Seq(new HPath(stagedMg, s"tile-$t-rg.parquet") ->
-            s"tile-$t-rg-$stamp.parquet")
-        case (t, PUBLISH) =>
+      val in = touched.flatMap { t =>
+        if (merged(t)) Seq(mergedFile(t) -> s"tile-$t-rg-$stamp.parquet")
+        else if (fresh(t)) {
           val f0 = stagedFiles(t).head
           Seq(f0 -> s"tile-$t-${f0.getName}")
-        case _ => Nil // REWRITE tiles flatten below
+        } else Nil // rewritten tiles flatten below
       } ++ (if (rwTiles.nonEmpty) flatTiles(fs, stagedRw) else Nil)
       Publish.replace(fs, target,
         (oldByTile.values.flatten ++ slabs).map(_.getPath.getName).toSeq, in)

@@ -562,16 +562,16 @@ object Maintenance {
     * micro-batches a consumer opens O(N·shards) small files, the tax that
     * dominates scan cost at 100 TB long before bytes do. Each shard's
     * per-batch files are ROW-GROUP-STITCHED ([[ParquetStitch]], r16) into
-    * one file, one task per shard, zero decode and zero shuffle; past the
-    * stitch gate (schema drift, fragmentation bounds) it falls back to one
-    * shuffle on (shard). Either way the batch provenance column is dropped
-    * (the batched original remains the lineage record) and row membership
-    * is bit-preserved: the caller audits the compacted dir against the
-    * pre-compact manifest ([[graft.llm.Sampling.auditShardExport]]). The
-    * output is built in private staging and replaces `outDir` in one
-    * [[Publish.dirSwap]]: readers see the previous output or the new one,
-    * and a failure leaves the previous one in place. Returns the
-    * compacted frame. */
+    * one file, one task per shard, zero decode and zero shuffle; when any
+    * shard's stitch declines (schema drift, fragmentation bounds) the whole
+    * export falls back to one shuffle on (shard). Either way the batch
+    * provenance column is dropped (the batched original remains the
+    * lineage record) and row membership is bit-preserved: the caller
+    * audits the compacted dir against the pre-compact manifest
+    * ([[graft.llm.Sampling.auditShardExport]]). The output is built in
+    * private staging and replaces `outDir` in one [[Publish.dirSwap]]:
+    * readers see the previous output or the new one, and a failure leaves
+    * the previous one in place. Returns the compacted frame. */
   def compactExport(spark: SparkSession, exportDir: String, outDir: String,
       nShards: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -581,10 +581,11 @@ object Maintenance {
     // STITCH path (r16): the per-batch shard files' row groups copy
     // byte-for-byte into one file per shard ([[ParquetStitch]]) — no
     // decode, no re-encode, no shuffle of exported rows; one distributed
-    // task per shard. Falls back to the classic shuffle-and-rewrite when
-    // any shard fails the stitch gate (schema drift across batches, or
-    // enough accumulated batches that row-group fragmentation would
-    // defeat the point — the re-encode also resets that).
+    // task per shard. When any shard's stitch declines (schema drift
+    // across batches, or more than `ParquetStitch.MaxBlocks` accumulated
+    // row groups, past which fragmentation would defeat the point) the
+    // whole export takes the classic shuffle-and-rewrite, which also
+    // resets the fragmentation.
     val byShard: Map[String, Seq[HPath]] =
       (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
         .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
@@ -602,35 +603,21 @@ object Maintenance {
         .repartition(nShards, col("shard"))
         .write.partitionBy("shard").mode("overwrite").parquet(staged.toString)
     }
-    // the gate is FileStatus-only (a wide export pays more for driver
-    // footer reads than for the copy); schema equality is verified inside
-    // the distributed stitch, and a mismatch falls back to the re-encode
-    if (byShard.nonEmpty &&
-        byShard.values.forall(ParquetStitch.stitchableCheap(fs, _))) {
+    if (byShard.isEmpty) classic()
+    else {
       byShard.keys.foreach { sh =>
         if (!fs.mkdirs(new HPath(staged, sh)))
           throw new java.io.IOException(s"compactExport: cannot create " +
             s"$staged/$sh")
       }
-      // Only a SCHEMA mismatch is a legitimate fallback trigger (sources
-      // are intact; the re-encode is the right tool for drifted batches).
-      // Matched by TYPE through the Spark task-failure wrapping, with the
-      // class NAME as a net for paths that flatten the cause chain to
-      // text; any other stitch failure (row-count verification, IO)
-      // signals a bug or corruption and propagates loudly.
-      def isSchemaMismatch(t: Throwable): Boolean =
-        Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(16)
-          .exists(x => x.isInstanceOf[StitchSchemaMismatch] ||
-            Option(x.getMessage)
-              .exists(_.contains("StitchSchemaMismatch")))
-      try ParquetStitch.run(spark, byShard.toSeq.sortBy(_._1).map {
+      // each task reads its shard's footers once and declines before it
+      // copies anything; the re-encode overwrites any stitched shard
+      val declined = ParquetStitch.run(spark, byShard.toSeq.sortBy(_._1).map {
         case (sh, files) => (files.map(_.toString),
           new HPath(new HPath(staged, sh), "part-stitched.parquet").toString)
-      }) catch {
-        case e: Exception if isSchemaMismatch(e) =>
-          classic() // schema drift across batches: re-encode instead
-      }
-    } else classic()
+      })
+      if (declined.nonEmpty) classic()
+    }
     Publish.dirSwap(fs, staged, out)
     spark.read.parquet(outDir)
   }

@@ -37,9 +37,4 @@ object UnitTests {
       case (v, None) => spark.catalog.dropTempView(v)
     }
   }
-
-  def runAll(spark: SparkSession,
-      tests: Seq[(String, Map[String, DataFrame], SparkSession => DataFrame, DataFrame)])
-      : Seq[UnitResult] =
-    tests.map { case (n, g, m, e) => run(spark, n, g, m, e) }
 }

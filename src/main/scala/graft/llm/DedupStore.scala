@@ -341,34 +341,28 @@ object DedupStore {
       //
       // The fold is ROW-GROUP-STITCHED when it can be (r16): the
       // snapshotted segments' row groups copy byte-for-byte into one file
-      // (`ParquetFileWriter.appendFile` — no decode, no re-encode; a
-      // segment that kept no rows contributes zero blocks), verified against
-      // the source footers' row counts. Bounds keep the shape honest:
-      // schema drift across segments, a cumulative row-group count past
-      // 64 (stitching never merges row groups, so re-folds would fragment
-      // without bound), or a fold past 1 GiB (one stitched file is a
+      // (no decode, no re-encode; a segment that kept no rows contributes
+      // zero blocks), verified against the source footers' row counts.
+      // The stitch reads each segment's footer once and declines on schema
+      // drift across segments, a cumulative row-group count past 64
+      // (stitching never merges row groups, so re-folds would fragment
+      // without bound) or a fold past 1 GiB (one stitched file is a
       // sequential single-writer copy — past that, the distributed
-      // re-encode is the right shape anyway) all take the classic
-      // read-and-rewrite, which also resets the row-group count.
+      // re-encode is the right shape anyway); a declined fold takes the
+      // classic read-and-rewrite, which also resets the row-group count.
       val newId = math.max(ids.max + 1, CompactBase)
       val dstDir = segDir(root, newId)
       val segFiles = ids.flatMap { id =>
         f.listStatus(segDir(root, id)).toSeq
           .filter(graft.exec.AtomicWriter.isDataFile).map(_.getPath)
       }
-      val conf = spark.sessionState.newHadoopConf()
-      if (graft.exec.ParquetStitch.stitchable(conf, f, segFiles)) {
-        f.delete(dstDir, true)
-        if (!f.mkdirs(dstDir))
-          throw new java.io.IOException(s"DedupStore: cannot create $dstDir")
-        graft.exec.ParquetStitch.stitch(conf, segFiles,
-          new HPath(dstDir, "part-stitched.parquet"))
-        ()
-      } else {
-        val merged = spark.read.parquet(
-          ids.map(id => segDir(root, id).toString): _*)
-        merged.write.mode("overwrite").parquet(dstDir.toString)
-      }
+      f.delete(dstDir, true)
+      if (!f.mkdirs(dstDir))
+        throw new java.io.IOException(s"DedupStore: cannot create $dstDir")
+      if (graft.exec.ParquetStitch.stitch(spark.sessionState.newHadoopConf(),
+          segFiles, new HPath(dstDir, "part-stitched.parquet")).isEmpty)
+        spark.read.parquet(ids.map(id => segDir(root, id).toString): _*)
+          .write.mode("overwrite").parquet(dstDir.toString)
       // provenance sidecar for [[readAsOf]]: the largest INGEST batch id
       // this fold contains (carried forward through re-compactions). The
       // underscore prefix keeps it invisible to the parquet reader; written

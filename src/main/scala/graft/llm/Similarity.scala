@@ -108,10 +108,6 @@ object Similarity {
     * collapsed into the s07 probe join: ~30× on the int8 scan. */
   def quantizeInt8(v: Column): Column = graft.functions.QuantizeInt8(v)
 
-  /** Dequantize back to array<double>. */
-  def dequantizeInt8(q: Column): Column =
-    transform(q.getField("codes"), c => c.cast("double") * q.getField("scale"))
-
   /** Deterministic signed random projection (Johnson–Lindenstrauss,
     * Achlioptas ±1 form): `y_j = (1/√outDim) · Σ_i s_ij x_i` with signs
     * from a plan-time splitmix64 of `(salt, j, i)`. The projection matrix

@@ -3,6 +3,20 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Multimodal, Packing, Sampling, Similarity, TextOps}
 
+/** `fs.file.impl` that counts each file's opens ([[OpenCountingFs.opens]],
+  * keyed by path); a spec installs it through the session conf with
+  * `fs.file.impl.disable.cache`. */
+class OpenCountingFs extends graft.exec.ForkFreeLocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int) = {
+    OpenCountingFs.opens.merge(f.toUri.getPath, 1, Integer.sum(_, _))
+    super.open(f, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+}
+
 class LlmSpec extends SparkSpec {
   import spark.implicits._
 
@@ -954,6 +968,40 @@ class LlmSpec extends SparkSpec {
       "reordered-column segments must take the rewrite path")
     assert(DedupStore.read(spark, root2).select($"id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("DedupStore.compact reads each source footer once: a stitched fold " +
+    "of four segments opens a source twice, an empty one once") {
+    import graft.llm.DedupStore
+    val root = java.nio.file.Files.createTempDirectory("fpopens").toString
+    for (b <- 0L to 2L)
+      assert(DedupStore.append(spark, root, b,
+        Seq((b, s"v$b")).toDF("id", "v").coalesce(1)))
+    assert(DedupStore.append(spark, root, 3L,
+      Seq((9L, "e")).toDF("id", "v").limit(0).coalesce(1)))
+    def dataFiles(): Seq[java.io.File] =
+      new java.io.File(root, "segments").listFiles.toSeq
+        .filter(_.isDirectory).flatMap(_.listFiles.toSeq)
+        .filter(f => f.getName.endsWith(".parquet") &&
+          !f.getName.startsWith("."))
+    val sources = dataFiles().map(_.getPath)
+    assert(sources.size == 4)
+    OpenCountingFs.opens.clear()
+    spark.conf.set("fs.file.impl", classOf[OpenCountingFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try DedupStore.compact(spark, root)
+    finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(dataFiles().map(_.getName) == Seq("part-stitched.parquet"))
+    // one footer read per source, one row-group copy per non-empty one
+    // (each footer was read twice when a separate gate decided first)
+    val opens = sources.map(p =>
+      p -> OpenCountingFs.opens.getOrDefault(p, 0).toInt).toMap
+    val expected = sources.map(p =>
+      p -> (if (p.contains("/segments/3/")) 1 else 2)).toMap
+    assert(opens == expected, s"opens per source: $opens")
   }
 
   test("DedupStore.readAsOf: exact history slices; compaction folds carry provenance or refuse") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.catalog.{PartitionSpec, TableRef}
-import graft.exec.{AtomicWriter, Maintenance, ParquetStitch, StitchSchemaMismatch}
+import graft.exec.{AtomicWriter, Maintenance, ParquetStitch}
 import graft.mat.Materializer
 import graft.mat.Materializer.IncrementalStrategy
 
@@ -12,9 +12,10 @@ import graft.mat.Materializer.IncrementalStrategy
   * rewritten (clustered, multi-file, tight per-file spans), the untouched
   * partition's files stay byte-stable, the quantization stats persist as
   * table properties, and a second pass is quiet. Plus the ParquetStitch
-  * retry-hygiene contract: a predecessor attempt's partial destination
-  * never wedges a retry, and ONLY the typed schema mismatch routes
-  * [[Maintenance.compactExport]] to its re-encode fallback. */
+  * contracts: a predecessor attempt's partial destination never wedges a
+  * retry, a stitch that declines writes nothing and routes
+  * [[Maintenance.compactExport]] to its re-encode fallback, and no other
+  * source reads a parquet footer. */
 class ZorderTableSpec extends SparkSpec {
 
   import spark.implicits._
@@ -378,7 +379,7 @@ class ZorderTableSpec extends SparkSpec {
     fw.write("PAR1 partial garbage from a dead attempt".getBytes("UTF-8"))
     fw.close()
     val got = ParquetStitch.stitch(conf, srcs, dst)
-    assert(got == 3L)
+    assert(got.contains(3L))
     assert(spark.read.parquet(dst.toString).select("id").as[Long]
       .collect().sorted.toSeq == Seq(1L, 2L, 3L))
     // and no temp leftovers
@@ -387,24 +388,43 @@ class ZorderTableSpec extends SparkSpec {
     assert(leftovers.isEmpty, leftovers.map(_.getName).toSeq)
   }
 
-  test("stitch schema mismatch is the TYPED StitchSchemaMismatch; " +
-      "compactExport falls back to re-encode on it (and only it)") {
-    val dir = java.nio.file.Files.createTempDirectory("stitchtyped").toString
+  test("stitch declines a mismatched schema or an over-bound source set: " +
+      "None, nothing written; compactExport re-encodes a drifted export") {
+    val dir = java.nio.file.Files.createTempDirectory("stitchdecline").toString
     val conf = spark.sessionState.newHadoopConf()
     Seq((1L, "a")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/s1")
     Seq(("b", 2L)).toDF("v", "id").coalesce(1).write.parquet(s"$dir/s2")
+    Seq((3L, "c")).toDF("id", "v").coalesce(1).write.parquet(s"$dir/s3")
     def dataFile(sub: String) =
       new java.io.File(s"$dir/$sub").listFiles
         .filter(f => f.getName.endsWith(".parquet")).head
-    intercept[StitchSchemaMismatch] {
-      ParquetStitch.stitch(conf,
-        Seq(dataFile("s1"), dataFile("s2"))
-          .map(f => new org.apache.hadoop.fs.Path(f.getPath)),
-        new org.apache.hadoop.fs.Path(s"$dir/out.parquet"))
+    def srcs(subs: String*) =
+      subs.map(sub => new org.apache.hadoop.fs.Path(dataFile(sub).getPath))
+    val dst = new org.apache.hadoop.fs.Path(s"$dir/out.parquet")
+    def written() = new java.io.File(dir).list().toSeq
+      .filter(n => n.contains("out.parquet") || n.contains(".stitch-"))
+    // s1 and s3 share a schema: one row group each, 2 in all
+    val bytes = srcs("s1", "s3").map(p =>
+      new java.io.File(p.toUri.getPath).length).sum
+    Seq(
+      "schema mismatch" -> (() => ParquetStitch.stitch(conf, srcs("s1", "s2"), dst)),
+      "no sources" -> (() => ParquetStitch.stitch(conf, Nil, dst)),
+      "row groups" -> (() =>
+        ParquetStitch.stitch(conf, srcs("s1", "s3"), dst, maxBlocks = 1)),
+      "bytes" -> (() => ParquetStitch.stitch(conf, srcs("s1", "s3"), dst,
+        maxBytes = bytes - 1))
+    ).foreach { case (why, attempt) =>
+      assert(attempt().isEmpty, s"$why: the stitch must decline")
+      assert(written().isEmpty, s"$why: a declined stitch wrote ${written()}")
     }
-    // compactExport: reordered-column batches trip the in-stitch schema
-    // check inside a distributed task; the typed match routes to the
-    // classic re-encode and the export still compacts correctly
+    // at the bounds the same sources stitch
+    assert(ParquetStitch.stitch(conf, srcs("s1", "s3"), dst, maxBlocks = 2,
+      maxBytes = bytes).contains(2L))
+    assert(spark.read.parquet(dst.toString).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(1L, 3L))
+    // compactExport: reordered-column batches make the shard's stitch
+    // task decline; the export takes the classic re-encode and still
+    // compacts correctly
     val ex = s"$dir/export"
     new java.io.File(s"$ex/batch=1/shard=0").mkdirs()
     new java.io.File(s"$ex/batch=2/shard=0").mkdirs()
@@ -419,5 +439,32 @@ class ZorderTableSpec extends SparkSpec {
       .filter(f => f.isFile && f.getName.endsWith(".parquet")).map(_.getName)
     assert(!outFiles.contains("part-stitched.parquet"),
       s"schema drift must take the re-encode path, got ${outFiles.toSeq}")
+  }
+
+  test("one stitch gate: only ParquetStitch reads a parquet footer") {
+    // the stitch decides stitch-or-re-encode where it reads the source
+    // footers; a caller that reads them too pays a second footer pass
+    val footerRead = "readFooter|ParquetFileReader".r
+    val retired = "StitchSchemaMismatch|stitchable".r
+    val root = java.nio.file.Paths.get("src/main")
+    val files = java.nio.file.Files.walk(root).iterator()
+    val offenders = scala.collection.mutable.ListBuffer[String]()
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.toString.endsWith(".scala")) {
+        val rel = root.relativize(f).toString
+        val stitch = rel == "scala/graft/exec/ParquetStitch.scala"
+        java.nio.file.Files.readAllLines(f).toArray.map(_.toString.trim)
+          .zipWithIndex.foreach { case (code, i) =>
+            val comment = code.startsWith("*") || code.startsWith("/*") ||
+              code.startsWith("//")
+            if (!comment && (retired.findFirstIn(code).isDefined ||
+                (!stitch && footerRead.findFirstIn(code).isDefined)))
+              offenders += s"$rel:${i + 1}: $code"
+          }
+      }
+    }
+    assert(offenders.isEmpty, "decide stitch-or-re-encode through " +
+      s"ParquetStitch.stitch, not a footer read of your own: $offenders")
   }
 }
