@@ -247,17 +247,21 @@ object Incremental {
     * merge (touched-partition scan, update join, insert anti join) projects
     * the key, so the first job that evaluates the source raises — zero
     * dedicated jobs, one shuffle of the (small) delta fused into work the
-    * merge does anyway. */
-  private def guardDuplicateKeys(src: DataFrame, uniqueKey: Seq[String]): DataFrame = {
+    * merge does anyway. `partitionBy` (default: the key columns) lets a
+    * caller that joins on a derived key column, as the snapshot joins on
+    * its NULL-proof key hash, count over that column, so the window's
+    * shuffle is the one its join needs. */
+  private[exec] def guardDuplicateKeys(src: DataFrame, uniqueKey: Seq[String],
+      partitionBy: Seq[Column] = Nil): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(uniqueKey.map(col): _*)
+      .partitionBy((if (partitionBy.isEmpty) uniqueKey.map(col) else partitionBy): _*)
     val k0 = uniqueKey.head
     val kType = src.schema(k0).dataType
     val GN = "__graft_dupn"
     src.withColumn(GN, count(lit(1)).over(w))
       .withColumn(k0, when(col(GN) > 1,
         raise_error(lit(
-          s"merge: source has duplicate unique_key values (${uniqueKey.mkString(",")}) " +
+          s"source has duplicate unique_key values (${uniqueKey.mkString(",")}) " +
             "— MERGE semantics require at most one source row per key"))
           .cast(kType))
         .otherwise(col(k0)))

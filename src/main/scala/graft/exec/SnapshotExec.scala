@@ -17,9 +17,16 @@ import graft.functions.Fns
   *    a new open version inserted; new keys inserted; optionally hard-deleted
   *    keys invalidated (valid_to = snapshotAt).
   *
-  * One two-phase DataFrame job: full-outer join of source and open snapshot
-  * rows → change classification → union(closed, new, untouched) → atomic
-  * staged swap. `snapshotAt` is caller-supplied so runs are deterministic.
+  * One pass, like the reference's single MERGE (snapshot.sql:51-74): one scan
+  * of the snapshot table and one of the source, one full-outer join on a
+  * NULL-proof key hash (closed versions never match), one projection that
+  * classifies each joined row and emits one or two versions, then the atomic
+  * staged swap. The source goes through [[Incremental.guardDuplicateKeys]],
+  * so a repeated key raises inside the pass's own jobs. The write keeps the
+  * join's AQE-coalesced partitions, so the file count follows data size (one
+  * file for a small table), and sorts each file by key, then
+  * `dbt_valid_from`, so equal inputs write equal bytes. `snapshotAt` is
+  * caller-supplied so runs are deterministic.
   */
 object SnapshotExec {
 
@@ -32,95 +39,79 @@ object SnapshotExec {
   final case class CheckStrategy(checkCols: Seq[String], updatedAtExpr: Column) extends Strategy
 
   private val UPD = "__graft_upd"
+  private val KH = "__graft_kh"
+  /** prefix of the source's columns in the join: names, not expression ids,
+    * keep the two sides apart even when they share lineage */
+  private val S = "__graft_src_"
+  /** 1 on the copy of a joined row that becomes the source's new version */
+  private val FRESH = "__graft_fresh"
 
   /** Run one snapshot pass against `target`; creates it on first run. */
   def run(spark: SparkSession, target: TableRef, srcIn: DataFrame,
       key: Seq[String], strategy: Strategy,
       snapshotAt: java.sql.Timestamp,
-      invalidateHardDeletes: Boolean = false): Unit = {
-
-    // updated-at must be resolved against a specific frame: the snapshot's
-    // open rows and the source both carry every source column, so an
-    // unqualified reference would be ambiguous inside their join. For the
-    // check strategy the expression may reference arbitrary SOURCE columns
-    // — evaluate it ONCE on the source frame as a derived column before
-    // any join, so updOf(df) is always a plain frame-qualified lookup.
-    val src = strategy match {
-      case CheckStrategy(_, expr) => srcIn.withColumn(UPD, expr)
-      case _ => srcIn
-    }
-    def updOf(df: DataFrame): Column = strategy match {
-      case TimestampStrategy(u) => df(u)
-      case CheckStrategy(_, _)  => df(UPD)
-    }
-    def withMeta(df: DataFrame): DataFrame = {
-      val u = updOf(df)
-      df.withColumn("dbt_updated_at", u.cast("timestamp"))
-        .withColumn("dbt_valid_from", u.cast("timestamp"))
-        .withColumn("dbt_valid_to", lit(null).cast("timestamp"))
-        .withColumn("dbt_scd_id",
-          Fns.scdId((key.map(col) :+ u.cast("string")): _*))
-    }
-
+      invalidateHardDeletes: Boolean = false): Unit =
     if (!CatalogOps.exists(spark, target)) {
-      AtomicWriter.createOrReplace(spark, withMeta(src).drop(UPD), target)
-      return
-    }
+      val (src, u) = withUpdatedAt(srcIn, strategy)
+      val upd = col(u).cast("timestamp")
+      AtomicWriter.createOrReplace(spark, src.select((srcIn.columns.map(col) ++ Seq(
+        upd.as("dbt_updated_at"), upd.as("dbt_valid_from"),
+        lit(null).cast("timestamp").as("dbt_valid_to"),
+        Fns.scdId((key.map(col) :+ col(u).cast("string")): _*).as("dbt_scd_id"))): _*),
+        target)
+    } else
+      AtomicWriter.overwriteTable(spark,
+        nextTable(spark, target, srcIn, key, strategy, snapshotAt, invalidateHardDeletes),
+        target, PartitionSpec.None, AtomicWriter.currentBucketing(spark, target))
 
-    val snap = spark.table(target.render)
-    val open = snap.filter(col("dbt_valid_to").isNull)
-    val closedHist = snap.filter(col("dbt_valid_to").isNotNull)
-
-    val keyCondOpen = key.map(k => open(k) <=> src(k)).reduce(_ && _)
-
-    val changedCond: Column = strategy match {
-      case TimestampStrategy(u) => src(u) > open("dbt_updated_at")
-      case CheckStrategy(cols, _) => cols.map(c => !(src(c) <=> open(c))).reduce(_ || _)
-    }
-
-    // joint view of source vs open versions
-    val matched = open.join(src, keyCondOpen, "inner")
-    val changed = matched.filter(changedCond)
-
-    // 1. close out changed current versions
-    val closedOut = changed.select(
-      (snap.columns.toSeq.filterNot(_ == "dbt_valid_to").map(c => open(c).as(c)) :+
-        updOf(src).cast("timestamp").as("dbt_valid_to")): _*)
-      .select(snap.columns.map(col).toIndexedSeq: _*)
-    // 2. new versions of changed rows + brand-new keys.
-    // Name-based joins are used because the frames share lineage
-    // (expression-id conditions would be ambiguous self-joins), but a bare
-    // usingColumns join is null-UNSAFE while the match above is <=> — a
-    // NULL-key row would be closed out AND stay open AND insert twice. So
-    // the anti/semi joins run on a single NULL-proof hashed key column.
-    val KH = "__graft_kh"
+  /** The snapshot table's next contents: the one-pass plan [[run]] writes
+    * over an existing `target`. */
+  private[graft] def nextTable(spark: SparkSession, target: TableRef, srcIn: DataFrame,
+      key: Seq[String], strategy: Strategy, snapshotAt: java.sql.Timestamp,
+      invalidateHardDeletes: Boolean): DataFrame = {
     def kh(df: DataFrame): DataFrame = df.withColumn(KH,
       md5(concat_ws("\u0001",
         key.map(k => coalesce(col(k).cast("string"), lit("\u0002NULL"))): _*)))
+    val snap = kh(spark.table(target.render))
+    val (withUpd, u) = withUpdatedAt(srcIn, strategy)
+    // the guard's window is partitioned by the key hash, so its shuffle is
+    // the one the join needs on the source side
+    val guarded = Incremental.guardDuplicateKeys(kh(withUpd), key, Seq(col(KH)))
+    val src = guarded.select(guarded.columns.map(c => col(c).as(S + c)).toIndexedSeq: _*)
+    val joined = snap.join(src, col(KH) === col(S + KH) && col("dbt_valid_to").isNull,
+      "full_outer")
 
-    val newKeys = kh(src).join(kh(open).select(col(KH)), Seq(KH), "left_anti")
-      .drop(KH)
-    val changedSrc = changed.select(src.columns.map(c => src(c).as(c)).toIndexedSeq: _*)
-    val inserted = withMeta(changedSrc.unionByName(newKeys))
-      .select(snap.columns.map(col).toIndexedSeq: _*)
-    // 3. untouched open versions (unchanged matches + unmatched-by-src keys)
-    val changedKH = kh(changedSrc).select(col(KH)).distinct()
-    var untouchedOpen = kh(open).join(changedKH, Seq(KH), "left_anti")
-    // 4. hard-delete invalidation
-    if (invalidateHardDeletes) {
-      val srcKH = kh(src).select(col(KH)).distinct()
-      val deletedKeys = untouchedOpen.join(srcKH, Seq(KH), "left_anti")
-      val stillOpen = untouchedOpen.join(srcKH, Seq(KH), "left_semi")
-      val invalidated = deletedKeys.withColumn("dbt_valid_to", lit(snapshotAt))
-      untouchedOpen = stillOpen.unionByName(invalidated)
-    }
-    val untouchedOpenClean = untouchedOpen.drop(KH)
-
-    val result = closedHist
-      .unionByName(closedOut)
-      .unionByName(untouchedOpenClean)
-      .unionByName(inserted)
-    AtomicWriter.overwriteTable(spark, result, target, PartitionSpec.None,
-      AtomicWriter.currentBucketing(spark, target))
+    def s(c: String): Column = col(S + c)
+    val changed = col(KH).isNotNull && s(KH).isNotNull && (strategy match {
+      case TimestampStrategy(_) => s(u) > col("dbt_updated_at")
+      case CheckStrategy(cols, _) => cols.map(c => !(s(c) <=> col(c))).reduce(_ || _)
+    })
+    // a changed open version yields two rows: itself closed, and the new one
+    val copies = explode(when(changed, array(lit(0), lit(1)))
+      .when(col(KH).isNull, array(lit(1))).otherwise(array(lit(0))))
+    val fresh = col(FRESH) === 1
+    val closing = when(fresh, lit(null).cast("timestamp"))
+      .when(changed, s(u).cast("timestamp"))
+    val validTo = (if (invalidateHardDeletes)
+        closing.when(s(KH).isNull && col("dbt_valid_to").isNull, lit(snapshotAt))
+      else closing).otherwise(col("dbt_valid_to"))
+    joined.withColumn(FRESH, copies).select(snap.columns.filterNot(_ == KH).map {
+      case c @ ("dbt_updated_at" | "dbt_valid_from") =>
+        when(fresh, s(u).cast("timestamp")).otherwise(col(c)).as(c)
+      case "dbt_valid_to" => validTo.as("dbt_valid_to")
+      case "dbt_scd_id" =>
+        when(fresh, Fns.scdId((key.map(s) :+ s(u).cast("string")): _*))
+          .otherwise(col("dbt_scd_id")).as("dbt_scd_id")
+      case c => when(fresh, s(c)).otherwise(col(c)).as(c)
+    }.toIndexedSeq: _*).sortWithinPartitions((key :+ "dbt_valid_from").map(col): _*)
   }
+
+  /** The source with its updated-at column, and that column's name. The
+    * check strategy's expression may reference any SOURCE column, so it is
+    * evaluated once on the source frame, before any join. */
+  private def withUpdatedAt(src: DataFrame, strategy: Strategy): (DataFrame, String) =
+    strategy match {
+      case TimestampStrategy(u) => (src, u)
+      case CheckStrategy(_, expr) => (src.withColumn(UPD, expr), UPD)
+    }
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.catalog.{PartitionSpec, TableRef}
-import graft.exec.{Incremental, Mutations}
+import graft.exec.{Incremental, Mutations, SnapshotExec}
 import graft.mat.Materializer
 
 /** Structural guard on the write path's FIXED job count. At sf0.1 the
@@ -92,6 +92,28 @@ class JobCountSpec extends SparkSpec {
     info(s"partitioned deleteKeys jobs = $dkJobs")
     assert(dkJobs <= 7, s"partitioned deleteKeys job count regressed: $dkJobs")
     assert(spark.table(dk.render).count() == 38)
+  }
+
+  test("snapshot re-run stays within its fixed job budget") {
+    val ref = TableRef("default.jc_snap")
+    spark.sql(s"DROP TABLE IF EXISTS ${ref.render}")
+    def src(n: Int, stamp: String) = (1 to n).map(i => (i.toLong, s"v$i", stamp))
+      .toDF("id", "v", "updated_at").withColumn("updated_at", $"updated_at".cast("timestamp"))
+    val strat = SnapshotExec.TimestampStrategy("updated_at")
+    SnapshotExec.run(spark, ref, src(40, "2024-01-01 00:00:00"), Seq("id"), strat,
+      java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    val next = src(35, "2024-01-01 00:00:00").filter($"id" > 5)
+      .unionByName(src(45, "2024-02-01 00:00:00").filter($"id" > 35))
+    val jobs = countJobs {
+      SnapshotExec.run(spark, ref, next, Seq("id"), strat,
+        java.sql.Timestamp.valueOf("2024-02-01 00:00:00"), invalidateHardDeletes = true)
+    }
+    info(s"snapshot re-run jobs = $jobs")
+    // one pass (one scan per input, one full-outer join) measured 3; the
+    // four-branch union it replaced measured 8
+    assert(jobs <= 3, s"snapshot fixed job count regressed: $jobs")
+    // 5 invalidated + 5 changed (closed and new) + 30 unchanged + 5 new
+    assert(spark.table(ref.render).count() == 50)
   }
 
   test("dynamic insert_overwrite stays within its fixed job budget") {
